@@ -1,10 +1,11 @@
-"""JS-semantics compatibility shims as pure Column expressions.
+"""JS-semantics compatibility shims: Spark SQL text plus driver-side mirrors.
 
 The reference engine runs in Node.js, so its observable outputs (violation rows)
 carry JS coercion artifacts: ``typeof null === 'object'``, ``String(1.0) === '1'``,
 ``[1,null,2].toString() === '1,,2'``, unanchored ``RegExp.test``. These helpers
 reproduce those artifacts with built-in Spark SQL functions only (JVM-side,
-whole-stage-codegen friendly) — no Python UDFs.
+whole-stage-codegen friendly) — no Python UDFs — emitted as SQL text for the
+rule compiler (operators/validation_sql.py).
 
 Reference: /root/reference/validator_src/helpers/validationHelpers.js:7,17,108,124
 and loggingHelpers.js:13-14.
@@ -12,7 +13,6 @@ and loggingHelpers.js:13-14.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -45,61 +45,31 @@ def static_js_typeof(dtype: T.DataType) -> str:
 
 
 # ---------------------------------------------------------------------------
-# JS toString for typed columns
+# JS toString as SQL text
 # ---------------------------------------------------------------------------
 
-def _shortest_sci_repr(a: Column) -> Column:
-    """Shortest scientific representation of a non-negative finite double:
-    the first ``%.pe`` (p = 0..16) that round-trips back to the exact value.
-
-    This sidesteps Java ≤18's non-shortest ``Double.toString``
-    (JDK-4511638: 2.5e22 prints as 2.4999999999999998E22) — the round-trip
-    search yields the same shortest digits ECMAScript (and Python repr)
-    produce, with matching tie behavior (round-half-even ↔ the spec's
-    "choose even"). 17 significant digits always round-trip, so the
-    fallback is unreachable.
-    """
-    # binary search over the precision: round-tripping is monotone in the
-    # digit count (p-digit decimals are a subset of (p+1)-digit decimals, so
-    # the closest (p+1)-digit decimal is at least as close), which lets each
-    # row evaluate ~5 candidates instead of all 17 — the naive
-    # array(17 candidates)+filter form cost ~25 µs/row on fractional values
-    def cand(p: int) -> Column:
-        return F.format_string(f"%.{p}e", a)
-
-    def roundtrips(p: int) -> Column:
-        return cand(p).try_cast("double") == a
-
-    def search(lo: int, hi: int) -> Column:
-        if lo == hi:
-            return cand(lo)
-        mid = (lo + hi) // 2
-        return F.when(roundtrips(mid), search(lo, mid)).otherwise(
-            search(mid + 1, hi))
-
-    return search(0, 16)
-
-
 def js_number_to_string_sql(x: str) -> str:
-    """SQL-text twin of :func:`js_number_to_string` — byte-identical
-    semantics, generated as ONE string so the whole formatter costs one
-    parser round trip instead of thousands of py4j calls (VERDICT r3 #7:
-    the formatter tree measured ~1.5 s of driver-side Column construction
-    PER INSTANCE, and the staged toString embeds it three times per
-    value/regex/enum-checked field). Consumed by validation's textual
-    staging path (``_variant_to_string_sql`` → ``F.expr``); equivalence to
-    the Column tree is pinned by
-    tests/test_js_numbers.py::test_sql_text_formatter_matches_tree.
+    """JS ``String(number)`` of the SQL expression ``x`` — exact over the
+    full double range.
 
-    Unlike the tree, the input double, its abs, and the decimal-point
-    position are LET-BOUND textually (``transform(array(e), _v -> …)[0]``):
-    the text stays ~4× smaller (SQL parse time) and each binds once per row
-    instead of once per reference — the VARIANT staging projection runs
-    interpreted, where conditional subexpressions are never deduplicated,
-    so the tree re-evaluates the (expensive) variant-get + cast per
-    binary-search candidate. Value-level semantics are identical."""
+    Integral |v| < 1e16 takes the cheap long-cast path; everything else is
+    rebuilt from (shortest digits, exponent) following Number::toString
+    (ECMA-262 §6.1.6.1.20): decimal notation for -6 < k+1 ≤ 21, scientific
+    ``d.ddde±k`` outside, 'NaN'/'Infinity'/'0' (also for -0) specials. The
+    shortest digits are the first ``%.pe`` (p = 0..16, binary-searched:
+    round-tripping is monotone in p) that parses back to the exact value —
+    this sidesteps Java ≤18's non-shortest ``Double.toString``
+    (JDK-4511638) and matches ECMAScript's (and Python repr's) tie rule.
+    Pinned against :func:`py_js_number_repr` and hand-checked ECMAScript
+    outputs by tests/test_js_numbers.py.
+
+    The input double, its abs, the search result, and the decimal-point
+    position are LET-BOUND (``transform(array(e), _v -> …)[0]``): the text
+    stays small and each binds once per row instead of once per reference —
+    the VARIANT projection runs interpreted, where conditional
+    subexpressions are never deduplicated."""
     d, a = "_jsd", "_jsa"
-    sign = f"(CASE WHEN ({d} < 0) THEN '-' ELSE '' END)"
+    sign = f"CASE WHEN ({d} < 0) THEN '-' ELSE '' END"
 
     def cand(p: int) -> str:
         return f"format_string('%.{p}e', {a})"
@@ -111,8 +81,8 @@ def js_number_to_string_sql(x: str) -> str:
         if lo == hi:
             return cand(lo)
         mid = (lo + hi) // 2
-        return (f"(CASE WHEN {rt(mid)} THEN {search(lo, mid)} "
-                f"ELSE {search(mid + 1, hi)} END)")
+        return (f"CASE WHEN {rt(mid)} THEN {search(lo, mid)} "
+                f"ELSE {search(mid + 1, hi)} END")
 
     rep, digits, n = "_jsrep", "_jsdig", "_jsn"
     L = f"length({digits})"
@@ -120,115 +90,56 @@ def js_number_to_string_sql(x: str) -> str:
     point = (f"concat(substr({digits}, 1, {n}), '.', "
              f"substr({digits}, ({n} + 1), ({L} - {n})))")
     small = f"concat('0.', repeat('0', CAST((-{n}) AS INT)), {digits})"
-    mant_js = (f"(CASE WHEN ({L} = 1) THEN {digits} ELSE "
+    mant_js = (f"CASE WHEN ({L} = 1) THEN {digits} ELSE "
                f"concat(substr({digits}, 1, 1), '.', "
-               f"substr({digits}, 2, ({L} - 1))) END)")
+               f"substr({digits}, 2, ({L} - 1))) END")
     sci = (f"concat({mant_js}, 'e', "
-           f"(CASE WHEN (({n} - 1) >= 0) THEN '+' ELSE '-' END), "
+           f"CASE WHEN (({n} - 1) >= 0) THEN '+' ELSE '-' END, "
            f"CAST(abs(({n} - 1)) AS STRING))")
-    fmt = (f"(CASE WHEN (({L} <= {n}) AND ({n} <= 21)) THEN {intpad} "
+    fmt = (f"CASE WHEN (({L} <= {n}) AND ({n} <= 21)) THEN {intpad} "
            f"WHEN ((0 < {n}) AND ({n} <= 21)) THEN {point} "
            f"WHEN ((-6 < {n}) AND ({n} <= 0)) THEN {small} "
-           f"ELSE {sci} END)")
+           f"ELSE {sci} END")
     mant = f"substring_index({rep}, 'e', 1)"
     k1 = f"(CAST(substring_index({rep}, 'e', -1) AS INT) + 1)"
-    fmt_n = f"(transform(array({k1}), {n} -> {fmt}))[0]"
-    with_digits = (f"(transform(array(regexp_replace({mant}, '\\\\.', '')), "
-                   f"{digits} -> {fmt_n}))[0]")
-    body = f"(transform(array({search(0, 16)}), {rep} -> {with_digits}))[0]"
-    full = (f"(CASE WHEN ({d} IS NULL) THEN CAST(NULL AS STRING) "
+    fmt_n = f"transform(array({k1}), {n} -> {fmt})[0]"
+    with_digits = (f"transform(array(regexp_replace({mant}, '\\\\.', '')), "
+                   f"{digits} -> {fmt_n})[0]")
+    body = f"transform(array({search(0, 16)}), {rep} -> {with_digits})[0]"
+    full = (f"CASE WHEN ({d} IS NULL) THEN CAST(NULL AS STRING) "
             f"WHEN isnan({d}) THEN 'NaN' "
             f"WHEN ({d} = 0) THEN '0' "
             f"WHEN ({a} = CAST('Infinity' AS DOUBLE)) "
             f"THEN concat({sign}, 'Infinity') "
             f"WHEN (({d} = floor({d})) AND ({a} < 1.0E16)) "
             f"THEN CAST(CAST({d} AS BIGINT) AS STRING) "
-            f"ELSE concat({sign}, {body}) END)")
-    return (f"(transform(array(CAST({x} AS DOUBLE)), {d} -> "
-            f"(transform(array(abs({d})), {a} -> {full}))[0]))[0]")
+            f"ELSE concat({sign}, {body}) END")
+    return (f"transform(array(CAST({x} AS DOUBLE)), {d} -> "
+            f"transform(array(abs({d})), {a} -> {full})[0])[0]")
 
 
-def js_number_to_string(col: Column) -> Column:
-    """JS ``String(number)`` — exact over the full double range.
-
-    Integral |v| < 1e16 takes the cheap long-cast path; everything else is
-    rebuilt from (shortest digits, exponent) following Number::toString
-    (ECMA-262 §6.1.6.1.20): decimal notation for -6 < k+1 ≤ 21, scientific
-    ``d.ddde±k`` outside, 'NaN'/'Infinity'/'0' (also for -0) specials.
-    """
-    from events_validator_spark.functions.exprs import let_
-
-    d = col.cast("double")
-    a = F.abs(d)
-    sign = F.when(d < 0, F.lit("-")).otherwise(F.lit(""))
-
-    # let_-bind the search result and the parsed digits: they are referenced
-    # many times below, and conditional-branch subexpressions are NOT
-    # deduplicated by subexpression elimination — unbound, each reference
-    # re-runs the whole binary search per row (measured ~3× the cost)
-    def with_digits(rep: Column) -> Column:
-        k = F.substring_index(rep, "e", -1).cast("int")
-
-        def fmt(digits: Column) -> Column:
-            n = k + F.lit(1)      # decimal-point position within the digits
-            L = F.length(digits)
-            intpad = F.concat(digits,
-                              F.repeat(F.lit("0"), (n - L).cast("int")))
-            point = F.concat(F.substr(digits, F.lit(1), n), F.lit("."),
-                             F.substr(digits, n + F.lit(1), L - n))
-            small = F.concat(F.lit("0."),
-                             F.repeat(F.lit("0"), (-n).cast("int")), digits)
-            mant_js = F.when(L == 1, digits).otherwise(F.concat(
-                F.substr(digits, F.lit(1), F.lit(1)), F.lit("."),
-                F.substr(digits, F.lit(2), L - F.lit(1))))
-            sci = F.concat(mant_js, F.lit("e"),
-                           F.when(n - 1 >= 0, F.lit("+")).otherwise(F.lit("-")),
-                           F.abs(n - F.lit(1)).cast("string"))
-            return (F.when((L <= n) & (n <= F.lit(21)), intpad)
-                    .when((F.lit(0) < n) & (n <= F.lit(21)), point)
-                    .when((F.lit(-6) < n) & (n <= F.lit(0)), small)
-                    .otherwise(sci))
-
-        mant = F.substring_index(rep, "e", 1)
-        return let_(F.regexp_replace(mant, r"\.", ""), fmt)
-
-    body = let_(_shortest_sci_repr(a), with_digits)
-    return (
-        F.when(d.isNull(), F.lit(None).cast("string"))
-        .when(F.isnan(d), F.lit("NaN"))
-        .when(d == 0, F.lit("0"))
-        .when(a == F.lit(float("inf")), F.concat(sign, F.lit("Infinity")))
-        .when((d == F.floor(d)) & (a < F.lit(1e16)),
-              d.cast("long").cast("string"))
-        .otherwise(F.concat(sign, body))
-    )
-
-
-def js_to_string(col: Column, dtype: T.DataType, depth: int = 2) -> Column:
-    """JS ``v?.toString()`` for a typed column (null → NULL, matching ``?.``)."""
+def js_to_string_sql(c: str, dtype: T.DataType, depth: int = 2) -> str:
+    """JS ``v?.toString()`` of a typed value as SQL text (null → NULL,
+    matching ``?.``)."""
+    null = "CAST(NULL AS STRING)"
     if isinstance(dtype, T.StringType):
-        return col
+        return c
     if isinstance(dtype, T.BooleanType):
-        return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-            F.when(col, "true").otherwise("false"))
-    if isinstance(dtype, _NUMERIC):
-        if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
-            return js_number_to_string(col)
-        return col.cast("string")
+        return (f"CASE WHEN ({c} IS NULL) THEN {null} "
+                f"ELSE CASE WHEN {c} THEN 'true' ELSE 'false' END END")
+    if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
+        return js_number_to_string_sql(c)
     if isinstance(dtype, T.ArrayType):
         if depth <= 0:
-            return F.lit("")  # pathological nesting — JS would keep flattening
-        elem = dtype.elementType
-        # JS Array.prototype.toString: elements joined by ',', null/undefined → ''
-        return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-            F.array_join(
-                F.transform(col, lambda x: F.coalesce(
-                    js_to_string(x, elem, depth - 1), F.lit(""))),
-                ","))
+            return "''"  # pathological nesting — JS would keep flattening
+        x = f"_jts{depth}"
+        # JS Array.prototype.toString: elements joined by ',', null → ''
+        elem = js_to_string_sql(x, dtype.elementType, depth - 1)
+        return (f"CASE WHEN ({c} IS NULL) THEN {null} ELSE array_join("
+                f"transform({c}, {x} -> coalesce({elem}, '')), ',') END")
     if isinstance(dtype, (T.StructType, T.MapType)):
-        return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-            F.lit("[object Object]"))
-    return col.cast("string")
+        return f"CASE WHEN ({c} IS NULL) THEN {null} ELSE '[object Object]' END"
+    return f"CAST({c} AS STRING)"  # integral numbers and the rest
 
 
 def _py_digits_exp(a: float) -> tuple[str, int]:
@@ -250,7 +161,7 @@ def _py_digits_exp(a: float) -> tuple[str, int]:
 def py_js_number_repr(v: float) -> str:
     """JS ``String(number)`` in pure Python — the exact Number::toString
     boundaries (decimal for -6 < k+1 ≤ 21, 'd.ddde±k' outside, NaN/Infinity,
-    -0 → '0'); mirrors :func:`js_number_to_string`."""
+    -0 → '0'); mirrors :func:`js_number_to_string_sql`."""
     if v != v:
         return "NaN"
     if v == float("inf"):

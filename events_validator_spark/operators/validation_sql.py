@@ -1,97 +1,254 @@
-"""Textual twin of the VARIANT-path check compiler (VERDICT r3 #7).
+"""The rule compiler: reference rule specs → SQL text, one expression per key.
 
-The Column-based compiler in ``validation.py`` is the semantic source of
-truth, but building its per-key check subtrees costs one py4j round trip per
-expression node — profiling the 36-schema GA4 corpus showed 96k round trips
-≈ 44 s of a 54 s fresh plan build spent in driver-side socket chatter. This
-module generates the SAME expressions as SQL text (explicit ``x ->`` lambda
-syntax), so each per-key subtree costs ONE ``F.expr`` parse on the JVM.
+The reference validates one JSON event at a time with a tree-walking
+interpreter (validationHelpers.js:130-164). Here each top-level rule key
+compiles ONCE on the driver into SQL text producing
+``array<struct<field,error_type,expected,actual>>`` per row; the validators
+join the per-key texts and hand each output column to ONE ``F.expr`` — a few
+py4j round trips per plan instead of one per expression node (the
+Column-builder form cost ~10^3 round trips per key). Catalyst folds the
+constants and the whole pass runs as one projection; no per-row Python
+anywhere.
 
-Equivalence contract: every function here mirrors its Column twin in
-``validation.py`` line-for-line (same check order, same gating, same NULL
-semantics); the results are pinned by
-tests/test_validation.py::test_textual_compiler_matches_column_compiler
-(full-corpus differential) plus every staged-path driver oracle. Anything
-not cleanly expressible as text (non-finite value literals) raises
-:class:`TextualFallback` and the caller builds that key with the Column
-compiler instead — a per-key fallback, never a correctness trade.
+Two field views share the compiler:
 
-Scale note: this is DRIVER-side plan-build cost only. At 10^12 rows the
-plan builds once and runs for hours — but the fresh-plan latency is what
-every driver restart and every rule-set edit pays, and 40+ s of py4j
-chatter per restart is real operational pain the textual path removes.
+* :class:`_TypedView` — the field is an ordinary typed (nested) column. JS
+  ``typeof`` is a literal from the Spark type; a NULL field is treated as
+  *absent* (typed rows cannot distinguish missing-vs-null — documented
+  divergence). Struct members are backtick-quoted field accesses, map keys
+  ``element_at`` lookups, and scalar array elements get the JS ``{'': item}``
+  wrap.
+* :class:`_VariantView` — the field is a VARIANT (``try_parse_json`` of the
+  event payload). Full JS fidelity: missing key (SQL NULL) vs JSON null
+  (``schema_of_variant == 'VOID'`` → ``typeof`` 'object') vs value types,
+  exactly matching ``typeof null === 'object'`` (validationHelpers.js:7).
+
+The text resolves by column NAME, so a compiled key check is a pure function
+of (field binding, key, rule spec in spec order) and is memoized
+(:func:`key_check`): a tick or batch with the same rules and schema rebuilds
+nothing on the driver.
+
+Semantics pinned against :mod:`events_validator_spark.js_oracle` by
+tests/test_validation.py, tests/test_property_differential.py and
+tests/test_reference_parity.py (SURVEY.md §2.2 quirk list V1–V12).
 """
 
 from __future__ import annotations
 
+import copy
 import itertools
 import json
+from typing import Callable, Iterator, Optional
+
+from pyspark.sql import types as T
 
 from events_validator_spark.functions.js_compat import (
     js_number_to_string_sql,
     js_regex_to_java,
+    js_to_string_sql,
     py_js_to_string,
+    static_js_actual,
+    static_js_typeof,
     validate_java_regex,
 )
 
 VIOLATION_ARRAY_DDL = \
     "array<struct<field:string,error_type:string,expected:string,actual:string>>"
+EMPTY = f"CAST(array() AS {VIOLATION_ARRAY_DDL})"
 _NUM_RE = "^(BIGINT|INT|SMALLINT|TINYINT|DOUBLE|FLOAT|DECIMAL)"
-_EMPTY = f"CAST(array() AS {VIOLATION_ARRAY_DDL})"
+_NULL_S = "CAST(NULL AS STRING)"
+
+# flip to False to disable the typed-array clean-element short-circuit (the
+# equality tests compare both settings; it is part of the memo key)
+_ELEM_OK_GATE = True
 
 
-class TextualFallback(Exception):
-    """Raised when a rule cannot be textualized; caller uses the Column path."""
-
-
-def _lit(s: str | None) -> str:
+def lit(s: str | None) -> str:
     """SQL string literal (NULL for None)."""
     if s is None:
-        return "CAST(NULL AS STRING)"
+        return _NULL_S
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _one(field: str, error_type: str, expected: str, actual: str) -> str:
-    """1-element violation array; expected/actual are SQL exprs (use _lit)."""
+def ident(name: str) -> str:
+    """Backtick-quoted SQL identifier (one name part)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def one(field: str, error_type: str, expected: str, actual: str) -> str:
+    """1-element violation array; field/expected/actual are SQL exprs."""
     return (f"array(named_struct("
             f"'field', CAST({field} AS STRING), "
-            f"'error_type', {_lit(error_type)}, "
+            f"'error_type', {lit(error_type)}, "
             f"'expected', CAST({expected} AS STRING), "
             f"'actual', CAST({actual} AS STRING)))")
 
 
 def _gate(cond: str, arr: str) -> str:
-    return f"(CASE WHEN {cond} THEN {arr} ELSE {_EMPTY} END)"
+    return f"CASE WHEN {cond} THEN {arr} ELSE {EMPTY} END"
 
 
-def _concat(parts: list[str | None]) -> str:
-    parts = [p for p in parts if p is not None]
+def concat(parts: list[str]) -> str:
     if not parts:
-        return _EMPTY
+        return EMPTY
     if len(parts) == 1:
         return parts[0]
     return f"concat({', '.join(parts)})"
 
 
-def _json_path(key: str) -> str:
+def _truthy(cond: str) -> str:
+    return f"coalesce({cond}, false)"
+
+
+def _never(cond: str) -> str:
+    """cond is not literally TRUE. ``_gate(cond, arr)`` emits rows only for
+    a TRUE cond, so every clean-element complement treats NULL as ok."""
+    return f"(NOT {_truthy(cond)})"
+
+
+def _all(conds: list[str]) -> str:
+    return "(" + " AND ".join(conds) + ")" if conds else "true"
+
+
+def json_path(key: str) -> str:
     esc = key.replace("\\", "\\\\").replace('"', '\\"')
-    return _lit(f'$["{esc}"]')
+    return lit(f'$["{esc}"]')
 
 
-def _typeof_sql(v: str, sv: str, array_aware: bool) -> str:
-    """Mirror of validation._variant_typeof."""
+def _is_optional(rule: dict) -> bool:
+    # optional:true OR required:false (validationHelpers.js:12,140)
+    return rule.get("optional") is True or rule.get("required") is False
+
+
+# ---------------------------------------------------------------------------
+# Field views: everything a check needs to know about one field, as SQL text
+# ---------------------------------------------------------------------------
+
+Scope = Callable[[str], "_View"]
+
+
+class _View:
+    """A statically absent field (key not in the schema / not an object).
+
+    ``binding`` identifies what the view's text depends on besides the key;
+    ``typed`` enables the clean-element gate; ``string_is_ref`` says
+    ``as_string`` is a plain reference (never worth let-binding)."""
+
+    binding: object = None
+    typed = False
+    string_is_ref = True
+    _s: Optional[str] = None       # staged / let-bound toString reference
+
+    present = "false"
+    typeof = actual = "'undefined'"
+    is_null = is_falsy = "false"
+    str_value = _NULL_S
+    js_length = "CAST(NULL AS INT)"
+    num_value = "CAST(NULL AS DOUBLE)"
+
+    @property
+    def as_string(self) -> str:
+        """JS ``v?.toString()`` (NULL for null/undefined)."""
+        return self._s or self._to_string()
+
+    def _to_string(self) -> str:
+        return _NULL_S
+
+    def fields(self) -> Scope:
+        """Members of the value as a JS object (object nestedSchema)."""
+        return _absent_scope
+
+    def elements(self) -> Optional[tuple[str, Callable[[str], Scope]]]:
+        """(array SQL, element variable → element scope); None when the value
+        is statically not an array. The scope applies the JS scalar wrap."""
+        return None
+
+
+_ABSENT = _View()
+
+
+def _absent_scope(key: str) -> _View:
+    return _ABSENT
+
+
+class _TypedView(_View):
+    typed = True
+
+    def __init__(self, c: str, dtype: T.DataType):
+        self.c, self.dtype = c, dtype
+        self.binding = ("typed", dtype.json())
+        is_str = isinstance(dtype, T.StringType)
+        self.string_is_ref = is_str
+        self.present = f"({c} IS NOT NULL)"
+        self.typeof = lit(static_js_typeof(dtype))
+        self.actual = lit(static_js_actual(dtype))
+        numeric = self.typeof == "'number'"
+        if is_str:
+            self.str_value = c
+            self.js_length = f"length({c})"
+        elif isinstance(dtype, T.ArrayType):
+            self.js_length = f"size({c})"
+        if isinstance(dtype, T.BooleanType):
+            self.is_falsy = f"coalesce((NOT {c}), false)"
+        elif isinstance(dtype, (T.FloatType, T.DoubleType)):
+            self.is_falsy = f"coalesce((({c} = 0) OR isnan({c})), false)"
+        elif numeric:
+            self.is_falsy = f"coalesce(({c} = 0), false)"
+        if numeric:
+            self.num_value = f"CAST({c} AS DOUBLE)"
+
+    def _to_string(self) -> str:
+        return js_to_string_sql(self.c, self.dtype)
+
+    def fields(self) -> Scope:
+        return typed_scope(self.c, self.dtype)
+
+    def elements(self):
+        if not isinstance(self.dtype, T.ArrayType):
+            return None
+        et = self.dtype.elementType
+        if isinstance(et, (T.StructType, T.MapType, T.ArrayType)):
+            # objects recurse directly (js:41-45); an array element is typeof
+            # 'object' too, and string-key indexing into it is undefined, so
+            # every nested key — including '' — reports missing
+            return self.c, lambda e: typed_scope(e, et)
+        # scalar (or null) elements are wrapped {'': item} (js:41-42)
+        return self.c, lambda e: (
+            lambda key: _TypedView(e, et) if key == "" else _ABSENT)
+
+
+def typed_scope(c: str | None, dtype: T.DataType) -> Scope:
+    """Key → view over a typed value; ``c`` None ⇒ the row's top-level
+    columns. A missing map key yields NULL, which the typed model maps to
+    absent — the same missing-vs-null divergence as struct fields."""
+    if isinstance(dtype, T.StructType):
+        names = set(dtype.fieldNames())
+
+        def member(key: str) -> _View:
+            if key not in names:
+                return _ABSENT
+            ref = ident(key) if c is None else f"{c}.{ident(key)}"
+            return _TypedView(ref, dtype[key].dataType)
+        return member
+    if isinstance(dtype, T.MapType):
+        return lambda key: _TypedView(f"element_at({c}, {lit(key)})",
+                                      dtype.valueType)
+    return _absent_scope
+
+
+def _variant_typeof(v: str, sv: str, array_aware: bool) -> str:
     arr_label = "array" if array_aware else "object"
-    return (f"(CASE WHEN ({v} IS NULL) THEN 'undefined' "
-            f"WHEN ({sv} = 'VOID') THEN 'object' "
+    return (f"CASE WHEN ({v} IS NULL) THEN 'undefined' "
+            f"WHEN ({sv} = 'VOID') THEN 'object' "   # typeof null === 'object'
             f"WHEN ({sv} = 'STRING') THEN 'string' "
             f"WHEN ({sv} = 'BOOLEAN') THEN 'boolean' "
             f"WHEN ({sv} RLIKE '{_NUM_RE}') THEN 'number' "
             f"WHEN startswith({sv}, 'ARRAY') THEN '{arr_label}' "
-            f"ELSE 'object' END)")
+            f"ELSE 'object' END")
 
 
 def variant_to_string_sql(v: str, depth: int = 3) -> str:
-    """Mirror of validation._variant_to_string (JS ``v?.toString()``)."""
+    """JS ``v?.toString()`` over a VARIANT value."""
     sv = f"schema_of_variant({v})"
     num_s = js_number_to_string_sql(f"try_variant_get({v}, '$', 'double')")
     if depth <= 0:
@@ -102,273 +259,387 @@ def variant_to_string_sql(v: str, depth: int = 3) -> str:
                  f"try_variant_get({v}, '$', 'array<variant>'), "
                  f"{var} -> coalesce({variant_to_string_sql(var, depth - 1)},"
                  f" '')), ',')")
-    return (f"(CASE WHEN (({v} IS NULL) OR ({sv} = 'VOID')) "
-            f"THEN CAST(NULL AS STRING) "
+    return (f"CASE WHEN (({v} IS NULL) OR ({sv} = 'VOID')) THEN {_NULL_S} "
             f"WHEN ({sv} = 'STRING') THEN try_variant_get({v}, '$', 'string') "
             f"WHEN ({sv} = 'BOOLEAN') THEN try_variant_get({v}, '$', 'string') "
             f"WHEN ({sv} RLIKE '{_NUM_RE}') THEN {num_s} "
             f"WHEN startswith({sv}, 'ARRAY') THEN {arr_s} "
-            f"ELSE '[object Object]' END)")
+            f"ELSE '[object Object]' END")
 
 
-class _TextView:
-    """Textual mirror of validation._VariantView (all members are SQL text).
+class _VariantView(_View):
+    """A VARIANT field; ``sv``/``s`` may be staged columns (see
+    :func:`staged_view`) instead of inline ``schema_of_variant``/toString."""
 
-    ``staged_s``: the pre-projected toString column (PreboundVariantAccessor
-    staging) — referenced instead of inlining the big formatter text."""
-
-    def __init__(self, v: str, sv: str | None = None,
-                 staged_s: str | None = None):
+    def __init__(self, v: str, sv: str | None = None, s: str | None = None):
         self.v = v
-        self.sv = sv if sv is not None else f"schema_of_variant({v})"
-        self._staged_s = staged_s
+        self.sv = sv = sv or f"schema_of_variant({v})"
+        self._s = s
+        self.string_is_ref = s is not None
+        self.present = f"({v} IS NOT NULL)"  # JSON null → VOID (present)
+        self.typeof = _variant_typeof(v, sv, array_aware=False)
+        self.actual = _variant_typeof(v, sv, array_aware=True)
+        self.is_null = f"({sv} = 'VOID')"
+        self.str_value = (f"CASE WHEN ({sv} = 'STRING') "
+                          f"THEN try_variant_get({v}, '$', 'string') END")
+        self.js_length = (
+            f"CASE WHEN ({sv} = 'STRING') "
+            f"THEN length(try_variant_get({v}, '$', 'string')) "
+            f"WHEN startswith({sv}, 'ARRAY') "
+            f"THEN size(try_variant_get({v}, '$', 'array<variant>')) "
+            f"ELSE CAST(NULL AS INT) END")
+        self.is_falsy = (f"coalesce(CASE WHEN ({sv} = 'BOOLEAN') "
+                         f"THEN (NOT try_variant_get({v}, '$', 'boolean')) "
+                         f"WHEN ({sv} RLIKE '{_NUM_RE}') "
+                         f"THEN (try_variant_get({v}, '$', 'double') = 0) "
+                         f"ELSE false END, false)")
+        self.num_value = (f"CASE WHEN ({sv} RLIKE '{_NUM_RE}') "
+                          f"THEN try_variant_get({v}, '$', 'double') END")
 
-    @property
-    def present(self) -> str:
-        return f"({self.v} IS NOT NULL)"
+    def _to_string(self) -> str:
+        return variant_to_string_sql(self.v)
 
-    @property
-    def typeof(self) -> str:
-        return _typeof_sql(self.v, self.sv, array_aware=False)
+    def fields(self) -> Scope:
+        return lambda key: _VariantView(
+            f"try_variant_get({self.v}, {json_path(key)}, 'variant')")
 
-    @property
-    def actual(self) -> str:
-        return _typeof_sql(self.v, self.sv, array_aware=True)
-
-    @property
-    def is_null(self) -> str:
-        return f"({self.sv} = 'VOID')"
-
-    @property
-    def as_string(self) -> str:
-        return self._staged_s or variant_to_string_sql(self.v)
-
-    @property
-    def str_value(self) -> str:
-        return (f"(CASE WHEN ({self.sv} = 'STRING') "
-                f"THEN try_variant_get({self.v}, '$', 'string') END)")
-
-    @property
-    def js_length(self) -> str:
-        return (f"(CASE WHEN ({self.sv} = 'STRING') "
-                f"THEN length(try_variant_get({self.v}, '$', 'string')) "
-                f"WHEN startswith({self.sv}, 'ARRAY') "
-                f"THEN size(try_variant_get({self.v}, '$', 'array<variant>')) "
-                f"ELSE CAST(NULL AS INT) END)")
-
-    @property
-    def is_falsy(self) -> str:
-        return (f"coalesce((CASE WHEN ({self.sv} = 'BOOLEAN') "
-                f"THEN (NOT try_variant_get({self.v}, '$', 'boolean')) "
-                f"WHEN ({self.sv} RLIKE '{_NUM_RE}') "
-                f"THEN (try_variant_get({self.v}, '$', 'double') = 0) "
-                f"ELSE false END), false)")
-
-    @property
-    def num_value(self) -> str:
-        return (f"(CASE WHEN ({self.sv} RLIKE '{_NUM_RE}') "
-                f"THEN try_variant_get({self.v}, '$', 'double') END)")
+    def elements(self):
+        return (f"try_variant_get({self.v}, '$', 'array<variant>')",
+                _variant_element_scope)
 
 
-def _trimmed_empty(fv: _TextView) -> str:
-    return (f"(({fv.typeof} = 'string') AND "
-            f"(trim(coalesce({fv.str_value}, '')) = ''))")
+def _variant_element_scope(e: str) -> Scope:
+    """JS (validationHelpers.js:41-44): an element that is typeof 'object' and
+    non-null recurses directly (ARRAYS too — typeof [] is 'object'); anything
+    else is wrapped as ``{'': item}``. ``try_variant_get(e, '$["k"]')`` on a
+    non-object is SQL NULL → 'missing', exactly what the wrap yields for every
+    key but ``''``; only ``''`` needs a dynamic branch between the element
+    itself (wrap) and the object's actual ``''`` member (direct)."""
+    def member(key: str) -> _View:
+        m = f"try_variant_get({e}, {json_path(key)}, 'variant')"
+        if key == "":
+            sv_e = f"schema_of_variant({e})"
+            direct = (f"(startswith({sv_e}, 'OBJECT') OR "
+                      f"startswith({sv_e}, 'ARRAY') OR "
+                      f"startswith({sv_e}, 'STRUCT'))")
+            m = f"CASE WHEN {direct} THEN {m} ELSE {e} END"
+        return _VariantView(m)
+    return member
 
 
-def _is_optional(rule: dict) -> bool:
-    return rule.get("optional") is True or rule.get("required") is False
+def staged_view(struct_name: str, has_string: bool) -> _View:
+    """View over a staged per-field struct ``(v, sv[, s])`` (the VARIANT
+    validators stage each top-level field once per row)."""
+    n = ident(struct_name)
+    view = _VariantView(f"{n}.v", f"{n}.sv", f"{n}.s" if has_string else None)
+    view.binding = ("variant", struct_name, has_string)
+    return view
 
 
-def per_key_sql(fv: _TextView, rule: dict, path: str, ctx: dict) -> str:
-    """Mirror of validation._per_key: missing gate, optional-empty skip,
-    then value/type/length/regex/enum in spec order.
+# ---------------------------------------------------------------------------
+# Checks (validationHelpers.js:130-164)
+# ---------------------------------------------------------------------------
 
-    When several checks need the (huge) inline toString text and no staged
-    column carries it (nested/element keys), it is LET-BOUND once for the
-    whole key — ~4× smaller text and one evaluation per row instead of one
-    per referencing check (the Column twin re-evaluates per reference in
-    interpreted mode, value-identically)."""
+def _compile_scope(rules: dict, scope: Scope, parent: str,
+                ids: Iterator[int]) -> str:
+    """One nested scope's violations: per schema key, in spec order."""
+    parts = [_per_key(scope(key), rule,
+                         f"concat({parent}, {lit('.' + key)})", ids)
+             for key, rule in rules.items() if key != "version"]  # js:134
+    return concat(parts)
+
+
+def _per_key(fv: _View, rule: dict, path: str, ids: Iterator[int]) -> str:
+    """Missing gate, optional-empty skip, then independent value/type/
+    length/regex/enum checks (nested recursion inside the type check).
+
+    A COMPUTED toString that any check reads is let-bound once for the key
+    (``transform(array(s), x -> …)[0]``): smaller text and one evaluation
+    per row instead of one per reference. A plain reference is never bound
+    — that would only add a lambda."""
     optional = _is_optional(rule)
     needs_s = bool({"value", "regex", "enum"} & rule.keys()) \
-        and fv._staged_s is None
+        and not fv.string_is_ref
+    cv = copy.copy(fv)
     if needs_s:
-        s_var = f"_as{next(ctx['ids'])}"
-        cv = _TextView(fv.v, fv.sv, staged_s=s_var)
-    else:
-        cv = fv
+        cv._s = f"_as{next(ids)}"
     checks: list[str] = []
     if "value" in rule:
         checks.append(_check_value(rule, cv, path))
     if "type" in rule:
-        checks.append(_check_type(rule, cv, path, optional, ctx))
+        checks.append(_check_type(rule, cv, path, optional, ids))
     if "length" in rule:
         checks.append(_check_length(rule, cv, path))
     if "regex" in rule:
-        checks.append(_check_regex(rule, cv, path, ctx))
-    if "enum" in rule:
+        checks.append(_check_regex(rule, cv, path, ids))
+    if "enum" in rule:  # engine extension (north rule): enum membership
         checks.append(_check_enum(rule, cv, path))
-    body = _concat(checks)
+    body = concat(checks)
     if needs_s:
-        body = f"(transform(array({fv.as_string}), {s_var} -> {body}))[0]"
+        body = f"transform(array({fv.as_string}), {cv.as_string} -> {body})[0]"
+    # optional + (null | trimmed-empty string) → skip all checks (js:148-153)
     if optional:
         skip = f"({fv.is_null} OR {_trimmed_empty(fv)})"
         return _gate(f"({fv.present} AND (NOT {skip}))", body)
-    missing = _one(path, "missing", _lit("field present"), _lit("field missing"))
-    return f"(CASE WHEN (NOT {fv.present}) THEN {missing} ELSE {body} END)"
+    missing = one(path, "missing", lit("field present"), lit("field missing"))
+    return f"CASE WHEN (NOT {fv.present}) THEN {missing} ELSE {body} END"
 
 
-def compile_violations_sql(rules: dict, view_for: "callable", parent: str | None,
-                           ctx: dict) -> str:
-    """Mirror of validation.compile_violations for one accessor scope:
-    ``view_for(key) -> _TextView``; ``parent`` is the parent path SQL."""
-    parts: list[str] = []
-    for key, rule in rules.items():
-        if key == "version":
-            continue
-        path = _lit(key) if parent is None else \
-            f"concat({parent}, {_lit('.' + key)})"
-        parts.append(per_key_sql(view_for(key), rule, path, ctx))
-    return _concat(parts)
+def _trimmed_empty(fv: _View) -> str:
+    """value is a string AND trims to '' — via the cheap raw-string accessor."""
+    return (f"(({fv.typeof} = 'string') AND "
+            f"(trim(coalesce({fv.str_value}, '')) = ''))")
 
 
-def _check_type(rule: dict, fv: _TextView, path: str, optional: bool,
-                ctx: dict) -> str:
+def _check_type(rule: dict, fv: _View, path: str, optional: bool,
+                ids: Iterator[int]) -> str:
     expected = rule["type"]
-    if expected == "string":
+    if expected == "string":  # js:10-31 — actual is PLAIN typeof here (js:18)
         wrong = _gate(f"({fv.typeof} != 'string')",
-                      _one(path, "type", _lit("string"), fv.typeof))
+                      one(path, "type", lit("string"), fv.typeof))
         if optional:
-            wrong = _gate(f"(NOT {fv.is_null})", wrong)
-            empty = None
-        else:
-            empty = _gate(_trimmed_empty(fv),
-                          _one(path, "type", _lit("non-empty string"),
-                               _lit("empty string")))
-        return _concat([wrong, empty])
+            # js:14 — optional + null → no row even from the type check
+            return _gate(f"(NOT {fv.is_null})", wrong)
+        empty = _gate(_trimmed_empty(fv),
+                      one(path, "type", lit("non-empty string"),
+                          lit("empty string")))
+        return concat([wrong, empty])
 
-    if expected == "array":
-        not_array = _one(path, "type", _lit("array"), fv.actual)
+    if expected == "array":  # js:33-51
+        not_array = one(path, "type", lit("array"), fv.actual)
         nested = rule.get("nestedSchema")
-        if nested:
-            n = next(ctx["ids"])
-            e, i = f"_el{n}", f"_ix{n}"
-            ipath = f"concat({path}, '[', CAST({i} AS STRING), ']')"
+        elems = fv.elements() if nested else None
+        if elems is None:
+            return _gate(f"({fv.actual} != 'array')", not_array)
+        arr, scope_of = elems
+        n = next(ids)
+        e, i = f"_el{n}", f"_ix{n}"
+        ipath = f"concat({path}, '[', CAST({i} AS STRING), ']')"
+        sub = _compile_scope(nested, scope_of(e), ipath, ids)
+        nested_v = f"flatten(transform({arr}, ({e}, {i}) -> {sub}))"
+        if _ELEM_OK_GATE and fv.typed:
+            # clean-element gate (round 6): on the TYPED path most elements
+            # are clean, the per-element CONDITIONS fold to a handful of
+            # cheap comparisons (typeof/actual are literals), and the
+            # violation-row machinery (struct + array + concat per check)
+            # dominated the scan (measured 5.0 s → 0.7 s at 31.5M spans).
+            # `forall(element ok)` short-circuits it for all-clean arrays; a
+            # dirty element falls through to the UNCHANGED full build
+            # (pinned by tests/test_validation.py::test_element_ok_gate_*)
+            all_ok = _all_elements_ok(elems, nested, ids)
+            nested_v = (f"CASE WHEN {_truthy(all_ok)} THEN {EMPTY} "
+                        f"ELSE {nested_v} END")
+        return (f"CASE WHEN ({fv.actual} != 'array') THEN {not_array} "
+                f"ELSE coalesce({nested_v}, {EMPTY}) END")
 
-            def elem_view(key: str) -> _TextView:
-                # mirror of _VariantElement._get: non-'' keys read the member
-                # (SQL NULL on non-objects ⇒ 'missing', exactly the JS scalar
-                # wrap); '' dynamically picks the element itself vs its ''
-                # member
-                m = f"try_variant_get({e}, {_json_path(key)}, 'variant')"
-                if key == "":
-                    sv_e = f"schema_of_variant({e})"
-                    direct = (f"(startswith({sv_e}, 'OBJECT') OR "
-                              f"startswith({sv_e}, 'ARRAY') OR "
-                              f"startswith({sv_e}, 'STRUCT'))")
-                    m = f"(CASE WHEN {direct} THEN {m} ELSE {e} END)"
-                return _TextView(m)
-
-            sub = compile_violations_sql(nested, elem_view, ipath, ctx)
-            arr = f"try_variant_get({fv.v}, '$', 'array<variant>')"
-            nested_v = f"flatten(transform({arr}, ({e}, {i}) -> {sub}))"
-            return (f"(CASE WHEN ({fv.actual} != 'array') THEN {not_array} "
-                    f"ELSE coalesce({nested_v}, {_EMPTY}) END)")
-        return _gate(f"({fv.actual} != 'array')", not_array)
-
-    if expected == "object":
+    if expected == "object":  # js:53-67
         bad = _gate(f"({fv.is_null} OR ({fv.actual} != 'object'))",
-                    _one(path, "type", _lit("object"), fv.actual))
+                    one(path, "type", lit("object"), fv.actual))
         nested = rule.get("nestedSchema")
         if not nested:
             return bad
+        sub = _compile_scope(nested, fv.fields(), path, ids)
+        return f"CASE WHEN {_object_ok(fv)} THEN {sub} ELSE {bad} END"
 
-        def obj_view(key: str) -> _TextView:
-            return _TextView(
-                f"try_variant_get({fv.v}, {_json_path(key)}, 'variant')")
-
-        sub = compile_violations_sql(nested, obj_view, path, ctx)
-        ok = (f"({fv.present} AND (NOT {fv.is_null}) "
-              f"AND ({fv.actual} = 'object'))")
-        return f"(CASE WHEN {ok} THEN {sub} ELSE {bad} END)"
-
-    # generic (number / boolean / anything): array-aware actual
+    # generic (number / boolean / anything): array-aware actual (js:69-73)
     exp_s = py_js_to_string(expected)
-    return _gate(f"({fv.actual} != {_lit(exp_s)})",
-                 _one(path, "type", _lit(exp_s), fv.actual))
+    return _gate(f"({fv.actual} != {lit(exp_s)})",
+                 one(path, "type", lit(exp_s), fv.actual))
 
 
-def _check_value(rule: dict, fv: _TextView, path: str) -> str:
+def _object_ok(fv: _View) -> str:
+    return (f"({fv.present} AND (NOT {fv.is_null}) "
+            f"AND ({fv.actual} = 'object'))")
+
+
+def _value_neq(rule: dict, fv: _View) -> str:
+    """The value check's failure condition — shared by the violation builder
+    and the clean-element gate so the two can never drift."""
     expected = rule["value"]
-    expected_s = py_js_to_string(expected)
+    expected_s = py_js_to_string(expected)  # driver-side toString
     if expected_s is None:
-        neq = f"({fv.as_string} IS NOT NULL)"
-    elif (isinstance(expected, (int, float)) and not isinstance(expected, bool)
-          and abs(expected) < 1.8e308):
-        f = float(expected)
-        if f != f:  # NaN literal: not textualizable, mirror-safe fallback
-            raise TextualFallback("NaN value literal")
-        neq = (f"(CASE WHEN ({fv.typeof} = 'number') "
-               f"THEN ({fv.num_value} != CAST('{f!r}' AS DOUBLE)) "
-               f"ELSE (({fv.as_string} IS NULL) OR "
-               f"({fv.as_string} != {_lit(expected_s)})) END)")
-    else:
-        neq = (f"(({fv.as_string} IS NULL) OR "
-               f"({fv.as_string} != {_lit(expected_s)}))")
-    return _gate(neq, _one(path, "value", _lit(expected_s), fv.as_string))
+        return f"({fv.as_string} IS NOT NULL)"  # undefined !== undefined
+    str_neq = (f"(({fv.as_string} IS NULL) OR "
+               f"({fv.as_string} != {lit(expected_s)}))")
+    if (isinstance(expected, (int, float)) and not isinstance(expected, bool)
+            and abs(expected) < 1.8e308):  # finite; huge ints: string path
+        # numeric literal fast path: String(x) is injective on doubles, so
+        # for a NUMBER actual, toString equality ⇔ numeric equality — the
+        # (expensive) exact formatter then only evaluates on FAILING rows
+        # (the violation's actual string) and on non-number actuals
+        return (f"CASE WHEN ({fv.typeof} = 'number') "
+                f"THEN ({fv.num_value} != CAST('{float(expected)!r}' AS DOUBLE)) "
+                f"ELSE {str_neq} END")
+    return str_neq
 
 
-def _check_length(rule: dict, fv: _TextView, path: str) -> str:
-    expected = int(rule["length"])
-    actual = (f"(CASE WHEN ({fv.is_null} OR {fv.is_falsy}) THEN 0 "
-              f"ELSE {fv.js_length} END)")
-    neq = f"(({actual} IS NULL) OR ({actual} != {expected}))"
-    return _gate(neq, _one(path, "length", _lit(str(expected)),
-                           f"CAST({actual} AS STRING)"))
+def _check_value(rule: dict, fv: _View, path: str) -> str:
+    expected_s = py_js_to_string(rule["value"])
+    return _gate(_value_neq(rule, fv),
+                 one(path, "value", lit(expected_s), fv.as_string))
 
 
-def _check_enum(rule: dict, fv: _TextView, path: str) -> str:
+def _length_neq(rule: dict, fv: _View) -> tuple[str, str]:
+    """(failure condition, JS-coerced actual length)."""
+    expected = int(rule["length"])  # parseInt (js:77)
+    # (v || []).length (js:78): EVERY falsy value coerces to [] — null, false,
+    # 0, NaN all report length 0 ('' is falsy too but its own length is 0);
+    # non-string/array truthy values have undefined length
+    actual = (f"CASE WHEN ({fv.is_null} OR {fv.is_falsy}) THEN 0 "
+              f"ELSE {fv.js_length} END")
+    return f"(({actual} IS NULL) OR ({actual} != {expected}))", actual
+
+
+def _check_length(rule: dict, fv: _View, path: str) -> str:
+    neq, actual = _length_neq(rule, fv)
+    return _gate(neq, one(path, "length", lit(str(int(rule["length"]))),
+                          actual))
+
+
+def _enum_ok(rule: dict, fv: _View) -> tuple[str, str]:
+    """(membership condition, expected list) of the enum check — by JS
+    toString equality, consistent with the reference's value check."""
     allowed = [py_js_to_string(e) for e in rule["enum"]]
-    expected = ",".join("" if a is None else a for a in allowed)
     non_null = [a for a in allowed if a is not None]
-    if non_null:
-        ok = f"({fv.as_string} IN ({', '.join(_lit(a) for a in non_null)}))"
-    else:
-        ok = "false"
-    if any(a is None for a in allowed):
+    ok = (f"({fv.as_string} IN ({', '.join(lit(a) for a in non_null)}))"
+          if non_null else "false")
+    if len(non_null) < len(allowed):
         ok = f"({ok} OR ({fv.as_string} IS NULL))"
-    return _gate(f"(NOT coalesce({ok}, false))",
-                 _one(path, "enum", _lit(expected), fv.as_string))
+    return ok, ",".join("" if a is None else a for a in allowed)
 
 
-def _check_regex(rule: dict, fv: _TextView, path: str, ctx: dict) -> str:
+def _check_enum(rule: dict, fv: _View, path: str) -> str:
+    ok, expected = _enum_ok(rule, fv)
+    return _gate(_never(ok), one(path, "enum", lit(expected), fv.as_string))
+
+
+def _regex_java_pattern(rule: dict) -> str:
+    """Compile-time-validated Java translation of the rule's JS regex."""
     pattern = rule["regex"]
     java_pat = js_regex_to_java(pattern)
+    # fail at COMPILE time (driver), not per-row at runtime: one JS-legal but
+    # Java-illegal pattern in a rule spec must not kill a 10^12-row job mid-scan
     err = validate_java_regex(java_pat)
     if err is not None:
         raise ValueError(
             f"rule regex {pattern!r} does not compile as a Java regex "
             f"({err}); rewrite it in the common JS/Java subset "
             "(see functions/js_compat.js_regex_to_java)")
-    is_empty = f"({_trimmed_empty(fv)} OR {fv.is_null})"
-    s = f"_rx{next(ctx['ids'])}"
-    fail = _gate(f"(NOT (coalesce({s}, 'undefined') RLIKE {_lit(java_pat)}))",
-                 _one(path, "regex", _lit(pattern), s))
-    body = (f"(CASE WHEN {is_empty} "
-            f"THEN {_one(path, 'regex', _lit(pattern), _lit('empty_value'))} "
-            f"ELSE {fail} END)")
-    return f"(transform(array({fv.as_string}), {s} -> {body}))[0]"
+    return java_pat
 
 
-def top_key_expr_sql(struct_name: str, key: str, rule: dict,
-                     staged_s: bool) -> str:
-    """One top-level rule key's full violations expression over its staged
-    struct column (``__f_i`` from prebind_fields) — the unit the Column
-    compiler memoizes per (key, rule)."""
-    fv = _TextView(f"`{struct_name}`.v", f"`{struct_name}`.sv",
-                   f"`{struct_name}`.s" if staged_s else None)
-    ctx = {"ids": itertools.count()}
-    return per_key_sql(fv, rule, _lit(key), ctx)
+def _regex_empty(fv: _View) -> str:
+    return f"({_trimmed_empty(fv)} OR {fv.is_null})"
 
 
-def rule_cache_key(key: str, rule: dict) -> tuple:
-    return (key, json.dumps(rule, sort_keys=True, default=str))
+def _check_regex(rule: dict, fv: _View, path: str, ids: Iterator[int]) -> str:
+    pattern = rule["regex"]
+    java_pat = _regex_java_pattern(rule)
+    # the toString is bound: it is both the match input and the violation's
+    # actual, and branch subexpressions are not deduplicated in interpreted
+    # evaluation
+    s = f"_rx{next(ids)}"
+    fail = _gate(f"(NOT (coalesce({s}, 'undefined') RLIKE {lit(java_pat)}))",
+                 one(path, "regex", lit(pattern), s))
+    body = (f"CASE WHEN {_regex_empty(fv)} "
+            f"THEN {one(path, 'regex', lit(pattern), lit('empty_value'))} "
+            f"ELSE {fail} END")
+    return f"transform(array({fv.as_string}), {s} -> {body})[0]"
+
+
+# ---------------------------------------------------------------------------
+# Clean-element gate: boolean complements of the checks above. True ⇒ the
+# checks emit NO violation (it may be conservatively false — that only costs
+# the full build — but never true for a violating field).
+# ---------------------------------------------------------------------------
+
+def _elements_ok(rules: dict, scope: Scope, ids: Iterator[int]) -> str:
+    return _all([_per_key_ok(scope(key), rule, ids)
+                 for key, rule in rules.items() if key != "version"])
+
+
+def _all_elements_ok(elems: tuple[str, Callable[[str], Scope]], rules: dict,
+                     ids: Iterator[int]) -> str:
+    arr, scope_of = elems
+    g = f"_ok{next(ids)}"
+    return f"forall({arr}, {g} -> {_elements_ok(rules, scope_of(g), ids)})"
+
+
+def _per_key_ok(fv: _View, rule: dict, ids: Iterator[int]) -> str:
+    optional = _is_optional(rule)
+    oks: list[str] = []
+    if "value" in rule:
+        oks.append(_never(_value_neq(rule, fv)))
+    if "type" in rule:
+        oks.append(_type_ok(rule, fv, optional, ids))
+    if "length" in rule:
+        oks.append(_never(_length_neq(rule, fv)[0]))
+    if "regex" in rule:
+        match = (f"(coalesce({fv.as_string}, 'undefined') RLIKE "
+                 f"{lit(_regex_java_pattern(rule))})")
+        oks.append(f"({_never(_regex_empty(fv))} AND {_truthy(match)})")
+    if "enum" in rule:
+        oks.append(_truthy(_enum_ok(rule, fv)[0]))
+    body_ok = _all(oks)
+    if optional:
+        skip = f"({fv.is_null} OR {_trimmed_empty(fv)})"
+        return f"({_never(f'({fv.present} AND (NOT {skip}))')} OR {body_ok})"
+    return f"({_never(f'(NOT {fv.present})')} AND {body_ok})"
+
+
+def _type_ok(rule: dict, fv: _View, optional: bool,
+             ids: Iterator[int]) -> str:
+    expected = rule["type"]
+    if expected == "string":
+        wrong = f"({fv.typeof} != 'string')"
+        if optional:
+            return f"(NOT ({_truthy(f'(NOT {fv.is_null})')} AND {_truthy(wrong)}))"
+        return f"({_never(wrong)} AND {_never(_trimmed_empty(fv))})"
+    if expected == "array":
+        is_array = _never(f"({fv.actual} != 'array')")
+        nested = rule.get("nestedSchema")
+        elems = fv.elements() if nested else None
+        if elems is None:
+            return is_array
+        all_ok = _all_elements_ok(elems, nested, ids)
+        # null array → flatten(null) → coalesce(empty): no rows
+        return f"({is_array} AND (({elems[0]} IS NULL) OR {_truthy(all_ok)}))"
+    if expected == "object":
+        not_bad = _never(f"({fv.is_null} OR ({fv.actual} != 'object'))")
+        nested = rule.get("nestedSchema")
+        if not nested:
+            return not_bad
+        sub_ok = _elements_ok(nested, fv.fields(), ids)
+        return f"CASE WHEN {_object_ok(fv)} THEN {sub_ok} ELSE {not_bad} END"
+    return _never(f"({fv.actual} != {lit(py_js_to_string(expected))})")
+
+
+# ---------------------------------------------------------------------------
+# Per-key memo
+# ---------------------------------------------------------------------------
+
+# (gate flag, field binding, key, rule spec) → check text. Text, not a
+# Column: it holds no JVM object, so it is valid in any session, and F.expr
+# parses lazily on every plan build anyway (a cached Column would not skip
+# the parse). A hit skips the text generation and the regex compile checks
+# on the JVM. Bounded so unbounded rule-set churn cannot leak.
+_MEMO: dict = {}
+_MEMO_MAX = 8192
+
+
+def spec_json(rule: dict) -> str:
+    """A rule spec's identity for memo and dedup keys. Keys stay in SPEC
+    order: key order sets violation order."""
+    return json.dumps(rule, default=str)
+
+
+def key_check(key: str, rule: dict, fv: _View) -> str:
+    """One top-level key's full violations expression, memoized."""
+    mk = (_ELEM_OK_GATE, fv.binding, key, spec_json(rule))
+    sql = _MEMO.get(mk)
+    if sql is None:
+        sql = _per_key(fv, rule, lit(key), itertools.count())
+        if len(_MEMO) >= _MEMO_MAX:
+            _MEMO.clear()
+        _MEMO[mk] = sql
+    return sql

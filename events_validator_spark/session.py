@@ -34,7 +34,8 @@ def apply_recommended_conf(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.optimizer.excludedRules", ",".join(rules))
     except Exception:
         pass  # a locked-down session keeps its own settings
-    # the textual twins (validation_sql.py, dedup twins) generate SQL text
+    # the rule compiler (validation_sql.py) and dedup's textual twins
+    # generate SQL text
     # whose backslash escaping assumes the default parser mode; a session
     # that flipped escapedStringLiterals=true would silently change every
     # backslash-bearing literal's meaning (ADVICE r4). Own try block: a
@@ -83,7 +84,7 @@ def get_spark(app_name: str = "events-validator-spark",
         # array is a cheap stored column — negligible next to the 2x
         # re-evaluation it inflicts on computed arrays.
         .config("spark.sql.optimizer.excludedRules", _INFER_FILTERS_RULE)
-        # textual-twin SQL assumes default backslash escaping (ADVICE r4)
+        # generated SQL text assumes default backslash escaping (ADVICE r4)
         .config("spark.sql.parser.escapedStringLiterals", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -99,7 +100,7 @@ _WARMED = False
 def _warm_engine(spark: SparkSession) -> None:
     """Preheat the driver's plan pipeline and the interpreted eval paths.
 
-    The first big textual-compiler plan in a JVM pays ANTLR parse + analyzer
+    The first big rule-compiler plan in a JVM pays ANTLR parse + analyzer
     JIT (measured ~3.5 s), and the first VARIANT evaluation pays interpreter
     JIT (~1.5 s) — one-time costs that otherwise land inside the first real
     validation query's wall. A long-lived driver pays them once; session

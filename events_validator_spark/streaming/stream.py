@@ -1,8 +1,9 @@
 """Structured Streaming wrapper: the same compiled validation pass, streaming.
 
 The reference is a request/response micro-batcher of size 1
-(/root/reference/validator_src/index.js:18). Here the identical Column
-expression tree runs inside a streaming query — either as a direct
+(/root/reference/validator_src/index.js:18). Here the identical compiled
+validation expression (operators/validation_sql.py, memoized per rules and
+schema like every batch call) runs inside a streaming query — either as a direct
 transformation (stateless, append-mode) or via ``foreachBatch`` when the sink
 needs batch-style writes (parquet buckets, merge semantics). Watermarked
 windowed verdict aggregation covers late events.
@@ -12,14 +13,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from events_validator_spark.operators.validation import compile_violations, TypedAccessor
+from events_validator_spark.operators.validation import validate_typed
 
 
 def validate_stream(stream_df: DataFrame, rules: dict) -> DataFrame:
     """Attach the compiled violations column to a streaming DataFrame —
     stateless, so it composes with any downstream sink/mode."""
-    acc = TypedAccessor(None, stream_df.schema, root_df=stream_df)
-    return stream_df.withColumn("violations", compile_violations(rules, acc))
+    return validate_typed(stream_df, rules)
 
 
 def streaming_verdict_counts(validated: DataFrame, ts_col: str = "ts",

@@ -1,6 +1,8 @@
 """Exact JS Number::toString fidelity over the FULL double range — the
-Column implementation (js_number_to_string), the pure-Python mirror
-(py_js_number_repr), and hand-pinned ECMAScript outputs must all agree.
+Spark implementation (the SQL-text formatter js_number_to_string_sql), the
+pure-Python mirror (py_js_number_repr), and hand-pinned ECMAScript outputs
+must all agree; the VARIANT toString must agree with the oracle's
+py_js_to_string.
 Boundary semantics: decimal notation for -6 < k+1 <= 21, scientific with
 'e+'/'e-' outside; NaN/Infinity; -0 prints '0'.
 """
@@ -10,7 +12,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from events_validator_spark.functions.js_compat import (
-    js_number_to_string, py_js_number_repr,
+    js_number_to_string_sql, py_js_number_repr, py_js_to_string,
 )
 
 # (input double, String(input) as printed by ECMAScript)
@@ -46,12 +48,16 @@ def test_python_mirror_matches_pinned_js():
         assert py_js_number_repr(v) == want, v
 
 
+def _js_strings(spark, vals):
+    """String(v) per value, evaluated by the Spark SQL-text formatter."""
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, d double")
+    return {r["i"]: r["s"]
+            for r in df.select("i", F.expr(js_number_to_string_sql("d"))
+                               .alias("s")).collect()}
+
+
 def test_column_impl_matches_pinned_js(spark):
-    df = spark.createDataFrame([(i, v) for i, (v, _) in enumerate(JS_PINNED)],
-                               "i int, d double")
-    got = {r["i"]: r["s"]
-           for r in df.select("i", js_number_to_string(F.col("d"))
-                              .alias("s")).collect()}
+    got = _js_strings(spark, [v for v, _ in JS_PINNED])
     for i, (v, want) in enumerate(JS_PINNED):
         assert got[i] == want, v
 
@@ -65,50 +71,46 @@ def _collect_floats(acc, v):
 def test_column_impl_matches_python_mirror_full_range(spark):
     vals: list[float] = []
     _collect_floats(vals)
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)],
-                               "i int, d double")
-    got = {r["i"]: r["s"]
-           for r in df.select("i", js_number_to_string(F.col("d"))
-                              .alias("s")).collect()}
+    got = _js_strings(spark, vals)
     for i, v in enumerate(vals):
         assert got[i] == py_js_number_repr(v), repr(v)
 
 
-def test_sql_text_formatter_matches_tree(spark):
-    """The SQL-text twin (js_number_to_string_sql, the textual staging
-    path) must agree with the Column tree on specials + a deterministic
-    bit-pattern double corpus."""
+def test_sql_text_formatter_matches_python_mirror_on_bit_patterns(spark):
+    """A deterministic corpus of random 64-bit patterns (every exponent,
+    subnormals, NaN payloads) plus specials and NULL."""
     import random
     import struct
-    from events_validator_spark.functions.js_compat import js_number_to_string_sql
     random.seed(20240817)
     vals = [0.0, -0.0, 1.5, 0.1, 1e16, 1e16 - 2, 1e21, 2.5e22, 1e-6, 1e-7,
             5e-324, 1.7976931348623157e308, 123456789012345678.0,
             float("inf"), float("-inf"), float("nan"), None]
     vals += [struct.unpack("<d", struct.pack("<Q", random.getrandbits(64)))[0]
              for _ in range(2000)]
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    bad = (df.select(F.expr(js_number_to_string_sql("x")).alias("u"),
-                     js_number_to_string(F.col("x")).alias("t"))
-           .where("NOT (u <=> t)"))
-    assert bad.count() == 0
+    got = _js_strings(spark, vals)
+    for i, v in enumerate(vals):
+        want = None if v is None else py_js_number_repr(v)
+        assert got[i] == want, repr(v)
 
 
-def test_sql_text_variant_tostring_matches_tree(spark):
-    """The textual variant toString (validation_sql.variant_to_string_sql)
-    must agree with the Column tree across every variant shape, including
-    nested arrays at the depth limit."""
-    from events_validator_spark.operators.validation import _variant_to_string
-    from events_validator_spark.operators.validation_sql import variant_to_string_sql
+def test_sql_text_variant_tostring_matches_python_oracle(spark):
+    """The VARIANT toString (validation_sql.variant_to_string_sql) must equal
+    the oracle's JS toString of the parsed payload across every variant
+    shape, including nested arrays at the depth limit."""
+    import json
+    from events_validator_spark.operators.validation_sql import (
+        variant_to_string_sql,
+    )
     payloads = ['1.5', '"s"', '[1,2.25,"a",[3,[4,5],"x"],true]', 'null',
                 'true', 'false', '{"a":1}', '1e300', '0.1', '[[[1]]]', '[]',
-                '-2.5e-8', '""', '[null,1]', '9007199254740993']
-    df = spark.createDataFrame([('{"k":' + s + '}',) for s in payloads],
-                               "props string")
-    v = F.try_variant_get(F.try_parse_json(F.col("props")), '$["k"]', "variant")
+                '-2.5e-8', '""', '[null,1]', '9007199254740993', '1e22',
+                '[1e21,{"b":[]},null]']
+    df = spark.createDataFrame(
+        [(i, '{"k":' + s + '}') for i, s in enumerate(payloads)],
+        "i int, props string")
     txt = variant_to_string_sql(
         "try_variant_get(try_parse_json(`props`), '$[\"k\"]', 'variant')")
-    bad = (df.select(F.expr(txt).alias("u"),
-                     _variant_to_string(v).alias("t"))
-           .where("NOT (u <=> t)"))
-    assert bad.count() == 0
+    got = {r["i"]: r["u"]
+           for r in df.select("i", F.expr(txt).alias("u")).collect()}
+    for i, s in enumerate(payloads):
+        assert got[i] == py_js_to_string(json.loads(s)), s

@@ -9,8 +9,8 @@ properties that make the engine survive a 100 TB input:
   whole producer expression into a Filter below the staged projection);
 * the flagship query must not shuffle a splittable input (a corpus-wide
   Exchange before a shuffle-free projection is a scale-killer);
-* the staged prebind projection must keep the plan's ``parseJson`` count
-  independent of the number of checks.
+* the staged parse projection must keep the plan's ``parseJson`` count
+  independent of the number of checks (validate_json and validate_multi).
 """
 
 import os
@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from events_validator_spark.operators.validation import (
-    explode_violations, validate_json,
+    explode_violations, validate_json, validate_multi,
 )
 
 RULES = {"k": {"type": "number", "regex": "^[0-9]{2}$"}, "u": {"type": "string"}}
@@ -52,6 +52,19 @@ def test_prebind_stages_parse_json_once(events):
     projection), and the Generate input does not."""
     df = validate_json(events, RULES, "props")
     plan = _optimized(df)
+    staged_lines = [ln for ln in plan.splitlines() if "parseJson" in ln]
+    assert len(staged_lines) == 1, plan
+
+
+def test_validate_multi_stages_parse_json_once(events):
+    """validate_multi shares the staged parse: exactly ONE Project mentions
+    parseJson however many event types and checks read the payload."""
+    rules_by_name = {"a": RULES, "b": {"k": {"type": "string"}},
+                     "c": {"u": {"type": "number", "enum": [1, 2]}}}
+    df = events.withColumn("name", F.element_at(
+        F.array(*[F.lit(n) for n in rules_by_name]),
+        (F.col("event_id") % 3 + 1).cast("int")))
+    plan = _optimized(validate_multi(df, rules_by_name, "name", "props"))
     staged_lines = [ln for ln in plan.splitlines() if "parseJson" in ln]
     assert len(staged_lines) == 1, plan
 

@@ -78,9 +78,8 @@ def _collect_specs(acc, spec):
 
 def test_hypothesis_differential(spark):
     """Cross EVERY generated event with EVERY generated rule spec: each spec
-    compiles once (rule compilation is the expensive step — the exact
-    Number::toString tree is ~0.3 s of py4j per value/regex/enum field) and
-    validates the whole event batch in one job, so coverage is
+    compiles once (rule compilation plus plan analysis is the expensive
+    step) and validates the whole event batch in one job, so coverage is
     #specs × #events differential comparisons for #specs compiles."""
     evs: list[dict] = []
     specs: list[dict] = []
@@ -92,16 +91,9 @@ def test_hypothesis_differential(spark):
     df = spark.createDataFrame(
         [(i, json.dumps(ev)) for i, ev in enumerate(evs)], ["i", "props"])
     n_checked = 0
-    for spec_no, rules in enumerate(uniq.values()):
+    for rules in uniq.values():
         got = {r["i"]: [tuple(x) for x in r["violations"]]
                for r in validate_json(df, rules, "props").collect()}
-        if spec_no % 3 == 0:
-            # the staged (prebind) and inline paths must agree exactly —
-            # sampled every 3rd spec to bound the extra Spark jobs
-            inline = {r["i"]: [tuple(x) for x in r["violations"]]
-                      for r in validate_json(df, rules, "props",
-                                             prebind=False).collect()}
-            assert inline == got, f"prebind/inline divergence\nrules: {rules!r}"
         for i, ev in enumerate(evs):
             expected = check_with_schema(rules, ev)
             assert got[i] == expected, (

@@ -59,8 +59,7 @@ def test_validate_multi_json_dispatch(spark):
             assert got[r["id"]][1] == expected
 
 
-def test_validate_multi_union_equivalent(spark):
-    from events_validator_spark.operators.validation import validate_multi_union
+def test_validate_multi_union_equivalent(spark, per_type_union):
     rows = [
         (1, "purchase", '{"k": 5, "amount": 9.99}'),
         (2, "purchase", '{"k": 5}'),
@@ -71,8 +70,7 @@ def test_validate_multi_union_equivalent(spark):
     ]
     df = spark.createDataFrame(rows, ["id", "event_type", "props"])
     chain = validate_multi(df, RULES_BY_TYPE, "event_type", json_col="props")
-    union = validate_multi_union(df, RULES_BY_TYPE, "event_type",
-                                 json_col="props")
+    union = per_type_union(df, RULES_BY_TYPE, "event_type", "props")
     def norm(out):
         return {r["id"]: (r["status"],
                           None if r["violations"] is None

@@ -7,7 +7,6 @@ import json
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from events_validator_spark.js_oracle import check_with_schema
 from events_validator_spark.operators.validation import validate_json, validate_typed
@@ -206,17 +205,15 @@ def test_array_of_array_typed_path(spark):
     ]
 
 
-def test_validate_multi_malformed_json_chain_equals_union(spark):
-    from events_validator_spark.operators.validation import (
-        validate_multi, validate_multi_union,
-    )
+def test_validate_multi_malformed_json_chain_equals_union(spark, per_type_union):
+    from events_validator_spark.operators.validation import validate_multi
     rules_by = {"a": {"k": {"type": "number"}},
                 "b": {"k": {"type": "string"}}}
     df = spark.createDataFrame(
         [(1, "a", '{"k": 1}'), (2, "a", "{nope"), (3, "zz", "{nope"),
          (4, "b", '{"k": 1}')],
         ["i", "name", "props"])
-    for fn in (validate_multi, validate_multi_union):
+    for fn in (validate_multi, per_type_union):
         out = {r["i"]: (r["status"],
                         [tuple(x) for x in (r["violations"] or [])])
                for r in fn(df, rules_by, "name", "props").collect()}
@@ -235,51 +232,139 @@ def test_bad_regex_rejected_at_compile_time(spark):
         validate_json(df, {"k": {"regex": "[a-"}}, "props")
 
 
-def test_textual_compiler_matches_column_compiler(spark, monkeypatch):
-    """Full-corpus differential for the textual twin compiler (VERDICT r3
-    #7): the staged GA4 chain built via validation_sql (SQL text, one parse
-    per key) must produce byte-identical violations/status to the same
-    chain with the textual path disabled (Column-built checks), on a corpus
-    that exercises value/type/length/regex/enum, nested items elements
-    (object and non-object), empty strings, and big doubles."""
-    from events_validator_spark.operators import validation_sql
+# In-repo multi-type corpus: GA4-shaped rule sets sharing parameters, with
+# every rule kind, nested items, a numeric coupon rule and a NaN value rule.
+MULTI_RULES = {
+    "purchase": {
+        "currency": {"type": "string", "regex": "^[A-Z]{3}$"},
+        "value": {"type": "number"},
+        "transaction_id": {"type": "string"},
+        "coupon": {"type": "string", "optional": True},
+        "shipping": {"type": "number", "value": 1e22},
+        "items": {"type": "array", "nestedSchema": {
+            "item_id": {"type": "string"},
+            "quantity": {"type": "number", "optional": True},
+            "": {"type": "number", "optional": True}}},
+    },
+    "refund": {
+        "currency": {"type": "string", "enum": ["USD", "EUR"]},
+        "value": {"type": "number", "value": float("nan")},
+        "transaction_id": {"type": "string", "length": 0},
+        "items": {"type": "array", "nestedSchema": {
+            "item_id": {"type": "string"},
+            "price": {"type": "number", "value": 1.5}}},
+    },
+    "view_item": {
+        "version": {"type": "number"},
+        "value": {"type": "number"},
+        "coupon": {"type": "number", "value": 17},
+        "items": {"type": "array", "length": 3},
+        "user_info": {"type": "object",
+                      "nestedSchema": {"user_id": {"type": "string"}}},
+    },
+}
+
+MULTI_PAYLOADS = [
+    '{"currency": "USD", "value": 9.5, "transaction_id": "", '
+    '"items": [{"item_id": 3, "quantity": "x"}, 7, null], '
+    '"shipping": 1e22, "coupon": 17}',
+    '{"currency": "usd", "value": "9.5", "transaction_id": "t1", '
+    '"items": [{"item_id": "a", "price": 1.5}, {"": 2}], "shipping": 1e21, '
+    '"coupon": "", "user_info": {"user_id": ""}}',
+    '{"currency": "EUR", "value": 0, "items": [], "coupon": 17.0, '
+    '"user_info": null}',
+    '{"items": "nope", "user_info": [], "shipping": 10000000000000000000000}',
+    '{"currency": "USD", "value": 3, "transaction_id": "t", "shipping": '
+    '1e22, "coupon": "SAVE", "items": [{"item_id": "a", "quantity": 2}, '
+    '{"item_id": "b", "": 1}], "user_info": {"user_id": "u"}}',
+    '{"value": 3, "coupon": 17, "items": [1, 2, 3], '
+    '"user_info": {"user_id": "u"}}',
+    '{}',
+    '{nope',
+    None,
+]
+
+
+def test_multi_corpus_matches_oracle(spark):
+    """validate_multi over an in-repo multi-type corpus must match the
+    oracle row for row: nested items with object/scalar/null elements, '',
+    1e22, numeric coupon, NaN value rule, malformed rows, unknown and NULL
+    types (the reference's 404), NULL payloads."""
     from events_validator_spark.operators.validation import validate_multi
-    from events_validator_spark.sources.rules_loader import load_rules_dir
-    rules = load_rules_dir(
-        "/root/reference/terraform_backend/src/GA4 Recommended/schemas")
-    names = sorted(rules)
-    arr = F.array(*[F.lit(x) for x in names])
-    idx = (F.pmod(F.xxhash64("id"), F.lit(len(names))) + 1).cast("int")
-    df = spark.range(3000).select(
-        F.col("id"), F.element_at(arr, idx).alias("event_name"),
-        F.concat(F.lit('{"currency": "USD", "value": '),
-                 F.pmod(F.col("id"), F.lit(100)).cast("string"),
-                 F.lit('.5, "transaction_id": "", "items": '
-                       '[{"item_id": 3, "quantity": "x"}, 7, null], '
-                       '"shipping": 1e22, "coupon": 17}')).alias("props"))
-    a = validate_multi(df, rules, "event_name", json_col="props")
+    names = [*MULTI_RULES, "unknown_type", None]
+    rows = [(i * len(names) + j, name, props)
+            for i, props in enumerate(MULTI_PAYLOADS)
+            for j, name in enumerate(names)]
+    df = spark.createDataFrame(rows, "id long, event_name string, props string")
+    out = validate_multi(df, MULTI_RULES, "event_name", json_col="props")
+    got = {r["id"]: (r["status"], None if r["violations"] is None
+                     else [tuple(v) for v in r["violations"]])
+           for r in out.collect()}
+    invalid = [("$", "invalid_request", "well-formed JSON", "malformed JSON")]
+    n_failed = 0
+    for i, name, props in rows:
+        if name not in MULTI_RULES:
+            assert got[i] == ("schema_not_found", None), (name, props)
+            continue
+        if props == "{nope":
+            want = invalid
+        else:
+            want = check_with_schema(MULTI_RULES[name],
+                                     json.loads(props) if props else {})
+        status = "validation_failed" if want else "valid"
+        assert got[i] == (status, want), (
+            f"{name} {props}\nspark:  {got[i]!r}\noracle: {want!r}")
+        n_failed += bool(want)
+    assert 0 < n_failed < len(MULTI_PAYLOADS) * len(MULTI_RULES)
 
-    def off(*args, **kwargs):
-        raise validation_sql.TextualFallback("disabled for differential")
-    monkeypatch.setattr(validation_sql, "top_key_expr_sql", off)
-    b = validate_multi(df, rules, "event_name", json_col="props")
+    # an empty corpus knows no type: every row is schema_not_found
+    for json_col in ("props", None):
+        empty = validate_multi(df, {}, "event_name", json_col=json_col)
+        assert empty.columns == df.columns + ["violations", "status"]
+        assert {(r["status"], r["violations"]) for r in empty.collect()} \
+            == {("schema_not_found", None)}
 
-    ax = a.select("id", "status", F.explode_outer("violations").alias("v")) \
-          .select("id", "status", "v.*")
-    bx = b.select("id", "status", F.explode_outer("violations").alias("v")) \
-          .select("id", "status", "v.*")
-    assert ax.count() > 3000          # the corpus actually violates
-    assert ax.exceptAll(bx).count() == 0
-    assert bx.exceptAll(ax).count() == 0
+
+def test_helper_columns_never_clobber_input_columns(spark):
+    """Staged helper columns are named apart from every input column: an
+    input ``__f_note``, ``__ti`` and a json_col named ``__f_parsed`` all come
+    back unchanged, with the oracle's violations."""
+    from events_validator_spark.operators.validation import validate_multi
+    rules = {"k": {"type": "number", "regex": "^[0-9]$"},
+             "s": {"type": "string"}}
+    rows = [(1, "ev", '{"k": 1, "s": "x"}', "n1", 7),
+            (2, "ev", '{"k": "a"}', "n2", 8),
+            (3, "ev", "{nope", None, None)]
+    df = spark.createDataFrame(
+        rows, "id long, name string, __f_parsed string, __f_note string, "
+              "__ti int")
+    want = {i: check_with_schema(rules, json.loads(p)) for i, _, p, _, _
+            in rows if p != "{nope"}
+    want[3] = [("$", "invalid_request", "well-formed JSON", "malformed JSON")]
+    inputs = {r["id"]: tuple(r) for r in df.collect()}
+
+    single = validate_json(df, rules, "__f_parsed")
+    multi = validate_multi(df, {"ev": rules}, "name", json_col="__f_parsed")
+    assert single.columns == df.columns + ["violations"]
+    assert multi.columns == df.columns + ["violations", "status"]
+    for out in (single, multi):
+        for r in out.collect():
+            assert tuple(r[c] for c in df.columns) == inputs[r["id"]]
+            assert [tuple(v) for v in r["violations"]] == want[r["id"]]
+
+
+def _viol(df):
+    return {r["id"]: [tuple(v) for v in r["violations"]] for r in df.collect()}
 
 
 def test_chain_memo_never_serves_stale_rules(spark):
-    """The corpus-level plan memo (_CHAIN_CACHE) must key on rule CONTENT:
-    an edited rule set builds a fresh dispatch, and flipping back to the
-    original corpus (a memo hit) still yields the original semantics."""
+    """The compiled-check memo must key on rule CONTENT in SPEC ORDER (key
+    order sets violation order) and on the field's type: an edited or
+    reordered rule set builds fresh checks, and flipping back to the
+    original (a memo hit) still yields the original semantics."""
     from events_validator_spark.operators.validation import validate_multi
-    df = spark.createDataFrame([("ev", '{"k": 1}')],
-                               "event_name string, props string")
+    df = spark.createDataFrame([(1, "ev", '{"k": 1}')],
+                               "id long, event_name string, props string")
     rules_num = {"ev": {"k": {"type": "number"}}}
     rules_str = {"ev": {"k": {"type": "string"}}}
     def status(rules):
@@ -289,6 +374,63 @@ def test_chain_memo_never_serves_stale_rules(spark):
     assert status(rules_str) == "validation_failed"   # edit seen, not stale
     assert status(rules_num) == "valid"               # memo hit, not stale
 
+    # key order, top level and nested, on all three entry points
+    ab = {"a": {"type": "string"}, "b": {"type": "string"}}
+    ba = {"b": {"type": "string"}, "a": {"type": "string"}}
+    event = {"items": [{}]}
+    payload = spark.createDataFrame([(1, "ev", json.dumps(event))],
+                                    "id long, event_name string, props string")
+    typed = spark.createDataFrame([(1, [(None, None)])],
+                                  "id long, items array<struct<a:string,b:string>>")
+    for spec in (ab, ba, ab):
+        for rules in ({"items": {"type": "array", "nestedSchema": spec}},
+                      {**spec, "items": {"type": "array"}},
+                      {"items": {"type": "array"}, **spec}):
+            want = check_with_schema(rules, event)
+            assert _viol(validate_json(payload, rules, "props"))[1] == want
+            assert _viol(validate_multi(payload, {"ev": rules}, "event_name",
+                                        json_col="props"))[1] == want
+            assert _viol(validate_typed(typed, rules))[1] == want
+
+    # same-named typed columns of different Spark types: own verdicts
+    rules = {"k": {"type": "number", "value": 1}}
+    as_long = spark.createDataFrame([(1, 1)], "id long, k long")
+    as_str = spark.createDataFrame([(1, "1")], "id long, k string")
+    assert _viol(validate_typed(as_long, rules))[1] == []
+    assert _viol(validate_typed(as_str, rules))[1] == [
+        ("k", "type", "number", "string")]
+    assert _viol(validate_typed(as_long, rules))[1] == []
+
+
+def test_typed_memo_hit_is_cheap(spark):
+    """A second validate_typed with the same rules on a NEW DataFrame of the
+    same schema reuses every compiled check: under 100 py4j round trips
+    (building the Column tree cost ~4,300)."""
+    from events_validator_spark.operators import validation_sql
+    validate_typed(interleaved_docs(spark, 50), DOC_RULES)
+    docs = interleaved_docs(spark, 60)
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+    memo_size = len(validation_sql._MEMO)
+    client.send_command = counting
+    try:
+        out = validate_typed(docs, DOC_RULES)
+    finally:
+        del client.send_command
+    assert len(calls) < 100, len(calls)
+    assert len(validation_sql._MEMO) == memo_size
+    rows = out.collect()
+    for r in rows:
+        event = row_to_event(r)
+        event.pop("violations", None)
+        assert [tuple(x) for x in r["violations"]] == \
+            check_with_schema(DOC_RULES, event)
+
 
 def test_element_ok_gate_matches_ungated(spark, monkeypatch):
     """The typed-array clean-element gate (round 6) must be a pure
@@ -297,9 +439,7 @@ def test_element_ok_gate_matches_ungated(spark, monkeypatch):
     (null spans array, empty array, null struct element fields, value/
     length rules on nested keys)."""
     from events_validator_spark.operators import validation as V
-    from events_validator_spark.sources.synthetic import (
-        DOC_RULES, interleaved_docs,
-    )
+    from events_validator_spark.operators import validation_sql
 
     docs = interleaved_docs(spark, 20_000)
     # adversarial extras the generator never emits
@@ -328,7 +468,7 @@ def test_element_ok_gate_matches_ungated(spark, monkeypatch):
     }
 
     def run(gate, rules):
-        monkeypatch.setattr(V, "_ELEM_OK_GATE", gate)
+        monkeypatch.setattr(validation_sql, "_ELEM_OK_GATE", gate)
         out = V.validate_typed(corpus, rules)
         return (V.explode_violations(out, ["doc_id"])
                 .orderBy("doc_id", "field", "error_type", "expected",

@@ -2,8 +2,11 @@
 
 Scale design (the 100 TB story):
   * exact dedup is a hash groupBy on a fingerprint — one shuffle of (fp, id);
-  * MinHash signatures and SimHash are pure Column expressions (JVM codegen) —
-    the full corpus is scanned once, emitting fixed-width signatures;
+  * shingles, MinHash bands and SimHash are built ONE way: as SQL text over
+    a fixed internal column (``_TEXT``) that each operator aliases
+    ``F.col(text_col)`` to — one ``F.expr`` parse per build instead of
+    hundreds of py4j round trips, any column name or nested field accepted.
+    The full corpus is scanned once, emitting fixed-width signatures;
   * LSH banding turns all-pairs O(n²) into groupBy(band, band_hash) buckets;
     candidate pairs are generated only within buckets, with an explicit bucket
     cap (hot buckets — boilerplate/empty docs — would otherwise explode
@@ -14,37 +17,30 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame, functions as F
 
-from events_validator_spark.functions.exprs import let_
-from events_validator_spark.operators.text import tokens
+# The signature SQL names only this column, so it never quotes a caller's
+# name. ``transform(array(v), x -> ...)[0]`` binds a shared sub-result once
+# per row: Catalyst never re-inlines a lambda variable, so a value read per
+# hash or per bit is evaluated once, not cloned into the plan per reference.
+_TEXT = "__dedup_text"
 
-_SAFE_NAME = re.compile(r"^[A-Za-z0-9_.\- ]+$")
 
+def _texts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, __dedup_text) — the only place ``text_col`` is resolved."""
+    return df.select(F.col(id_col).alias("id"), F.col(text_col).alias(_TEXT))
 
-# ---------------------------------------------------------------------------
-# Textual twins (VERDICT r3 #7 technique, applied to the LSH builders):
-# the MinHash/SimHash signature trees are hundreds of py4j round trips per
-# build (num_hashes transforms / bits bit-vote aggregates); generated as SQL
-# text they cost one F.expr parse. Semantics mirror the Column builders
-# line-for-line; equivalence is pinned by
-# tests/test_operators.py::test_lsh_textual_twins_match_column_builders and
-# the m1/m2/m3 driver oracles. Column builders remain the fallback for
-# unsafe column names.
-# ---------------------------------------------------------------------------
 
 def _tokens_sql(c: str) -> str:
-    """Mirror of text.tokens: blank text → empty array, else \\s+ split."""
+    """Blank text → empty array, else \\s+ split (text.tokens as SQL)."""
     return (f"(CASE WHEN (trim({c}) = '') "
             f"THEN CAST(array() AS ARRAY<STRING>) "
             f"ELSE split(trim({c}), '\\\\s+') END)")
 
 
-def _shingles_sql(c: str, k: int = 3) -> str:
-    """Mirror of shingles(): distinct word k-grams; short docs fall back to
-    the whole text as one shingle. Let-binds the token array."""
+def _shingles_sql(k: int) -> str:
+    """Distinct lowercase word k-grams; short docs (< k tokens) fall back to
+    the whole text as one shingle. The token array is bound once."""
     t, i = "_sht", "_shi"
     n = f"size({t})"
     parts = ", ".join(f"element_at({t}, CAST(({i} + {j}) AS INT))"
@@ -54,23 +50,24 @@ def _shingles_sql(c: str, k: int = 3) -> str:
     whole = f"array(concat_ws(' ', {t}))"
     body = (f"array_distinct(CASE WHEN ({n} >= {k}) THEN {grams} "
             f"ELSE {whole} END)")
-    return (f"(transform(array({_tokens_sql(f'lower({c})')}), "
+    return (f"(transform(array({_tokens_sql(f'lower({_TEXT})')}), "
             f"{t} -> {body}))[0]")
 
 
-def _minhash_signature_sql(c: str, num_hashes: int, k: int) -> str:
-    """Mirror of minhash_signature(): per seed, min over shingles of
-    xxhash64(shingle, seed); shingles bound once."""
+def _minhash_signature_sql(num_hashes: int, k: int) -> str:
+    """MinHash signature: per seed, min over shingles of
+    xxhash64(shingle, seed); the shingle array is bound once."""
     s, e = "_mhs", "_mhe"
     mins = ", ".join(
         f"array_min(transform({s}, {e} -> xxhash64({e}, {i})))"
         for i in range(num_hashes))
-    return (f"(transform(array({_shingles_sql(c, k)}), "
+    return (f"(transform(array({_shingles_sql(k)}), "
             f"{s} -> array({mins})))[0]")
 
 
-def _band_structs_sql(c: str, num_hashes: int, bands: int, k: int) -> str:
-    """Mirror of the banded signature: per band, xxhash64 over its rows."""
+def _band_structs_sql(num_hashes: int, bands: int, k: int) -> str:
+    """LSH bands: per band, xxhash64 over its signature rows →
+    array<struct<band, bh>>; the signature is bound once."""
     r = num_hashes // bands
     sig = "_mbs"
     structs = ", ".join(
@@ -78,13 +75,21 @@ def _band_structs_sql(c: str, num_hashes: int, bands: int, k: int) -> str:
             b=b, cols=", ".join(f"element_at({sig}, {b * r + j + 1})"
                                 for j in range(r)))
         for b in range(bands))
-    return (f"(transform(array({_minhash_signature_sql(c, num_hashes, k)}), "
+    return (f"(transform(array({_minhash_signature_sql(num_hashes, k)}), "
             f"{sig} -> array({structs})))[0]")
 
 
-def _simhash_sql(c: str, bits: int, token_hash: str) -> str:
-    """Mirror of simhash(): per-bit ±1 votes over token hashes, bound once
-    per row at both the token and hash-array levels."""
+def _simhash_sql(bits: int, token_hash: str) -> str:
+    """SimHash signature over lowercase whitespace tokens, as a long
+    (bits ≤ 64): per bit b, sum over tokens of ±1 by token-hash bit b; the
+    signature bit is 1 when the vote is positive. Tokens and the hash array
+    are each bound once per row.
+
+    ``token_hash='md5'`` uses the first 15 hex chars of md5 as a 60-bit
+    token hash — byte-identical in DuckDB (``'0x'||substr(md5(t),1,15)``),
+    which makes the whole SimHash pipeline SQL-oracle-checkable; use
+    ``bits=60`` with it. xxhash64 (default) is the faster engine-only path.
+    """
     t, h, e = "_sit", "_sih", "_sie"
     if token_hash == "md5":
         th = f"CAST(conv(substring(md5({e}), 1, 15), 16, 10) AS BIGINT)"
@@ -97,7 +102,7 @@ def _simhash_sql(c: str, bits: int, token_hash: str) -> str:
         f"ELSE CAST(0 AS BIGINT) END)"
         for b in range(bits))
     inner = f"(transform(array(transform({t}, {e} -> {th})), {h} -> ({votes})))[0]"
-    return (f"(transform(array({_tokens_sql(f'lower({c})')}), "
+    return (f"(transform(array({_tokens_sql(f'lower({_TEXT})')}), "
             f"{t} -> {inner}))[0]")
 
 
@@ -118,8 +123,14 @@ def pairs_expr(items: Column) -> Column:
 def bucket_pairs(buckets: DataFrame, keys: list[str]) -> DataFrame:
     """``capped_buckets`` output → one row per unordered within-bucket item
     pair (columns ``a``, ``b``; ``a`` precedes ``b`` in the sorted items
-    array — identical pair set and orientation to exploding
-    :func:`pairs_expr`).
+    array).
+
+    Precondition: the bucket ``keys`` are non-NULL. The self-join matches
+    keys with ``=``, so a bucket whose key is NULL emits no pairs, where
+    exploding :func:`pairs_expr` would still pair its items. For non-NULL
+    keys the pair set and orientation are identical. Every package caller
+    meets this: MinHash ``bh`` is an ``xxhash64`` (never NULL) and SimHash
+    of a NULL text is 0, so its chunks are 0, not NULL.
 
     The JOIN form of pair generation (round 6): posexplode the capped items
     and self-join on the bucket keys with ``pos_a < pos_b``. The nested
@@ -180,33 +191,8 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
 
 
 # ---------------------------------------------------------------------------
-# Shingles and MinHash
+# MinHash
 # ---------------------------------------------------------------------------
-
-def shingles(col: Column, k: int = 3) -> Column:
-    """Distinct word k-gram shingles of a text column."""
-    def build(toks: Column) -> Column:
-        n = F.size(toks)
-        grams = F.transform(
-            F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0))),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, (i + j).cast("int")) for j in range(k)]))
-        # short docs: fall back to the whole text as one shingle
-        whole = F.array(F.concat_ws(" ", toks))
-        return F.array_distinct(F.when(n >= k, grams).otherwise(whole))
-    return let_(tokens(F.lower(col)), build)
-
-
-def minhash_signature(col: Column, num_hashes: int = 64, k: int = 3) -> Column:
-    """MinHash signature: per seed s, min over shingles of xxhash64(sh, s).
-
-    The shingle array is let_-bound so it is computed ONCE per row, not once
-    per hash function (expression-tree blowup, see functions/exprs.py)."""
-    return let_(shingles(col, k), lambda sh: F.array(*[
-        F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(i))))
-        for i in range(num_hashes)
-    ]))
-
 
 def minhash_bands(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", num_hashes: int = 64,
@@ -219,20 +205,9 @@ def minhash_bands(df: DataFrame, text_col: str = "text",
     batch) so the next batch joins against stored keys instead of
     re-signaturing the corpus (:func:`minhash_dedup_incremental`).
     """
-    r = num_hashes // bands
-    if _SAFE_NAME.match(text_col):
-        band_structs = F.expr(
-            _band_structs_sql(f"`{text_col}`", num_hashes, bands, k))
-    else:
-        sig = minhash_signature(F.col(text_col), num_hashes, k)
-        band_structs = let_(sig, lambda s: F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*[F.element_at(s, b * r + j + 1)
-                                  for j in range(r)]).alias("bh"))
-            for b in range(bands)
-        ]))
-    return (df.select(F.col(id_col).alias("id"),
-                      F.explode(band_structs).alias("b"))
+    bands_sql = _band_structs_sql(num_hashes, bands, k)
+    return (_texts(df, text_col, id_col)
+            .select("id", F.explode(F.expr(bands_sql)).alias("b"))
             .select("id", "b.band", "b.bh"))
 
 
@@ -266,10 +241,8 @@ def jaccard_pairs(df: DataFrame, pairs: DataFrame, text_col: str = "text",
     (session.py sets 64 MB), and falls back to a shuffle join keyed on ids —
     still pair-set-sized, never corpus² — when it does not.
     """
-    sh_col = (F.expr(_shingles_sql(f"`{text_col}`", k))
-              if _SAFE_NAME.match(text_col)
-              else shingles(F.col(text_col), k))
-    sh = df.select(F.col(id_col).alias("id"), sh_col.alias("sh"))
+    sh = _texts(df, text_col, id_col).select(
+        "id", F.expr(_shingles_sql(k)).alias("sh"))
     a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     return (pairs.join(a, "id_a").join(b, "id_b")
@@ -361,12 +334,12 @@ def minhash_dedup_incremental(new_docs: DataFrame, index: DataFrame,
     # join prunes rows only after the shingle projection). explode keeps
     # `touching` referenced once — a two-column union would double it
     cand_ids = (touching
-                .select(F.explode(F.array("id_a", "id_b")).alias(id_col))
+                .select(F.explode(F.array("id_a", "id_b")).alias("id"))
                 .distinct())
-    texts = (corpus_docs.select(F.col(id_col), F.col(text_col))
-             .unionByName(new_docs.select(F.col(id_col), F.col(text_col)))
-             .join(cand_ids, id_col, "left_semi"))
-    scored = jaccard_pairs(texts, touching, text_col, id_col, k=k)
+    texts = (_texts(corpus_docs, text_col, id_col)
+             .unionByName(_texts(new_docs, text_col, id_col))
+             .join(cand_ids, "id", "left_semi"))
+    scored = jaccard_pairs(texts, touching, _TEXT, "id", k=k)
     return scored.where(F.col("jaccard") >= threshold), new_bands
 
 
@@ -390,12 +363,12 @@ def ngram_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     count. No hard broadcast hint: an unusually large benchmark degrades to
     a shuffle join on the gram key, never a corpus self-join. Short docs
     (< k tokens) fall back to their whole text as one shingle — same rule
-    as :func:`shingles`, so a verbatim short-question copy still matches.
+    as :func:`jaccard_pairs`, so a verbatim short-question copy still
+    matches.
     """
-    c = (corpus.select(F.col(id_col).alias("id"),
-                       F.explode(shingles(F.col(text_col), k)).alias("gram")))
-    b = (benchmark.select(F.explode(shingles(F.col(text_col), k))
-                          .alias("gram"))
+    grams = F.explode(F.expr(_shingles_sql(k))).alias("gram")
+    c = _texts(corpus, text_col, id_col).select("id", grams)
+    b = (benchmark.select(F.col(text_col).alias(_TEXT)).select(grams)
          .distinct())
     shared = (c.join(b, "gram")
               .groupBy("id")
@@ -412,51 +385,14 @@ def ngram_decontaminate(corpus: DataFrame, benchmark: DataFrame,
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(col: Column, bits: int = 64,
-            token_hash: str = "xxhash64") -> Column:
-    """SimHash signature over whitespace tokens, as a long (bits ≤ 64).
-
-    Per bit position b: sum over tokens of ±1 by token-hash bit b; the
-    signature bit is 1 when the vote is positive. Pure expressions.
-
-    ``token_hash='md5'`` uses the first 15 hex chars of md5 as a 60-bit
-    token hash — byte-identical in DuckDB (``'0x'||substr(md5(t),1,15)``),
-    which makes the whole SimHash pipeline SQL-oracle-checkable; use
-    ``bits=60`` with it. xxhash64 (default) is the faster engine-only path.
-    """
-    def tok_hash(t: Column) -> Column:
-        if token_hash == "md5":
-            return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-        return F.xxhash64(t)
-
-    def build(toks: Column) -> Column:
-        hashes = F.transform(toks, tok_hash)
-
-        def from_hashes(hs: Column) -> Column:
-            def bit_vote(b: int) -> Column:
-                return F.aggregate(
-                    hs, F.lit(0),
-                    lambda acc, h: acc + F.when(
-                        F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1,
-                        F.lit(1)).otherwise(F.lit(-1)))
-            sig = F.lit(0).cast("long")
-            for b in range(bits):
-                sig = sig + F.when(bit_vote(b) > 0,
-                                   F.shiftleft(F.lit(1).cast("long"), b)
-                                   ).otherwise(F.lit(0).cast("long"))
-            return sig
-        # bind the hash array too: each token hashes once, not once per bit
-        return let_(hashes, from_hashes)
-    # let_-bind the token array: the bit-vote aggregates share one tokenization
-    return let_(tokens(F.lower(col)), build)
-
-
 def simhash_dedup_candidates(df: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id", bits: int = 64,
                              n_tables: int = 4, max_hamming: int = 3,
                              bucket_cap: int = 256,
                              token_hash: str = "xxhash64") -> DataFrame:
-    """Near-dup pairs by SimHash with pigeonhole multi-table bucketing.
+    """Near-dup pairs by SimHash (:func:`_simhash_sql`; ``token_hash='md5'``
+    with ``bits=60`` is the DuckDB-checkable variant) with pigeonhole
+    multi-table bucketing.
 
     The signature is split into ``n_tables`` equal chunks; docs are bucketed
     once per (table, chunk-value). Two signatures within hamming distance
@@ -470,10 +406,8 @@ def simhash_dedup_candidates(df: DataFrame, text_col: str = "text",
     """
     chunk_bits = bits // n_tables
     mask = (1 << chunk_bits) - 1
-    sig_col = (F.expr(_simhash_sql(f"`{text_col}`", bits, token_hash))
-               if _SAFE_NAME.match(text_col)
-               else simhash(F.col(text_col), bits, token_hash))
-    sigs = df.select(F.col(id_col).alias("id"), sig_col.alias("sig"))
+    sigs = _texts(df, text_col, id_col).select(
+        "id", F.expr(_simhash_sql(bits, token_hash)).alias("sig"))
     chunks = F.array(*[
         F.struct(F.lit(t).alias("t"),
                  F.shiftrightunsigned(F.col("sig"), t * chunk_bits)

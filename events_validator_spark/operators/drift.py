@@ -19,12 +19,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from events_validator_spark.functions.tdigest import TDigest
-from events_validator_spark.operators.stats import group_histogram
+from events_validator_spark.operators.stats import (
+    _bucket_counts, _prefix_sums,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -140,25 +142,19 @@ def psi_from_histograms(cur: DataFrame, base: DataFrame,
     """
     cc = cur.select(F.col("bucket"), F.col("cnt").alias("c_cnt"))
     bb = base.select(F.col("bucket"), F.col("cnt").alias("b_cnt"))
-    j = cc.join(bb, "bucket", "full_outer").fillna(0, ["c_cnt", "b_cnt"])
-    tot = j.agg(F.sum("c_cnt").alias("ct"), F.sum("b_cnt").alias("bt"))
-    j = j.crossJoin(F.broadcast(tot))
-    p = F.greatest(F.col("c_cnt") / F.greatest(F.col("ct"), F.lit(1)), F.lit(eps))
-    q = F.greatest(F.col("b_cnt") / F.greatest(F.col("bt"), F.lit(1)), F.lit(eps))
-    return j.agg(F.round(F.sum((p - q) * F.log(p / q)), 8).alias("psi"))
+    return _psi(cc.join(bb, "bucket", "full_outer")
+                .fillna(0, ["c_cnt", "b_cnt"]), eps)
 
 
 def psi_two_cohorts(df: DataFrame, column: str, cohort: F.Column,
                     nbins: int = 20, lo: float | None = None,
                     hi: float | None = None, eps: float = 1e-6) -> DataFrame:
     """PSI of ``column`` between cohort=True (current) and False (baseline),
-    in ONE scan: groupBy (cohort, bucket) then reshape."""
-    if lo is None or hi is None:
-        b = df.agg(F.min(F.col(column).cast("double")).alias("lo"),
-                   F.max(F.col(column).cast("double")).alias("hi")).collect()[0]
-        lo, hi = float(b["lo"]), float(b["hi"])
-    hist = group_histogram(df.withColumn("__cohort", cohort),
-                           column, "__cohort", nbins, lo, hi)
+    in ONE scan: groupBy (cohort, bucket) then reshape. Without ``lo``/``hi``
+    one min/max probe sets the bounds; an all-NULL or empty column has no
+    buckets and its PSI is NULL (as :func:`categorical_psi` on no rows)."""
+    hist = _bucket_counts(df.withColumn("__cohort", cohort), column, nbins,
+                          lo, hi, F.col("__cohort").alias("grp"))
     wide = (hist.groupBy("bucket")
             .agg(F.sum(F.when(F.col("grp"), F.col("cnt")).otherwise(0)).alias("c_cnt"),
                  F.sum(F.when(~F.col("grp"), F.col("cnt")).otherwise(0)).alias("b_cnt")))
@@ -167,11 +163,7 @@ def psi_two_cohorts(df: DataFrame, column: str, cohort: F.Column,
     # here measured ZERO net win at 6M rows, and would make repeated
     # executions of one plan object reuse the materialized 12-row table —
     # a steady-state timing distortion this bench must not have)
-    tot = wide.agg(F.sum("c_cnt").alias("ct"), F.sum("b_cnt").alias("bt"))
-    j = wide.crossJoin(F.broadcast(tot))
-    p = F.greatest(F.col("c_cnt") / F.greatest(F.col("ct"), F.lit(1)), F.lit(eps))
-    q = F.greatest(F.col("b_cnt") / F.greatest(F.col("bt"), F.lit(1)), F.lit(eps))
-    return j.agg(F.round(F.sum((p - q) * F.log(p / q)), 8).alias("psi"))
+    return _psi(wide, eps)
 
 
 def categorical_psi(df: DataFrame, column: str, cohort: F.Column,
@@ -193,12 +185,17 @@ def categorical_psi(df: DataFrame, column: str, cohort: F.Column,
             .groupBy(F.col(column).alias("category"))
             .agg(F.sum(F.when(cohort, 1).otherwise(0)).alias("c_cnt"),
                  F.sum(F.when(cohort, 0).otherwise(1)).alias("b_cnt")))
+    return _psi(wide, eps)
+
+
+def _psi(wide: DataFrame, eps: float) -> DataFrame:
+    """ε-smoothed PSI over per-bucket (c_cnt, b_cnt) rows → one row {psi}:
+    Σ (p − q) · ln(p / q), p and q the current and baseline shares floored
+    at ε. NULL when there are no rows."""
     tot = wide.agg(F.sum("c_cnt").alias("ct"), F.sum("b_cnt").alias("bt"))
     j = wide.crossJoin(F.broadcast(tot))
-    p = F.greatest(F.col("c_cnt") / F.greatest(F.col("ct"), F.lit(1)),
-                   F.lit(eps))
-    q = F.greatest(F.col("b_cnt") / F.greatest(F.col("bt"), F.lit(1)),
-                   F.lit(eps))
+    p = F.greatest(F.col("c_cnt") / F.greatest(F.col("ct"), F.lit(1)), F.lit(eps))
+    q = F.greatest(F.col("b_cnt") / F.greatest(F.col("bt"), F.lit(1)), F.lit(eps))
     return j.agg(F.round(F.sum((p - q) * F.log(p / q)), 8).alias("psi"))
 
 
@@ -212,49 +209,21 @@ def ks_two_sample(df: DataFrame, column: str, cohort: F.Column,
     """Exact two-sample KS statistic between cohort=True and cohort=False,
     fully distributed — NO single-partition sort over the data.
 
-    Classic distributed prefix-sum shape:
-      1. groupBy(x) pre-aggregates ties → one row per distinct value;
-      2. ``repartitionByRange(x)`` range-partitions the distinct values, so
-         partition p holds a contiguous x-interval;
-      3. per-partition cumulative sums via a window partitioned by the range
-         partition id — every partition's window runs in parallel;
-      4. per-partition TOTALS (one row per partition) are prefix-summed in a
-         tiny single-partition window over ~``n_partitions`` rows and joined
-         back as offsets — the only serial step touches P rows, not data.
-    Catalyst's ReuseExchange evaluates the range shuffle once for both the
-    local-cumsum and totals branches. → one row {ks}, exact.
+    ``groupBy(x)`` pre-aggregates ties (deterministic CDF regardless of
+    row order; the downstream input shrinks to the distinct-value count),
+    then the distributed prefix sum ``stats._prefix_sums`` builds both
+    cohorts' CDFs over range partitions — the only serial step touches one
+    row per partition, not data. → one row {ks}, exact.
     """
     d = df.select(F.col(column).cast("double").alias("x"),
                   cohort.cast("int").alias("in_a"))
     d = d.where(F.col("x").isNotNull())
-    # pre-aggregate ties: deterministic CDF regardless of row order, and the
-    # downstream input shrinks to the distinct-value count
     g = d.groupBy("x").agg(F.sum("in_a").alias("a"),
                            F.sum(1 - F.col("in_a")).alias("b"))
-    if n_partitions is None:
-        n_partitions = int(df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-    r = (g.repartitionByRange(n_partitions, "x")
-         .withColumn("pid", F.spark_partition_id()))
-    wp = (Window.partitionBy("pid").orderBy("x")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    local = r.select("pid",
-                     F.sum("a").over(wp).alias("la"),
-                     F.sum("b").over(wp).alias("lb"))
-    totals = r.groupBy("pid").agg(F.sum("a").alias("ta"),
-                                  F.sum("b").alias("tb"))
-    wo = (Window.orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.select(
-        "pid",
-        F.coalesce(F.sum("ta").over(wo), F.lit(0)).alias("oa"),
-        F.coalesce(F.sum("tb").over(wo), F.lit(0)).alias("ob"))
-    grand = totals.agg(F.sum("ta").alias("na"), F.sum("tb").alias("nb"))
-    cum = (local.join(F.broadcast(offsets), "pid")
-           .crossJoin(F.broadcast(grand)))
+    cum = _prefix_sums(g, [], "x", ["a", "b"], n_partitions)
     return cum.agg(F.round(F.max(F.abs(
-        (F.col("la") + F.col("oa")) / F.greatest(F.col("na"), F.lit(1)) -
-        (F.col("lb") + F.col("ob")) / F.greatest(F.col("nb"), F.lit(1)))),
+        F.col("cum_a") / F.greatest(F.col("n_a"), F.lit(1)) -
+        F.col("cum_b") / F.greatest(F.col("n_b"), F.lit(1)))),
         8).alias("ks"))
 
 

@@ -141,6 +141,25 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    # the guard rides the ONE collect this operator already performs
+    # (ADVICE r5): a separate limit().count() probe executed the whole
+    # query-side plan as an extra Spark job on every call — if `queries`
+    # derives from an expensive pipeline, that ran the pipeline twice.
+    # limit(max+1) bounds what a pathological input can ship to the driver;
+    # one extra row proves the violation without counting the rest. It runs
+    # BEFORE the KMeans fit, so an oversized query set fails before any
+    # training job.
+    qrows = (queries.select(F.col(query_id_col).alias("query_id"),
+                            F.col(vec_col).alias("__qvec"))
+             .limit(max_queries + 1).collect())
+    if len(qrows) > max_queries:
+        raise ValueError(
+            f"ivf_topk resolves probe cells driver-side; the query set "
+            f"exceeds max_queries={max_queries}. For a large "
+            f"query table, assign queries to cells JVM-side (KMeans "
+            f"model.transform on the query vectors + equi-join on cell) "
+            f"instead of collecting them — see ivf_topk_distributed.")
+
     feat = corpus.select(array_to_vector(F.col(vec_col)).alias("features"))
     if train_fraction < 1.0:
         feat = feat.sample(train_fraction, seed=seed)
@@ -155,22 +174,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     ).select("neighbor_id", "__cvec", "__cn",
              F.col("prediction").alias("cell"))
 
-    # the guard rides the ONE collect this operator already performs
-    # (ADVICE r5): a separate limit().count() probe executed the whole
-    # query-side plan as an extra Spark job on every call — if `queries`
-    # derives from an expensive pipeline, that ran the pipeline twice.
-    # limit(max+1) bounds what a pathological input can ship to the driver;
-    # one extra row proves the violation without counting the rest.
-    qrows = (queries.select(F.col(query_id_col).alias("query_id"),
-                            F.col(vec_col).alias("__qvec"))
-             .limit(max_queries + 1).collect())
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_topk resolves probe cells driver-side; the query set "
-            f"exceeds max_queries={max_queries}. For a large "
-            f"query table, assign queries to cells JVM-side (KMeans "
-            f"model.transform on the query vectors + equi-join on cell) "
-            f"instead of collecting them — see ivf_topk_distributed.")
     probe_rows = []
     for r in qrows:
         qv = np.asarray(r["__qvec"], dtype=np.float64)

@@ -12,7 +12,7 @@ that can be stored, diffed (drift baseline), and queried.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -112,17 +112,14 @@ def exact_profile(df: DataFrame, columns: list[str],
       * distinct        — the number of non-null groups (exact, no Expand:
                           grouping IS the distinct);
       * quantiles       — the distributed CDF prefix-sum of
-                          :func:`exact_quantiles`, generalized to run
-                          per-column over (col, x) range partitions.
+                          :func:`exact_quantiles` (:func:`_prefix_sums`),
+                          run per column over (col, x) range partitions.
 
     Grouping keys use the STRING repr (injective for numeric types) so two
     original values never collapse through a double cast; ordering uses the
     double. The distinct-value table is ``localCheckpoint``-ed: it feeds
-    both the stats agg and the CDF, and the range partitioning it carries
-    must be one stable fact (ADVICE r3 on :func:`exact_quantiles`).
+    both the stats agg and the CDF.
     """
-    from pyspark.sql import Window
-
     melt = df.select(F.explode(F.array(*[
         F.struct(F.lit(c).alias("col"),
                  F.col(c).cast("double").alias("xd"),
@@ -156,39 +153,11 @@ def exact_profile(df: DataFrame, columns: list[str],
         F.count(F.col("xs")).alias("distinct"))
 
     # distributed CDF over the distinct-value table, per column
-    gq = g.where(F.col("xd").isNotNull())
-    if n_partitions is None:
-        n_partitions = int(df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-    r = (gq.repartitionByRange(n_partitions, "col", "xd")
-         .withColumn("pid", F.spark_partition_id())
-         .localCheckpoint(eager=False))
-    wp = (Window.partitionBy("col", "pid").orderBy("xd")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    local = r.select("col", "xd", "pid", F.sum("c").over(wp).alias("lc"))
-    totals = r.groupBy("col", "pid").agg(F.sum("c").alias("tc"))
-    wo = (Window.partitionBy("col").orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.select(
-        "col", "pid", F.coalesce(F.sum("tc").over(wo), F.lit(0)).alias("off"))
-    grand = totals.groupBy("col").agg(F.sum("tc").alias("n"))
-    cum = (local.join(F.broadcast(offsets), ["col", "pid"])
-           .select("col", "xd", (F.col("lc") + F.col("off")).alias("cum"))
-           .join(F.broadcast(grand), "col"))
-    q_aggs = []
-    for i, q in enumerate(quantiles):
-        rank = F.lit(float(q)) * (F.col("n") - 1)
-        lo, hi = F.floor(rank), F.ceil(rank)
-        q_aggs += [
-            F.min(F.when(F.col("cum") > lo, F.col("xd"))).alias(f"vlo_{i}"),
-            F.min(F.when(F.col("cum") > hi, F.col("xd"))).alias(f"vhi_{i}"),
-            F.min(rank - lo).alias(f"frac_{i}")]
-    qrow = cum.groupBy("col").agg(*q_aggs).select(
-        "col",
-        F.array(*[
-            (F.col(f"vlo_{i}")
-             + F.col(f"frac_{i}") * (F.col(f"vhi_{i}") - F.col(f"vlo_{i}")))
-            for i in range(len(quantiles))]).alias("quantiles"))
+    cum = _prefix_sums(g.where(F.col("xd").isNotNull()), ["col"], "xd",
+                       ["c"], n_partitions)
+    qrow = (_quantiles_from_cdf(cum, ["col"], "xd", quantiles)
+            .select("col", F.array(*[f"q{i}" for i in range(len(quantiles))])
+                    .alias("quantiles")))
 
     # column spine: an EMPTY input must still yield one row per column
     # (count=0), matching the wide-agg contract — a groupBy over zero rows
@@ -215,28 +184,34 @@ def histogram(df: DataFrame, column: str, nbins: int = 20,
     Bucket ids are clamped to [0, nbins-1]; NULLs are dropped (they are counted
     by :func:`profile`).
     """
-    col = F.col(column).cast("double")
-    if lo is None or hi is None:
-        b = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-        lo = float(b["lo"]) if b["lo"] is not None else 0.0
-        hi = float(b["hi"]) if b["hi"] is not None else 1.0
-    width = (hi - lo) / nbins or 1.0
-    bucket = F.least(F.greatest(F.floor((col - F.lit(lo)) / F.lit(width)),
-                                F.lit(0)), F.lit(nbins - 1)).cast("int")
-    return (df.where(col.isNotNull())
-            .groupBy(bucket.alias("bucket"))
-            .agg(F.count(F.lit(1)).alias("cnt")))
+    return _bucket_counts(df, column, nbins, lo, hi)
 
 
 def group_histogram(df: DataFrame, column: str, group_col: str,
                     nbins: int, lo: float, hi: float) -> DataFrame:
-    """(group, bucket, cnt) — the building block for PSI across cohorts."""
+    """(grp, bucket, cnt) — the building block for PSI across cohorts."""
+    return _bucket_counts(df, column, nbins, lo, hi,
+                          F.col(group_col).alias("grp"))
+
+
+def _bucket_counts(df: DataFrame, column: str, nbins: int,
+                   lo: float | None, hi: float | None,
+                   *keys: Column) -> DataFrame:
+    """(keys…, bucket, cnt): counts of non-NULL ``column`` values per
+    equi-width bucket over [lo, hi], ids clamped to [0, nbins-1] — the one
+    bucketer behind the histograms, ``drift.psi_two_cohorts`` and
+    ``streaming.streaming_psi``. A missing bound costs one min/max probe;
+    an all-NULL or empty column probes as [0, 1] (its counts are empty)."""
     col = F.col(column).cast("double")
+    if lo is None or hi is None:
+        b = df.agg(F.min(col), F.max(col)).collect()[0]
+        lo = 0.0 if b[0] is None else float(b[0])
+        hi = 1.0 if b[1] is None else float(b[1])
     width = (hi - lo) / nbins or 1.0
     bucket = F.least(F.greatest(F.floor((col - F.lit(lo)) / F.lit(width)),
                                 F.lit(0)), F.lit(nbins - 1)).cast("int")
     return (df.where(col.isNotNull())
-            .groupBy(F.col(group_col).alias("grp"), bucket.alias("bucket"))
+            .groupBy(*keys, bucket.alias("bucket"))
             .agg(F.count(F.lit(1)).alias("cnt")))
 
 
@@ -250,64 +225,91 @@ def exact_quantiles(df: DataFrame, column: str,
     ``F.percentile`` (and the exact path of :func:`profile`) builds a
     value→count map per partial and merges ALL partials in a single final
     task — on a high-cardinality column at 10^12 rows that merge is a
-    single-task memory/time wall. This operator instead reuses the
-    distributed prefix-sum shape of ``drift.ks_two_sample``:
-
-      1. ``groupBy(x)`` pre-aggregates ties (input shrinks to distinct
-         values, map-side combine);
-      2. ``repartitionByRange(x)`` gives each partition a contiguous value
-         interval;
-      3. per-partition cumulative counts via a window partitioned by the
-         range partition id (all partitions in parallel);
-      4. per-partition totals (P rows) prefix-sum in one tiny window and
-         join back as offsets — the only serial step touches P rows;
-      5. for each q, rank = q·(n−1); the values at floor/ceil rank are read
-         off the global CDF with two conditional-min aggregates and
-         interpolated.
+    single-task memory/time wall. This operator instead ``groupBy(x)``
+    pre-aggregates ties (input shrinks to distinct values, map-side
+    combine), builds the global CDF with the distributed prefix sum
+    :func:`_prefix_sums` (shared with ``drift.ks_two_sample`` and
+    :func:`exact_profile`) and reads the quantiles off it
+    (:func:`_quantiles_from_cdf`).
 
     Locally (sf0.1, 600k rows, 32 cores) this measures ~1.2× slower than the
     fused map-merge — the shuffle costs more than the merge saves at small
     scale; it exists because the merge does not survive large scale and this
     does. Use ``profile(approx=True)`` when sketch accuracy suffices.
     """
-    from pyspark.sql import Window
-
     d = (df.select(F.col(column).cast("double").alias("x"))
          .where(F.col("x").isNotNull()))
     g = d.groupBy("x").agg(F.count("*").alias("c"))
+    return _quantiles_from_cdf(_prefix_sums(g, [], "x", ["c"], n_partitions),
+                               [], "x", qs)
+
+
+def _prefix_sums(g: DataFrame, keys: list[str], order: str,
+                 counts: list[str], n_partitions: int | None) -> DataFrame:
+    """Distributed inclusive prefix sums of the ``counts`` columns along
+    ``order`` within each ``keys`` group → (keys…, order, cum_<c>…,
+    n_<c>…), ``n_<c>`` the group's grand total. ``g`` holds one row per
+    (keys…, order) value — ties pre-aggregated, so the CDF is deterministic
+    whatever the row order.
+
+      1. ``repartitionByRange(keys…, order)`` gives each partition a
+         contiguous value interval;
+      2. per-partition cumulative sums via a window partitioned by the range
+         partition id (all partitions in parallel);
+      3. per-partition totals (P rows per group) prefix-sum in one tiny
+         window and join back as offsets — the only serial step touches P
+         rows, not data.
+
+    The range-partitioned table is PINNED (ADVICE r3): the local sums and
+    the totals both derive from it, and repartitionByRange SAMPLES its
+    boundaries per execution — without materialization, correctness would
+    silently depend on Catalyst reusing the exchange (broken by
+    exchangeReuse=false, AQE replan, or a stage retry), joining pid-keyed
+    offsets against a DIFFERENT partitioning. A lazy localCheckpoint makes
+    pid a stable fact (materialized once by the first action, then
+    reused)."""
     if n_partitions is None:
-        n_partitions = int(df.sparkSession.conf.get(
+        n_partitions = int(g.sparkSession.conf.get(
             "spark.sql.shuffle.partitions"))
-    # PIN the partition assignment (ADVICE r3): `local` and `totals` both
-    # derive from r, and repartitionByRange SAMPLES its boundaries per
-    # execution — without materialization, correctness would silently depend
-    # on Catalyst reusing the exchange (broken by exchangeReuse=false, AQE
-    # replan, or a stage retry), joining pid-keyed offsets against a
-    # DIFFERENT partitioning. localCheckpoint makes pid a stable fact
-    # (lazy: materialized once by the first action, then reused).
-    r = (g.repartitionByRange(n_partitions, "x")
+    r = (g.repartitionByRange(n_partitions, *keys, order)
          .withColumn("pid", F.spark_partition_id())
          .localCheckpoint(eager=False))
-    wp = (Window.partitionBy("pid").orderBy("x")
+    wp = (Window.partitionBy(*keys, "pid").orderBy(order)
           .rowsBetween(Window.unboundedPreceding, 0))
-    local = r.select("x", "pid", F.sum("c").over(wp).alias("lc"))
-    totals = r.groupBy("pid").agg(F.sum("c").alias("tc"))
-    wo = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
+    local = r.select(*keys, order, "pid",
+                     *[F.sum(c).over(wp).alias(f"__l{c}") for c in counts])
+    totals = r.groupBy(*keys, "pid").agg(
+        *[F.sum(c).alias(f"__t{c}") for c in counts])
+    wo = (Window.partitionBy(*keys).orderBy("pid")
+          .rowsBetween(Window.unboundedPreceding, -1))
     offsets = totals.select(
-        "pid", F.coalesce(F.sum("tc").over(wo), F.lit(0)).alias("off"))
-    grand = totals.agg(F.sum("tc").alias("n"))
-    cum = (local.join(F.broadcast(offsets), "pid")
-           .select("x", (F.col("lc") + F.col("off")).alias("cum"))
-           .crossJoin(F.broadcast(grand)))
+        *keys, "pid",
+        *[F.coalesce(F.sum(f"__t{c}").over(wo), F.lit(0)).alias(f"__o{c}")
+          for c in counts])
+    grand = totals.groupBy(*keys).agg(
+        *[F.sum(f"__t{c}").alias(f"n_{c}") for c in counts])
+    cum = (local.join(F.broadcast(offsets), [*keys, "pid"])
+           .select(*keys, order,
+                   *[(F.col(f"__l{c}") + F.col(f"__o{c}")).alias(f"cum_{c}")
+                     for c in counts]))
+    return (cum.join(F.broadcast(grand), keys) if keys
+            else cum.crossJoin(F.broadcast(grand)))
+
+
+def _quantiles_from_cdf(cum: DataFrame, keys: list[str], x: str,
+                        qs: tuple[float, ...]) -> DataFrame:
+    """(keys…, q0, q1, …) from a :func:`_prefix_sums` CDF over one count
+    column ``c``: for each q, rank = q·(n−1); the values at floor/ceil rank
+    are read off the CDF with two conditional-min aggregates and linearly
+    interpolated (``F.percentile`` / DuckDB ``quantile_cont`` convention)."""
     aggs = []
     for i, q in enumerate(qs):
-        rank = F.lit(float(q)) * (F.col("n") - 1)
+        rank = F.lit(float(q)) * (F.col("n_c") - 1)
         lo, hi = F.floor(rank), F.ceil(rank)
-        aggs += [F.min(F.when(F.col("cum") > lo, F.col("x"))).alias(f"vlo_{i}"),
-                 F.min(F.when(F.col("cum") > hi, F.col("x"))).alias(f"vhi_{i}"),
-                 F.first(rank - lo).alias(f"frac_{i}")]
-    wide = cum.agg(*aggs)
-    return wide.select(*[
+        aggs += [F.min(F.when(F.col("cum_c") > lo, F.col(x))).alias(f"vlo_{i}"),
+                 F.min(F.when(F.col("cum_c") > hi, F.col(x))).alias(f"vhi_{i}"),
+                 F.min(rank - lo).alias(f"frac_{i}")]
+    return cum.groupBy(*keys).agg(*aggs).select(*keys, *[
         (F.col(f"vlo_{i}")
          + F.col(f"frac_{i}") * (F.col(f"vhi_{i}") - F.col(f"vlo_{i}")))
         .alias(f"q{i}") for i in range(len(qs))])

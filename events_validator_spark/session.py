@@ -34,12 +34,12 @@ def apply_recommended_conf(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.optimizer.excludedRules", ",".join(rules))
     except Exception:
         pass  # a locked-down session keeps its own settings
-    # the rule compiler (validation_sql.py) and dedup's textual twins
-    # generate SQL text
-    # whose backslash escaping assumes the default parser mode; a session
-    # that flipped escapedStringLiterals=true would silently change every
-    # backslash-bearing literal's meaning (ADVICE r4). Own try block: a
-    # failure in the excludedRules merge above must not skip this pin.
+    # the rule compiler (validation_sql.py) and dedup's signature builders
+    # generate SQL text whose backslash escaping assumes the default parser
+    # mode; a session that flipped escapedStringLiterals=true would silently
+    # change every backslash-bearing literal's meaning (ADVICE r4). Own try
+    # block: a failure in the excludedRules merge above must not skip this
+    # pin.
     try:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
     except Exception:

@@ -167,35 +167,31 @@ def streaming_psi(stream_df: DataFrame, ts_col: str, column: str,
          embedded as driver-side literals (the baseline is nbins numbers —
          broadcasting a table for it would be ceremony).
 
-    The bucketer is byte-identical to the batch one (stats.histogram /
-    drift.psi_two_cohorts), values clamp to [0, nbins-1], so batch and
-    stream agree on the same data — pinned by tests/test_pipeline.py.
+    The bucketer IS the batch one (``stats._bucket_counts``, behind
+    stats.histogram and drift.psi_two_cohorts), values clamp to
+    [0, nbins-1], so batch and stream agree on the same data — pinned by
+    tests/test_pipeline.py.
     """
     from pyspark.sql.functions import window_time
+
+    from events_validator_spark.operators.stats import _bucket_counts
 
     base_counts = {int(r["bucket"]): int(r["cnt"]) for r in baseline.collect()}
     b_tot = sum(base_counts.values()) or 1
     q = [max(base_counts.get(b, 0) / b_tot, eps) for b in range(nbins)]
 
-    col = F.col(column).cast("double")
-    width = (hi - lo) / nbins or 1.0
-    bucket = F.least(F.greatest(F.floor((col - F.lit(lo)) / F.lit(width)),
-                                F.lit(0)), F.lit(nbins - 1)).cast("int")
-    per_bucket = (stream_df
-                  .where(col.isNotNull())
-                  .withWatermark(ts_col, watermark)
-                  .groupBy(F.window(F.col(ts_col), window).alias("win"),
-                           bucket.alias("bucket"))
-                  .agg(F.count(F.lit(1)).alias("c_cnt")))
+    per_bucket = _bucket_counts(
+        stream_df.withWatermark(ts_col, watermark), column, nbins, lo, hi,
+        F.window(F.col(ts_col), window).alias("win"))
     per_win = (per_bucket
                .groupBy(F.window(window_time("win"), window).alias("win"))
-               .agg(F.sum("c_cnt").alias("n"),
-                    F.collect_list(F.struct("bucket", "c_cnt")).alias("cur")))
+               .agg(F.sum("cnt").alias("n"),
+                    F.collect_list(F.struct("bucket", "cnt")).alias("cur")))
 
     def p_of(b: int):
         cnt = F.aggregate(
             F.filter(F.col("cur"), lambda s: s["bucket"] == b),
-            F.lit(0.0), lambda acc, s: acc + s["c_cnt"])
+            F.lit(0.0), lambda acc, s: acc + s["cnt"])
         return F.greatest(cnt / F.col("n"), F.lit(eps))
 
     psi = None

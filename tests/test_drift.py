@@ -55,6 +55,14 @@ def test_psi_same_vs_shifted(spark):
         drift.psi_two_cohorts(df2, "x", F.col("cur"), nbins=10), "x").collect()
     assert len(v) == 1 and v[0]["error_type"] == "drift"
 
+    # no lo/hi and nothing to bucket: the bounds probe finds no min/max, the
+    # histogram is empty and PSI is NULL (as categorical_psi on no rows)
+    nulls = spark.createDataFrame([(True, None), (False, None)],
+                                  "cur boolean, x double")
+    for d in (nulls, nulls.limit(0)):
+        got = drift.psi_two_cohorts(d, "x", F.col("cur"), nbins=10).collect()
+        assert got[0]["psi"] is None
+
 
 def test_ks_exact_and_digest(spark):
     rng = np.random.default_rng(4)

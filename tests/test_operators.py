@@ -493,35 +493,59 @@ def test_exact_profile_all_null_and_empty(spark):
     assert pe["x"]["count"] == 0 and pe["x"]["nulls"] == 0
 
 
-def test_lsh_textual_twins_match_column_builders(spark):
-    """The SQL-text twins of shingles / MinHash signature / SimHash must
-    equal the Column builders value-for-value on a real corpus (incl. short
-    and near-duplicate docs)."""
-    from events_validator_spark.operators.dedup import (
-        _band_structs_sql, _shingles_sql, _simhash_sql,
-        minhash_signature, shingles, simhash)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .limit(200).unionByName(spark.createDataFrame(
-            [(9001, "one two"), (9002, ""), (9003, "Single")],
-            "doc_id long, text string").selectExpr(
-                "doc_id", "text",
-                "CAST(NULL AS STRING) lang", "CAST(NULL AS STRING) source",
-                "CAST(NULL AS BIGINT) n_chars"))
-    bad = docs.select(
-        F.expr(_shingles_sql("`text`", 3)).alias("u"),
-        shingles(F.col("text"), 3).alias("t")).where("NOT (u <=> t)")
-    assert bad.count() == 0
-    bad2 = docs.select(
-        F.expr(_band_structs_sql("`text`", 32, 8, 3)).alias("u"),
-        F.array(*[F.struct(F.lit(b).alias("band"), F.xxhash64(*[
-            F.element_at(minhash_signature(F.col("text"), 32, 3),
-                         b * 4 + j + 1) for j in range(4)]).alias("bh"))
-            for b in range(8)]).alias("t")).where("NOT (u <=> t)")
-    assert bad2.count() == 0
-    bad3 = docs.select(
-        F.expr(_simhash_sql("`text`", 60, "md5")).alias("u"),
-        simhash(F.col("text"), 60, "md5").alias("t")).where("NOT (u <=> t)")
-    assert bad3.count() == 0
+@pytest.mark.parametrize("query", ["m1_minhash_pairs", "m3_dedup_components",
+                                   "m4_incremental_dedup",
+                                   "dc1_decontaminate"])
+def test_lsh_sql_signatures_match_duckdb_oracle(spark, query):
+    """Shingling, MinHash banding and Jaccard verification (batch, grouped
+    and incremental) and n-gram decontamination equal DuckDB's brute-force
+    oracles at sf0.01 — an independent engine pins the SQL-text signature
+    builders."""
+    import duckdb
+    import __spark_entry__ as e
+    from scripts.check_oracle import row_multiset
+    sf_dir = "/root/testdata/sf0.01"
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
+            f"'{sf_dir}/documents.parquet'")
+    sdf = e.queries()[query](spark, sf_dir)
+    ddf = con.sql(e.oracle_sql()[query])
+    dcols = [d[0] for d in ddf.description]
+    assert sorted(sdf.columns) == sorted(dcols)
+    sp = row_multiset(sdf.columns, sdf.collect())
+    assert sp == row_multiset(dcols, ddf.fetchall()) and len(sp) > 0
+
+
+def test_dedup_text_col_nested_and_unusual_names(spark):
+    """``text_col`` resolves like every other operator's column (F.col): a
+    struct field ``doc.text`` and a name with a space and ``!`` give the
+    same output as a plain ``text`` column holding the same strings."""
+    import random
+    rng = random.Random(11)
+    words = [f"w{i}" for i in range(300)]
+    texts = [" ".join(rng.choice(words) for _ in range(40)) for _ in range(6)]
+    rows = [(i, t) for i, t in enumerate(texts)]
+    rows += [(10, texts[0]),                                # exact dup
+             (11, texts[1].rsplit(" ", 1)[0] + " CHANGED"),  # near dup
+             (12, "short text"), (13, "Short   TEXT"), (14, ""), (15, None)]
+    plain = spark.createDataFrame(rows, "doc_id long, text string")
+    nested = plain.select("doc_id", F.struct("text").alias("doc"))
+    odd = plain.select("doc_id", F.col("text").alias("my text!"))
+
+    def run(df, col):
+        bench = df.where(F.col("doc_id").isin(1, 12))
+        return [sorted(map(tuple, out.collect())) for out in (
+            dedup.minhash_dedup(df, col, threshold=0.8, num_hashes=32,
+                                bands=8),
+            dedup.simhash_dedup_candidates(df, col),
+            dedup.ngram_decontaminate(df, bench, col))]
+
+    want = run(plain, "text")
+    assert {(a, b) for a, b, _ in want[0]} >= {(0, 10), (1, 11), (12, 13)}
+    assert (0, 10, 0) in want[1]
+    assert sum(1 for r in want[2] if r[2]) >= 3
+    assert run(nested, "doc.text") == want
+    assert run(odd, "my text!") == want
 
 
 def test_ivf_topk_distributed_matches_driver_side(spark):
@@ -539,10 +563,17 @@ def test_ivf_topk_distributed_matches_driver_side(spark):
     assert ra == rb
 
 
-def test_ivf_topk_query_guard(spark):
+def test_ivf_topk_query_guard(spark, monkeypatch):
     """ivf_topk enforces its tiny-query-set contract (VERDICT r4): an
-    oversized query table fails fast naming the JVM-side alternative."""
-    import pytest
+    oversized query table fails fast naming the JVM-side alternative —
+    before the KMeans codebook is trained, so a refused call runs no
+    training job."""
+    from pyspark.ml.clustering import KMeans
+
+    def no_fit(self, *args, **kwargs):
+        raise AssertionError("KMeans.fit ran before the max_queries guard")
+
+    monkeypatch.setattr(KMeans, "fit", no_fit)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
     with pytest.raises(ValueError, match="max_queries"):

@@ -10,7 +10,9 @@ properties that make the engine survive a 100 TB input:
 * the flagship query must not shuffle a splittable input (a corpus-wide
   Exchange before a shuffle-free projection is a scale-killer);
 * the staged parse projection must keep the plan's ``parseJson`` count
-  independent of the number of checks (validate_json and validate_multi).
+  independent of the number of checks (validate_json and validate_multi);
+* ``dedup.bucket_pairs``' self-join must read its ``capped_buckets``
+  shuffle once (exchange reuse), not run the signature pass twice.
 """
 
 import os
@@ -110,3 +112,47 @@ def test_apply_recommended_conf_merges_not_clobbers(spark):
             spark.conf.set(key, _INFER_FILTERS_RULE)
         else:
             spark.conf.set(key, before)
+
+
+def _simhash_candidates(spark):
+    import random
+
+    from events_validator_spark.operators import dedup
+    rng = random.Random(3)
+    words = [f"w{i}" for i in range(50)]
+    rows = [(i, " ".join(rng.choice(words) for _ in range(8)))
+            for i in range(200)]
+    rows += [(1000 + i, rows[i][1]) for i in range(50)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    return dedup.simhash_dedup_candidates(df)
+
+
+def _cosine_neardup_pairs(spark):
+    import numpy as np
+
+    from events_validator_spark.operators import similarity
+    rng = np.random.default_rng(5)
+    base = rng.standard_normal((60, 16))
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
+    rows += [(1000 + i, [float(x) for x in base[i]]) for i in range(20)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return similarity.cosine_neardup_pairs(df, threshold=0.9, dim=16,
+                                           n_planes=6, n_tables=4)
+
+
+@pytest.mark.parametrize("build", [_simhash_candidates, _cosine_neardup_pairs],
+                         ids=["m2_simhash", "ann3_cosine"])
+def test_bucket_pairs_self_join_reuses_capped_buckets_exchange(spark, build):
+    """The AQE final plan shows the capped_buckets (t, …) shuffle ONCE; the
+    bucket_pairs self-join's other side reads it as a ReusedExchange.
+    Without reuse the signature pass (SimHash expression, or the
+    hyperplane pandas UDF) and its scan would run twice per call."""
+    out = build(spark)
+    assert len(out.collect()) >= 20
+    adaptive = out._jdf.queryExecution().executedPlan()
+    assert adaptive.toString().startswith("AdaptiveSparkPlan isFinalPlan=true")
+    final = adaptive.executedPlan().treeString()
+    bucket_shuffles = [ln for ln in final.splitlines()
+                       if "Exchange hashpartitioning(t#" in ln]
+    reused = [ln for ln in bucket_shuffles if "ReusedExchange" in ln]
+    assert len(bucket_shuffles) == 2 and len(reused) == 1, final

@@ -405,16 +405,22 @@ def test_chain_memo_never_serves_stale_rules(spark):
 def test_typed_memo_hit_is_cheap(spark):
     """A second validate_typed with the same rules on a NEW DataFrame of the
     same schema reuses every compiled check: under 100 py4j round trips
-    (building the Column tree cost ~4,300)."""
+    (building the Column tree cost ~4,300). Only the calling thread's
+    commands count: py4j's finalizer thread sends one delete command per
+    garbage-collected JavaObject through the same client, at GC's pace."""
+    import threading
+
     from events_validator_spark.operators import validation_sql
     validate_typed(interleaved_docs(spark, 50), DOC_RULES)
     docs = interleaved_docs(spark, 60)
     client = spark.sparkContext._gateway._gateway_client
     calls = []
     send = client.send_command
+    caller = threading.get_ident()
 
     def counting(*args, **kwargs):
-        calls.append(1)
+        if threading.get_ident() == caller:
+            calls.append(1)
         return send(*args, **kwargs)
     memo_size = len(validation_sql._MEMO)
     client.send_command = counting

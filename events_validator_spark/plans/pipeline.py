@@ -22,6 +22,9 @@ granularity then costs zero redundant IO (PartitionFilters in the scan,
 verified by tests/test_pipeline.py). The hash-of-doc_id fallback
 (``bucket_col=None``) re-filters the full source per bucket — acceptable only
 for unpartitioned inputs.
+
+``run_incremental`` keeps no manifest: its stamped lakehouse commits are
+its checkpoint.
 """
 
 from __future__ import annotations
@@ -229,8 +232,11 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
             "snapshot_id": snapshot_id, "run_id": run_id,
         })
         manifest["completed"].append(b)
-        with open(manifest_path, "w") as f:  # atomic-enough for local FS
+        # write-then-rename: a failed write leaves the previous manifest
+        tmp = manifest_path + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(manifest, f)
+        os.replace(tmp, manifest_path)
     return manifest
 
 
@@ -240,85 +246,69 @@ def read_outputs(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFram
     return violations, verdicts
 
 
-def _committed_snapshot_for(lakehouse, table: str, cursor: str,
-                            meta_key: str = "source_cursor") -> str | None:
-    """Snapshot id of the commit stamped with ``meta[meta_key] == cursor``,
-    scanning the FULL snapshot log (newest first — the crash-rerun case is
-    almost always the last commit). None if no commit carries the stamp.
-    Shared by the batch pipeline (``source_cursor``) and the streaming
-    dedup loop (``stream_batch``) — ONE implementation of the
-    crash-recovery probe."""
+def _last_stamp(lakehouse, table: str,
+                meta_key: str) -> tuple[str | None, str | None]:
+    """``(snapshot_id, stamp)`` of the newest commit of ``table`` whose meta
+    carries ``meta_key``, or ``(None, None)``. Unstamped commits (a manual
+    append) are skipped. One read of the snapshot log (Iceberg: the
+    ``.snapshots`` metadata table's summary properties), shared by the
+    incremental tick (``source_cursor``) and the streaming dedup loop
+    (``stream_batch``)."""
     for snap in reversed(lakehouse.snapshots(table)):
-        if (snap.get("meta") or {}).get(meta_key) == cursor:
-            return snap["snapshot_id"]
-    return None
+        stamp = (snap.get("meta") or {}).get(meta_key)
+        if stamp is not None:
+            return snap["snapshot_id"], stamp
+    return None, None
 
 
 def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
                     event_name: str = "interleaved_doc",
-                    cursor: str | None = None,
                     log_payload_when_error: bool = False,
                     log_valid_fields: bool = False) -> dict:
     """One tick of a continuously-resumable validation loop over an
-    Iceberg-shaped table: validate ONLY the rows appended since ``cursor``
-    (``Lakehouse.read_since``), append violations/verdicts back to the
-    lakehouse, and persist the new cursor in a manifest — crash-and-rerun
-    with the same manifest re-reads nothing (exactly-once per append,
-    pinned by tests/test_pipeline.py).
+    Iceberg-shaped table: validate ONLY the rows appended since the last
+    tick (``Lakehouse.read_since``) and append violations, then verdicts,
+    back to the lakehouse, each commit stamped with the source cursor it
+    covers (``meta={"source_cursor": ...}``).
 
-    Exactly-once holds ACROSS CRASHES, not just clean reruns (ADVICE r3):
-    each output append is committed with the source cursor stamped in its
-    snapshot metadata, so a rerun that re-reads the same source window
-    (crash after append, before the manifest ``os.replace``) detects the
-    already-committed batch on each output table independently and skips
-    re-appending it — the crash window between the two appends and between
-    append and manifest write are both covered.
+    The stamped output commits are the tick's only checkpoint; the tick
+    writes nothing under ``out_dir`` (kept for callers that pass it). The
+    verdicts commit ends a tick, so the newest verdicts stamp is where the
+    next tick starts. A newer violations stamp means a tick crashed between
+    its two commits: the rerun re-reads exactly that source window
+    (``read_since(..., until=stamp)``), skips the violations append and
+    commits the verdicts. Exactly-once per source row, across crashes at
+    any point, for ONE writer per output table: another pipeline instance
+    stamping the same tables breaks it (unstamped commits, e.g. a manual
+    append, are ignored). Pinned by tests/test_pipeline.py.
 
-    Returns {"cursor", "rows", "violations", "snapshot_id"}; rows == 0 means
-    the table was unchanged and nothing was written.
+    Returns {"cursor", "rows", "violations", "snapshot_id"} (``snapshot_id``
+    names the violations commit); rows == 0 means the table was unchanged
+    and nothing was written.
     """
-    manifest_path = os.path.join(out_dir, "incremental_manifest.json")
-    os.makedirs(out_dir, exist_ok=True)
-    if cursor is None and os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            cursor = json.load(f).get("cursor")
-
-    new_df, new_cursor = lakehouse.read_since(source_table, cursor)
+    viol_table = f"{source_table}_violations"
+    verd_table = f"{source_table}_verdicts"
+    _, cursor = _last_stamp(lakehouse, verd_table, "source_cursor")
+    v_snap, pending = _last_stamp(lakehouse, viol_table, "source_cursor")
+    redo = pending not in (None, cursor)  # crashed between the commits
+    new_df, new_cursor = lakehouse.read_since(
+        source_table, cursor, until=pending if redo else None)
     if new_df is None:
         return {"cursor": cursor, "rows": 0, "violations": 0,
                 "snapshot_id": None}
 
     validated = validate_typed(new_df, rules).cache()
     part_id = f"inc-{new_cursor}"
-    violations = violation_rows(
-        validated, new_df.columns, rules, event_name, part_id, new_cursor,
-        log_payload_when_error=log_payload_when_error,
-        log_valid_fields=log_valid_fields)
-    verdicts = verdict_rows(validated, event_name, part_id, new_cursor)
     stamp = {"source_cursor": new_cursor}
-    viol_table = f"{source_table}_violations"
-    verd_table = f"{source_table}_verdicts"
-    # idempotence probe per output table: a previous run that crashed after
-    # committing this batch left its cursor stamp on SOME snapshot. Scan the
-    # whole snapshot log, not just the newest entry (ADVICE r4): another
-    # append to the output table between the crash and the rerun — a second
-    # pipeline instance, a manual append — would bury the stamp and make a
-    # newest-only probe re-append the batch. (Iceberg: the same scan over
-    # the .snapshots metadata table's summary properties.)
-    v_snap = _committed_snapshot_for(lakehouse, viol_table, new_cursor)
-    if v_snap is None:
-        v_snap = lakehouse.append(viol_table, violations, meta=stamp)
-    if _committed_snapshot_for(lakehouse, verd_table, new_cursor) is None:
-        lakehouse.append(verd_table, verdicts, meta=stamp)
-    n_rows = validated.count()
-    n_viol = int(validated.agg(
-        F.sum(F.size("violations"))).collect()[0][0] or 0)
+    if not redo:
+        v_snap = lakehouse.append(viol_table, violation_rows(
+            validated, new_df.columns, rules, event_name, part_id,
+            new_cursor, log_payload_when_error=log_payload_when_error,
+            log_valid_fields=log_valid_fields), meta=stamp)
+    lakehouse.append(verd_table, verdict_rows(
+        validated, event_name, part_id, new_cursor), meta=stamp)
+    n_rows, n_viol = validated.agg(
+        F.count(F.lit(1)), F.sum(F.size("violations"))).first()
     validated.unpersist()
-
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"cursor": new_cursor, "rows": n_rows,
-                   "violations": n_viol, "snapshot_id": v_snap}, f)
-    os.replace(tmp, manifest_path)
-    return {"cursor": new_cursor, "rows": n_rows, "violations": n_viol,
-            "snapshot_id": v_snap}
+    return {"cursor": new_cursor, "rows": n_rows,
+            "violations": int(n_viol or 0), "snapshot_id": v_snap}

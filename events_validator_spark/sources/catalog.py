@@ -1,19 +1,22 @@
-"""Iceberg-shaped table layer with a partitioned-parquet sandbox fallback.
+"""Iceberg-shaped table layer on a partitioned-parquet directory layout.
 
 The north rule stores documents/violations/verdicts in Iceberg tables and
 keys resume on snapshot ids. This container has no Iceberg runtime jars, so
-the engine talks to a thin :class:`Lakehouse` interface instead:
+the engine talks to a thin :class:`Lakehouse` interface instead. This class
+implements it on a directory layout: each ``append`` writes a ``snap-<id>``
+data directory FIRST and only then commits it to ``_snapshots.json`` —
+readers only see committed snapshots, giving the same atomic-append /
+time-travel / incremental-scan semantics resume relies on.
 
-* with Iceberg available (``use_iceberg=True`` and the catalog configured),
-  calls map 1:1 onto ``df.writeTo(table).append()`` / ``spark.table`` /
-  snapshot metadata;
-* otherwise the fallback implements the same contract on a directory layout:
-  each ``append`` writes a ``snap-<id>`` data directory FIRST and only then
-  commits it to ``_snapshots.json`` — readers only see committed snapshots,
-  giving the same atomic-append / time-travel semantics resume relies on.
+A real catalog swaps in as another class with the same methods that passes
+``tests/test_pipeline.py::test_lakehouse_interface_conformance``; its calls
+map 1:1 onto ``df.writeTo(table).append()`` / ``spark.table`` / snapshot
+metadata. The engine code above this interface stays the same: the swap is
+a class, not a fork (SURVEY.md §7.3.5).
 
-Either way the engine code above this interface is identical — swap-in is a
-constructor flag, not a fork (SURVEY.md §7.3.5).
+Commits are read-modify-write of one log file: ONE writer per table (the
+contract ``plans.pipeline.run_incremental`` and the streaming dedup loop
+state). Two concurrent appenders can lose a commit.
 """
 
 from __future__ import annotations
@@ -24,7 +27,6 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401
 
 
 class Lakehouse:
@@ -40,23 +42,19 @@ class Lakehouse:
       crash can never separate data from its provenance stamp;
     * ``read(table, as_of=None)`` — current state, or time-travel to a
       snapshot id (Iceberg: ``VERSION AS OF``);
-    * ``read_since(table, after) -> (df | None, cursor)`` — rows appended
-      strictly after snapshot ``after`` (Iceberg: incremental scan with
-      ``start-snapshot-id``/``end-snapshot-id``), plus the new cursor.
+    * ``read_since(table, after, until=None) -> (df | None, cursor)`` —
+      rows appended strictly after snapshot ``after`` up to and including
+      ``until`` (Iceberg: incremental scan with ``start-snapshot-id`` /
+      ``end-snapshot-id``), plus the new cursor.
 
     ``snapshots``/``current_snapshot``/``snapshot_meta`` are derived
     conveniences over the same snapshot log (Iceberg: the ``.snapshots``
-    metadata table)."""
+    metadata table); the incremental tick finds its cursor in
+    ``snapshots``."""
 
-    def __init__(self, spark: SparkSession, root: str,
-                 use_iceberg: bool = False):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        if use_iceberg:  # pragma: no cover - jars absent in sandbox
-            raise NotImplementedError(
-                "Iceberg runtime jars are not present in this container; "
-                "configure spark.sql.catalog.<name> and route writeTo/table "
-                "calls here")
         os.makedirs(root, exist_ok=True)
 
     # -- internals -----------------------------------------------------------
@@ -69,6 +67,16 @@ class Lakehouse:
             return []
         with open(p) as f:
             return json.load(f)
+
+    @staticmethod
+    def _end(snaps: list[dict], snapshot_id: str | None) -> int:
+        """Index one past ``snapshot_id`` in ``snaps`` (None: the end)."""
+        if snapshot_id is None:
+            return len(snaps)
+        for i, s in enumerate(snaps):
+            if s["snapshot_id"] == snapshot_id:
+                return i + 1
+        raise ValueError(f"unknown snapshot {snapshot_id}")
 
     def _commit(self, table: str, snaps: list[dict]) -> None:
         p = self._meta_path(table)
@@ -98,38 +106,36 @@ class Lakehouse:
     def read(self, table: str, as_of: str | None = None) -> DataFrame:
         """All committed snapshots, or time-travel up to ``as_of``."""
         snaps = self._load_meta(table)
-        if as_of is not None:
-            cut = [i for i, s in enumerate(snaps)
-                   if s["snapshot_id"] == as_of]
-            if not cut:
-                raise ValueError(f"unknown snapshot {as_of}")
-            snaps = snaps[:cut[0] + 1]
+        snaps = snaps[:self._end(snaps, as_of)]
         if not snaps:
             raise ValueError(f"table {table} has no committed snapshots")
         return self.spark.read.parquet(*[s["path"] for s in snaps])
 
-    def read_since(self, table: str,
-                   after: str | None) -> tuple[DataFrame | None, str | None]:
+    def read_since(self, table: str, after: str | None,
+                   until: str | None = None
+                   ) -> tuple[DataFrame | None, str | None]:
         """Incremental read: rows appended strictly AFTER snapshot ``after``
-        (None ⇒ everything), up to the current snapshot — the
-        snapshot-checkpoint primitive an incremental validation run keys on
-        (Iceberg's incremental scan between snapshot ids): a resumed
-        consumer validates only new appends, records the returned cursor in
-        its manifest, and re-running with the same cursor re-reads nothing.
+        (None ⇒ from the first commit) up to and including snapshot
+        ``until`` (None ⇒ the current snapshot) — the snapshot-checkpoint
+        primitive an incremental validation run keys on (Iceberg's
+        incremental scan between ``start-snapshot-id`` and
+        ``end-snapshot-id``): a resumed consumer validates only new
+        appends, stamps the returned cursor on its output commits, and
+        re-running from the same cursor re-reads nothing. ``until`` bounds
+        the window so a consumer can redo exactly the window a crashed
+        run had read.
 
-        Returns ``(df, cursor)``; ``df`` is None when there is nothing new,
-        and ``cursor`` always names the newest committed snapshot (or
-        ``after`` when the table is unchanged).
+        Returns ``(df, cursor)``; ``df`` is None when the window is empty,
+        and ``cursor`` names the window's last snapshot (or ``after`` when
+        the window is empty). An unknown ``after``/``until``, or an
+        ``until`` older than ``after``, raises ``ValueError``.
         """
         snaps = self._load_meta(table)
-        if after is not None:
-            idx = [i for i, s in enumerate(snaps)
-                   if s["snapshot_id"] == after]
-            if not idx:
-                raise ValueError(f"unknown snapshot {after}")
-            new = snaps[idx[0] + 1:]
-        else:
-            new = snaps
+        lo = 0 if after is None else self._end(snaps, after)
+        hi = self._end(snaps, until)
+        if hi < lo:
+            raise ValueError(f"snapshot {until} precedes {after}")
+        new = snaps[lo:hi]
         if not new:
             return None, after
         df = self.spark.read.parquet(*[s["path"] for s in new])

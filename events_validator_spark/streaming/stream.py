@@ -222,14 +222,17 @@ def run_stream_dedup(spark: SparkSession, source_dir: str, schema,
          pairs to the lakehouse — three commits stamped with the batch id.
 
     Exactly-once across retries: ``foreachBatch`` can replay a batch after
-    a failure, so each append is preceded by the SAME snapshot-log probe
-    the batch pipeline uses (``plans.pipeline._committed_snapshot_for``,
-    keyed ``stream_batch``) — a replayed batch re-appends nothing — and,
-    crucially, corpus reads STOP BEFORE any snapshot this batch already
-    committed: a replay after a partial commit (docs+index appended, crash
-    before pairs) would otherwise read its own docs back as "corpus" and
-    emit self-pairs / duplicated pairs. Single writer per output table
-    assumed (same contract as run_incremental).
+    a failure, and a replay is always of the newest batch. So each append
+    is preceded by the SAME stamp reader the batch pipeline uses
+    (``plans.pipeline._last_stamp``, keyed ``stream_batch``): a table whose
+    newest stamp is this batch id already holds it, and a replayed batch
+    re-appends nothing. Crucially, corpus reads STOP BEFORE any snapshot
+    this batch already committed: a replay after a partial commit
+    (docs+index appended, crash before pairs) would otherwise read its own
+    docs back as "corpus" and emit self-pairs / duplicated pairs. Single
+    writer per output table assumed (same contract as run_incremental),
+    and batch ids come from ``checkpoint_dir``: a query restarted without
+    it numbers its batches from 0 again.
 
     Returns {"batches", "pairs"} counting work actually COMMITTED (a
     fully-committed replay increments nothing), after draining available
@@ -237,7 +240,7 @@ def run_stream_dedup(spark: SparkSession, source_dir: str, schema,
     Kafka/Iceberg).
     """
     from events_validator_spark.operators import dedup as dd
-    from events_validator_spark.plans.pipeline import _committed_snapshot_for
+    from events_validator_spark.plans.pipeline import _last_stamp
 
     # one file per trigger: each ingested file is its own batch/tick, so
     # the cross-batch path is exercised (and in production each tick is
@@ -247,8 +250,7 @@ def run_stream_dedup(spark: SparkSession, source_dir: str, schema,
     seen = {"batches": 0, "pairs": 0}
 
     def committed(table: str, key: str) -> bool:
-        return _committed_snapshot_for(lakehouse, table, key,
-                                       meta_key="stream_batch") is not None
+        return _last_stamp(lakehouse, table, "stream_batch")[1] == key
 
     def read_before(table: str, key: str) -> DataFrame | None:
         """Table state as of the last snapshot NOT committed by this batch

@@ -1,7 +1,10 @@
 """Pipeline: verdicts/metrics shape, and kill-and-resume with no duplicates.
 Also exercises multimodal plumbing and the streaming wrapper."""
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from events_validator_spark.operators import multimodal
 from events_validator_spark.plans import pipeline
@@ -48,6 +51,38 @@ def test_run_validation_and_resume(spark, tmp_path):
     assert viol2.count() == n_viol
     assert verd2.select("doc_id").distinct().count() == \
         verd.select("doc_id").distinct().count()
+
+
+def test_run_validation_resume_after_failed_manifest_write(
+        spark, tmp_path, monkeypatch):
+    """A manifest write that fails part-way (bucket 2's) leaves the previous
+    manifest readable, so the resume redoes bucket 2 onwards and ends with
+    every doc exactly once and no duplicate violation rows."""
+    import json
+    docs = interleaved_docs(spark, 600)
+    out = str(tmp_path / "run")
+    real_dump = json.dump
+
+    def failing_dump(obj, f, *args, **kwargs):
+        if 2 in obj.get("completed", ()):
+            f.write('{"run_id": ')
+            raise OSError("injected failure while writing the manifest")
+        return real_dump(obj, f, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline.json, "dump", failing_dump)
+    with pytest.raises(OSError, match="injected"):
+        pipeline.run_validation(docs, DOC_RULES, out, n_buckets=4,
+                                run_id="r")
+    monkeypatch.undo()
+    m = pipeline.run_validation(docs, DOC_RULES, out, n_buckets=4,
+                                run_id="r")
+    assert sorted(m["completed"]) == [0, 1, 2, 3]
+    assert sum(x["rows"] for x in m["metrics"]) == 600
+    viol, verd = pipeline.read_outputs(spark, out)
+    assert verd.count() == 600
+    n_viol = verd.agg(F.sum("n_violations")).first()[0]
+    assert n_viol > 0 and viol.count() == n_viol
+    assert sum(x["violations"] for x in m["metrics"]) == n_viol
 
 
 def test_lakehouse_snapshots(spark, tmp_path):
@@ -383,33 +418,81 @@ def test_run_incremental_exactly_once(spark, tmp_path):
     assert verd.select("doc_id").distinct().count() == 70
 
 
-def test_run_incremental_crash_window_idempotent(spark, tmp_path):
-    """ADVICE r3: a crash AFTER the output appends but BEFORE the manifest
-    os.replace must not duplicate violation/verdict rows on rerun — the
-    source cursor stamped on each output snapshot makes the rerun detect the
-    committed batch and skip re-appending."""
+@pytest.mark.parametrize("crash", ["after_verdicts", "before_verdicts",
+                                   "manual_append"])
+def test_run_incremental_crash_window_exactly_once(spark, tmp_path, crash):
+    """A tick that crashes right after its verdicts commit, or between its
+    violations and verdicts commits (also with an unstamped manual append
+    to the verdicts table before the rerun), then a producer append, a
+    rerun and one more tick: violations and verdicts each cover every
+    source row exactly once, the rerun reuses a committed violations
+    snapshot instead of re-appending it, and nothing is written under
+    ``out_dir``."""
+    from collections import Counter
+
     from events_validator_spark.plans.pipeline import run_incremental
     from events_validator_spark.sources.catalog import Lakehouse
-    import os
     lh = Lakehouse(spark, str(tmp_path / "clh"))
     out = str(tmp_path / "cout")
     rules = {"doc_id": {"type": "string", "regex": "^doc_[0-9]+$"}}
-    lh.append("docs", spark.range(0, 30).selectExpr(
-        "concat('bad', id) as doc_id"))
+
+    def batch(lo, hi):                     # one regex violation per row
+        return spark.range(lo, hi).selectExpr("concat('bad', id) as doc_id")
+
+    orig_append = lh.append
+    armed = {"on": False}
+    committed = {}
+
+    def flaky_append(table, df, meta=None):
+        hit = armed["on"] and table == "docs_verdicts"
+        if hit and crash != "after_verdicts":
+            armed["on"] = False
+            raise RuntimeError("injected crash before the verdicts commit")
+        snap = orig_append(table, df, meta)
+        committed[table] = snap
+        if hit:
+            armed["on"] = False
+            raise RuntimeError("injected crash after the verdicts commit")
+        return snap
+
+    lh.append = flaky_append
+    lh.append("docs", batch(0, 10))
+    r0 = run_incremental(lh, "docs", rules, out)
+    assert r0["rows"] == 10 and r0["violations"] == 10
+
+    lh.append("docs", batch(10, 20))
+    armed["on"] = True
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_incremental(lh, "docs", rules, out)
+    crashed_viol = committed["docs_violations"]
+    if crash == "manual_append":
+        lh.append("docs_verdicts", spark.createDataFrame(
+            [("manual", "manual", True, 0, "manual", "manual")],
+            "doc_id string, event_name string, passed boolean, "
+            "n_violations int, partition_id string, snapshot_id string"))
+    lh.append("docs", batch(20, 30))
     r1 = run_incremental(lh, "docs", rules, out)
-    assert r1["rows"] == 30 and r1["violations"] == 30
-    # simulate the crash window: outputs committed, manifest write lost
-    os.remove(os.path.join(out, "incremental_manifest.json"))
     r2 = run_incremental(lh, "docs", rules, out)
-    assert r2["cursor"] == r1["cursor"]
-    assert r2["snapshot_id"] == r1["snapshot_id"]      # reused, not re-appended
-    assert lh.read("docs_violations").count() == 30    # no duplicates
-    assert lh.read("docs_verdicts").count() == 30
-    # and the healthy path still advances
-    lh.append("docs", spark.range(30, 40).selectExpr(
-        "concat('doc_', id) as doc_id"))
-    r3 = run_incremental(lh, "docs", rules, out)
-    assert r3["rows"] == 10 and lh.read("docs_verdicts").count() == 40
+
+    ids = Counter(f"bad{i}" for i in range(30))
+    viol = lh.read("docs_violations").select("event_id").collect()
+    assert Counter(r[0] for r in viol) == ids
+    verd = Counter(r[0] for r in lh.read("docs_verdicts")
+                   .select("doc_id").collect())
+    assert verd.pop("manual", 0) == (crash == "manual_append")
+    assert verd == ids
+    if crash == "after_verdicts":          # the crashed tick was complete
+        assert (r1["rows"], r2["rows"]) == (10, 0)
+    else:                                  # the rerun redoes its window
+        assert (r1["rows"], r2["rows"]) == (10, 10)
+        assert r1["snapshot_id"] == crashed_viol       # reused
+    assert r2["cursor"] == lh.current_snapshot("docs")   # advanced
+
+    # a rerun with nothing new re-appends nothing
+    n_commits = len(lh.snapshots("docs_violations"))
+    assert run_incremental(lh, "docs", rules, out)["rows"] == 0
+    assert len(lh.snapshots("docs_violations")) == n_commits
+    assert not os.path.exists(out)
 
 
 def test_lakehouse_interface_conformance(spark, tmp_path):
@@ -435,6 +518,17 @@ def test_lakehouse_interface_conformance(spark, tmp_path):
         assert none_df is None and cur2 == s2
         full, _ = lh.read_since("t", None)
         assert full.count() == 8
+        # until = end of the window, inclusive
+        s3 = lh.append("t", spark.range(8, 10).selectExpr("id as v"))
+        mid, cur3 = lh.read_since("t", s1, until=s2)
+        assert mid.count() == 3 and cur3 == s2
+        head, _ = lh.read_since("t", None, until=s1)
+        assert head.count() == 5
+        empty, cur4 = lh.read_since("t", s3, until=s3)
+        assert empty is None and cur4 == s3
+        for bad in ({"until": "snap-nope"}, {"after": s2, "until": s1}):
+            with pytest.raises(ValueError):
+                lh.read_since("t", **{"after": s1, **bad})
 
     conformance(Lakehouse(spark, str(tmp_path / "conf")))
 

@@ -12,7 +12,8 @@ properties that make the engine survive a 100 TB input:
 * the staged parse projection must keep the plan's ``parseJson`` count
   independent of the number of checks (validate_json and validate_multi);
 * ``dedup.bucket_pairs``' self-join must read its ``capped_buckets``
-  shuffle once (exchange reuse), not run the signature pass twice.
+  shuffle once (exchange reuse), not run the signature pass twice;
+* an incremental tick runs a pinned number of Spark jobs.
 """
 
 import os
@@ -156,3 +157,31 @@ def test_bucket_pairs_self_join_reuses_capped_buckets_exchange(spark, build):
                        if "Exchange hashpartitioning(t#" in ln]
     reused = [ln for ln in bucket_shuffles if "ReusedExchange" in ln]
     assert len(bucket_shuffles) == 2 and len(reused) == 1, final
+
+
+def test_incremental_tick_spark_jobs(spark, tmp_path):
+    """One warm ``run_incremental`` tick runs 5 Spark jobs: the source
+    read's parquet schema probe, one commit per output table, and the
+    tick's one aggregate (rows and violations together), which adaptive
+    execution runs as two jobs, its shuffle map stage and its result. A
+    second counting action, or a cursor probe that reads data, shows up
+    here."""
+    from events_validator_spark.plans.pipeline import run_incremental
+    from events_validator_spark.sources.catalog import Lakehouse
+    from events_validator_spark.sources.synthetic import (
+        DOC_RULES, interleaved_docs,
+    )
+    lh = Lakehouse(spark, str(tmp_path / "lake"))
+    out = str(tmp_path / "out")
+    lh.append("docs", interleaved_docs(spark, 500))
+    run_incremental(lh, "docs", DOC_RULES, out)
+    lh.append("docs", interleaved_docs(spark, 500))
+    sc = spark.sparkContext
+    sc.setJobGroup("test-incremental-tick", "one incremental tick")
+    try:
+        res = run_incremental(lh, "docs", DOC_RULES, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["rows"] == 500
+    jobs = sc.statusTracker().getJobIdsForGroup("test-incremental-tick")
+    assert len(jobs) == 5

@@ -34,7 +34,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from events_validator_spark.operators.validation import validate_typed
 
@@ -210,7 +210,11 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
         if bucket_col is None:
             part = part.drop("__bucket")
         part = part.cache()
-        verdicts = verdict_rows(part, event_name, str(b), snapshot_id)
+        counts = Observation()  # rides the verdicts write: no count job
+        verdicts = verdict_rows(part, event_name, str(b), snapshot_id).observe(
+            counts, F.count(F.lit(1)).alias("rows"),
+            F.sum("n_violations").alias("violations"),
+            F.sum(F.col("passed").cast("long")).alias("passed"))
         violations = violation_rows(
             part, docs.columns, rules, event_name, str(b), snapshot_id,
             log_payload_when_error=log_payload_when_error,
@@ -219,10 +223,7 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
          .parquet(os.path.join(out_dir, "violations", f"bucket={b}")))
         (verdicts.write.mode("overwrite")
          .parquet(os.path.join(out_dir, "verdicts", f"bucket={b}")))
-        agg = verdicts.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum("n_violations").alias("violations"),
-            F.sum(F.col("passed").cast("long")).alias("passed")).collect()[0]
+        agg = counts.get
         part.unpersist()
         manifest["metrics"].append({
             "partition_id": str(b), "rows": agg["rows"],
@@ -282,9 +283,14 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
     stamping the same tables breaks it (unstamped commits, e.g. a manual
     append, are ignored). Pinned by tests/test_pipeline.py.
 
+    ``rows`` and ``violations`` come from the verdicts commit itself: an
+    ``Observation`` (``count(1)``, ``sum(n_violations)``) on the verdicts
+    it writes, so a warm tick runs two Spark jobs, one per output commit
+    (pinned by tests/test_plans.py).
+
     Returns {"cursor", "rows", "violations", "snapshot_id"} (``snapshot_id``
-    names the violations commit); rows == 0 means the table was unchanged
-    and nothing was written.
+    names the violations commit); ``snapshot_id`` None means the table was
+    unchanged and nothing was written.
     """
     viol_table = f"{source_table}_violations"
     verd_table = f"{source_table}_verdicts"
@@ -305,10 +311,12 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
             validated, new_df.columns, rules, event_name, part_id,
             new_cursor, log_payload_when_error=log_payload_when_error,
             log_valid_fields=log_valid_fields), meta=stamp)
+    counts = Observation()
     lakehouse.append(verd_table, verdict_rows(
-        validated, event_name, part_id, new_cursor), meta=stamp)
-    n_rows, n_viol = validated.agg(
-        F.count(F.lit(1)), F.sum(F.size("violations"))).first()
+        validated, event_name, part_id, new_cursor).observe(
+            counts, F.count(F.lit(1)).alias("rows"),
+            F.sum("n_violations").alias("violations")), meta=stamp)
     validated.unpersist()
-    return {"cursor": new_cursor, "rows": n_rows,
-            "violations": int(n_viol or 0), "snapshot_id": v_snap}
+    got = counts.get
+    return {"cursor": new_cursor, "rows": got["rows"],
+            "violations": int(got["violations"] or 0), "snapshot_id": v_snap}

@@ -14,6 +14,16 @@ map 1:1 onto ``df.writeTo(table).append()`` / ``spark.table`` / snapshot
 metadata. The engine code above this interface stays the same: the swap is
 a class, not a fork (SURVEY.md §7.3.5).
 
+The log, ``<table>/_snapshots.json``, is a JSON list with one entry per
+commit, oldest first: ``{"snapshot_id", "ts", "path", "meta"}``, plus
+``"schema"`` (the appended DataFrame's ``schema.jsonValue()``) on the
+commits that change the table's schema. The table's schema as of a commit
+is the newest ``schema`` at or before it (Iceberg keeps schemas by id in
+its table metadata, not per snapshot), so the log grows by a constant per
+same-schema commit. Reads pass that schema to the parquet reader and never
+infer one from file footers, which would cost a Spark job per read; a log
+with no ``schema`` up to the read's last commit is read with inference.
+
 Commits are read-modify-write of one log file: ONE writer per table (the
 contract ``plans.pipeline.run_incremental`` and the streaming dedup loop
 state). Two concurrent appenders can lose a commit.
@@ -27,6 +37,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class Lakehouse:
@@ -41,16 +52,22 @@ class Lakehouse:
       ``df.writeTo(t).option("snapshot-property.X", v).append()``), so a
       crash can never separate data from its provenance stamp;
     * ``read(table, as_of=None)`` — current state, or time-travel to a
-      snapshot id (Iceberg: ``VERSION AS OF``);
+      snapshot id (Iceberg: ``VERSION AS OF``), in the table's schema as of
+      that snapshot: columns an older commit lacks read as NULL;
     * ``read_since(table, after, until=None) -> (df | None, cursor)`` —
       rows appended strictly after snapshot ``after`` up to and including
       ``until`` (Iceberg: incremental scan with ``start-snapshot-id`` /
-      ``end-snapshot-id``), plus the new cursor.
+      ``end-snapshot-id``), in the schema as of ``until``, plus the new
+      cursor.
 
     ``snapshots``/``current_snapshot``/``snapshot_meta`` are derived
     conveniences over the same snapshot log (Iceberg: the ``.snapshots``
     metadata table); the incremental tick finds its cursor in
-    ``snapshots``."""
+    ``snapshots``.
+
+    This implementation keeps the log described in the module docstring:
+    a commit records its schema only when it changes the table's, and
+    ``read``/``read_since`` launch no Spark job (no footer inference)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -78,6 +95,22 @@ class Lakehouse:
                 return i + 1
         raise ValueError(f"unknown snapshot {snapshot_id}")
 
+    @staticmethod
+    def _schema(snaps: list[dict]) -> dict | None:
+        """The newest ``schema`` in ``snaps`` (the table's schema as of the
+        last of them), or None when no commit recorded one."""
+        return next((s["schema"] for s in reversed(snaps) if "schema" in s),
+                    None)
+
+    def _scan(self, snaps: list[dict], window: list[dict]) -> DataFrame:
+        """The data of ``window``, read in the schema as of the last entry
+        of ``snaps`` (inferred from the files when the log has none)."""
+        schema = self._schema(snaps)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(*[s["path"] for s in window])
+
     def _commit(self, table: str, snaps: list[dict]) -> None:
         p = self._meta_path(table)
         tmp = p + ".tmp"
@@ -93,13 +126,19 @@ class Lakehouse:
         ``meta`` is stored ON the snapshot entry (Iceberg: snapshot summary
         properties), making the commit self-describing: an incremental
         writer stamps its source cursor here, and a crashed-then-rerun tick
-        can detect an already-committed batch without a side channel."""
+        can detect an already-committed batch without a side channel.
+        The entry records ``df``'s schema when it differs from the table's
+        current one."""
         snapshot_id = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:6]}"
         data_dir = os.path.join(self.root, table, snapshot_id)
         df.write.mode("overwrite").parquet(data_dir)
         snaps = self._load_meta(table)
-        snaps.append({"snapshot_id": snapshot_id, "ts": time.time(),
-                      "path": data_dir, "meta": meta or {}})
+        entry = {"snapshot_id": snapshot_id, "ts": time.time(),
+                 "path": data_dir, "meta": meta or {}}
+        schema = df.schema.jsonValue()
+        if schema != self._schema(snaps):
+            entry["schema"] = schema
+        snaps.append(entry)
         self._commit(table, snaps)
         return snapshot_id
 
@@ -109,7 +148,7 @@ class Lakehouse:
         snaps = snaps[:self._end(snaps, as_of)]
         if not snaps:
             raise ValueError(f"table {table} has no committed snapshots")
-        return self.spark.read.parquet(*[s["path"] for s in snaps])
+        return self._scan(snaps, snaps)
 
     def read_since(self, table: str, after: str | None,
                    until: str | None = None
@@ -138,8 +177,7 @@ class Lakehouse:
         new = snaps[lo:hi]
         if not new:
             return None, after
-        df = self.spark.read.parquet(*[s["path"] for s in new])
-        return df, new[-1]["snapshot_id"]
+        return self._scan(snaps[:hi], new), new[-1]["snapshot_id"]
 
     def snapshots(self, table: str) -> list[dict]:
         return self._load_meta(table)

@@ -11,7 +11,7 @@ windowed verdict aggregation covers late events.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from events_validator_spark.operators.validation import validate_typed
 
@@ -276,19 +276,19 @@ def run_stream_dedup(spark: SparkSession, source_dir: str, schema,
         pairs, new_bands = dd.minhash_dedup_incremental(
             batch, index, corpus, text_col=text_col, id_col=id_col,
             threshold=threshold, **lsh_kwargs)
-        # persist both outputs: the pairs plan embeds the band build twice
-        # and the count below would otherwise re-run the whole LSH probe
-        pairs = pairs.persist()
+        # the pairs plan embeds the band build: persisted, the index append
+        # computes it once and the pairs commit reads it back
         new_bands = new_bands.persist()
         stamp = {"stream_batch": key}
         if not committed(docs_table, key):
             lakehouse.append(docs_table, batch, meta=stamp)
         if not committed(index_table, key):
             lakehouse.append(index_table, new_bands, meta=stamp)
-        lakehouse.append(pairs_table, pairs, meta=stamp)
+        n_pairs = Observation()  # counted by the pairs commit itself
+        lakehouse.append(pairs_table, pairs.observe(
+            n_pairs, F.count(F.lit(1)).alias("n")), meta=stamp)
         seen["batches"] += 1
-        seen["pairs"] += pairs.count()
-        pairs.unpersist()
+        seen["pairs"] += n_pairs.get["n"]
         new_bands.unpersist()
         batch.unpersist()
 

@@ -6,7 +6,10 @@ from events_validator_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="evspark-tests", cores=4, shuffle_partitions=4)
+    # a fixed heap cap: get_spark's default (48g) exceeds small hosts, where
+    # the suite's JVM otherwise grows to the host's memory and is OOM-killed
+    s = get_spark(app_name="evspark-tests", cores=4, shuffle_partitions=4,
+                  extra_conf={"spark.driver.memory": "4g"})
     yield s
 
 

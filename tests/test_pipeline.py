@@ -418,6 +418,36 @@ def test_run_incremental_exactly_once(spark, tmp_path):
     assert verd.select("doc_id").distinct().count() == 70
 
 
+def test_run_incremental_empty_window(spark, tmp_path):
+    """A committed but empty source append is a window of zero rows: the
+    tick commits empty outputs and its observed counts are 0, not NULL and
+    not a hang (an alarm bounds the wait on the observation)."""
+    import signal
+
+    from events_validator_spark.plans.pipeline import run_incremental
+    from events_validator_spark.sources.catalog import Lakehouse
+    lh = Lakehouse(spark, str(tmp_path / "elh"))
+    out = str(tmp_path / "eout")
+    docs = interleaved_docs(spark, 30)
+    lh.append("docs", docs)
+    assert run_incremental(lh, "docs", DOC_RULES, out)["rows"] == 30
+    empty = lh.append("docs", docs.limit(0))
+
+    def hung(signum, frame):
+        raise TimeoutError("tick did not return")
+
+    old = signal.signal(signal.SIGALRM, hung)
+    signal.alarm(120)
+    try:
+        res = run_incremental(lh, "docs", DOC_RULES, out)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+    assert (res["rows"], res["violations"]) == (0, 0)
+    assert res["cursor"] == empty and res["snapshot_id"] is not None
+    assert lh.read("docs_verdicts").count() == 30
+
+
 @pytest.mark.parametrize("crash", ["after_verdicts", "before_verdicts",
                                    "manual_append"])
 def test_run_incremental_crash_window_exactly_once(spark, tmp_path, crash):
@@ -529,8 +559,47 @@ def test_lakehouse_interface_conformance(spark, tmp_path):
         for bad in ({"until": "snap-nope"}, {"after": s2, "until": s1}):
             with pytest.raises(ValueError):
                 lh.read_since("t", **{"after": s1, **bad})
+        # an added column reads over older commits, NULL on their rows
+        s4 = lh.append("t", spark.range(10, 12).selectExpr(
+            "id as v", "cast(id as string) as w"))
+        got = sorted(tuple(r) for r in lh.read("t").collect())
+        assert got == [(i, None) for i in range(10)] + [(10, "10"),
+                                                        (11, "11")]
+        window, _ = lh.read_since("t", s2, until=s4)
+        assert window.columns == ["v", "w"] and window.count() == 4
+        assert lh.read("t", as_of=s3).columns == ["v"]
 
     conformance(Lakehouse(spark, str(tmp_path / "conf")))
+
+    # the directory Lakehouse reads in the schema its log recorded at
+    # commit time: the schema parquet inference gives (nested docs, and the
+    # violations and verdicts tables), stored once for same-schema appends;
+    # a log with its schemas stripped reads by inference
+    import json
+
+    from events_validator_spark.plans.pipeline import run_incremental
+    root = tmp_path / "schema"
+    lh = Lakehouse(spark, str(root))
+    for _ in range(2):
+        lh.append("docs", interleaved_docs(spark, 40))
+        run_incremental(lh, "docs", DOC_RULES, str(tmp_path / "out"))
+    for t in ("docs", "docs_violations", "docs_verdicts"):
+        snaps = lh.snapshots(t)
+        inferred = spark.read.parquet(*[s["path"] for s in snaps]).schema
+        assert lh.read(t).schema == inferred
+        assert lh.read_since(t, snaps[0]["snapshot_id"])[0].schema == inferred
+        assert sum("schema" in s for s in snaps) == 1
+    docs_schema = lh.read("docs").schema
+    assert docs_schema["spans"].dataType.elementType.typeName() == "struct"
+    for i in range(10):
+        lh.append("same", spark.range(i, i + 1))
+    assert sum("schema" in s for s in lh.snapshots("same")) == 1
+    log = root / "docs" / "_snapshots.json"
+    log.write_text(json.dumps([{k: v for k, v in s.items() if k != "schema"}
+                               for s in json.loads(log.read_text())]))
+    assert not any("schema" in s for s in lh.snapshots("docs"))
+    assert lh.read("docs").schema == docs_schema
+    assert lh.read("docs").count() == 80
 
 
 def test_streaming_hash_sample(spark, tmp_path):

@@ -13,10 +13,12 @@ properties that make the engine survive a 100 TB input:
   independent of the number of checks (validate_json and validate_multi);
 * ``dedup.bucket_pairs``' self-join must read its ``capped_buckets``
   shuffle once (exchange reuse), not run the signature pass twice;
-* an incremental tick runs a pinned number of Spark jobs.
+* an incremental tick, a ``Lakehouse`` read and a ``run_validation``
+  bucket run pinned numbers of Spark jobs.
 """
 
 import os
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
@@ -159,13 +161,23 @@ def test_bucket_pairs_self_join_reuses_capped_buckets_exchange(spark, build):
     assert len(bucket_shuffles) == 2 and len(reused) == 1, final
 
 
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn launched)``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_incremental_tick_spark_jobs(spark, tmp_path):
-    """One warm ``run_incremental`` tick runs 5 Spark jobs: the source
-    read's parquet schema probe, one commit per output table, and the
-    tick's one aggregate (rows and violations together), which adaptive
-    execution runs as two jobs, its shuffle map stage and its result. A
-    second counting action, or a cursor probe that reads data, shows up
-    here."""
+    """One warm ``run_incremental`` tick runs 2 Spark jobs: one commit per
+    output table. The source read infers no schema (the log holds it), and
+    the rows and violations are observed on the verdicts commit. A counting
+    action, or a cursor probe or read that touches data, shows up here."""
     from events_validator_spark.plans.pipeline import run_incremental
     from events_validator_spark.sources.catalog import Lakehouse
     from events_validator_spark.sources.synthetic import (
@@ -176,12 +188,43 @@ def test_incremental_tick_spark_jobs(spark, tmp_path):
     lh.append("docs", interleaved_docs(spark, 500))
     run_incremental(lh, "docs", DOC_RULES, out)
     lh.append("docs", interleaved_docs(spark, 500))
-    sc = spark.sparkContext
-    sc.setJobGroup("test-incremental-tick", "one incremental tick")
-    try:
-        res = run_incremental(lh, "docs", DOC_RULES, out)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert res["rows"] == 500
-    jobs = sc.statusTracker().getJobIdsForGroup("test-incremental-tick")
-    assert len(jobs) == 5
+    res, jobs = _jobs(spark, lambda: run_incremental(lh, "docs", DOC_RULES,
+                                                     out))
+    assert res["rows"] == 500 and res["violations"] > 0
+    assert jobs == 2
+
+
+def test_lakehouse_reads_launch_no_spark_job(spark, tmp_path):
+    """``read`` and ``read_since`` build their DataFrame from the schema the
+    log recorded at commit time: no footer-inference job."""
+    from events_validator_spark.sources.catalog import Lakehouse
+    from events_validator_spark.sources.synthetic import interleaved_docs
+    lh = Lakehouse(spark, str(tmp_path / "lake"))
+    s1 = lh.append("docs", interleaved_docs(spark, 50))
+    lh.append("docs", interleaved_docs(spark, 50))
+    for read in (lambda: lh.read("docs"),
+                 lambda: lh.read("docs", as_of=s1),
+                 lambda: lh.read_since("docs", s1)[0],
+                 lambda: lh.read_since("docs", None, until=s1)[0]):
+        df, jobs = _jobs(spark, read)
+        assert "spans" in df.columns and jobs == 0
+
+
+@pytest.mark.parametrize("bucket_col", [None, "bucket"])
+def test_run_validation_spark_jobs_per_bucket(spark, tmp_path, bucket_col):
+    """``run_validation`` runs 2 Spark jobs per bucket, its violations and
+    verdicts writes; the bucket's rows, violations and passed counts are
+    observed on the verdicts write. The partition-column path adds one
+    ``distinct`` over the bucket labels (2 jobs under AQE)."""
+    from events_validator_spark.plans.pipeline import run_validation
+    from events_validator_spark.sources.synthetic import (
+        DOC_RULES, interleaved_docs,
+    )
+    docs = interleaved_docs(spark, 400).withColumn(
+        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(3)))
+    m, jobs = _jobs(spark, lambda: run_validation(
+        docs, DOC_RULES, str(tmp_path / "out"), n_buckets=3,
+        bucket_col=bucket_col))
+    assert sum(x["rows"] for x in m["metrics"]) == 400
+    assert len(m["completed"]) == 3
+    assert jobs == 2 * 3 + (0 if bucket_col is None else 2)

@@ -23,7 +23,7 @@ Layout:
     operators/   validation, stats, uniqueness, referential, drift, dedup,
                  similarity, text, multimodal, analytics
     sources/     deterministic synthetic interleaved-docs generator, table IO
-    plans/       end-to-end validation pipeline, checkpoint/resume manifest
+    plans/       end-to-end validation pipeline, resume from stamped commits
     streaming/   Structured Streaming wrapper (foreachBatch over the same pass)
 """
 

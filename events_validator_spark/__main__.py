@@ -20,7 +20,7 @@ def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(prog="events_validator_spark")
     ap.add_argument("--docs", type=int, default=100_000,
                     help="synthetic interleaved-doc count (deterministic)")
-    ap.add_argument("--out", required=True, help="output dir for the run")
+    ap.add_argument("--out", required=True, help="lakehouse root of the run")
     ap.add_argument("--buckets", type=int, default=8)
     ap.add_argument("--partitioned", action="store_true",
                     help="materialize the docs partitioned by a synthetic "
@@ -62,12 +62,12 @@ def main(argv: list[str] | None = None) -> None:
          .write.mode("overwrite").partitionBy("date_utc").parquet(src))
         docs = spark.read.parquet(src)
         bucket_col = "date_utc"
-    manifest = run_validation(
+    summary = run_validation(
         docs, DOC_RULES, args.out, n_buckets=args.buckets,
         bucket_col=bucket_col, run_id=args.run_id,
         log_payload_when_error=args.log_payload,
         log_valid_fields=args.log_valid_fields)
-    json.dump(manifest, sys.stdout)
+    json.dump(summary, sys.stdout)
     print()
 
 

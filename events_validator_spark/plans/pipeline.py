@@ -1,20 +1,26 @@
-"""End-to-end validation run: violations + verdicts + per-partition metrics,
-with checkpoint/resume (SURVEY.md §7.1 M5, FIXTURES.md §4-5).
+"""End-to-end validation runs: violations + verdicts committed to a
+``Lakehouse``, with per-bucket counts on the commits (SURVEY.md §7.1 M5,
+FIXTURES.md §4-5).
 
 The reference emits per-event verdicts over HTTP and fire-and-forgets log rows
 into BigQuery (/root/reference/validator_src/index.js:54-75,
 helpers/cloudHelpers.js:25-44). Here a run is a deterministic batch job over a
 partitioned table:
 
-  docs ──validate (1 projection)──► violations rows  ──append──► violations/
-                                  ► verdict rows     ──append──► verdicts/
-                                  ► metrics row/part ──append──► metrics/ + manifest
+  docs ──validate (1 projection)──► violation rows ──append──► violations
+                                  ► verdict rows   ──append──► verdicts
+                                                   (+ counts in its meta)
 
-Resume: partitions are processed in deterministic buckets; each completed
-bucket is recorded in a JSON manifest (the sandbox stand-in for Iceberg
-snapshot ids — the API carries a ``snapshot_id`` everywhere so an Iceberg
-catalog can be swapped in). A re-run with the same run_id skips completed
-buckets — no duplicate rows, verified by tests/test_pipeline.py.
+One checkpoint protocol for every pipeline: each unit of work (a bucket of
+``run_validation``, a source window of ``run_incremental``, a micro-batch of
+``streaming.stream.run_stream_pipeline``) is two ``Lakehouse`` commits,
+violations then verdicts, both stamped with the unit (``_commit_outputs``).
+The stamps are the only record of what a run has done: a rerun skips every
+unit whose verdicts commit carries its stamp, and a unit whose violations
+commit is stamped but whose verdicts commit is not (a crash between the
+two) commits only its verdicts — no duplicate rows, verified by
+tests/test_pipeline.py. The unit's ``rows``/``violations``/``passed`` are
+observed on the verdicts write and stored in that commit's meta.
 
 Scale note: pass ``bucket_col`` (the table's partition column, e.g. date_utc)
 so every bucket scan partition-prunes to exactly its own files — resume
@@ -22,21 +28,17 @@ granularity then costs zero redundant IO (PartitionFilters in the scan,
 verified by tests/test_pipeline.py). The hash-of-doc_id fallback
 (``bucket_col=None``) re-filters the full source per bucket — acceptable only
 for unpartitioned inputs.
-
-``run_incremental`` keeps no manifest: its stamped lakehouse commits are
-its checkpoint.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from events_validator_spark.operators.validation import validate_typed
+from events_validator_spark.sources.catalog import Lakehouse
 
 VERDICT_COLS = ["doc_id", "event_name", "passed", "n_violations",
                 "partition_id", "snapshot_id"]
@@ -141,20 +143,67 @@ def violation_rows(part: DataFrame, source_columns: list[str], rules: dict,
     return out
 
 
+def _last_stamp(lakehouse, table: str, meta_key: str,
+                scope: dict | None = None
+                ) -> tuple[str | None, object]:
+    """``(snapshot_id, stamp)`` of the newest commit of ``table`` whose meta
+    carries ``meta_key`` (and every item of ``scope``, e.g. a run id), or
+    ``(None, None)``. Unstamped commits (a manual append) are skipped. The
+    one reader of the snapshot log's stamps (Iceberg: the ``.snapshots``
+    metadata table's summary properties), shared by every pipeline here and
+    by the streaming dedup loop (``stream_batch``)."""
+    for snap in reversed(lakehouse.snapshots(table)):
+        meta = snap.get("meta") or {}
+        if meta.get(meta_key) is not None and all(
+                meta.get(k) == v for k, v in (scope or {}).items()):
+            return snap["snapshot_id"], meta[meta_key]
+    return None, None
+
+
+def _commit_outputs(lakehouse, viol_table: str, verd_table: str,
+                    stamp: dict, violations: DataFrame,
+                    verdicts: DataFrame) -> tuple[str | None, dict]:
+    """Append ``violations`` unless ``viol_table`` already holds them, then
+    append ``verdicts``; both commits carry ``stamp``. ``stamp``'s last
+    item names the unit (source cursor, bucket, stream batch), the items
+    before it the scope the unit is unique in (a run id): the violations
+    are already there when the newest commit in that scope carries the
+    unit — a rerun after a crash between the two commits. The verdicts
+    commit also stores ``start`` (epoch seconds) and its own ``rows``,
+    ``violations`` and ``passed``, observed on its write.
+
+    Returns ``(violations snapshot id, verdicts commit meta)``."""
+    start = time.time()
+    *scope, (key, unit) = stamp.items()
+    v_snap, last = _last_stamp(lakehouse, viol_table, key, dict(scope))
+    if last != unit:
+        v_snap = lakehouse.append(viol_table, violations, meta=stamp)
+    snap = lakehouse.append(verd_table, verdicts, meta={
+        **stamp, "start": start, "rows": F.count(F.lit(1)),
+        "violations": F.coalesce(F.sum("n_violations"), F.lit(0)),
+        "passed": F.count_if("passed")})
+    return v_snap, lakehouse.snapshot_meta(verd_table, snap)
+
+
 def run_validation(docs: DataFrame, rules: dict, out_dir: str,
                    event_name: str = "interleaved_doc",
                    n_buckets: int = 8, run_id: str | None = None,
-                   snapshot_id: str | None = None,
                    bucket_col: str | None = None,
                    log_payload_when_error: bool = False,
                    log_valid_fields: bool = False) -> dict:
-    """Validate ``docs`` bucket by bucket with manifest-based resume.
+    """Validate ``docs`` bucket by bucket into the ``violations`` and
+    ``verdicts`` tables of a ``Lakehouse`` rooted at ``out_dir``; each
+    bucket's two commits are stamped ``{run_id, bucket}`` and a rerun with
+    the same ``run_id`` resumes from the stamps (module docstring). Rows
+    carry ``snapshot_id = "snap-" + run_id``; a second run_id written to
+    the same root appends, so readers pick a run by that column or by the
+    commits' stamps. One writer per root at a time.
 
     ``bucket_col``: name of the table's PARTITION column (e.g. date_utc) —
-    buckets are its distinct values and each bucket's scan partition-prunes
-    to its own files (the Iceberg-shaped resume unit). When None, buckets
-    fall back to ``pmod(xxhash64(doc_id), n_buckets)`` (full rescan per
-    bucket — unpartitioned inputs only).
+    buckets are its distinct values (NULL included) and each bucket's scan
+    partition-prunes to its own files (the Iceberg-shaped resume unit).
+    When None, buckets fall back to ``pmod(xxhash64(doc_id), n_buckets)``
+    (full rescan per bucket — unpartitioned inputs only).
 
     ``log_payload_when_error`` mirrors the reference's LOG_PAYLOAD_WHEN_ERROR
     flag (loggingHelpers.js:18): violation rows carry the full event as JSON.
@@ -162,104 +211,62 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
     rows with status='valid' are emitted for schema fields that produced no
     violation on that document.
 
-    Returns the manifest dict (run_id, per-bucket metrics, completed buckets).
+    Returns a summary built from this run's verdicts commits, so a resumed
+    run reports every bucket: ``run_id``, ``snapshot_id``, ``n_buckets``,
+    ``bucket_col``, ``completed`` (bucket labels) and ``metrics`` (per
+    bucket: ``partition_id``, ``rows``, ``violations``, ``passed``,
+    ``wall_ms``, ``snapshot_id``, ``run_id``).
     """
-    spark = docs.sparkSession
     run_id = run_id or uuid.uuid4().hex[:12]
-    snapshot_id = snapshot_id or "snap-" + run_id
-    os.makedirs(out_dir, exist_ok=True)
-    manifest_path = os.path.join(out_dir, f"manifest_{run_id}.json")
-
+    snapshot_id = "snap-" + run_id
+    lakehouse = Lakehouse(docs.sparkSession, out_dir)
     if bucket_col is None:
-        buckets = list(range(n_buckets))
-        validated = validate_typed(docs, rules).withColumn(
-            "__bucket", _bucket(F.col("doc_id"), n_buckets))
-
-        def bucket_filter(b):
-            return (F.col("__bucket") == b)
+        key = _bucket(F.col("doc_id"), n_buckets)
+        labels = {b: b for b in range(n_buckets)}
     else:
         # distinct partition values: on a partitioned source this is metadata
         # listing, not a data scan. On an UNPARTITIONED source it is a full
         # scan+shuffle just to enumerate labels — pass bucket_col only when
         # it is (or is derived from) a physical partition column; otherwise
         # leave it None and take the hash-bucket path, whose only extra cost
-        # is the documented per-bucket re-scan. Manifest keys are string
-        # labels; the filter uses the NATIVE typed value so the comparison
-        # lands in the scan's PartitionFilters (a cast around the column
-        # would defeat pruning).
-        vals = {str(r[0]): r[0]
-                for r in docs.select(bucket_col).distinct().collect()}
-        buckets = sorted(vals)
-        validated = validate_typed(docs, rules)
+        # is the documented per-bucket re-scan. Stamps carry string labels;
+        # the filter uses the NATIVE typed value so the comparison lands in
+        # the scan's PartitionFilters (a cast around the column would defeat
+        # pruning), null-safe so a NULL partition is a bucket too.
+        key = F.col(bucket_col)
+        labels = {str(r[0]): r[0]
+                  for r in docs.select(bucket_col).distinct().collect()}
+    validated = validate_typed(docs, rules)
 
-        def bucket_filter(b):
-            return (F.col(bucket_col) == F.lit(vals[b]))
+    def this_run() -> list[dict]:
+        return [s["meta"] | {"ts": s["ts"]}
+                for s in lakehouse.snapshots("verdicts")
+                if (s.get("meta") or {}).get("run_id") == run_id]
 
-    manifest = {"run_id": run_id, "snapshot_id": snapshot_id,
-                "n_buckets": len(buckets), "bucket_col": bucket_col,
-                "completed": [], "metrics": []}
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            manifest = json.load(f)
-
-    for b in buckets:
-        if b in manifest["completed"]:
+    done = {m["bucket"] for m in this_run()}
+    for b in sorted(labels):
+        if b in done:
             continue
-        t0 = time.monotonic()
-        part = validated.where(bucket_filter(b))
-        if bucket_col is None:
-            part = part.drop("__bucket")
-        part = part.cache()
-        counts = Observation()  # rides the verdicts write: no count job
-        verdicts = verdict_rows(part, event_name, str(b), snapshot_id).observe(
-            counts, F.count(F.lit(1)).alias("rows"),
-            F.sum("n_violations").alias("violations"),
-            F.sum(F.col("passed").cast("long")).alias("passed"))
-        violations = violation_rows(
-            part, docs.columns, rules, event_name, str(b), snapshot_id,
-            log_payload_when_error=log_payload_when_error,
-            log_valid_fields=log_valid_fields)
-        (violations.write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "violations", f"bucket={b}")))
-        (verdicts.write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "verdicts", f"bucket={b}")))
-        agg = counts.get
+        part = validated.where(key.eqNullSafe(F.lit(labels[b]))).cache()
+        _commit_outputs(
+            lakehouse, "violations", "verdicts",
+            {"run_id": run_id, "bucket": b},
+            violation_rows(part, docs.columns, rules, event_name, str(b),
+                           snapshot_id,
+                           log_payload_when_error=log_payload_when_error,
+                           log_valid_fields=log_valid_fields),
+            verdict_rows(part, event_name, str(b), snapshot_id))
         part.unpersist()
-        manifest["metrics"].append({
-            "partition_id": str(b), "rows": agg["rows"],
-            "violations": int(agg["violations"] or 0),
-            "passed": int(agg["passed"] or 0),
-            "wall_ms": int((time.monotonic() - t0) * 1000),
-            "snapshot_id": snapshot_id, "run_id": run_id,
-        })
-        manifest["completed"].append(b)
-        # write-then-rename: a failed write leaves the previous manifest
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, manifest_path)
-    return manifest
-
-
-def read_outputs(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame]:
-    violations = spark.read.parquet(os.path.join(out_dir, "violations"))
-    verdicts = spark.read.parquet(os.path.join(out_dir, "verdicts"))
-    return violations, verdicts
-
-
-def _last_stamp(lakehouse, table: str,
-                meta_key: str) -> tuple[str | None, str | None]:
-    """``(snapshot_id, stamp)`` of the newest commit of ``table`` whose meta
-    carries ``meta_key``, or ``(None, None)``. Unstamped commits (a manual
-    append) are skipped. One read of the snapshot log (Iceberg: the
-    ``.snapshots`` metadata table's summary properties), shared by the
-    incremental tick (``source_cursor``) and the streaming dedup loop
-    (``stream_batch``)."""
-    for snap in reversed(lakehouse.snapshots(table)):
-        stamp = (snap.get("meta") or {}).get(meta_key)
-        if stamp is not None:
-            return snap["snapshot_id"], stamp
-    return None, None
+    commits = this_run()
+    return {"run_id": run_id, "snapshot_id": snapshot_id,
+            "n_buckets": len(labels), "bucket_col": bucket_col,
+            "completed": [m["bucket"] for m in commits],
+            "metrics": [{"partition_id": str(m["bucket"]), "rows": m["rows"],
+                         "violations": m["violations"],
+                         "passed": m["passed"],
+                         "wall_ms": int((m["ts"] - m["start"]) * 1000),
+                         "snapshot_id": snapshot_id, "run_id": run_id}
+                        for m in commits]}
 
 
 def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
@@ -283,10 +290,10 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
     stamping the same tables breaks it (unstamped commits, e.g. a manual
     append, are ignored). Pinned by tests/test_pipeline.py.
 
-    ``rows`` and ``violations`` come from the verdicts commit itself: an
-    ``Observation`` (``count(1)``, ``sum(n_violations)``) on the verdicts
-    it writes, so a warm tick runs two Spark jobs, one per output commit
-    (pinned by tests/test_plans.py).
+    ``rows`` and ``violations`` come from the verdicts commit itself
+    (``_commit_outputs`` stores them, observed on its write), so a warm
+    tick runs two Spark jobs, one per output commit (pinned by
+    tests/test_plans.py).
 
     Returns {"cursor", "rows", "violations", "snapshot_id"} (``snapshot_id``
     names the violations commit); ``snapshot_id`` None means the table was
@@ -295,7 +302,7 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
     viol_table = f"{source_table}_violations"
     verd_table = f"{source_table}_verdicts"
     _, cursor = _last_stamp(lakehouse, verd_table, "source_cursor")
-    v_snap, pending = _last_stamp(lakehouse, viol_table, "source_cursor")
+    _, pending = _last_stamp(lakehouse, viol_table, "source_cursor")
     redo = pending not in (None, cursor)  # crashed between the commits
     new_df, new_cursor = lakehouse.read_since(
         source_table, cursor, until=pending if redo else None)
@@ -305,18 +312,13 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
 
     validated = validate_typed(new_df, rules).cache()
     part_id = f"inc-{new_cursor}"
-    stamp = {"source_cursor": new_cursor}
-    if not redo:
-        v_snap = lakehouse.append(viol_table, violation_rows(
-            validated, new_df.columns, rules, event_name, part_id,
-            new_cursor, log_payload_when_error=log_payload_when_error,
-            log_valid_fields=log_valid_fields), meta=stamp)
-    counts = Observation()
-    lakehouse.append(verd_table, verdict_rows(
-        validated, event_name, part_id, new_cursor).observe(
-            counts, F.count(F.lit(1)).alias("rows"),
-            F.sum("n_violations").alias("violations")), meta=stamp)
+    v_snap, counts = _commit_outputs(
+        lakehouse, viol_table, verd_table, {"source_cursor": new_cursor},
+        violation_rows(validated, new_df.columns, rules, event_name,
+                       part_id, new_cursor,
+                       log_payload_when_error=log_payload_when_error,
+                       log_valid_fields=log_valid_fields),
+        verdict_rows(validated, event_name, part_id, new_cursor))
     validated.unpersist()
-    got = counts.get
-    return {"cursor": new_cursor, "rows": got["rows"],
-            "violations": int(got["violations"] or 0), "snapshot_id": v_snap}
+    return {"cursor": new_cursor, "rows": counts["rows"],
+            "violations": counts["violations"], "snapshot_id": v_snap}

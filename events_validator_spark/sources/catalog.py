@@ -25,8 +25,8 @@ infer one from file footers, which would cost a Spark job per read; a log
 with no ``schema`` up to the read's last commit is read with inference.
 
 Commits are read-modify-write of one log file: ONE writer per table (the
-contract ``plans.pipeline.run_incremental`` and the streaming dedup loop
-state). Two concurrent appenders can lose a commit.
+contract every pipeline in ``plans.pipeline`` and ``streaming.stream``
+states). Two concurrent appenders can lose a commit.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -50,7 +50,9 @@ class Lakehouse:
       returned id names the commit; ``meta`` (e.g. the source cursor) rides
       the commit itself (Iceberg: snapshot summary properties via
       ``df.writeTo(t).option("snapshot-property.X", v).append()``), so a
-      crash can never separate data from its provenance stamp;
+      crash can never separate data from its provenance stamp; a
+      ``Column``-valued entry is an aggregate over the appended rows, and
+      the commit stores its value (Iceberg: ``added-records``);
     * ``read(table, as_of=None)`` — current state, or time-travel to a
       snapshot id (Iceberg: ``VERSION AS OF``), in the table's schema as of
       that snapshot: columns an older commit lacks read as NULL;
@@ -127,14 +129,23 @@ class Lakehouse:
         properties), making the commit self-describing: an incremental
         writer stamps its source cursor here, and a crashed-then-rerun tick
         can detect an already-committed batch without a side channel.
-        The entry records ``df``'s schema when it differs from the table's
-        current one."""
+        ``Column`` values (``{"rows": F.count(F.lit(1))}``) are observed on
+        the write itself, so a commit's counts cost no extra job, and stored
+        as their (JSON) values. The entry records ``df``'s schema when it
+        differs from the table's current one."""
+        meta = dict(meta or {})
+        observed = {k: c for k, c in meta.items() if isinstance(c, Column)}
+        if observed:
+            obs = Observation()
+            df = df.observe(obs, *[c.alias(k) for k, c in observed.items()])
         snapshot_id = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:6]}"
         data_dir = os.path.join(self.root, table, snapshot_id)
         df.write.mode("overwrite").parquet(data_dir)
+        if observed:
+            meta.update(obs.get)
         snaps = self._load_meta(table)
         entry = {"snapshot_id": snapshot_id, "ts": time.time(),
-                 "path": data_dir, "meta": meta or {}}
+                 "path": data_dir, "meta": meta}
         schema = df.schema.jsonValue()
         if schema != self._schema(snaps):
             entry["schema"] = schema

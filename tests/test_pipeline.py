@@ -8,18 +8,43 @@ import pytest
 
 from events_validator_spark.operators import multimodal
 from events_validator_spark.plans import pipeline
+from events_validator_spark.sources.catalog import Lakehouse
 from events_validator_spark.sources.synthetic import DOC_RULES, interleaved_docs
 from events_validator_spark.streaming.stream import run_stream_to_memory
 
 
-def test_run_validation_and_resume(spark, tmp_path):
+def _outputs(spark, out):
+    lh = Lakehouse(spark, out)
+    return lh.read("violations"), lh.read("verdicts")
+
+
+def _crash_at_verdicts(monkeypatch, n, crash):
+    """``Lakehouse.append`` raises right before (``before_verdicts``) or
+    right after (``after_verdicts``) the ``n``-th verdicts commit."""
+    orig = Lakehouse.append
+    seen = {"verdicts": 0}
+
+    def flaky(self, table, df, meta=None):
+        hit = table == "verdicts" and seen["verdicts"] + 1 == n
+        seen["verdicts"] += table == "verdicts"
+        if hit and crash == "before_verdicts":
+            raise RuntimeError("injected crash before the verdicts commit")
+        snap = orig(self, table, df, meta)
+        if hit:
+            raise RuntimeError("injected crash after the verdicts commit")
+        return snap
+
+    monkeypatch.setattr(Lakehouse, "append", flaky)
+
+
+def test_run_validation_and_resume(spark, tmp_path, monkeypatch):
     docs = interleaved_docs(spark, 1500)
     out = str(tmp_path / "run1")
 
     m1 = pipeline.run_validation(docs, DOC_RULES, out, n_buckets=4,
                                  run_id="r1")
     assert sorted(m1["completed"]) == [0, 1, 2, 3]
-    viol, verd = pipeline.read_outputs(spark, out)
+    viol, verd = _outputs(spark, out)
     total_docs = verd.count()
     assert total_docs == 1500
     n_viol = viol.count()
@@ -30,59 +55,157 @@ def test_run_validation_and_resume(spark, tmp_path):
     assert sum(m["rows"] for m in m1["metrics"]) == 1500
     assert sum(m["violations"] for m in m1["metrics"]) == n_viol
 
-    # simulate a crash after bucket 1: pre-seed a manifest with 2 completed
+    # a crash right after bucket 1's verdicts commit
     out2 = str(tmp_path / "run2")
-    m2a = pipeline.run_validation(docs, DOC_RULES, out2, n_buckets=4,
-                                  run_id="r2")
-    import json, os
-    man_path = os.path.join(out2, "manifest_r2.json")
-    with open(man_path) as f:
-        man = json.load(f)
-    man["completed"] = man["completed"][:2]
-    man["metrics"] = man["metrics"][:2]
-    with open(man_path, "w") as f:
-        json.dump(man, f)
+    _crash_at_verdicts(monkeypatch, 2, "after_verdicts")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pipeline.run_validation(docs, DOC_RULES, out2, n_buckets=4,
+                                run_id="r2")
+    monkeypatch.undo()
     # resume: only buckets 2,3 rerun; outputs identical, no duplicates
     m2b = pipeline.run_validation(docs, DOC_RULES, out2, n_buckets=4,
                                   run_id="r2")
     assert sorted(m2b["completed"]) == [0, 1, 2, 3]
-    viol2, verd2 = pipeline.read_outputs(spark, out2)
+    viol2, verd2 = _outputs(spark, out2)
     assert verd2.count() == 1500
     assert viol2.count() == n_viol
     assert verd2.select("doc_id").distinct().count() == \
         verd.select("doc_id").distinct().count()
 
 
-def test_run_validation_resume_after_failed_manifest_write(
-        spark, tmp_path, monkeypatch):
-    """A manifest write that fails part-way (bucket 2's) leaves the previous
-    manifest readable, so the resume redoes bucket 2 onwards and ends with
-    every doc exactly once and no duplicate violation rows."""
-    import json
+@pytest.mark.parametrize("bucket_col", [None, "date_utc"],
+                         ids=["hash", "bucket_col"])
+@pytest.mark.parametrize("crash", ["after_verdicts", "before_verdicts"])
+def test_run_validation_crash_window_exactly_once(spark, tmp_path,
+                                                  monkeypatch, crash,
+                                                  bucket_col):
+    """A run that crashes right after, or right before, bucket 2's verdicts
+    commit, then a rerun: every doc is in the verdicts exactly once, the
+    violations equal ``sum(n_violations)`` (a crash between the two
+    commits does not re-append the bucket's violations), the resumed
+    summary reports every bucket, and a further rerun adds no commit."""
+    from collections import Counter
     docs = interleaved_docs(spark, 600)
+    if bucket_col is not None:
+        src = str(tmp_path / "docs_part")
+        docs.withColumn("date_utc", F.date_add(
+            F.lit("2024-01-01"), F.pmod(F.xxhash64("doc_id"), F.lit(4))
+            .cast("int"))).write.partitionBy("date_utc").parquet(src)
+        docs = spark.read.parquet(src)
     out = str(tmp_path / "run")
-    real_dump = json.dump
 
-    def failing_dump(obj, f, *args, **kwargs):
-        if 2 in obj.get("completed", ()):
-            f.write('{"run_id": ')
-            raise OSError("injected failure while writing the manifest")
-        return real_dump(obj, f, *args, **kwargs)
+    def run():
+        return pipeline.run_validation(docs, DOC_RULES, out, n_buckets=4,
+                                       run_id="r", bucket_col=bucket_col)
 
-    monkeypatch.setattr(pipeline.json, "dump", failing_dump)
-    with pytest.raises(OSError, match="injected"):
-        pipeline.run_validation(docs, DOC_RULES, out, n_buckets=4,
-                                run_id="r")
+    _crash_at_verdicts(monkeypatch, 3, crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run()
     monkeypatch.undo()
-    m = pipeline.run_validation(docs, DOC_RULES, out, n_buckets=4,
-                                run_id="r")
-    assert sorted(m["completed"]) == [0, 1, 2, 3]
+    m = run()
+    assert len(m["completed"]) == 4
     assert sum(x["rows"] for x in m["metrics"]) == 600
-    viol, verd = pipeline.read_outputs(spark, out)
-    assert verd.count() == 600
+    viol, verd = _outputs(spark, out)
+    assert Counter(r[0] for r in verd.select("doc_id").collect()) == \
+        Counter(r[0] for r in docs.select("doc_id").collect())
     n_viol = verd.agg(F.sum("n_violations")).first()[0]
     assert n_viol > 0 and viol.count() == n_viol
     assert sum(x["violations"] for x in m["metrics"]) == n_viol
+
+    lh = Lakehouse(spark, out)
+    commits = [len(lh.snapshots(t)) for t in ("violations", "verdicts")]
+    assert commits == [4, 4]
+    assert run() == m
+    assert [len(lh.snapshots(t)) for t in ("violations", "verdicts")] == \
+        commits
+
+
+def test_run_validation_second_run_appends(spark, tmp_path):
+    """A second run_id written to the same root appends its own commits and
+    rows, also when its bucket labels equal the first run's: a bucket is
+    done only when a commit stamped with THIS run id carries it."""
+    docs = interleaved_docs(spark, 200)
+    out = str(tmp_path / "run")
+    for run_id in ("a", "b"):
+        m = pipeline.run_validation(docs, DOC_RULES, out, n_buckets=1,
+                                    run_id=run_id)
+        assert m["completed"] == [0] and m["metrics"][0]["rows"] == 200
+    viol, verd = _outputs(spark, out)
+    per_run = {r[0]: r[1] for r in verd.groupBy("snapshot_id").count()
+               .collect()}
+    assert per_run == {"snap-a": 200, "snap-b": 200}
+    assert viol.where(F.col("snapshot_id") == "snap-b").count() == \
+        viol.where(F.col("snapshot_id") == "snap-a").count() > 0
+
+
+def test_run_validation_null_partition_is_a_bucket(spark, tmp_path):
+    """A NULL value of ``bucket_col`` is a bucket of its own: its rows are
+    validated (a ``col == NULL`` filter would select none), and the
+    null-safe bucket filter still lands in the scan's PartitionFilters."""
+    import datetime
+    docs = interleaved_docs(spark, 400).withColumn(
+        "date_utc", F.when(F.pmod(F.xxhash64("doc_id"), F.lit(5)) > 0,
+                           F.date_add(F.lit("2024-01-01"),
+                                      F.pmod(F.xxhash64("doc_id"), F.lit(3))
+                                      .cast("int"))))
+    src = str(tmp_path / "docs_part")
+    docs.write.partitionBy("date_utc").parquet(src)
+    pdocs = spark.read.parquet(src)
+    n_null = pdocs.where(F.col("date_utc").isNull()).count()
+    assert n_null > 0
+
+    out = str(tmp_path / "run")
+    m = pipeline.run_validation(pdocs, DOC_RULES, out, bucket_col="date_utc",
+                                run_id="rn")
+    rows = {x["partition_id"]: x["rows"] for x in m["metrics"]}
+    assert rows["None"] == n_null and sum(rows.values()) == 400
+    _, verd = _outputs(spark, out)
+    assert verd.count() == 400
+
+    from events_validator_spark.operators.validation import validate_typed
+    for value, shown in ((datetime.date(2024, 1, 1), "2024-01-01"),
+                         (None, "isnull")):
+        one = validate_typed(pdocs, DOC_RULES).where(
+            F.col("date_utc").eqNullSafe(F.lit(value)))
+        plan = one._jdf.queryExecution().executedPlan().toString()
+        pf = plan.split("PartitionFilters")[1].split("]")[0]
+        assert "date_utc" in pf and shown in pf, pf
+
+
+def test_run_validation_input_column_named_like_a_helper(spark, tmp_path):
+    """An input column named ``__bucket`` is source data like any other:
+    the hash-bucket path filters on the doc-id hash without adding or
+    dropping a helper column, so the payload keeps it."""
+    import json
+    docs = interleaved_docs(spark, 200).withColumn("__bucket", F.lit("mine"))
+    out = str(tmp_path / "run")
+    m = pipeline.run_validation(docs, DOC_RULES, out, n_buckets=2,
+                                log_payload_when_error=True)
+    assert sum(x["rows"] for x in m["metrics"]) == 200
+    viol, _ = _outputs(spark, out)
+    payloads = [json.loads(r[0]) for r in viol.select("event_data").collect()]
+    assert payloads and all(p["__bucket"] == "mine" for p in payloads)
+
+
+def test_cli_prints_summary_and_reruns_idempotently(spark, tmp_path, capsys):
+    """``python -m events_validator_spark`` prints the run summary as JSON;
+    a second call with the same ``--run-id`` adds no commit."""
+    import json
+
+    from events_validator_spark.__main__ import main
+    d = str(tmp_path / "cli")
+    argv = ["--docs", "300", "--out", d, "--buckets", "3", "--run-id", "cli"]
+    main(argv)
+    summary = json.loads(capsys.readouterr().out)
+    assert summary["run_id"] == "cli" and sorted(summary["completed"]) == \
+        [0, 1, 2]
+    assert sum(x["rows"] for x in summary["metrics"]) == 300
+    lh = Lakehouse(spark, d)
+    commits = [lh.snapshots(t) for t in ("violations", "verdicts")]
+    assert [len(c) for c in commits] == [3, 3]
+    main(argv)
+    assert json.loads(capsys.readouterr().out) == summary
+    assert [lh.snapshots(t) for t in ("violations", "verdicts")] == commits
 
 
 def test_lakehouse_snapshots(spark, tmp_path):
@@ -188,10 +311,10 @@ def test_streaming_validation(spark, tmp_path):
     assert out.where(~F.col("passed")).count() == expected_failed
 
 
-def test_run_validation_partition_pruned_resume(spark, tmp_path):
+def test_run_validation_partition_pruned_resume(spark, tmp_path,
+                                                monkeypatch):
     """bucket_col resume unit: each bucket's scan must partition-prune
     (PartitionFilters on date_utc), and resume must not duplicate rows."""
-    import json, os
     docs = interleaved_docs(spark, 1200).withColumn(
         "date_utc",
         F.to_date(F.concat(
@@ -205,7 +328,7 @@ def test_run_validation_partition_pruned_resume(spark, tmp_path):
     m = pipeline.run_validation(pdocs, DOC_RULES, out, bucket_col="date_utc",
                                 run_id="rp")
     assert len(m["completed"]) == 4
-    viol, verd = pipeline.read_outputs(spark, out)
+    viol, verd = _outputs(spark, out)
     assert verd.count() == 1200
     n_viol = viol.count()
 
@@ -221,19 +344,15 @@ def test_run_validation_partition_pruned_resume(spark, tmp_path):
 
     # crash after 2 buckets → resume reruns only the rest, zero duplicates
     out2 = str(tmp_path / "runp2")
-    pipeline.run_validation(pdocs, DOC_RULES, out2, bucket_col="date_utc",
-                            run_id="rp2")
-    man_path = os.path.join(out2, "manifest_rp2.json")
-    with open(man_path) as f:
-        man = json.load(f)
-    man["completed"] = man["completed"][:2]
-    man["metrics"] = man["metrics"][:2]
-    with open(man_path, "w") as f:
-        json.dump(man, f)
+    _crash_at_verdicts(monkeypatch, 2, "after_verdicts")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pipeline.run_validation(pdocs, DOC_RULES, out2,
+                                bucket_col="date_utc", run_id="rp2")
+    monkeypatch.undo()
     m2 = pipeline.run_validation(pdocs, DOC_RULES, out2,
                                  bucket_col="date_utc", run_id="rp2")
     assert len(m2["completed"]) == 4
-    viol2, verd2 = pipeline.read_outputs(spark, out2)
+    viol2, verd2 = _outputs(spark, out2)
     assert verd2.count() == 1200
     assert viol2.count() == n_viol
     # same verdict multiset as the uninterrupted run (synthetic data contains
@@ -253,13 +372,48 @@ def test_streaming_foreachbatch_pipeline(spark, tmp_path):
     res = run_stream_pipeline(spark, src, docs.schema, DOC_RULES, out,
                               checkpoint_dir=str(tmp_path / "sp_ck"))
     assert res["batches"] >= 1
-    verd = spark.read.parquet(out + "/verdicts")
-    viol = spark.read.parquet(out + "/violations")
+    viol, verd = _outputs(spark, out)
     assert verd.count() == 500
     from events_validator_spark.operators.validation import validate_typed
     expected = (validate_typed(interleaved_docs(spark, 500), DOC_RULES)
                 .select(F.explode("violations")).count())
     assert viol.count() == expected
+
+
+@pytest.mark.parametrize("crash", ["after_verdicts", "before_verdicts"])
+def test_stream_pipeline_replay_after_partial_commit(spark, tmp_path,
+                                                     monkeypatch, crash):
+    """A micro-batch that crashes right before (or right after) its
+    verdicts commit is replayed from the same checkpoint: the replay
+    appends nothing already committed, and the verdicts cover every doc
+    exactly once."""
+    from collections import Counter
+
+    from events_validator_spark.operators.validation import validate_typed
+    from events_validator_spark.streaming.stream import run_stream_pipeline
+    src = str(tmp_path / "sp_src")
+    docs = interleaved_docs(spark, 500)
+    docs.coalesce(1).write.parquet(src)           # one file: one batch
+    out, ck = str(tmp_path / "sp_out"), str(tmp_path / "sp_ck")
+
+    _crash_at_verdicts(monkeypatch, 1, crash)
+    with pytest.raises(Exception, match="injected crash"):
+        run_stream_pipeline(spark, src, docs.schema, DOC_RULES, out,
+                            checkpoint_dir=ck)
+    monkeypatch.undo()
+    lh = Lakehouse(spark, out)
+    assert len(lh.snapshots("violations")) == 1
+    res = run_stream_pipeline(spark, src, docs.schema, DOC_RULES, out,
+                              checkpoint_dir=ck)
+    assert res["batches"] == (crash == "before_verdicts")
+    viol, verd = _outputs(spark, out)
+    assert Counter(r[0] for r in verd.select("doc_id").collect()) == \
+        Counter(r[0] for r in docs.select("doc_id").collect())
+    expected = (validate_typed(docs, DOC_RULES)
+                .select(F.explode("violations")).count())
+    assert viol.count() == expected
+    assert [len(lh.snapshots(t)) for t in ("violations", "verdicts")] == \
+        [1, 1]
 
 
 BQ_DECLARED_COLS = {  # terraform_backend/src/bq_schema/bq_schema.json:1-62
@@ -272,12 +426,12 @@ def test_violations_schema_superset_of_declared_bq(spark, tmp_path):
     """Round-3 verdict item 7: the violations sink emits a SUPERSET of the
     reference's declared BQ schema — including the declared-but-never-written
     source_event/type (typed nulls) and value (filled on valid rows)."""
-    from events_validator_spark.plans.pipeline import run_validation, read_outputs
+    from events_validator_spark.plans.pipeline import run_validation
     docs = interleaved_docs(spark, 200)
     out = str(tmp_path / "bq_out")
     run_validation(docs, DOC_RULES, out, n_buckets=2,
                    log_payload_when_error=True, log_valid_fields=True)
-    viol, _ = read_outputs(spark, out)
+    viol, _ = _outputs(spark, out)
     assert BQ_DECLARED_COLS <= set(viol.columns)
     rows = viol.collect()
     errs = [r for r in rows if r["status"] == "error"]
@@ -313,9 +467,9 @@ def test_batch_stream_v15_flag_parity(spark, tmp_path):
     stable = ["event_name", "event_id", "field", "error_type", "expected",
               "actual", "source_event", "status", "event_data", "value",
               "type"]
-    b = sorted(map(tuple, spark.read.parquet(b_out + "/violations")
+    b = sorted(map(tuple, _outputs(spark, b_out)[0]
                    .select(*stable).collect()))
-    s = sorted(map(tuple, spark.read.parquet(s_out + "/violations")
+    s = sorted(map(tuple, _outputs(spark, s_out)[0]
                    .select(*stable).collect()))
     assert b == s and len(b) > 0
 
@@ -568,8 +722,51 @@ def test_lakehouse_interface_conformance(spark, tmp_path):
         window, _ = lh.read_since("t", s2, until=s4)
         assert window.columns == ["v", "w"] and window.count() == 4
         assert lh.read("t", as_of=s3).columns == ["v"]
+        # a Column-valued meta entry is an aggregate over the appended rows
+        # and the commit stores its value, also over an empty append
+        counted = {"n": F.count(F.lit(1)), "s": F.sum("v"), "tag": "x"}
+        m1 = lh.append("m", spark.range(12, 15).selectExpr("id as v"),
+                       meta=counted)
+        m2 = lh.append("m", spark.range(0).selectExpr("id as v"),
+                       meta=counted)
+        assert lh.snapshot_meta("m", m1) == {"n": 3, "s": 39, "tag": "x"}
+        assert lh.snapshot_meta("m", m2) == {"n": 0, "s": None, "tag": "x"}
+        assert lh.read("m").count() == 3
 
     conformance(Lakehouse(spark, str(tmp_path / "conf")))
+
+    # the directory Lakehouse: a counted append is still one Spark job
+    lh = Lakehouse(spark, str(tmp_path / "jobs"))
+    sc = spark.sparkContext
+    sc.setJobGroup("conformance-counted-append", "counted")
+    try:
+        snap = lh.append("t", spark.range(7), meta={"n": F.count(F.lit(1))})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert lh.snapshot_meta("t", snap) == {"n": 7}
+    assert len(sc.statusTracker().getJobIdsForGroup(
+        "conformance-counted-append")) == 1
+
+    # a data write whose log commit raises leaves no visible snapshot, and
+    # the next append and read ignore its orphan data directory
+    lh = Lakehouse(spark, str(tmp_path / "orphan"))
+    o1 = lh.append("t", spark.range(3))
+
+    def failing_commit(table, snaps):
+        raise OSError("injected failure while committing the log")
+
+    lh._commit = failing_commit
+    with pytest.raises(OSError, match="injected"):
+        lh.append("t", spark.range(3, 10))
+    del lh._commit
+    assert [s["snapshot_id"] for s in lh.snapshots("t")] == [o1]
+    assert len([d for d in os.listdir(tmp_path / "orphan" / "t")
+                if d.startswith("snap-")]) == 2
+    assert lh.read("t").count() == 3
+    o2 = lh.append("t", spark.range(10, 12))
+    assert sorted(r[0] for r in lh.read("t").collect()) == [0, 1, 2, 10, 11]
+    df, cur = lh.read_since("t", o1)
+    assert df.count() == 2 and cur == o2
 
     # the directory Lakehouse reads in the schema its log recorded at
     # commit time: the schema parquet inference gives (nested docs, and the

@@ -178,13 +178,14 @@ def test_schema_health_reference_parity(spark):
 
 def test_pipeline_flags(spark, tmp_path):
     from events_validator_spark.plans import pipeline
+    from events_validator_spark.sources.catalog import Lakehouse
     from events_validator_spark.sources.synthetic import DOC_RULES, interleaved_docs
     docs = interleaved_docs(spark, 300)
     out = str(tmp_path / "flags")
     pipeline.run_validation(docs, DOC_RULES, out, n_buckets=2,
                             log_payload_when_error=True,
                             log_valid_fields=True)
-    viol, _ = pipeline.read_outputs(spark, out)
+    viol = Lakehouse(spark, out).read("violations")
     err = viol.where(F.col("status") == "error")
     ok = viol.where(F.col("status") == "valid")
     assert err.count() > 0 and ok.count() > 0

@@ -7,9 +7,12 @@ schema drift to DATA drift per the north rule:
 * numeric columns → t-digest quantile profile (GROUPED_AGG pandas UDAF — the
   only executor-side Python, Arrow-vectorized) or built-in histogram sketches;
 * categorical columns → bucketed counts;
-* comparison → PSI (Population Stability Index) on histograms, KS statistic on
-  CDFs — both computed as DataFrame aggregations over (column, bucket) rows, or
-  in one ``applyInPandas`` for the per-column sketch-compare path.
+* comparison → PSI (Population Stability Index) on histograms: one
+  ``groupBy(bucket)`` of per-cohort counts, then one global aggregate that
+  collects the per-bucket rows into one array and sums over it as SQL text
+  (:func:`_psi`, 3 Spark jobs with known bounds); KS statistic on CDFs as a
+  distributed prefix sum, or in one ``applyInPandas`` for the per-column
+  sketch-compare path.
 
 Thresholded results are emitted in the engine's violation-row format
 (error_type='drift') so they land in the same violations table.
@@ -131,7 +134,7 @@ def quantile_profile(df: DataFrame, column: str, group_col: str,
 
 
 # ---------------------------------------------------------------------------
-# PSI — histogram compare, pure DataFrame algebra
+# PSI — histogram compare: per-bucket counts, then one array sum
 # ---------------------------------------------------------------------------
 
 def psi_from_histograms(cur: DataFrame, base: DataFrame,
@@ -149,20 +152,14 @@ def psi_from_histograms(cur: DataFrame, base: DataFrame,
 def psi_two_cohorts(df: DataFrame, column: str, cohort: F.Column,
                     nbins: int = 20, lo: float | None = None,
                     hi: float | None = None, eps: float = 1e-6) -> DataFrame:
-    """PSI of ``column`` between cohort=True (current) and False (baseline),
-    in ONE scan: groupBy (cohort, bucket) then reshape. Without ``lo``/``hi``
-    one min/max probe sets the bounds; an all-NULL or empty column has no
-    buckets and its PSI is NULL (as :func:`categorical_psi` on no rows)."""
-    hist = _bucket_counts(df.withColumn("__cohort", cohort), column, nbins,
-                          lo, hi, F.col("__cohort").alias("grp"))
-    wide = (hist.groupBy("bucket")
-            .agg(F.sum(F.when(F.col("grp"), F.col("cnt")).otherwise(0)).alias("c_cnt"),
-                 F.sum(F.when(~F.col("grp"), F.col("cnt")).otherwise(0)).alias("b_cnt")))
-    # the `tot` and join consumers share the histogram's shuffle via
-    # exchange reuse (verified at runtime round 6: a lazy localCheckpoint
-    # here measured ZERO net win at 6M rows, and would make repeated
-    # executions of one plan object reuse the materialized 12-row table —
-    # a steady-state timing distortion this bench must not have)
+    """PSI of ``column`` between cohort=True (current) and False (baseline)
+    → one row {psi}, in ONE scan: ``groupBy(bucket)`` with a
+    ``count_if`` per cohort (a NULL cohort counts in neither), then
+    :func:`_psi`. With ``lo``/``hi`` that is 3 Spark jobs; without them one
+    min/max probe sets the bounds (5 jobs). An all-NULL or empty column has
+    no buckets and its PSI is NULL (as :func:`categorical_psi` on no rows)."""
+    wide = _bucket_counts(df, column, nbins, lo, hi, aggs=(
+        F.count_if(cohort).alias("c_cnt"), F.count_if(~cohort).alias("b_cnt")))
     return _psi(wide, eps)
 
 
@@ -189,14 +186,28 @@ def categorical_psi(df: DataFrame, column: str, cohort: F.Column,
 
 
 def _psi(wide: DataFrame, eps: float) -> DataFrame:
-    """ε-smoothed PSI over per-bucket (c_cnt, b_cnt) rows → one row {psi}:
-    Σ (p − q) · ln(p / q), p and q the current and baseline shares floored
-    at ε. NULL when there are no rows."""
-    tot = wide.agg(F.sum("c_cnt").alias("ct"), F.sum("b_cnt").alias("bt"))
-    j = wide.crossJoin(F.broadcast(tot))
-    p = F.greatest(F.col("c_cnt") / F.greatest(F.col("ct"), F.lit(1)), F.lit(eps))
-    q = F.greatest(F.col("b_cnt") / F.greatest(F.col("bt"), F.lit(1)), F.lit(eps))
-    return j.agg(F.round(F.sum((p - q) * F.log(p / q)), 8).alias("psi"))
+    """ε-smoothed PSI over (c_cnt, b_cnt) rows → one row {psi}. ``wide``
+    holds one row per bucket or category; one global aggregate collects
+    them into one sorted array (the sum is then a function of the counts,
+    not of the shuffle's row order) beside the two totals, and
+    :func:`_psi_sum_sql` sums over that array in the same projection: 2
+    Spark jobs over ``wide``."""
+    h = wide.agg(F.array_sort(F.collect_list(F.struct("c_cnt", "b_cnt")))
+                 .alias("h"),
+                 F.sum("c_cnt").alias("ct"), F.sum("b_cnt").alias("bt"))
+    return h.select(F.expr(_psi_sum_sql("h", "ct", "bt", eps)).alias("psi"))
+
+
+def _psi_sum_sql(arr: str, ct: str, bt: str, eps: float) -> str:
+    """The one PSI sum, as SQL text: Σ (p − q) · ln(p / q) over ``arr``, an
+    array of struct(c_cnt, b_cnt) with one entry per bucket or category,
+    p and q the current and baseline shares of the totals ``ct``/``bt``
+    floored at ε, rounded to 8 places. NULL when the array is empty."""
+    e = f"CAST('{float(eps)!r}' AS DOUBLE)"
+    p = f"greatest(x.c_cnt / greatest({ct}, 1), {e})"
+    q = f"greatest(x.b_cnt / greatest({bt}, 1), {e})"
+    return (f"CASE WHEN size({arr}) > 0 THEN round(aggregate({arr}, 0D, "
+            f"(acc, x) -> acc + ({p} - {q}) * ln({p} / {q})), 8) END")
 
 
 # ---------------------------------------------------------------------------

@@ -4,6 +4,8 @@ Expressed as LEFT ANTI joins (SURVEY.md §2.3). The dimension side (media
 catalog, customer dim) is broadcast when it fits — at 10^12 fact rows the fact
 side must never shuffle for this check. For a dimension too big to broadcast,
 the anti-join falls back to sort-merge where AQE's skew splitting applies.
+The interleaved-docs span check explodes only each span's ``media_ref``, so
+the docs scan reads that one nested field.
 """
 
 from __future__ import annotations
@@ -37,10 +39,16 @@ def referential_violations_spans(docs: DataFrame, catalog: DataFrame,
 
     Output is violation-row shaped (error_type='referential'), one row per
     dangling span, with the exact field path ``spans[i].media_ref``.
+
+    The explode runs over ``spans.media_ref`` (the array of each span's
+    ref, NULL for a NULL span), not over the span structs, so nested schema
+    pruning reads only that field: the scan's ReadSchema is
+    ``struct<doc_id,spans:array<struct<media_ref>>>``. Positions are the
+    span indices either way.
     """
     spans = (docs
-             .select("doc_id", F.posexplode("spans").alias("i", "span"))
-             .select("doc_id", "i", F.col("span.media_ref").alias("media_ref"))
+             .select("doc_id",
+                     F.posexplode("spans.media_ref").alias("i", "media_ref"))
              .where(F.col("media_ref").isNotNull()))
     dangling = dangling_refs(spans, "media_ref", catalog, "media_ref",
                              broadcast_dim=broadcast_dim)

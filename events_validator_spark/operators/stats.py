@@ -196,12 +196,14 @@ def group_histogram(df: DataFrame, column: str, group_col: str,
 
 def _bucket_counts(df: DataFrame, column: str, nbins: int,
                    lo: float | None, hi: float | None,
-                   *keys: Column) -> DataFrame:
+                   *keys: Column, aggs: tuple[Column, ...] = ()) -> DataFrame:
     """(keys…, bucket, cnt): counts of non-NULL ``column`` values per
     equi-width bucket over [lo, hi], ids clamped to [0, nbins-1] — the one
     bucketer behind the histograms, ``drift.psi_two_cohorts`` and
-    ``streaming.streaming_psi``. A missing bound costs one min/max probe;
-    an all-NULL or empty column probes as [0, 1] (its counts are empty)."""
+    ``streaming.streaming_psi``. ``aggs`` replace the ``cnt`` column
+    (``psi_two_cohorts`` counts each cohort with a ``count_if``). A missing
+    bound costs one min/max probe; an all-NULL or empty column probes as
+    [0, 1] (its counts are empty)."""
     col = F.col(column).cast("double")
     if lo is None or hi is None:
         b = df.agg(F.min(col), F.max(col)).collect()[0]
@@ -212,7 +214,7 @@ def _bucket_counts(df: DataFrame, column: str, nbins: int,
                                 F.lit(0)), F.lit(nbins - 1)).cast("int")
     return (df.where(col.isNotNull())
             .groupBy(*keys, bucket.alias("bucket"))
-            .agg(F.count(F.lit(1)).alias("cnt")))
+            .agg(*(aggs or [F.count(F.lit(1)).alias("cnt")])))
 
 
 def exact_quantiles(df: DataFrame, column: str,

@@ -362,7 +362,7 @@ def _per_key(fv: _View, rule: dict, path: str, ids: Iterator[int]) -> str:
         and not fv.string_is_ref
     cv = copy.copy(fv)
     if needs_s:
-        cv._s = f"_as{next(ids)}"
+        cv._s, cv.string_is_ref = f"_as{next(ids)}", True
     checks: list[str] = []
     if "value" in rule:
         checks.append(_check_value(rule, cv, path))
@@ -385,10 +385,11 @@ def _per_key(fv: _View, rule: dict, path: str, ids: Iterator[int]) -> str:
     return f"CASE WHEN (NOT {fv.present}) THEN {missing} ELSE {body} END"
 
 
-def _trimmed_empty(fv: _View) -> str:
-    """value is a string AND trims to '' — via the cheap raw-string accessor."""
-    return (f"(({fv.typeof} = 'string') AND "
-            f"(trim(coalesce({fv.str_value}, '')) = ''))")
+def _trimmed_empty(fv: _View, non_null: bool = False) -> str:
+    """value is a string AND trims to '' — via the cheap raw-string accessor
+    (``non_null``: the value is known present, so no coalesce)."""
+    s = fv.str_value if non_null else f"coalesce({fv.str_value}, '')"
+    return f"(({fv.typeof} = 'string') AND (trim({s}) = ''))"
 
 
 def _check_type(rule: dict, fv: _View, path: str, optional: bool,
@@ -535,22 +536,36 @@ def _regex_empty(fv: _View) -> str:
 def _check_regex(rule: dict, fv: _View, path: str, ids: Iterator[int]) -> str:
     pattern = rule["regex"]
     java_pat = _regex_java_pattern(rule)
-    # the toString is bound: it is both the match input and the violation's
-    # actual, and branch subexpressions are not deduplicated in interpreted
-    # evaluation
-    s = f"_rx{next(ids)}"
+    # a computed toString is bound: it is both the match input and the
+    # violation's actual, and branch subexpressions are not deduplicated in
+    # interpreted evaluation; a plain reference is read as is
+    s = fv.as_string if fv.string_is_ref else f"_rx{next(ids)}"
     fail = _gate(f"(NOT (coalesce({s}, 'undefined') RLIKE {lit(java_pat)}))",
                  one(path, "regex", lit(pattern), s))
     body = (f"CASE WHEN {_regex_empty(fv)} "
             f"THEN {one(path, 'regex', lit(pattern), lit('empty_value'))} "
             f"ELSE {fail} END")
+    if fv.string_is_ref:
+        return body
     return f"transform(array({fv.as_string}), {s} -> {body})[0]"
 
 
 # ---------------------------------------------------------------------------
-# Clean-element gate: boolean complements of the checks above. True ⇒ the
-# checks emit NO violation (it may be conservatively false — that only costs
-# the full build — but never true for a violating field).
+# Clean-element gate (typed path only): boolean complements of the checks
+# above. True ⇒ the checks emit NO violation (it may be conservatively false
+# — that only costs the full build — but never true for a violating field).
+# It runs interpreted inside `forall`, once per element, so it emits only the
+# conjuncts a typed value needs. Its views are typed or absent: `typeof` and
+# `actual` are literals, `is_null` is false and `present` is never NULL.
+#   R1  inside a required key's body, or an optional key's body past its
+#       skip, the value is non-NULL: no coalesce(x, …) wrappers there;
+#   R2  an optional key's skip already covers NULL and trimmed-empty: its
+#       body drops the regex and type empty guards;
+#   R3  a typed-string enum whose members are all non-NULL and non-blank
+#       implies presence and non-blankness: a required key emits only
+#       coalesce(x IN (…), false) for them;
+#   R4  an optional key is `NOT present OR body_ok OR skip`, so the common
+#       case short-circuits first.
 # ---------------------------------------------------------------------------
 
 def _elements_ok(rules: dict, scope: Scope, ids: Iterator[int]) -> str:
@@ -565,53 +580,63 @@ def _all_elements_ok(elems: tuple[str, Callable[[str], Scope]], rules: dict,
     return f"forall({arr}, {g} -> {_elements_ok(rules, scope_of(g), ids)})"
 
 
+def _enum_implies_present(rule: dict, fv: _View) -> bool:
+    """R3: the enum check alone fails an absent or blank typed string.
+    Python's strip() empties every string Spark's trim() empties."""
+    return ("enum" in rule and isinstance(fv, _TypedView)
+            and isinstance(fv.dtype, T.StringType)
+            and all(a is not None and a.strip()
+                    for a in map(py_js_to_string, rule["enum"])))
+
+
 def _per_key_ok(fv: _View, rule: dict, ids: Iterator[int]) -> str:
     optional = _is_optional(rule)
+    implied = not optional and _enum_implies_present(rule, fv)
+    no_blank_guard = optional or implied                     # R2 / R3
     oks: list[str] = []
+    if "enum" in rule:
+        ok = _enum_ok(rule, fv)[0]
+        oks.append(_truthy(ok) if implied else ok)           # R3 / R1
     if "value" in rule:
         oks.append(_never(_value_neq(rule, fv)))
     if "type" in rule:
-        oks.append(_type_ok(rule, fv, optional, ids))
+        oks.append(_type_ok(rule, fv, no_blank_guard, ids))
     if "length" in rule:
         oks.append(_never(_length_neq(rule, fv)[0]))
     if "regex" in rule:
-        match = (f"(coalesce({fv.as_string}, 'undefined') RLIKE "
-                 f"{lit(_regex_java_pattern(rule))})")
-        oks.append(f"({_never(_regex_empty(fv))} AND {_truthy(match)})")
-    if "enum" in rule:
-        oks.append(_truthy(_enum_ok(rule, fv)[0]))
+        match = f"({fv.as_string} RLIKE {lit(_regex_java_pattern(rule))})"
+        oks.append(match if no_blank_guard else
+                   f"((NOT {_trimmed_empty(fv, True)}) AND {match})")
     body_ok = _all(oks)
-    if optional:
-        skip = f"({fv.is_null} OR {_trimmed_empty(fv)})"
-        return f"({_never(f'({fv.present} AND (NOT {skip}))')} OR {body_ok})"
-    return f"({_never(f'(NOT {fv.present})')} AND {body_ok})"
+    if optional:                                             # R4
+        return (f"((NOT {fv.present}) OR {body_ok} OR "
+                f"{_trimmed_empty(fv, True)})")
+    return body_ok if implied else f"({fv.present} AND {body_ok})"
 
 
-def _type_ok(rule: dict, fv: _View, optional: bool,
+def _type_ok(rule: dict, fv: _View, no_blank_guard: bool,
              ids: Iterator[int]) -> str:
+    """The type check passes on a present typed value (R1: no NULL case)."""
     expected = rule["type"]
     if expected == "string":
-        wrong = f"({fv.typeof} != 'string')"
-        if optional:
-            return f"(NOT ({_truthy(f'(NOT {fv.is_null})')} AND {_truthy(wrong)}))"
-        return f"({_never(wrong)} AND {_never(_trimmed_empty(fv))})"
+        ok = f"({fv.typeof} = 'string')"
+        if no_blank_guard:
+            return ok
+        return f"({ok} AND (NOT {_trimmed_empty(fv, True)}))"
     if expected == "array":
-        is_array = _never(f"({fv.actual} != 'array')")
+        is_array = f"({fv.actual} = 'array')"
         nested = rule.get("nestedSchema")
         elems = fv.elements() if nested else None
         if elems is None:
             return is_array
-        all_ok = _all_elements_ok(elems, nested, ids)
-        # null array → flatten(null) → coalesce(empty): no rows
-        return f"({is_array} AND (({elems[0]} IS NULL) OR {_truthy(all_ok)}))"
+        return f"({is_array} AND {_truthy(_all_elements_ok(elems, nested, ids))})"
     if expected == "object":
-        not_bad = _never(f"({fv.is_null} OR ({fv.actual} != 'object'))")
+        is_object = f"({fv.actual} = 'object')"
         nested = rule.get("nestedSchema")
         if not nested:
-            return not_bad
-        sub_ok = _elements_ok(nested, fv.fields(), ids)
-        return f"CASE WHEN {_object_ok(fv)} THEN {sub_ok} ELSE {not_bad} END"
-    return _never(f"({fv.actual} != {lit(py_js_to_string(expected))})")
+            return is_object
+        return f"({is_object} AND {_elements_ok(nested, fv.fields(), ids)})"
+    return f"({fv.actual} = {lit(py_js_to_string(expected))})"
 
 
 # ---------------------------------------------------------------------------

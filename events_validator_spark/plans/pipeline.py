@@ -48,7 +48,14 @@ def _bucket(col, n):  # deterministic partition bucketing of doc ids
     return F.pmod(F.xxhash64(col), F.lit(n))
 
 
-def verdict_rows(part: DataFrame, event_name: str, partition_id: str,
+def _label(value) -> str | None:
+    """A bucket's label: ``str(value)``, None for a NULL partition. ``str``
+    is injective on the values of one typed column, and None is no string,
+    so a string column holding both NULL and ``"None"`` keeps two buckets."""
+    return None if value is None else str(value)
+
+
+def verdict_rows(part: DataFrame, event_name: str, partition_id: str | None,
                  snapshot_id: str) -> DataFrame:
     """Per-document verdict rows (VERDICT_COLS shape) from a validated df."""
     return part.select(
@@ -56,13 +63,14 @@ def verdict_rows(part: DataFrame, event_name: str, partition_id: str,
         F.lit(event_name).alias("event_name"),
         (F.size("violations") == 0).alias("passed"),
         F.size("violations").alias("n_violations"),
-        F.lit(partition_id).alias("partition_id"),
+        F.lit(partition_id).cast("string").alias("partition_id"),
         F.lit(snapshot_id).alias("snapshot_id"),
     )
 
 
 def violation_rows(part: DataFrame, source_columns: list[str], rules: dict,
-                   event_name: str, partition_id: str, snapshot_id: str,
+                   event_name: str, partition_id: str | None,
+                   snapshot_id: str,
                    log_payload_when_error: bool = False,
                    log_valid_fields: bool = False) -> DataFrame:
     """Violation log rows from a validated df — the SINGLE builder both the
@@ -94,7 +102,7 @@ def violation_rows(part: DataFrame, source_columns: list[str], rules: dict,
             "event_data",
             null_s.alias("value"),
             null_s.alias("type"),
-            F.lit(partition_id).alias("partition_id"),
+            F.lit(partition_id).cast("string").alias("partition_id"),
             F.lit(snapshot_id).alias("snapshot_id"),
         ))
     if log_valid_fields:
@@ -136,7 +144,7 @@ def violation_rows(part: DataFrame, source_columns: list[str], rules: dict,
                 null_s.alias("event_data"),
                 value_expr.alias("value"),
                 null_s.alias("type"),
-                F.lit(partition_id).alias("partition_id"),
+                F.lit(partition_id).cast("string").alias("partition_id"),
                 F.lit(snapshot_id).alias("snapshot_id"),
             ))
         out = out.unionByName(valid_rows)
@@ -148,13 +156,14 @@ def _last_stamp(lakehouse, table: str, meta_key: str,
                 ) -> tuple[str | None, object]:
     """``(snapshot_id, stamp)`` of the newest commit of ``table`` whose meta
     carries ``meta_key`` (and every item of ``scope``, e.g. a run id), or
-    ``(None, None)``. Unstamped commits (a manual append) are skipped. The
+    ``(None, None)``. Unstamped commits (a manual append) are skipped; a
+    stamp may be None (``run_validation``'s NULL bucket). The
     one reader of the snapshot log's stamps (Iceberg: the ``.snapshots``
     metadata table's summary properties), shared by every pipeline here and
     by the streaming dedup loop (``stream_batch``)."""
     for snap in reversed(lakehouse.snapshots(table)):
         meta = snap.get("meta") or {}
-        if meta.get(meta_key) is not None and all(
+        if meta_key in meta and all(
                 meta.get(k) == v for k, v in (scope or {}).items()):
             return snap["snapshot_id"], meta[meta_key]
     return None, None
@@ -176,7 +185,7 @@ def _commit_outputs(lakehouse, viol_table: str, verd_table: str,
     start = time.time()
     *scope, (key, unit) = stamp.items()
     v_snap, last = _last_stamp(lakehouse, viol_table, key, dict(scope))
-    if last != unit:
+    if v_snap is None or last != unit:
         v_snap = lakehouse.append(viol_table, violations, meta=stamp)
     snap = lakehouse.append(verd_table, verdicts, meta={
         **stamp, "start": start, "rows": F.count(F.lit(1)),
@@ -201,7 +210,10 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
 
     ``bucket_col``: name of the table's PARTITION column (e.g. date_utc) —
     buckets are its distinct values (NULL included) and each bucket's scan
-    partition-prunes to its own files (the Iceberg-shaped resume unit).
+    partition-prunes to its own files (the Iceberg-shaped resume unit). A
+    bucket's label (its stamp, ``completed`` entry and ``partition_id``) is
+    ``str(value)``, and None for the NULL partition, so no value's label
+    can equal the NULL bucket's (a string column may hold ``"None"``).
     When None, buckets fall back to ``pmod(xxhash64(doc_id), n_buckets)``
     (full rescan per bucket — unpartitioned inputs only).
 
@@ -234,7 +246,7 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
         # the scan's PartitionFilters (a cast around the column would defeat
         # pruning), null-safe so a NULL partition is a bucket too.
         key = F.col(bucket_col)
-        labels = {str(r[0]): r[0]
+        labels = {_label(r[0]): r[0]
                   for r in docs.select(bucket_col).distinct().collect()}
     validated = validate_typed(docs, rules)
 
@@ -244,24 +256,25 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
                 if (s.get("meta") or {}).get("run_id") == run_id]
 
     done = {m["bucket"] for m in this_run()}
-    for b in sorted(labels):
+    for b in sorted(labels, key=lambda b: (b is not None, b)):
         if b in done:
             continue
         part = validated.where(key.eqNullSafe(F.lit(labels[b]))).cache()
         _commit_outputs(
             lakehouse, "violations", "verdicts",
             {"run_id": run_id, "bucket": b},
-            violation_rows(part, docs.columns, rules, event_name, str(b),
+            violation_rows(part, docs.columns, rules, event_name, _label(b),
                            snapshot_id,
                            log_payload_when_error=log_payload_when_error,
                            log_valid_fields=log_valid_fields),
-            verdict_rows(part, event_name, str(b), snapshot_id))
+            verdict_rows(part, event_name, _label(b), snapshot_id))
         part.unpersist()
     commits = this_run()
     return {"run_id": run_id, "snapshot_id": snapshot_id,
             "n_buckets": len(labels), "bucket_col": bucket_col,
             "completed": [m["bucket"] for m in commits],
-            "metrics": [{"partition_id": str(m["bucket"]), "rows": m["rows"],
+            "metrics": [{"partition_id": _label(m["bucket"]),
+                         "rows": m["rows"],
                          "violations": m["violations"],
                          "passed": m["passed"],
                          "wall_ms": int((m["ts"] - m["start"]) * 1000),

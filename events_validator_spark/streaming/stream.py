@@ -168,10 +168,11 @@ def streaming_psi(stream_df: DataFrame, ts_col: str, column: str,
       2. a CHAINED windowed aggregation over ``window_time`` (multiple
          stateful operators, Spark ≥3.4) folds each sealed window's ≤nbins
          bucket rows into (n, collect_list(bucket, cnt));
-      3. a stateless projection computes PSI as Column algebra over the
-         collected (tiny) array against the baseline distribution, which is
-         embedded as driver-side literals (the baseline is nbins numbers —
-         broadcasting a table for it would be ceremony).
+      3. a stateless projection computes PSI with the batch PSI sum
+         (``drift._psi_sum_sql``) over one array of (window count, baseline
+         count) for all ``nbins`` buckets; the baseline is embedded as
+         driver-side literals (it is nbins numbers — broadcasting a table
+         for it would be ceremony).
 
     The bucketer IS the batch one (``stats._bucket_counts``, behind
     stats.histogram and drift.psi_two_cohorts), values clamp to
@@ -180,11 +181,11 @@ def streaming_psi(stream_df: DataFrame, ts_col: str, column: str,
     """
     from pyspark.sql.functions import window_time
 
+    from events_validator_spark.operators.drift import _psi_sum_sql
     from events_validator_spark.operators.stats import _bucket_counts
 
     base_counts = {int(r["bucket"]): int(r["cnt"]) for r in baseline.collect()}
-    b_tot = sum(base_counts.values()) or 1
-    q = [max(base_counts.get(b, 0) / b_tot, eps) for b in range(nbins)]
+    base = [base_counts.get(b, 0) for b in range(nbins)]
 
     per_bucket = _bucket_counts(
         stream_df.withWatermark(ts_col, watermark), column, nbins, lo, hi,
@@ -193,19 +194,13 @@ def streaming_psi(stream_df: DataFrame, ts_col: str, column: str,
                .groupBy(F.window(window_time("win"), window).alias("win"))
                .agg(F.sum("cnt").alias("n"),
                     F.collect_list(F.struct("bucket", "cnt")).alias("cur")))
-
-    def p_of(b: int):
-        cnt = F.aggregate(
-            F.filter(F.col("cur"), lambda s: s["bucket"] == b),
-            F.lit(0.0), lambda acc, s: acc + s["cnt"])
-        return F.greatest(cnt / F.col("n"), F.lit(eps))
-
-    psi = None
-    for b in range(nbins):
-        p = p_of(b)
-        term = (p - F.lit(q[b])) * F.log(p / F.lit(q[b]))
-        psi = term if psi is None else psi + term
-    return per_win.select("win", "n", F.round(psi, 8).alias("psi"))
+    counts = (f"transform(sequence(0, {nbins - 1}), b -> named_struct("
+              f"'c_cnt', aggregate(filter(cur, s -> s.bucket = b), 0L, "
+              f"(a, s) -> a + s.cnt), "
+              f"'b_cnt', element_at(array({', '.join(f'{c}L' for c in base)}),"
+              f" b + 1)))")
+    psi = F.expr(_psi_sum_sql(counts, "n", f"{sum(base)}L", eps))
+    return per_win.select("win", "n", psi.alias("psi"))
 
 
 def run_stream_dedup(spark: SparkSession, source_dir: str, schema,

@@ -37,16 +37,30 @@ def test_duplicate_keys_salted(spark):
 
 
 def test_dangling_refs_and_span_violations(spark):
-    docs = interleaved_docs(spark, 3000)
+    """The span check equals a pure-Python posexplode oracle, also on a
+    NULL ``spans``, a NULL span and a NULL ``media_ref``."""
+    gen = interleaved_docs(spark, 3000)
+    extra = spark.createDataFrame(
+        [("n1", None),
+         ("n2", [None, ("media", None, "media_ffffffff", 1)]),
+         ("n3", [("text", "t", None, 0), None,
+                 ("media", None, "media_fffffffe", 2)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>")
+    docs = gen.unionByName(extra)
     cat = media_catalog(spark, 3000 // 4)
-    viol = referential.referential_violations_spans(docs, cat)
-    rows = viol.collect()
-    assert len(rows) > 0  # the generator injects dangling refs
-    assert all(r["error_type"] == "referential" for r in rows)
-    assert all(r["field"].startswith("spans[") for r in rows)
-    # every reported media_ref is truly absent from the catalog
+    rows = referential.referential_violations_spans(docs, cat).collect()
     cat_refs = {r["media_ref"] for r in cat.collect()}
-    assert all(r["actual"] not in cat_refs for r in rows)
+    want = sorted(
+        (d["doc_id"], f"spans[{i}].media_ref", "referential",
+         "media_ref present in catalog", span["media_ref"])
+        for d in docs.collect() for i, span in enumerate(d["spans"] or [])
+        if span is not None and span["media_ref"] is not None
+        and span["media_ref"] not in cat_refs)
+    assert sorted(tuple(r) for r in rows) == want
+    assert len(want) > 0  # the generator injects dangling refs
+    assert {(w[0], w[1]) for w in want if w[0] in ("n1", "n2", "n3")} == {
+        ("n2", "spans[1].media_ref"), ("n3", "spans[2].media_ref")}
 
 
 def test_text_features(spark):
@@ -501,19 +515,34 @@ def test_lsh_sql_signatures_match_duckdb_oracle(spark, query):
     and incremental) and n-gram decontamination equal DuckDB's brute-force
     oracles at sf0.01 — an independent engine pins the SQL-text signature
     builders."""
+    _matches_duckdb_oracle(spark, query, "documents")
+
+
+def _matches_duckdb_oracle(spark, query: str, table: str):
+    """``queries()[query]`` equals its DuckDB ``oracle_sql()`` over one
+    sf0.01 table, as an order-insensitive row multiset."""
     import duckdb
     import __spark_entry__ as e
     from scripts.check_oracle import row_multiset
     sf_dir = "/root/testdata/sf0.01"
     con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
-            f"'{sf_dir}/documents.parquet'")
+    con.sql(f"CREATE VIEW {table} AS SELECT * FROM "
+            f"'{sf_dir}/{table}.parquet'")
     sdf = e.queries()[query](spark, sf_dir)
     ddf = con.sql(e.oracle_sql()[query])
     dcols = [d[0] for d in ddf.description]
     assert sorted(sdf.columns) == sorted(dcols)
     sp = row_multiset(sdf.columns, sdf.collect())
     assert sp == row_multiset(dcols, ddf.fetchall()) and len(sp) > 0
+
+
+@pytest.mark.parametrize("query", ["drift1_psi", "drift4_categorical_psi",
+                                   "s3_histogram_value"])
+def test_psi_and_histogram_match_duckdb_oracle(spark, query):
+    """Numeric and categorical PSI and the histogram bucketer equal DuckDB's
+    oracles at sf0.01 — an independent engine pins the PSI sum and the
+    bucket clamp."""
+    _matches_duckdb_oracle(spark, query, "events")
 
 
 def test_dedup_text_col_nested_and_unusual_names(spark):

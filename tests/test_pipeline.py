@@ -158,7 +158,7 @@ def test_run_validation_null_partition_is_a_bucket(spark, tmp_path):
     m = pipeline.run_validation(pdocs, DOC_RULES, out, bucket_col="date_utc",
                                 run_id="rn")
     rows = {x["partition_id"]: x["rows"] for x in m["metrics"]}
-    assert rows["None"] == n_null and sum(rows.values()) == 400
+    assert rows[None] == n_null and sum(rows.values()) == 400
     _, verd = _outputs(spark, out)
     assert verd.count() == 400
 
@@ -170,6 +170,42 @@ def test_run_validation_null_partition_is_a_bucket(spark, tmp_path):
         plan = one._jdf.queryExecution().executedPlan().toString()
         pf = plan.split("PartitionFilters")[1].split("]")[0]
         assert "date_utc" in pf and shown in pf, pf
+
+
+@pytest.mark.parametrize("crash", [None, "before_verdicts"])
+def test_run_validation_null_and_none_string_buckets(spark, tmp_path,
+                                                    monkeypatch, crash):
+    """A string ``bucket_col`` holding both NULL and ``"None"`` has two
+    buckets (the NULL bucket's label is None, not ``"None"``), both are
+    validated, and a crash between the NULL bucket's two commits is redone
+    exactly once: its None stamp counts as a stamp."""
+    h = F.xxhash64("doc_id")
+    docs = interleaved_docs(spark, 100).select(   # every 3rd id breaks regex
+        F.when(F.pmod(h, F.lit(3)) == 0, F.concat(F.col("doc_id"), F.lit("!")))
+        .otherwise(F.col("doc_id")).alias("doc_id"), "spans",
+        F.when(F.pmod(h, F.lit(2)) == 0, F.lit("None")).alias("part"))
+    n_null = docs.where(F.col("part").isNull()).count()
+    assert 0 < n_null < 100
+    out = str(tmp_path / "run")
+
+    def run():
+        return pipeline.run_validation(docs, DOC_RULES, out, run_id="nn",
+                                       bucket_col="part")
+
+    if crash:
+        _crash_at_verdicts(monkeypatch, 1, crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run()
+        monkeypatch.undo()
+    m = run()
+    assert len(m["completed"]) == 2 and set(m["completed"]) == {None, "None"}
+    rows = {x["partition_id"]: x["rows"] for x in m["metrics"]}
+    assert rows == {None: n_null, "None": 100 - n_null}
+    viol, verd = _outputs(spark, out)
+    assert verd.count() == 100
+    assert viol.count() == verd.agg(F.sum("n_violations")).first()[0] > 0
+    assert {r[0]: r[1] for r in verd.groupBy("partition_id").count()
+            .collect()} == rows
 
 
 def test_run_validation_input_column_named_like_a_helper(spark, tmp_path):

@@ -13,8 +13,10 @@ properties that make the engine survive a 100 TB input:
   independent of the number of checks (validate_json and validate_multi);
 * ``dedup.bucket_pairs``' self-join must read its ``capped_buckets``
   shuffle once (exchange reuse), not run the signature pass twice;
-* an incremental tick, a ``Lakehouse`` read and a ``run_validation``
-  bucket run pinned numbers of Spark jobs.
+* an incremental tick, a ``Lakehouse`` read, a ``run_validation`` bucket
+  and the PSI operators run pinned numbers of Spark jobs;
+* the referential span scan reads only ``spans.media_ref``, and the typed
+  clean-element gate is no larger than its minimal form.
 """
 
 import os
@@ -228,3 +230,92 @@ def test_run_validation_spark_jobs_per_bucket(spark, tmp_path, bucket_col):
     assert sum(x["rows"] for x in m["metrics"]) == 400
     assert len(m["completed"]) == 3
     assert jobs == 2 * 3 + (0 if bucket_col is None else 2)
+
+
+def test_psi_spark_jobs(spark):
+    """``psi_two_cohorts`` runs 3 Spark jobs with bounds (its per-bucket
+    count_if aggregate, then ``_psi``'s one global aggregate and its
+    result) and 5 without (plus the min/max probe); ``categorical_psi``
+    runs 3."""
+    from events_validator_spark.operators import drift
+    df = spark.range(2000).select(
+        (F.col("id") % 12).alias("x"), (F.col("id") % 2 == 0).alias("c"),
+        (F.col("id") % 5).cast("string").alias("k"))
+    for run, want in (
+            (lambda: drift.psi_two_cohorts(df, "x", F.col("c"), nbins=12,
+                                           lo=0.0, hi=12.0), 3),
+            (lambda: drift.psi_two_cohorts(df, "x", F.col("c"), nbins=12), 5),
+            (lambda: drift.categorical_psi(df, "k", F.col("c")), 3)):
+        rows, jobs = _jobs(spark, lambda: run().collect())
+        assert rows[0]["psi"] is not None and jobs == want
+
+
+def test_referential_scan_reads_only_media_ref(spark, tmp_path):
+    """The span check explodes ``spans.media_ref``, so nested schema pruning
+    leaves the docs scan only that field of each span."""
+    from events_validator_spark.operators import referential
+    from events_validator_spark.sources.synthetic import (
+        interleaved_docs, media_catalog,
+    )
+    interleaved_docs(spark, 200).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    df = referential.referential_violations_spans(
+        docs, media_catalog(spark, 50))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    schemas = [ln.split("ReadSchema: ")[1] for ln in plan.splitlines()
+               if "ReadSchema: " in ln]
+    assert schemas == [
+        "struct<doc_id:string,spans:array<struct<media_ref:string>>>"], plan
+
+
+def _node_count(e) -> int:
+    ch = e.children()
+    return 1 + sum(_node_count(ch.apply(i)) for i in range(ch.size()))
+
+
+def _forall_bodies(df) -> list:
+    """The lambda bodies of every ``forall`` in the optimized plan."""
+    out = []
+
+    def visit(e):
+        if e.nodeName() == "forall":
+            out.append(e.function().function())
+        ch = e.children()
+        for i in range(ch.size()):
+            visit(ch.apply(i))
+
+    def walk(p):
+        ex, ch = p.expressions(), p.children()
+        for i in range(ex.size()):
+            visit(ex.apply(i))
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return out
+
+
+def test_typed_gate_is_minimal(spark, tmp_path):
+    """On stored docs the optimized ``validate_typed(docs, DOC_RULES)`` binds
+    no plain column in a ``transform(array(…))`` let, and its clean-element
+    gate is no larger than the hand-written minimal predicate: the enum
+    alone for ``kind``, an unguarded regex for the optional ``media_ref``
+    and presence for ``offset``."""
+    import re
+    from events_validator_spark.operators.validation import validate_typed
+    from events_validator_spark.sources.synthetic import (
+        DOC_RULES, interleaved_docs,
+    )
+    interleaved_docs(spark, 100).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    out = validate_typed(docs, DOC_RULES)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert not re.search(r"transform\(array\((lambda )?\w+#\d+(\.\w+)*\)",
+                         plan), plan
+    [gate] = _forall_bodies(out)
+    pattern = DOC_RULES["spans"]["nestedSchema"]["media_ref"]["regex"]
+    [minimal] = _forall_bodies(docs.select(F.expr(
+        "forall(spans, s -> coalesce(s.kind IN ('text', 'media'), false) "
+        f"AND (s.media_ref IS NULL OR s.media_ref RLIKE '{pattern}' "
+        "OR trim(s.media_ref) = '') AND s.offset IS NOT NULL)")))
+    assert _node_count(gate) <= _node_count(minimal), gate.sql()

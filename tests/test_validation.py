@@ -448,13 +448,21 @@ def test_element_ok_gate_matches_ungated(spark, monkeypatch):
     from events_validator_spark.operators import validation_sql
 
     docs = interleaved_docs(spark, 20_000)
-    # adversarial extras the generator never emits
+    # adversarial extras the generator never emits; x5-x9 hit the conjuncts
+    # the minimal gate drops (whitespace-only and empty values, a blank
+    # enum member, a blank value under a required regex, a required key
+    # that is the element's only violation)
     extra = spark.createDataFrame(
         [("x1", None),
          ("x2", []),
          ("x3", [(None, None, None, None)]),
          ("x4", [("media", None, "media_00bad!!!", 0),
-                 ("text", "", None, None)])],
+                 ("text", "", None, None)]),
+         ("x5", [("  ", "  ", "   ", 0)]),
+         ("x6", [("", "words", None, 0)]),
+         ("x7", [("a", "", None, 0), ("media", " ", "media_0000000a", 0)]),
+         ("x8", [("media", "   ", "media_0000000b", 0)]),
+         ("x9", [("text", "words", None, None)])],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
     corpus = docs.unionByName(extra)
@@ -473,6 +481,15 @@ def test_element_ok_gate_matches_ungated(spark, monkeypatch):
         },
     }
 
+    # a blank enum member: the enum no longer implies a non-blank value
+    rules_blank_enum = {"spans": {"type": "array", "nestedSchema": {
+        "kind": {"type": "string", "enum": ["", "a"]}}}}
+    # required keys with a regex that blank values match: only the empty
+    # guard reports them
+    rules_required_regex = {"spans": {"type": "array", "nestedSchema": {
+        "text": {"regex": "^[a-z ]*$"},
+        "media_ref": {"type": "string", "regex": "^[a-z0-9_ ]*$"}}}}
+
     def run(gate, rules):
         monkeypatch.setattr(validation_sql, "_ELEM_OK_GATE", gate)
         out = V.validate_typed(corpus, rules)
@@ -480,8 +497,10 @@ def test_element_ok_gate_matches_ungated(spark, monkeypatch):
                 .orderBy("doc_id", "field", "error_type", "expected",
                          "actual"))
 
-    for rules in (DOC_RULES, rules_extra):
+    for rules in (DOC_RULES, rules_extra, rules_blank_enum,
+                  rules_required_regex):
         a = run(True, rules).collect()
         b = run(False, rules).collect()
         assert a == b
         assert len(a) > 0
+        assert {r["doc_id"] for r in a} & {"x5", "x6", "x7", "x8", "x9"}

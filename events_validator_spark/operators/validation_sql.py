@@ -362,7 +362,7 @@ def _per_key(fv: _View, rule: dict, path: str, ids: Iterator[int]) -> str:
         and not fv.string_is_ref
     cv = copy.copy(fv)
     if needs_s:
-        cv._s, cv.string_is_ref = f"_as{next(ids)}", True
+        cv._s = f"_as{next(ids)}"
     checks: list[str] = []
     if "value" in rule:
         checks.append(_check_value(rule, cv, path))
@@ -371,7 +371,7 @@ def _per_key(fv: _View, rule: dict, path: str, ids: Iterator[int]) -> str:
     if "length" in rule:
         checks.append(_check_length(rule, cv, path))
     if "regex" in rule:
-        checks.append(_check_regex(rule, cv, path, ids))
+        checks.append(_check_regex(rule, cv, path))
     if "enum" in rule:  # engine extension (north rule): enum membership
         checks.append(_check_enum(rule, cv, path))
     body = concat(checks)
@@ -533,21 +533,17 @@ def _regex_empty(fv: _View) -> str:
     return f"({_trimmed_empty(fv)} OR {fv.is_null})"
 
 
-def _check_regex(rule: dict, fv: _View, path: str, ids: Iterator[int]) -> str:
+def _check_regex(rule: dict, fv: _View, path: str) -> str:
+    """``fv.as_string`` is a plain reference here: :func:`_per_key` let-binds
+    a computed toString before any check reads it."""
     pattern = rule["regex"]
     java_pat = _regex_java_pattern(rule)
-    # a computed toString is bound: it is both the match input and the
-    # violation's actual, and branch subexpressions are not deduplicated in
-    # interpreted evaluation; a plain reference is read as is
-    s = fv.as_string if fv.string_is_ref else f"_rx{next(ids)}"
+    s = fv.as_string
     fail = _gate(f"(NOT (coalesce({s}, 'undefined') RLIKE {lit(java_pat)}))",
                  one(path, "regex", lit(pattern), s))
-    body = (f"CASE WHEN {_regex_empty(fv)} "
+    return (f"CASE WHEN {_regex_empty(fv)} "
             f"THEN {one(path, 'regex', lit(pattern), lit('empty_value'))} "
             f"ELSE {fail} END")
-    if fv.string_is_ref:
-        return body
-    return f"transform(array({fv.as_string}), {s} -> {body})[0]"
 
 
 # ---------------------------------------------------------------------------

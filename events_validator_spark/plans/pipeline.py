@@ -213,9 +213,14 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
     partition-prunes to its own files (the Iceberg-shaped resume unit). A
     bucket's label (its stamp, ``completed`` entry and ``partition_id``) is
     ``str(value)``, and None for the NULL partition, so no value's label
-    can equal the NULL bucket's (a string column may hold ``"None"``).
-    When None, buckets fall back to ``pmod(xxhash64(doc_id), n_buckets)``
-    (full rescan per bucket — unpartitioned inputs only).
+    can equal the NULL bucket's (a string column may hold ``"None"``);
+    its rows' ``partition_id`` is NULL, so select them with
+    ``partition_id IS NULL``. A root whose NULL bucket was stamped with the
+    string ``"None"`` (the earlier labelling) does not resume that bucket: a
+    rerun validates and commits it again, so rerun such a root under a new
+    ``run_id``. When None, buckets fall back to
+    ``pmod(xxhash64(doc_id), n_buckets)`` (full rescan per bucket —
+    unpartitioned inputs only).
 
     ``log_payload_when_error`` mirrors the reference's LOG_PAYLOAD_WHEN_ERROR
     flag (loggingHelpers.js:18): violation rows carry the full event as JSON.

@@ -199,8 +199,9 @@ def streaming_psi(stream_df: DataFrame, ts_col: str, column: str,
               f"(a, s) -> a + s.cnt), "
               f"'b_cnt', element_at(array({', '.join(f'{c}L' for c in base)}),"
               f" b + 1)))")
-    psi = F.expr(_psi_sum_sql(counts, "n", f"{sum(base)}L", eps))
-    return per_win.select("win", "n", psi.alias("psi"))
+    psi = F.expr(_psi_sum_sql("h", "n", f"{sum(base)}L", eps))
+    return (per_win.select("win", "n", F.expr(counts).alias("h"))
+            .select("win", "n", psi.alias("psi")))
 
 
 def run_stream_dedup(spark: SparkSession, source_dir: str, schema,

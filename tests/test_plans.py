@@ -236,7 +236,7 @@ def test_psi_spark_jobs(spark):
     """``psi_two_cohorts`` runs 3 Spark jobs with bounds (its per-bucket
     count_if aggregate, then ``_psi``'s one global aggregate and its
     result) and 5 without (plus the min/max probe); ``categorical_psi``
-    runs 3."""
+    keeps its distributed sum (no category array in one task): 5."""
     from events_validator_spark.operators import drift
     df = spark.range(2000).select(
         (F.col("id") % 12).alias("x"), (F.col("id") % 2 == 0).alias("c"),
@@ -245,7 +245,7 @@ def test_psi_spark_jobs(spark):
             (lambda: drift.psi_two_cohorts(df, "x", F.col("c"), nbins=12,
                                            lo=0.0, hi=12.0), 3),
             (lambda: drift.psi_two_cohorts(df, "x", F.col("c"), nbins=12), 5),
-            (lambda: drift.categorical_psi(df, "k", F.col("c")), 3)):
+            (lambda: drift.categorical_psi(df, "k", F.col("c")), 5)):
         rows, jobs = _jobs(spark, lambda: run().collect())
         assert rows[0]["psi"] is not None and jobs == want
 

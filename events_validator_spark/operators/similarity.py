@@ -89,23 +89,26 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     the exact re-rank.
     """
     sig = hyperplane_signatures_udf(dim, n_planes, n_tables, seed)
-    # norms ride the projections (round 6): one per corpus/query row, not
-    # one of each per candidate; sim keeps the exact dot/(qn*cn) fold so
-    # values and rank order are bit-identical
-    c = (corpus.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("__cvec"),
-                       norm(F.col(vec_col)).alias("__cn"),
-                       F.posexplode(sig(F.col(vec_col))).alias("__t", "__sig")))
+    c = corpus.select(F.col(id_col).alias("neighbor_id"),
+                      F.posexplode(sig(F.col(vec_col))).alias("__t", "__sig"))
     q = F.broadcast(
         queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("__qvec"),
-                       norm(F.col(vec_col)).alias("__qn"),
                        F.posexplode(sig(F.col(vec_col))).alias("__t", "__sig")))
-    cand = (c.join(q, ["__t", "__sig"])
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id", "__qvec", "__cvec",
-                    "__qn", "__cn")
-            .dropDuplicates(["query_id", "neighbor_id"]))
+    pairs = (c.join(q, ["__t", "__sig"])
+             .where(F.col("neighbor_id") != F.col("query_id"))
+             .select("query_id", "neighbor_id").dropDuplicates())
+    # vectors and norms join the deduplicated id pairs, so they never ride
+    # the n_tables-fold signature fan-out or the dedup shuffle; one norm per
+    # corpus/query row, and sim keeps the exact dot/(qn*cn) fold
+    cand = (pairs
+            .join(F.broadcast(queries.select(
+                F.col(query_id_col).alias("query_id"),
+                F.col(vec_col).alias("__qvec"),
+                norm(F.col(vec_col)).alias("__qn"))), "query_id")
+            .join(corpus.select(F.col(id_col).alias("neighbor_id"),
+                                F.col(vec_col).alias("__cvec"),
+                                norm(F.col(vec_col)).alias("__cn")),
+                  "neighbor_id"))
     sim = (dot(F.col("__qvec"), F.col("__cvec"), dim)
            / (F.col("__qn") * F.col("__cn"))).alias("sim")
     scored = cand.select("query_id", "neighbor_id", sim)

@@ -5,22 +5,24 @@ FIXTURES.md §4-5).
 The reference emits per-event verdicts over HTTP and fire-and-forgets log rows
 into BigQuery (/root/reference/validator_src/index.js:54-75,
 helpers/cloudHelpers.js:25-44). Here a run is a deterministic batch job over a
-partitioned table:
+partitioned table. Each unit of work (a bucket of ``run_validation``, a
+source window of ``run_incremental``, a micro-batch of
+``streaming.stream.run_stream_pipeline``) is ONE Spark job:
 
-  docs ──validate (1 projection)──► violation rows ──append──► violations
-                                  ► verdict rows   ──append──► verdicts
-                                                   (+ counts in its meta)
+  docs ──validate + output_rows (1 projection)──► verdict rows + log rows,
+                                                  each tagged with its table
+       ──Lakehouse.append (1 write, partitioned by the tag)──►
+            commit violations ──► commit verdicts (+ counts in its meta)
 
-One checkpoint protocol for every pipeline: each unit of work (a bucket of
-``run_validation``, a source window of ``run_incremental``, a micro-batch of
-``streaming.stream.run_stream_pipeline``) is two ``Lakehouse`` commits,
-violations then verdicts, both stamped with the unit (``_commit_outputs``).
+No cache: the validated rows are read once, by that write. The two commits
+are the one checkpoint protocol every pipeline shares
+(``_commit_outputs``): both are stamped with the unit, violations first.
 The stamps are the only record of what a run has done: a rerun skips every
 unit whose verdicts commit carries its stamp, and a unit whose violations
 commit is stamped but whose verdicts commit is not (a crash between the
 two) commits only its verdicts — no duplicate rows, verified by
 tests/test_pipeline.py. The unit's ``rows``/``violations``/``passed`` are
-observed on the verdicts write and stored in that commit's meta.
+observed on the write and stored in the verdicts commit's meta.
 
 Scale note: pass ``bucket_col`` (the table's partition column, e.g. date_utc)
 so every bucket scan partition-prunes to exactly its own files — resume
@@ -38,10 +40,23 @@ import uuid
 from pyspark.sql import DataFrame, functions as F
 
 from events_validator_spark.operators.validation import validate_typed
+from events_validator_spark.operators.validation_sql import ident, lit
 from events_validator_spark.sources.catalog import Lakehouse
 
 VERDICT_COLS = ["doc_id", "event_name", "passed", "n_violations",
                 "partition_id", "snapshot_id"]
+VIOLATION_COLS = ["event_name", "event_id", "field", "error_type",
+                  "expected", "actual", "timestamp", "source_event",
+                  "status", "date_utc", "event_data", "value", "type",
+                  "partition_id", "snapshot_id"]
+TABLE_COL = "__table"  # names each output row's table
+_UNION = list(dict.fromkeys(VERDICT_COLS + VIOLATION_COLS))
+# NULL of each column's type on the other table's rows (others: string)
+_NULLS = {"doc_id": "IF(false, `doc_id`, NULL)",
+          "event_id": "IF(false, `doc_id`, NULL)",
+          "passed": "CAST(NULL AS BOOLEAN)", "n_violations": "CAST(NULL AS INT)",
+          "timestamp": "CAST(NULL AS TIMESTAMP)",
+          "date_utc": "CAST(NULL AS DATE)"}
 
 
 def _bucket(col, n):  # deterministic partition bucketing of doc ids
@@ -55,100 +70,96 @@ def _label(value) -> str | None:
     return None if value is None else str(value)
 
 
-def verdict_rows(part: DataFrame, event_name: str, partition_id: str | None,
-                 snapshot_id: str) -> DataFrame:
-    """Per-document verdict rows (VERDICT_COLS shape) from a validated df."""
-    return part.select(
-        "doc_id",
-        F.lit(event_name).alias("event_name"),
-        (F.size("violations") == 0).alias("passed"),
-        F.size("violations").alias("n_violations"),
-        F.lit(partition_id).cast("string").alias("partition_id"),
-        F.lit(snapshot_id).alias("snapshot_id"),
-    )
+def output_rows(validated: DataFrame, source_columns: list[str],
+                rules: dict, event_name: str, partition_id: str | None,
+                snapshot_id: str, tables: tuple[str, str],
+                log_payload_when_error: bool = False,
+                log_valid_fields: bool = False) -> DataFrame:
+    """The output rows of a validated df, both tables in one projection —
+    the SINGLE row constructor the batch pipelines and the streaming
+    ``foreachBatch`` sink use (stream/batch flag parity by construction).
+    Each doc yields its verdict row (VERDICT_COLS) and one log row
+    (VIOLATION_COLS) per violation, each tagged in ``TABLE_COL`` with its
+    table, ``tables = (violations table, verdicts table)``:
 
+        inline(concat(array(<verdict>), transform(violations, v -> <log>)))
 
-def violation_rows(part: DataFrame, source_columns: list[str], rules: dict,
-                   event_name: str, partition_id: str | None,
-                   snapshot_id: str,
-                   log_payload_when_error: bool = False,
-                   log_valid_fields: bool = False) -> DataFrame:
-    """Violation log rows from a validated df — the SINGLE builder both the
-    batch pipeline and the streaming foreachBatch sink use (round-3 verdict
-    items 5+7: stream/batch flag parity by construction, and the emitted
-    schema is a superset of the reference's declared BQ schema,
-    terraform_backend/src/bq_schema/bq_schema.json:1-62).
+    Every row has the union of both tables' columns, NULL where its table
+    has none; ``Lakehouse.append`` splits them by the tag. The log rows'
+    ``current_timestamp()``/``current_date()`` sit inside the lambda, which
+    Spark evaluates interpreted, so the generated code does not inline
+    them and is the same from one run to the next.
 
-    Declared-superset columns: ``source_event``/``type`` are declared but
-    never written by the reference (loggingHelpers.js writes neither) →
-    typed nulls; ``value`` is written ONLY on valid-field rows as
-    ``JSON.stringify(value)`` (loggingHelpers.js:39) → filled there, null on
-    error rows.
+    The log rows are a superset of the reference's declared BQ schema
+    (terraform_backend/src/bq_schema/bq_schema.json:1-62):
+    ``source_event``/``type`` are declared but never written by the
+    reference (loggingHelpers.js writes neither) → typed nulls; ``value`` is
+    written ONLY on valid-field rows as ``JSON.stringify(value)``
+    (loggingHelpers.js:39) → filled there, null on error rows.
+    ``log_payload_when_error`` (LOG_PAYLOAD_WHEN_ERROR, loggingHelpers.js:18)
+    puts the whole source row as JSON in ``event_data`` of error rows;
+    ``log_valid_fields`` (LOG_VALID_FIELDS, loggingHelpers.js:33-45) adds a
+    ``status = 'valid'`` row per top-level rule key with no violation.
     """
-    payload = (F.to_json(F.struct(*[c for c in source_columns]))
-               if log_payload_when_error else F.lit(None).cast("string"))
-    null_s = F.lit(None).cast("string")
-    out = (
-        part.select("doc_id", F.explode("violations").alias("v"),
-                    payload.alias("event_data"))
-        .select(
-            F.lit(event_name).alias("event_name"),
-            F.col("doc_id").alias("event_id"),
-            "v.field", "v.error_type", "v.expected", "v.actual",
-            F.current_timestamp().alias("timestamp"),
-            null_s.alias("source_event"),
-            F.lit("error").alias("status"),
-            F.current_date().alias("date_utc"),
-            "event_data",
-            null_s.alias("value"),
-            null_s.alias("type"),
-            F.lit(partition_id).cast("string").alias("partition_id"),
-            F.lit(snapshot_id).alias("snapshot_id"),
-        ))
+    viol_table, verd_table = tables
+    columns = validated.columns
+    shared = {"event_name": lit(event_name),
+              "partition_id": lit(partition_id),
+              "snapshot_id": lit(snapshot_id)}
+
+    def fresh(name: str) -> str:  # a name no input column has
+        while name in columns:
+            name = "_" + name
+        return name
+
+    def row(table: str, cols: dict) -> str:
+        return "named_struct(" + ", ".join(
+            f"{lit(c)}, {cols.get(c) or _NULLS.get(c, lit(None))}"
+            for c in _UNION) + f", {lit(TABLE_COL)}, {lit(table)})"
+
+    def log_row(status: str, cols: dict) -> str:
+        return row(viol_table, {
+            **shared, **cols, "event_id": "`doc_id`",
+            "timestamp": "current_timestamp()", "status": lit(status),
+            "date_utc": "current_date()"})
+
+    payload = lit(None)
+    if log_payload_when_error:
+        name = fresh("__event_data")  # one to_json per doc, not per row
+        validated = validated.withColumn(name, F.expr(
+            f"to_json(struct({', '.join(map(ident, source_columns))}))"))
+        payload = ident(name)
+    v, k = fresh("__v"), fresh("__k")
+    parts = [
+        "array(" + row(verd_table, {
+            **shared, "doc_id": "`doc_id`",
+            "passed": "size(`violations`) = 0",
+            "n_violations": "size(`violations`)"}) + ")",
+        f"transform(`violations`, {v} -> " + log_row("error", {
+            "field": f"{v}.field", "error_type": f"{v}.error_type",
+            "expected": f"{v}.expected", "actual": f"{v}.actual",
+            "event_data": payload}) + ")"]
     if log_valid_fields:
-        # per top-level rule key with no violation on this doc → 'valid' row
-        rule_keys = [k for k in rules if k != "version"]
-        keys_arr = F.array(*[F.lit(k) for k in rule_keys])
-        # nested paths (spans[0].kind) roll up to their top-level key
-        violated = F.transform(
-            F.col("violations"),
-            lambda v: F.regexp_extract(v["field"], r"^[^.\[]+", 0))
-        # JSON.stringify(event[field]) per rule key (loggingHelpers.js:39):
-        # to_json needs a struct root, so serialize {"x": v} and strip the
-        # 5-char '{"x":' prefix and '}' suffix; a null/absent field
-        # serializes to '{}' → NULL (JSON.stringify(undefined) is undefined)
-        value_expr = null_s
-        for k in rule_keys:
-            if k not in part.columns:
-                continue
-            j = F.to_json(F.struct(F.col(k).alias("x")))
-            jv = F.when(j == "{}", null_s).otherwise(
-                j.substr(F.lit(6), F.length(j) - 6))
-            value_expr = F.when(F.col("field") == k, jv).otherwise(value_expr)
-        valid_rows = (
-            part.select(
-                "doc_id",
-                *[c for c in part.columns if c in rule_keys and c != "doc_id"],
-                F.explode(F.array_except(keys_arr, violated)).alias("field"))
-            .select(
-                F.lit(event_name).alias("event_name"),
-                F.col("doc_id").alias("event_id"),
-                "field",
-                null_s.alias("error_type"),
-                null_s.alias("expected"),
-                null_s.alias("actual"),
-                F.current_timestamp().alias("timestamp"),
-                null_s.alias("source_event"),
-                F.lit("valid").alias("status"),
-                F.current_date().alias("date_utc"),
-                null_s.alias("event_data"),
-                value_expr.alias("value"),
-                null_s.alias("type"),
-                F.lit(partition_id).cast("string").alias("partition_id"),
-                F.lit(snapshot_id).alias("snapshot_id"),
-            ))
-        out = out.unionByName(valid_rows)
-    return out
+        # per top-level rule key with no violation on this doc → 'valid' row;
+        # nested paths (spans[0].kind) roll up to their top-level key.
+        # value: JSON.stringify(event[field]) (loggingHelpers.js:39): to_json
+        # needs a struct root, so serialize {"x": v} and strip the 5-char
+        # '{"x":' prefix and '}' suffix; a null/absent field serializes to
+        # '{}' → NULL (JSON.stringify(undefined) is undefined)
+        rule_keys = [key for key in rules if key != "version"]
+        whens = "".join(
+            f"WHEN {k} = {lit(key)} THEN CASE WHEN {j} = '{{}}' THEN NULL "
+            f"ELSE substr({j}, 6, length({j}) - 6) END "
+            for key in rule_keys if key in columns
+            for j in [f"to_json(struct({ident(key)} AS x))"])
+        value = f"CASE {whens}END" if whens else lit(None)
+        top_key = lit(r"^[^.\[]+")
+        parts.append(
+            f"transform(array_except(array({', '.join(map(lit, rule_keys))}),"
+            f" transform(`violations`, {v} -> regexp_extract({v}.field, "
+            f"{top_key}, 0))), {k} -> "
+            + log_row("valid", {"field": k, "value": value}) + ")")
+    return validated.select(F.expr(f"inline(concat({', '.join(parts)}))"))
 
 
 def _last_stamp(lakehouse, table: str, meta_key: str,
@@ -170,28 +181,33 @@ def _last_stamp(lakehouse, table: str, meta_key: str,
 
 
 def _commit_outputs(lakehouse, viol_table: str, verd_table: str,
-                    stamp: dict, violations: DataFrame,
-                    verdicts: DataFrame) -> tuple[str | None, dict]:
-    """Append ``violations`` unless ``viol_table`` already holds them, then
-    append ``verdicts``; both commits carry ``stamp``. ``stamp``'s last
-    item names the unit (source cursor, bucket, stream batch), the items
-    before it the scope the unit is unique in (a run id): the violations
-    are already there when the newest commit in that scope carries the
-    unit — a rerun after a crash between the two commits. The verdicts
-    commit also stores ``start`` (epoch seconds) and its own ``rows``,
-    ``violations`` and ``passed``, observed on its write.
+                    stamp: dict, rows: DataFrame) -> tuple[str | None, dict]:
+    """Commit ``rows`` (``output_rows``) to ``viol_table`` unless it already
+    holds them, then to ``verd_table``, in one ``Lakehouse.append``: one
+    write, then one commit per table, both stamped ``stamp``. ``stamp``'s
+    last item names the unit (source cursor, bucket, stream batch), the
+    items before it the scope the unit is unique in (a run id): the
+    violations are already there when the newest commit in that scope
+    carries the unit — a rerun after a crash between the two commits, which
+    then writes and commits only the verdict rows. The verdicts commit also
+    stores ``start`` (epoch seconds) and its own ``rows``, ``violations``
+    and ``passed``, observed on the write; ``n_violations`` and ``passed``
+    are NULL on log rows, so they count verdict rows only.
 
     Returns ``(violations snapshot id, verdicts commit meta)``."""
     start = time.time()
     *scope, (key, unit) = stamp.items()
     v_snap, last = _last_stamp(lakehouse, viol_table, key, dict(scope))
+    tables = {}
     if v_snap is None or last != unit:
-        v_snap = lakehouse.append(viol_table, violations, meta=stamp)
-    snap = lakehouse.append(verd_table, verdicts, meta={
-        **stamp, "start": start, "rows": F.count(F.lit(1)),
+        tables[viol_table] = (VIOLATION_COLS, stamp)
+    tables[verd_table] = (VERDICT_COLS, {
+        **stamp, "start": start, "rows": F.count("n_violations"),
         "violations": F.coalesce(F.sum("n_violations"), F.lit(0)),
         "passed": F.count_if("passed")})
-    return v_snap, lakehouse.snapshot_meta(verd_table, snap)
+    snaps = lakehouse.append(tables, rows, tag=TABLE_COL)
+    return (snaps.get(viol_table, v_snap),
+            lakehouse.snapshot_meta(verd_table, snaps[verd_table]))
 
 
 def run_validation(docs: DataFrame, rules: dict, out_dir: str,
@@ -202,8 +218,9 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
                    log_valid_fields: bool = False) -> dict:
     """Validate ``docs`` bucket by bucket into the ``violations`` and
     ``verdicts`` tables of a ``Lakehouse`` rooted at ``out_dir``; each
-    bucket's two commits are stamped ``{run_id, bucket}`` and a rerun with
-    the same ``run_id`` resumes from the stamps (module docstring). Rows
+    bucket is one Spark job (one write, nothing cached) whose two commits
+    are stamped ``{run_id, bucket}``, and a rerun with the same ``run_id``
+    resumes from the stamps (module docstring). Rows
     carry ``snapshot_id = "snap-" + run_id``; a second run_id written to
     the same root appends, so readers pick a run by that column or by the
     commits' stamps. One writer per root at a time.
@@ -264,16 +281,14 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
     for b in sorted(labels, key=lambda b: (b is not None, b)):
         if b in done:
             continue
-        part = validated.where(key.eqNullSafe(F.lit(labels[b]))).cache()
         _commit_outputs(
             lakehouse, "violations", "verdicts",
             {"run_id": run_id, "bucket": b},
-            violation_rows(part, docs.columns, rules, event_name, _label(b),
-                           snapshot_id,
-                           log_payload_when_error=log_payload_when_error,
-                           log_valid_fields=log_valid_fields),
-            verdict_rows(part, event_name, _label(b), snapshot_id))
-        part.unpersist()
+            output_rows(validated.where(key.eqNullSafe(F.lit(labels[b]))),
+                        docs.columns, rules, event_name, _label(b),
+                        snapshot_id, ("violations", "verdicts"),
+                        log_payload_when_error=log_payload_when_error,
+                        log_valid_fields=log_valid_fields))
     commits = this_run()
     return {"run_id": run_id, "snapshot_id": snapshot_id,
             "n_buckets": len(labels), "bucket_col": bucket_col,
@@ -293,7 +308,7 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
                     log_valid_fields: bool = False) -> dict:
     """One tick of a continuously-resumable validation loop over an
     Iceberg-shaped table: validate ONLY the rows appended since the last
-    tick (``Lakehouse.read_since``) and append violations, then verdicts,
+    tick (``Lakehouse.read_since``) and commit violations, then verdicts,
     back to the lakehouse, each commit stamped with the source cursor it
     covers (``meta={"source_cursor": ...}``).
 
@@ -308,10 +323,12 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
     stamping the same tables breaks it (unstamped commits, e.g. a manual
     append, are ignored). Pinned by tests/test_pipeline.py.
 
-    ``rows`` and ``violations`` come from the verdicts commit itself
-    (``_commit_outputs`` stores them, observed on its write), so a warm
-    tick runs two Spark jobs, one per output commit (pinned by
-    tests/test_plans.py).
+    A warm tick is one Spark job and caches nothing: one projection emits
+    the verdict and violation rows (``output_rows``) and one write feeds
+    both commits. ``rows`` and ``violations`` come from the verdicts commit
+    itself (``_commit_outputs`` stores them, observed on that write). Its
+    generated code is the same from tick to tick, so a warm tick compiles
+    no class (both pinned by tests/test_plans.py).
 
     Returns {"cursor", "rows", "violations", "snapshot_id"} (``snapshot_id``
     names the violations commit); ``snapshot_id`` None means the table was
@@ -328,15 +345,12 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
         return {"cursor": cursor, "rows": 0, "violations": 0,
                 "snapshot_id": None}
 
-    validated = validate_typed(new_df, rules).cache()
-    part_id = f"inc-{new_cursor}"
     v_snap, counts = _commit_outputs(
         lakehouse, viol_table, verd_table, {"source_cursor": new_cursor},
-        violation_rows(validated, new_df.columns, rules, event_name,
-                       part_id, new_cursor,
-                       log_payload_when_error=log_payload_when_error,
-                       log_valid_fields=log_valid_fields),
-        verdict_rows(validated, event_name, part_id, new_cursor))
-    validated.unpersist()
+        output_rows(validate_typed(new_df, rules), new_df.columns, rules,
+                    event_name, f"inc-{new_cursor}", new_cursor,
+                    (viol_table, verd_table),
+                    log_payload_when_error=log_payload_when_error,
+                    log_valid_fields=log_valid_fields))
     return {"cursor": new_cursor, "rows": counts["rows"],
             "violations": counts["violations"], "snapshot_id": v_snap}

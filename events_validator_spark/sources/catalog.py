@@ -6,7 +6,13 @@ the engine talks to a thin :class:`Lakehouse` interface instead. This class
 implements it on a directory layout: each ``append`` writes a ``snap-<id>``
 data directory FIRST and only then commits it to ``_snapshots.json`` —
 readers only see committed snapshots, giving the same atomic-append /
-time-travel / incremental-scan semantics resume relies on.
+time-travel / incremental-scan semantics resume relies on. An append to
+several tables writes once, partitioned by a tag column, into a staging
+directory under the first table; each table's part is renamed to its
+``snap-<id>`` directory, and the tables then commit one by one. The part
+files hold the columns of every table in the write (NULL outside their
+own table's), and a table with no rows gets an empty directory; reads use
+the table's own schema from the log, so neither shows.
 
 A real catalog swaps in as another class with the same methods that passes
 ``tests/test_pipeline.py::test_lakehouse_interface_conformance``; its calls
@@ -33,10 +39,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -53,6 +62,12 @@ class Lakehouse:
       crash can never separate data from its provenance stamp; a
       ``Column``-valued entry is an aggregate over the appended rows, and
       the commit stores its value (Iceberg: ``added-records``);
+      ``append({table: (columns, meta)}, df, tag=col) -> {table:
+      snapshot_id}`` writes the rows of several tables at once, each row's
+      ``tag`` naming its table, then commits each table in order, in its
+      own ``columns`` and also when it has no rows (Iceberg: the data files
+      are written once, then one ``AppendFiles`` commit per table; a crash
+      between two commits leaves the earlier ones committed);
     * ``read(table, as_of=None)`` — current state, or time-travel to a
       snapshot id (Iceberg: ``VERSION AS OF``), in the table's schema as of
       that snapshot: columns an older commit lacks read as NULL;
@@ -121,8 +136,8 @@ class Lakehouse:
         os.replace(tmp, p)  # atomic on POSIX
 
     # -- public (Iceberg-shaped) ---------------------------------------------
-    def append(self, table: str, df: DataFrame,
-               meta: dict | None = None) -> str:
+    def append(self, table: str | dict, df: DataFrame,
+               meta: dict | None = None, tag: str | None = None):
         """Write data, then commit — readers never see a partial append.
 
         ``meta`` is stored ON the snapshot entry (Iceberg: snapshot summary
@@ -131,27 +146,63 @@ class Lakehouse:
         can detect an already-committed batch without a side channel.
         ``Column`` values (``{"rows": F.count(F.lit(1))}``) are observed on
         the write itself, so a commit's counts cost no extra job, and stored
-        as their (JSON) values. The entry records ``df``'s schema when it
-        differs from the table's current one."""
-        meta = dict(meta or {})
-        observed = {k: c for k, c in meta.items() if isinstance(c, Column)}
+        as their (JSON) values. The entry records the table's columns'
+        schema when it differs from the table's current one.
+
+        Several tables in one write: ``table`` maps each table to
+        ``(columns, meta)`` and ``tag`` names the column of ``df`` that
+        holds each row's table. The rows of the named tables are written
+        once, partitioned by ``tag``; then each table, in order, commits
+        its part as a snapshot in its own ``columns`` (an empty one when it
+        has no rows). Column-valued meta is observed once over the whole
+        write, so it must ignore the other tables' rows (e.g. count a
+        column that is NULL on them). Returns ``{table: snapshot_id}``."""
+        tables = ({table: (df.columns, meta)} if tag is None
+                  else dict(table))
+        metas = {t: dict(m or {}) for t, (_, m) in tables.items()}
+        observed = {f"{i}:{k}": c
+                    for i, m in enumerate(metas.values())
+                    for k, c in m.items() if isinstance(c, Column)}
+        if tag is not None:
+            df = df.where(F.col(tag).isin(list(tables)))
         if observed:
             obs = Observation()
             df = df.observe(obs, *[c.alias(k) for k, c in observed.items()])
-        snapshot_id = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:6]}"
-        data_dir = os.path.join(self.root, table, snapshot_id)
-        df.write.mode("overwrite").parquet(data_dir)
-        if observed:
-            meta.update(obs.get)
-        snaps = self._load_meta(table)
-        entry = {"snapshot_id": snapshot_id, "ts": time.time(),
-                 "path": data_dir, "meta": meta}
-        schema = df.schema.jsonValue()
-        if schema != self._schema(snaps):
-            entry["schema"] = schema
-        snaps.append(entry)
-        self._commit(table, snaps)
-        return snapshot_id
+        ids = {t: f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:6]}"
+               for t in tables}
+        dirs = {t: os.path.join(self.root, t, ids[t]) for t in tables}
+        if tag is None:
+            df.write.mode("overwrite").parquet(dirs[table])
+        else:
+            staging = os.path.join(self.root, next(iter(tables)),
+                                   f"_write-{uuid.uuid4().hex}")
+            df.write.mode("overwrite").partitionBy(tag).parquet(staging)
+            # Spark escapes '%' too, so unquote inverts its path escaping
+            parts = {unquote(d.split("=", 1)[1]): os.path.join(staging, d)
+                     for d in os.listdir(staging)
+                     if d.startswith(f"{tag}=")}
+            for t, d in dirs.items():
+                os.makedirs(os.path.dirname(d), exist_ok=True)
+                if t in parts:
+                    os.replace(parts[t], d)
+                else:
+                    os.makedirs(d)
+            shutil.rmtree(staging)
+        values = obs.get if observed else {}
+        fields = {f.name: f for f in df.schema.fields}
+        for i, (t, (columns, _)) in enumerate(tables.items()):
+            m = metas[t]
+            m.update({k: values[f"{i}:{k}"]
+                      for k, c in m.items() if isinstance(c, Column)})
+            snaps = self._load_meta(t)
+            entry = {"snapshot_id": ids[t], "ts": time.time(),
+                     "path": dirs[t], "meta": m}
+            schema = StructType([fields[c] for c in columns]).jsonValue()
+            if schema != self._schema(snaps):
+                entry["schema"] = schema
+            snaps.append(entry)
+            self._commit(t, snaps)
+        return ids[table] if tag is None else ids
 
     def read(self, table: str, as_of: str | None = None) -> DataFrame:
         """All committed snapshots, or time-travel up to ``as_of``."""

@@ -104,7 +104,8 @@ def run_stream_pipeline(spark: SparkSession, source_dir: str, schema,
     plans/pipeline.run_validation, in a ``Lakehouse`` rooted at
     ``out_dir``, via ``foreachBatch``: the same two commits, stamped
     ``{stream_batch: id}`` (``plans.pipeline._commit_outputs``, the
-    checkpoint protocol every pipeline shares). A ``foreachBatch`` replay
+    checkpoint protocol every pipeline shares), fed by one write, so a
+    micro-batch is one Spark job and is not cached. A ``foreachBatch`` replay
     appends nothing it has already committed: a batch whose verdicts are
     committed is skipped, and one that crashed between its two commits
     commits only its verdicts. Batch ids come from ``checkpoint_dir``, as
@@ -112,7 +113,7 @@ def run_stream_pipeline(spark: SparkSession, source_dir: str, schema,
 
     ``log_payload_when_error``/``log_valid_fields`` behave exactly as in the
     batch pipeline — both paths build rows through the SAME
-    plans.pipeline.violation_rows builder, so a user switching to streaming
+    plans.pipeline.output_rows function, so a user switching to streaming
     keeps V15's configurability (round-3 verdict item 5); parity is pinned by
     tests/test_pipeline.py.
 
@@ -122,7 +123,7 @@ def run_stream_pipeline(spark: SparkSession, source_dir: str, schema,
     leaves the query running.
     """
     from events_validator_spark.plans.pipeline import (
-        _commit_outputs, _last_stamp, verdict_rows, violation_rows,
+        _commit_outputs, _last_stamp, output_rows,
     )
     from events_validator_spark.sources.catalog import Lakehouse
     lakehouse = Lakehouse(spark, out_dir)
@@ -135,15 +136,12 @@ def run_stream_pipeline(spark: SparkSession, source_dir: str, schema,
         key = str(batch_id)
         if _last_stamp(lakehouse, "verdicts", "stream_batch")[1] == key:
             return                        # fully-committed replay: no-op
-        part = batch_df.persist()
         _commit_outputs(
             lakehouse, "violations", "verdicts", {"stream_batch": key},
-            violation_rows(part, source_columns, rules, event_name, key,
-                           f"stream-{key}",
-                           log_payload_when_error=log_payload_when_error,
-                           log_valid_fields=log_valid_fields),
-            verdict_rows(part, event_name, key, f"stream-{key}"))
-        part.unpersist()
+            output_rows(batch_df, source_columns, rules, event_name, key,
+                        f"stream-{key}", ("violations", "verdicts"),
+                        log_payload_when_error=log_payload_when_error,
+                        log_valid_fields=log_valid_fields))
         seen["n"] += 1
 
     writer = validated.writeStream.foreachBatch(write_batch)

@@ -19,22 +19,23 @@ def _outputs(spark, out):
 
 
 def _crash_at_verdicts(monkeypatch, n, crash):
-    """``Lakehouse.append`` raises right before (``before_verdicts``) or
-    right after (``after_verdicts``) the ``n``-th verdicts commit."""
-    orig = Lakehouse.append
+    """The per-table log commit (``Lakehouse._commit``) raises right before
+    (``before_verdicts``) or right after (``after_verdicts``) the ``n``-th
+    verdicts commit; a unit's violations and verdicts are written by one
+    ``append``, so ``before_verdicts`` falls between its two commits."""
+    orig = Lakehouse._commit
     seen = {"verdicts": 0}
 
-    def flaky(self, table, df, meta=None):
+    def flaky(self, table, snaps):
         hit = table == "verdicts" and seen["verdicts"] + 1 == n
         seen["verdicts"] += table == "verdicts"
         if hit and crash == "before_verdicts":
             raise RuntimeError("injected crash before the verdicts commit")
-        snap = orig(self, table, df, meta)
+        orig(self, table, snaps)
         if hit:
             raise RuntimeError("injected crash after the verdicts commit")
-        return snap
 
-    monkeypatch.setattr(Lakehouse, "append", flaky)
+    monkeypatch.setattr(Lakehouse, "_commit", flaky)
 
 
 def test_run_validation_and_resume(spark, tmp_path, monkeypatch):
@@ -638,6 +639,70 @@ def test_run_incremental_empty_window(spark, tmp_path):
     assert lh.read("docs_verdicts").count() == 30
 
 
+VERDICT_COLUMNS = ["doc_id", "event_name", "passed", "n_violations",
+                   "partition_id", "snapshot_id"]
+VIOLATION_COLUMNS = ["event_name", "event_id", "field", "error_type",
+                     "expected", "actual", "timestamp", "source_event",
+                     "status", "date_utc", "event_data", "value", "type",
+                     "partition_id", "snapshot_id"]
+
+
+def test_run_incremental_commits_empty_violations(spark, tmp_path):
+    """A tick whose rows are all valid, and a tick over an empty window,
+    each commit a violations snapshot that is empty, readable in the
+    table's columns and stamped with the tick's cursor, although the write
+    they share with the verdicts holds no violation row."""
+    from events_validator_spark.plans.pipeline import run_incremental
+    lh = Lakehouse(spark, str(tmp_path / "lh"))
+    out = str(tmp_path / "out")
+    rules = {"doc_id": {"type": "string", "regex": "^doc_[0-9]+$"}}
+    docs = spark.range(20).selectExpr("concat('doc_', id) AS doc_id")
+    lh.append("docs", docs)
+    r1 = run_incremental(lh, "docs", rules, out)
+    assert (r1["rows"], r1["violations"]) == (20, 0)
+    viol = lh.read("docs_violations", as_of=r1["snapshot_id"])
+    assert viol.columns == VIOLATION_COLUMNS and viol.count() == 0
+    assert lh.snapshot_meta("docs_violations", r1["snapshot_id"]) == \
+        {"source_cursor": r1["cursor"]}
+    empty = lh.append("docs", docs.limit(0))
+    r2 = run_incremental(lh, "docs", rules, out)
+    assert (r2["rows"], r2["cursor"]) == (0, empty)
+    window, cursor = lh.read_since("docs_violations", r1["snapshot_id"])
+    assert cursor == r2["snapshot_id"]
+    assert window.columns == VIOLATION_COLUMNS and window.count() == 0
+    assert lh.read("docs_verdicts").columns == VERDICT_COLUMNS
+    assert lh.read("docs_verdicts").count() == 20
+
+
+def test_output_tables_read_in_their_own_columns(spark, tmp_path):
+    """Under ``run_incremental``, ``run_validation`` and the stream sink,
+    each output table reads back in exactly its own columns, in order: the
+    table tag and the other table's columns, which the shared write's
+    files hold, do not leak."""
+    from events_validator_spark.plans.pipeline import run_incremental
+    from events_validator_spark.streaming.stream import run_stream_pipeline
+    docs = interleaved_docs(spark, 200)
+    inc = Lakehouse(spark, str(tmp_path / "inc"))
+    inc.append("docs", docs)
+    run_incremental(inc, "docs", DOC_RULES, str(tmp_path / "out"))
+    pipeline.run_validation(docs, DOC_RULES, str(tmp_path / "batch"),
+                            n_buckets=2, log_payload_when_error=True,
+                            log_valid_fields=True)
+    src = str(tmp_path / "src")
+    docs.write.parquet(src)
+    run_stream_pipeline(spark, src, docs.schema, DOC_RULES,
+                        str(tmp_path / "stream"),
+                        checkpoint_dir=str(tmp_path / "ck"))
+    for lh, prefix in ((inc, "docs_"),
+                       (Lakehouse(spark, str(tmp_path / "batch")), ""),
+                       (Lakehouse(spark, str(tmp_path / "stream")), "")):
+        for table, columns in (("violations", VIOLATION_COLUMNS),
+                               ("verdicts", VERDICT_COLUMNS)):
+            df = lh.read(prefix + table)
+            assert df.columns == columns, (prefix, table)
+            assert df.count() > 0
+
+
 @pytest.mark.parametrize("crash", ["after_verdicts", "before_verdicts",
                                    "manual_append"])
 def test_run_incremental_crash_window_exactly_once(spark, tmp_path, crash):
@@ -659,23 +724,22 @@ def test_run_incremental_crash_window_exactly_once(spark, tmp_path, crash):
     def batch(lo, hi):                     # one regex violation per row
         return spark.range(lo, hi).selectExpr("concat('bad', id) as doc_id")
 
-    orig_append = lh.append
+    orig_commit = lh._commit
     armed = {"on": False}
     committed = {}
 
-    def flaky_append(table, df, meta=None):
+    def flaky_commit(table, snaps):        # the per-table log commit
         hit = armed["on"] and table == "docs_verdicts"
         if hit and crash != "after_verdicts":
             armed["on"] = False
             raise RuntimeError("injected crash before the verdicts commit")
-        snap = orig_append(table, df, meta)
-        committed[table] = snap
+        orig_commit(table, snaps)
+        committed[table] = snaps[-1]["snapshot_id"]
         if hit:
             armed["on"] = False
             raise RuntimeError("injected crash after the verdicts commit")
-        return snap
 
-    lh.append = flaky_append
+    lh._commit = flaky_commit
     lh.append("docs", batch(0, 10))
     r0 = run_incremental(lh, "docs", rules, out)
     assert r0["rows"] == 10 and r0["violations"] == 10
@@ -768,6 +832,34 @@ def test_lakehouse_interface_conformance(spark, tmp_path):
         assert lh.snapshot_meta("m", m1) == {"n": 3, "s": 39, "tag": "x"}
         assert lh.snapshot_meta("m", m2) == {"n": 0, "s": None, "tag": "x"}
         assert lh.read("m").count() == 3
+        # several tables in one write: each row's ``tag`` names its table;
+        # each table commits its own columns, in order (an empty table
+        # too), rows of a table not named are not written, and
+        # Column-valued meta is observed once over the whole write
+        rows = spark.range(0, 6).selectExpr(
+            "CASE WHEN id < 3 THEN 'ma' WHEN id < 5 THEN 'mb' ELSE 'mz' END "
+            "AS tbl", "id AS v", "IF(id < 3, NULL, id * 10) AS w")
+        snaps = lh.append(
+            {"ma": (["v"], {"n": F.count_if(F.col("tbl") == "ma"),
+                            "k": "x"}),
+             "mb": (["w", "v"], {"n": F.count("w")}),
+             "mc": (["v"], None)}, rows, tag="tbl")
+        assert sorted(snaps) == ["ma", "mb", "mc"]
+        assert [lh.current_snapshot(t) for t in ("ma", "mb", "mc")] == \
+            [snaps["ma"], snaps["mb"], snaps["mc"]]
+        assert lh.snapshot_meta("ma") == {"n": 3, "k": "x"}
+        assert lh.snapshot_meta("mb") == {"n": 2}
+        assert lh.snapshot_meta("mc") == {}
+        assert lh.read("ma").columns == ["v"]
+        assert sorted(r[0] for r in lh.read("ma").collect()) == [0, 1, 2]
+        assert lh.read("mb").columns == ["w", "v"]
+        assert sorted(tuple(r) for r in lh.read("mb").collect()) == \
+            [(30, 3), (40, 4)]
+        assert lh.read("mc").columns == ["v"] and lh.read("mc").count() == 0
+        assert lh.read_since("mc", None)[0].count() == 0
+        m3 = lh.append("ma", spark.range(7, 8).selectExpr("id AS v"))
+        mid, cur = lh.read_since("ma", None, until=m3)
+        assert mid.count() == 4 and cur == m3
 
     conformance(Lakehouse(spark, str(tmp_path / "conf")))
 
@@ -782,6 +874,17 @@ def test_lakehouse_interface_conformance(spark, tmp_path):
     assert lh.snapshot_meta("t", snap) == {"n": 7}
     assert len(sc.statusTracker().getJobIdsForGroup(
         "conformance-counted-append")) == 1
+    sc.setJobGroup("conformance-counted-multi-append", "counted")
+    try:
+        snaps = lh.append({"a": (["id"], {"n": F.count("id")}),
+                           "b": (["id"], None)},
+                          spark.range(7).selectExpr(
+                              "id", "IF(id < 2, 'a', 'b') AS t"), tag="t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert lh.snapshot_meta("a", snaps["a"]) == {"n": 7}
+    assert len(sc.statusTracker().getJobIdsForGroup(
+        "conformance-counted-multi-append")) == 1
 
     # a data write whose log commit raises leaves no visible snapshot, and
     # the next append and read ignore its orphan data directory
@@ -807,18 +910,31 @@ def test_lakehouse_interface_conformance(spark, tmp_path):
     # the directory Lakehouse reads in the schema its log recorded at
     # commit time: the schema parquet inference gives (nested docs, and the
     # violations and verdicts tables), stored once for same-schema appends;
-    # a log with its schemas stripped reads by inference
+    # a log with its schemas stripped reads by inference. The two output
+    # tables share one write, whose files hold the union of their columns
+    # (an empty part is an empty directory): each table reads its own
+    # columns, typed as the footers of that write infer them
     import json
 
-    from events_validator_spark.plans.pipeline import run_incremental
+    from pyspark.sql.types import StructType
+
+    from events_validator_spark.plans.pipeline import (
+        VERDICT_COLS, VIOLATION_COLS, run_incremental,
+    )
     root = tmp_path / "schema"
     lh = Lakehouse(spark, str(root))
     for _ in range(2):
         lh.append("docs", interleaved_docs(spark, 40))
         run_incremental(lh, "docs", DOC_RULES, str(tmp_path / "out"))
-    for t in ("docs", "docs_violations", "docs_verdicts"):
+    union = spark.read.parquet(*[
+        s["path"] for t in ("docs_violations", "docs_verdicts")
+        for s in lh.snapshots(t)]).schema
+    for t, cols in (("docs", None), ("docs_violations", VIOLATION_COLS),
+                    ("docs_verdicts", VERDICT_COLS)):
         snaps = lh.snapshots(t)
-        inferred = spark.read.parquet(*[s["path"] for s in snaps]).schema
+        inferred = (
+            spark.read.parquet(*[s["path"] for s in snaps]).schema
+            if cols is None else StructType([union[c] for c in cols]))
         assert lh.read(t).schema == inferred
         assert lh.read_since(t, snaps[0]["snapshot_id"])[0].schema == inferred
         assert sum("schema" in s for s in snaps) == 1

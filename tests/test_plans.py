@@ -14,7 +14,10 @@ properties that make the engine survive a 100 TB input:
 * ``dedup.bucket_pairs``' self-join must read its ``capped_buckets``
   shuffle once (exchange reuse), not run the signature pass twice;
 * an incremental tick, a ``Lakehouse`` read, a ``run_validation`` bucket
-  and the PSI operators run pinned numbers of Spark jobs;
+  and the PSI operators run pinned numbers of Spark jobs; a warm tick
+  compiles no generated class, and no pipeline unit caches a plan;
+* ``lsh_topk`` deduplicates bare id pairs, with no vector or norm in the
+  dedup aggregate's input;
 * the referential span scan reads only ``spans.media_ref``, and the typed
   clean-element gate is no larger than its minimal form.
 """
@@ -175,11 +178,9 @@ def _jobs(spark, fn):
     return res, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_incremental_tick_spark_jobs(spark, tmp_path):
-    """One warm ``run_incremental`` tick runs 2 Spark jobs: one commit per
-    output table. The source read infers no schema (the log holds it), and
-    the rows and violations are observed on the verdicts commit. A counting
-    action, or a cursor probe or read that touches data, shows up here."""
+def _ticks(spark, tmp_path, n):
+    """A ``Lakehouse`` with ``n`` ticks run, each over 500 new docs, and a
+    function that appends 500 more docs and runs one more tick."""
     from events_validator_spark.plans.pipeline import run_incremental
     from events_validator_spark.sources.catalog import Lakehouse
     from events_validator_spark.sources.synthetic import (
@@ -187,13 +188,76 @@ def test_incremental_tick_spark_jobs(spark, tmp_path):
     )
     lh = Lakehouse(spark, str(tmp_path / "lake"))
     out = str(tmp_path / "out")
-    lh.append("docs", interleaved_docs(spark, 500))
-    run_incremental(lh, "docs", DOC_RULES, out)
-    lh.append("docs", interleaved_docs(spark, 500))
-    res, jobs = _jobs(spark, lambda: run_incremental(lh, "docs", DOC_RULES,
-                                                     out))
+
+    def append_and_tick(measure=lambda fn: fn()):
+        lh.append("docs", interleaved_docs(spark, 500))
+        return measure(lambda: run_incremental(lh, "docs", DOC_RULES, out))
+
+    for _ in range(n):
+        append_and_tick()
+    return append_and_tick
+
+
+def test_incremental_tick_spark_jobs(spark, tmp_path):
+    """One warm ``run_incremental`` tick runs 1 Spark job: one projection
+    emits the verdict and violation rows, and one write partitioned by
+    their table feeds both output commits. The source read infers no
+    schema (the log holds it), and the rows and violations are observed on
+    that write. A counting action, a cache, a second write, or a cursor
+    probe or read that touches data, shows up here."""
+    res, jobs = _ticks(spark, tmp_path, 1)(lambda fn: _jobs(spark, fn))
     assert res["rows"] == 500 and res["violations"] > 0
-    assert jobs == 2
+    assert jobs == 1
+
+
+def test_warm_tick_compiles_no_code(spark, tmp_path):
+    """A second warm tick compiles no generated class: its generated code
+    equals the previous tick's, because the log rows'
+    ``current_timestamp()``/``current_date()`` sit in the interpreted
+    ``transform`` lambda instead of being inlined into generated code as
+    long/int literals, which made every tick miss the code cache."""
+    codegen = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME())
+    tick = _ticks(spark, tmp_path, 2)
+    before = codegen.getCount()
+    assert tick()["rows"] == 500
+    assert codegen.getCount() - before == 0
+
+
+def test_pipeline_units_cache_nothing(spark, tmp_path, monkeypatch):
+    """A tick, a ``run_validation`` bucket and a stream batch cache no plan:
+    Spark's ``CacheManager`` is empty at every log commit of their one
+    write and after they return."""
+    from events_validator_spark.plans.pipeline import run_validation
+    from events_validator_spark.sources.catalog import Lakehouse
+    from events_validator_spark.sources.synthetic import (
+        DOC_RULES, interleaved_docs,
+    )
+    from events_validator_spark.streaming.stream import run_stream_pipeline
+
+    def empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    spark.catalog.clearCache()
+    seen = []
+    orig = Lakehouse._commit
+
+    def commit(self, table, snaps):
+        seen.append((table, empty()))
+        orig(self, table, snaps)
+
+    monkeypatch.setattr(Lakehouse, "_commit", commit)
+    _ticks(spark, tmp_path, 1)
+    docs = interleaved_docs(spark, 200)
+    run_validation(docs, DOC_RULES, str(tmp_path / "run"), n_buckets=2)
+    src = str(tmp_path / "src")
+    docs.write.parquet(src)
+    run_stream_pipeline(spark, src, docs.schema, DOC_RULES,
+                        str(tmp_path / "stream"),
+                        checkpoint_dir=str(tmp_path / "ck"))
+    assert {t for t, _ in seen} >= {"docs_violations", "docs_verdicts",
+                                    "violations", "verdicts"}
+    assert all(ok for _, ok in seen) and empty(), seen
 
 
 def test_lakehouse_reads_launch_no_spark_job(spark, tmp_path):
@@ -214,10 +278,11 @@ def test_lakehouse_reads_launch_no_spark_job(spark, tmp_path):
 
 @pytest.mark.parametrize("bucket_col", [None, "bucket"])
 def test_run_validation_spark_jobs_per_bucket(spark, tmp_path, bucket_col):
-    """``run_validation`` runs 2 Spark jobs per bucket, its violations and
-    verdicts writes; the bucket's rows, violations and passed counts are
-    observed on the verdicts write. The partition-column path adds one
-    ``distinct`` over the bucket labels (2 jobs under AQE)."""
+    """``run_validation`` runs 1 Spark job per bucket, the one write that
+    feeds its violations and verdicts commits; the bucket's rows,
+    violations and passed counts are observed on that write. The
+    partition-column path adds one ``distinct`` over the bucket labels (2
+    jobs under AQE)."""
     from events_validator_spark.plans.pipeline import run_validation
     from events_validator_spark.sources.synthetic import (
         DOC_RULES, interleaved_docs,
@@ -229,7 +294,7 @@ def test_run_validation_spark_jobs_per_bucket(spark, tmp_path, bucket_col):
         bucket_col=bucket_col))
     assert sum(x["rows"] for x in m["metrics"]) == 400
     assert len(m["completed"]) == 3
-    assert jobs == 2 * 3 + (0 if bucket_col is None else 2)
+    assert jobs == 3 + (0 if bucket_col is None else 2)
 
 
 def test_psi_spark_jobs(spark):
@@ -319,3 +384,35 @@ def test_typed_gate_is_minimal(spark, tmp_path):
         f"AND (s.media_ref IS NULL OR s.media_ref RLIKE '{pattern}' "
         "OR trim(s.media_ref) = '') AND s.offset IS NOT NULL)")))
     assert _node_count(gate) <= _node_count(minimal), gate.sql()
+
+
+def test_lsh_topk_dedups_bare_id_pairs(spark):
+    """``lsh_topk`` deduplicates the candidates of its ``n_tables``
+    signature joins as bare ``(query_id, neighbor_id)`` pairs: no vector or
+    norm column reaches the dedup aggregate, and vectors and norms join
+    after it."""
+    import numpy as np
+
+    from events_validator_spark.operators import similarity
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in v])
+            for i, v in enumerate(rng.standard_normal((40, 8)))]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = corpus.where("vec_id < 4").withColumnRenamed("vec_id",
+                                                           "query_id")
+    out = similarity.lsh_topk(corpus, queries, k=3, dim=8, n_planes=3)
+    inputs = []
+
+    def walk(p):
+        if p.nodeName() == "Aggregate":
+            out_ = p.child().output()
+            inputs.append([out_.apply(i).name() for i in range(out_.size())])
+        ch = p.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+
+    walk(out._jdf.queryExecution().optimizedPlan())
+    assert inputs, "no dedup aggregate"
+    vectors = {"__qvec", "__cvec", "__qn", "__cn"}
+    assert all(not vectors & set(names) for names in inputs), inputs
+    assert 0 < len(out.collect()) <= 12

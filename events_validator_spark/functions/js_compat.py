@@ -118,9 +118,17 @@ def js_number_to_string_sql(x: str) -> str:
             f"transform(array(abs({d})), {a} -> {full})[0])[0]")
 
 
-def js_to_string_sql(c: str, dtype: T.DataType, depth: int = 2) -> str:
+def _array_depth(dtype: T.DataType) -> int:
+    if isinstance(dtype, T.ArrayType):
+        return 1 + _array_depth(dtype.elementType)
+    return 0
+
+
+def js_to_string_sql(c: str, dtype: T.DataType) -> str:
     """JS ``v?.toString()`` of a typed value as SQL text (null → NULL,
-    matching ``?.``)."""
+    matching ``?.``). Recurses on the Spark type, so it ends at the type's
+    finite depth; each nested array's lambda variable is named by its own
+    array depth, which keeps the names distinct per level."""
     null = "CAST(NULL AS STRING)"
     if isinstance(dtype, T.StringType):
         return c
@@ -130,11 +138,9 @@ def js_to_string_sql(c: str, dtype: T.DataType, depth: int = 2) -> str:
     if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
         return js_number_to_string_sql(c)
     if isinstance(dtype, T.ArrayType):
-        if depth <= 0:
-            return "''"  # pathological nesting — JS would keep flattening
-        x = f"_jts{depth}"
+        x = f"_jts{_array_depth(dtype)}"
         # JS Array.prototype.toString: elements joined by ',', null → ''
-        elem = js_to_string_sql(x, dtype.elementType, depth - 1)
+        elem = js_to_string_sql(x, dtype.elementType)
         return (f"CASE WHEN ({c} IS NULL) THEN {null} ELSE array_join("
                 f"transform({c}, {x} -> coalesce({elem}, '')), ',') END")
     if isinstance(dtype, (T.StructType, T.MapType)):

@@ -39,6 +39,7 @@ from events_validator_spark.operators.validation_sql import (
     key_check,
     lit,
     one,
+    reads_string,
     spec_json,
     staged_view,
     typed_scope,
@@ -95,7 +96,7 @@ def _stage_json(df: DataFrame, json_col: str, rule_sets: list[dict],
     keys = sorted({k for rules in rule_sets for k in rules if k != "version"})
     string_keys = {k for rules in rule_sets for k, r in rules.items()
                    if k != "version" and isinstance(r, dict)
-                   and ({"value", "regex", "enum"} & r.keys())}
+                   and reads_string(r)}
     parsed = f"{prefix}_parsed"
     df = df.withColumn(parsed, F.try_parse_json(F.col(json_col)))
     cols, views = {}, {}

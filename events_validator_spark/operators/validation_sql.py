@@ -23,6 +23,12 @@ Two field views share the compiler:
   (``schema_of_variant == 'VOID'`` → ``typeof`` 'object') vs value types,
   exactly matching ``typeof null === 'object'`` (validationHelpers.js:7).
 
+Like the reference, the compiler walks each rule tree once. Every check
+compiles into two forms from the same conditions: its violation rows and
+``ok``, a boolean that is TRUE only when those rows are empty. A typed array
+folds its elements' ``ok`` into one ``forall`` that skips the row build for
+all-clean arrays (the clean-element gate).
+
 The text resolves by column NAME, so a compiled key check is a pure function
 of (field binding, key, rule spec in spec order) and is memoized
 (:func:`key_check`): a tick or batch with the same rules and schema rebuilds
@@ -38,7 +44,7 @@ from __future__ import annotations
 import copy
 import itertools
 import json
-from typing import Callable, Iterator, Optional
+from typing import Callable, Iterator, NamedTuple, Optional
 
 from pyspark.sql import types as T
 
@@ -57,10 +63,6 @@ VIOLATION_ARRAY_DDL = \
 EMPTY = f"CAST(array() AS {VIOLATION_ARRAY_DDL})"
 _NUM_RE = "^(BIGINT|INT|SMALLINT|TINYINT|DOUBLE|FLOAT|DECIMAL)"
 _NULL_S = "CAST(NULL AS STRING)"
-
-# flip to False to disable the typed-array clean-element short-circuit (the
-# equality tests compare both settings; it is part of the memo key)
-_ELEM_OK_GATE = True
 
 
 def lit(s: str | None) -> str:
@@ -98,12 +100,6 @@ def concat(parts: list[str]) -> str:
 
 def _truthy(cond: str) -> str:
     return f"coalesce({cond}, false)"
-
-
-def _never(cond: str) -> str:
-    """cond is not literally TRUE. ``_gate(cond, arr)`` emits rows only for
-    a TRUE cond, so every clean-element complement treats NULL as ok."""
-    return f"(NOT {_truthy(cond)})"
 
 
 def _all(conds: list[str]) -> str:
@@ -338,242 +334,55 @@ def staged_view(struct_name: str, has_string: bool) -> _View:
 
 # ---------------------------------------------------------------------------
 # Checks (validationHelpers.js:130-164)
-# ---------------------------------------------------------------------------
-
-def _compile_scope(rules: dict, scope: Scope, parent: str,
-                ids: Iterator[int]) -> str:
-    """One nested scope's violations: per schema key, in spec order."""
-    parts = [_per_key(scope(key), rule,
-                         f"concat({parent}, {lit('.' + key)})", ids)
-             for key, rule in rules.items() if key != "version"]  # js:134
-    return concat(parts)
-
-
-def _per_key(fv: _View, rule: dict, path: str, ids: Iterator[int]) -> str:
-    """Missing gate, optional-empty skip, then independent value/type/
-    length/regex/enum checks (nested recursion inside the type check).
-
-    A COMPUTED toString that any check reads is let-bound once for the key
-    (``transform(array(s), x -> …)[0]``): smaller text and one evaluation
-    per row instead of one per reference. A plain reference is never bound
-    — that would only add a lambda."""
-    optional = _is_optional(rule)
-    needs_s = bool({"value", "regex", "enum"} & rule.keys()) \
-        and not fv.string_is_ref
-    cv = copy.copy(fv)
-    if needs_s:
-        cv._s = f"_as{next(ids)}"
-    checks: list[str] = []
-    if "value" in rule:
-        checks.append(_check_value(rule, cv, path))
-    if "type" in rule:
-        checks.append(_check_type(rule, cv, path, optional, ids))
-    if "length" in rule:
-        checks.append(_check_length(rule, cv, path))
-    if "regex" in rule:
-        checks.append(_check_regex(rule, cv, path))
-    if "enum" in rule:  # engine extension (north rule): enum membership
-        checks.append(_check_enum(rule, cv, path))
-    body = concat(checks)
-    if needs_s:
-        body = f"transform(array({fv.as_string}), {cv.as_string} -> {body})[0]"
-    # optional + (null | trimmed-empty string) → skip all checks (js:148-153)
-    if optional:
-        skip = f"({fv.is_null} OR {_trimmed_empty(fv)})"
-        return _gate(f"({fv.present} AND (NOT {skip}))", body)
-    missing = one(path, "missing", lit("field present"), lit("field missing"))
-    return f"CASE WHEN (NOT {fv.present}) THEN {missing} ELSE {body} END"
-
-
-def _trimmed_empty(fv: _View, non_null: bool = False) -> str:
-    """value is a string AND trims to '' — via the cheap raw-string accessor
-    (``non_null``: the value is known present, so no coalesce)."""
-    s = fv.str_value if non_null else f"coalesce({fv.str_value}, '')"
-    return f"(({fv.typeof} = 'string') AND (trim({s}) = ''))"
-
-
-def _check_type(rule: dict, fv: _View, path: str, optional: bool,
-                ids: Iterator[int]) -> str:
-    expected = rule["type"]
-    if expected == "string":  # js:10-31 — actual is PLAIN typeof here (js:18)
-        wrong = _gate(f"({fv.typeof} != 'string')",
-                      one(path, "type", lit("string"), fv.typeof))
-        if optional:
-            # js:14 — optional + null → no row even from the type check
-            return _gate(f"(NOT {fv.is_null})", wrong)
-        empty = _gate(_trimmed_empty(fv),
-                      one(path, "type", lit("non-empty string"),
-                          lit("empty string")))
-        return concat([wrong, empty])
-
-    if expected == "array":  # js:33-51
-        not_array = one(path, "type", lit("array"), fv.actual)
-        nested = rule.get("nestedSchema")
-        elems = fv.elements() if nested else None
-        if elems is None:
-            return _gate(f"({fv.actual} != 'array')", not_array)
-        arr, scope_of = elems
-        n = next(ids)
-        e, i = f"_el{n}", f"_ix{n}"
-        ipath = f"concat({path}, '[', CAST({i} AS STRING), ']')"
-        sub = _compile_scope(nested, scope_of(e), ipath, ids)
-        nested_v = f"flatten(transform({arr}, ({e}, {i}) -> {sub}))"
-        if _ELEM_OK_GATE and fv.typed:
-            # clean-element gate (round 6): on the TYPED path most elements
-            # are clean, the per-element CONDITIONS fold to a handful of
-            # cheap comparisons (typeof/actual are literals), and the
-            # violation-row machinery (struct + array + concat per check)
-            # dominated the scan (measured 5.0 s → 0.7 s at 31.5M spans).
-            # `forall(element ok)` short-circuits it for all-clean arrays; a
-            # dirty element falls through to the UNCHANGED full build
-            # (pinned by tests/test_validation.py::test_element_ok_gate_*)
-            all_ok = _all_elements_ok(elems, nested, ids)
-            nested_v = (f"CASE WHEN {_truthy(all_ok)} THEN {EMPTY} "
-                        f"ELSE {nested_v} END")
-        return (f"CASE WHEN ({fv.actual} != 'array') THEN {not_array} "
-                f"ELSE coalesce({nested_v}, {EMPTY}) END")
-
-    if expected == "object":  # js:53-67
-        bad = _gate(f"({fv.is_null} OR ({fv.actual} != 'object'))",
-                    one(path, "type", lit("object"), fv.actual))
-        nested = rule.get("nestedSchema")
-        if not nested:
-            return bad
-        sub = _compile_scope(nested, fv.fields(), path, ids)
-        return f"CASE WHEN {_object_ok(fv)} THEN {sub} ELSE {bad} END"
-
-    # generic (number / boolean / anything): array-aware actual (js:69-73)
-    exp_s = py_js_to_string(expected)
-    return _gate(f"({fv.actual} != {lit(exp_s)})",
-                 one(path, "type", lit(exp_s), fv.actual))
-
-
-def _object_ok(fv: _View) -> str:
-    return (f"({fv.present} AND (NOT {fv.is_null}) "
-            f"AND ({fv.actual} = 'object'))")
-
-
-def _value_neq(rule: dict, fv: _View) -> str:
-    """The value check's failure condition — shared by the violation builder
-    and the clean-element gate so the two can never drift."""
-    expected = rule["value"]
-    expected_s = py_js_to_string(expected)  # driver-side toString
-    if expected_s is None:
-        return f"({fv.as_string} IS NOT NULL)"  # undefined !== undefined
-    str_neq = (f"(({fv.as_string} IS NULL) OR "
-               f"({fv.as_string} != {lit(expected_s)}))")
-    if (isinstance(expected, (int, float)) and not isinstance(expected, bool)
-            and abs(expected) < 1.8e308):  # finite; huge ints: string path
-        # numeric literal fast path: String(x) is injective on doubles, so
-        # for a NUMBER actual, toString equality ⇔ numeric equality — the
-        # (expensive) exact formatter then only evaluates on FAILING rows
-        # (the violation's actual string) and on non-number actuals
-        return (f"CASE WHEN ({fv.typeof} = 'number') "
-                f"THEN ({fv.num_value} != CAST('{float(expected)!r}' AS DOUBLE)) "
-                f"ELSE {str_neq} END")
-    return str_neq
-
-
-def _check_value(rule: dict, fv: _View, path: str) -> str:
-    expected_s = py_js_to_string(rule["value"])
-    return _gate(_value_neq(rule, fv),
-                 one(path, "value", lit(expected_s), fv.as_string))
-
-
-def _length_neq(rule: dict, fv: _View) -> tuple[str, str]:
-    """(failure condition, JS-coerced actual length)."""
-    expected = int(rule["length"])  # parseInt (js:77)
-    # (v || []).length (js:78): EVERY falsy value coerces to [] — null, false,
-    # 0, NaN all report length 0 ('' is falsy too but its own length is 0);
-    # non-string/array truthy values have undefined length
-    actual = (f"CASE WHEN ({fv.is_null} OR {fv.is_falsy}) THEN 0 "
-              f"ELSE {fv.js_length} END")
-    return f"(({actual} IS NULL) OR ({actual} != {expected}))", actual
-
-
-def _check_length(rule: dict, fv: _View, path: str) -> str:
-    neq, actual = _length_neq(rule, fv)
-    return _gate(neq, one(path, "length", lit(str(int(rule["length"]))),
-                          actual))
-
-
-def _enum_ok(rule: dict, fv: _View) -> tuple[str, str]:
-    """(membership condition, expected list) of the enum check — by JS
-    toString equality, consistent with the reference's value check."""
-    allowed = [py_js_to_string(e) for e in rule["enum"]]
-    non_null = [a for a in allowed if a is not None]
-    ok = (f"({fv.as_string} IN ({', '.join(lit(a) for a in non_null)}))"
-          if non_null else "false")
-    if len(non_null) < len(allowed):
-        ok = f"({ok} OR ({fv.as_string} IS NULL))"
-    return ok, ",".join("" if a is None else a for a in allowed)
-
-
-def _check_enum(rule: dict, fv: _View, path: str) -> str:
-    ok, expected = _enum_ok(rule, fv)
-    return _gate(_never(ok), one(path, "enum", lit(expected), fv.as_string))
-
-
-def _regex_java_pattern(rule: dict) -> str:
-    """Compile-time-validated Java translation of the rule's JS regex."""
-    pattern = rule["regex"]
-    java_pat = js_regex_to_java(pattern)
-    # fail at COMPILE time (driver), not per-row at runtime: one JS-legal but
-    # Java-illegal pattern in a rule spec must not kill a 10^12-row job mid-scan
-    err = validate_java_regex(java_pat)
-    if err is not None:
-        raise ValueError(
-            f"rule regex {pattern!r} does not compile as a Java regex "
-            f"({err}); rewrite it in the common JS/Java subset "
-            "(see functions/js_compat.js_regex_to_java)")
-    return java_pat
-
-
-def _regex_empty(fv: _View) -> str:
-    return f"({_trimmed_empty(fv)} OR {fv.is_null})"
-
-
-def _check_regex(rule: dict, fv: _View, path: str) -> str:
-    """``fv.as_string`` is a plain reference here: :func:`_per_key` let-binds
-    a computed toString before any check reads it."""
-    pattern = rule["regex"]
-    java_pat = _regex_java_pattern(rule)
-    s = fv.as_string
-    fail = _gate(f"(NOT (coalesce({s}, 'undefined') RLIKE {lit(java_pat)}))",
-                 one(path, "regex", lit(pattern), s))
-    return (f"CASE WHEN {_regex_empty(fv)} "
-            f"THEN {one(path, 'regex', lit(pattern), lit('empty_value'))} "
-            f"ELSE {fail} END")
-
-
-# ---------------------------------------------------------------------------
-# Clean-element gate (typed path only): boolean complements of the checks
-# above. True ⇒ the checks emit NO violation (it may be conservatively false
-# — that only costs the full build — but never true for a violating field).
-# It runs interpreted inside `forall`, once per element, so it emits only the
-# conjuncts a typed value needs. Its views are typed or absent: `typeof` and
-# `actual` are literals, `is_null` is false and `present` is never NULL.
-#   R1  inside a required key's body, or an optional key's body past its
-#       skip, the value is non-NULL: no coalesce(x, …) wrappers there;
+#
+# Every check compiles once into both of its forms (:class:`_Check`): ``rows``
+# (the violations) and ``ok`` (the clean-element gate's predicate, TRUE only
+# when ``rows`` is empty; FALSE is always allowed — it only costs the full
+# build). ``ok`` assumes the key is present (``_per_key`` adds presence) and
+# is read only over typed or absent views, where `typeof` and `actual` are
+# literals and `is_null` is false. It runs interpreted inside `forall`, once
+# per element, so it emits only the conjuncts a typed value needs:
+#   R1  past presence the value is non-NULL: no coalesce(x, …) wrappers;
 #   R2  an optional key's skip already covers NULL and trimmed-empty: its
-#       body drops the regex and type empty guards;
+#       checks drop the regex and type empty guards (``no_blank_guard``);
 #   R3  a typed-string enum whose members are all non-NULL and non-blank
 #       implies presence and non-blankness: a required key emits only
-#       coalesce(x IN (…), false) for them;
-#   R4  an optional key is `NOT present OR body_ok OR skip`, so the common
-#       case short-circuits first.
+#       coalesce(x IN (…), false) for them (``implied``);
+#   R4  an optional key is `NOT present OR ok OR skip`, so the common case
+#       short-circuits first.
 # ---------------------------------------------------------------------------
 
-def _elements_ok(rules: dict, scope: Scope, ids: Iterator[int]) -> str:
-    return _all([_per_key_ok(scope(key), rule, ids)
-                 for key, rule in rules.items() if key != "version"])
+class _Check(NamedTuple):
+    rows: str
+    ok: str
 
 
-def _all_elements_ok(elems: tuple[str, Callable[[str], Scope]], rules: dict,
-                     ids: Iterator[int]) -> str:
-    arr, scope_of = elems
-    g = f"_ok{next(ids)}"
-    return f"forall({arr}, {g} -> {_elements_ok(rules, scope_of(g), ids)})"
+def _fail(cond: str, row: str) -> _Check:
+    """``row`` when cond is TRUE; ok when it is not (a NULL cond emits no
+    row, so it counts as ok)."""
+    return _Check(_gate(cond, row), f"(NOT {_truthy(cond)})")
+
+
+def _mismatch(actual: str, expected: str, row: str) -> _Check:
+    """A type check: ``row`` when ``actual != expected``. A `typeof`/`actual`
+    is never NULL, so ok is the plain equality."""
+    return _Check(_gate(f"({actual} != {expected})", row),
+                  f"({actual} = {expected})")
+
+
+def reads_string(rule: dict) -> bool:
+    """Whether a check of ``rule`` reads the value's JS toString."""
+    return bool({"value", "regex", "enum"} & rule.keys())
+
+
+def _compile_scope(rules: dict, scope: Scope, parent: str,
+                   ids: Iterator[int]) -> _Check:
+    """One nested scope: per schema key, in spec order."""
+    checks = [_per_key(scope(key), rule,
+                       f"concat({parent}, {lit('.' + key)})", ids)
+              for key, rule in rules.items() if key != "version"]  # js:134
+    return _Check(concat([c.rows for c in checks]),
+                  _all([c.ok for c in checks]))
 
 
 def _enum_implies_present(rule: dict, fv: _View) -> bool:
@@ -585,65 +394,200 @@ def _enum_implies_present(rule: dict, fv: _View) -> bool:
                     for a in map(py_js_to_string, rule["enum"])))
 
 
-def _per_key_ok(fv: _View, rule: dict, ids: Iterator[int]) -> str:
+def _per_key(fv: _View, rule: dict, path: str, ids: Iterator[int]) -> _Check:
+    """Missing gate, optional-empty skip, then independent value/type/
+    length/regex/enum checks (nested recursion inside the type check).
+
+    A COMPUTED toString that any check reads is let-bound once for the key
+    (``transform(array(s), x -> …)[0]``), in both forms: smaller text and
+    one evaluation per row instead of one per reference. A plain reference
+    is never bound — that would only add a lambda."""
     optional = _is_optional(rule)
     implied = not optional and _enum_implies_present(rule, fv)
     no_blank_guard = optional or implied                     # R2 / R3
-    oks: list[str] = []
-    if "enum" in rule:
-        ok = _enum_ok(rule, fv)[0]
-        oks.append(_truthy(ok) if implied else ok)           # R3 / R1
+    bind = reads_string(rule) and not fv.string_is_ref
+    cv = copy.copy(fv)
+    if bind:
+        cv._s = f"_as{next(ids)}"
+    checks: list[_Check] = []
     if "value" in rule:
-        oks.append(_never(_value_neq(rule, fv)))
+        checks.append(_check_value(rule, cv, path))
     if "type" in rule:
-        oks.append(_type_ok(rule, fv, no_blank_guard, ids))
+        checks.append(_check_type(rule, cv, path, optional, no_blank_guard,
+                                  ids))
     if "length" in rule:
-        oks.append(_never(_length_neq(rule, fv)[0]))
+        checks.append(_check_length(rule, cv, path))
     if "regex" in rule:
-        match = f"({fv.as_string} RLIKE {lit(_regex_java_pattern(rule))})"
-        oks.append(match if no_blank_guard else
-                   f"((NOT {_trimmed_empty(fv, True)}) AND {match})")
-    body_ok = _all(oks)
-    if optional:                                             # R4
-        return (f"((NOT {fv.present}) OR {body_ok} OR "
-                f"{_trimmed_empty(fv, True)})")
-    return body_ok if implied else f"({fv.present} AND {body_ok})"
+        checks.append(_check_regex(rule, cv, path, no_blank_guard))
+    if "enum" in rule:  # engine extension (north rule): enum membership
+        checks.append(_check_enum(rule, cv, path, implied))
+    rows, ok = concat([c.rows for c in checks]), _all([c.ok for c in checks])
+    if bind:
+        rows, ok = (f"transform(array({fv.as_string}), {cv.as_string} -> {b})"
+                    f"[0]" for b in (rows, ok))
+    # optional + (null | trimmed-empty string) → skip all checks (js:148-153)
+    if optional:
+        skip = f"({fv.is_null} OR {_trimmed_empty(fv)})"
+        return _Check(_gate(f"({fv.present} AND (NOT {skip}))", rows),
+                      f"((NOT {fv.present}) OR {ok} OR "       # R4
+                      f"{_trimmed_empty(fv, True)})")
+    missing = one(path, "missing", lit("field present"), lit("field missing"))
+    return _Check(
+        f"CASE WHEN (NOT {fv.present}) THEN {missing} ELSE {rows} END",
+        ok if implied else f"({fv.present} AND {ok})")
 
 
-def _type_ok(rule: dict, fv: _View, no_blank_guard: bool,
-             ids: Iterator[int]) -> str:
-    """The type check passes on a present typed value (R1: no NULL case)."""
+def _trimmed_empty(fv: _View, non_null: bool = False) -> str:
+    """value is a string AND trims to '' — via the cheap raw-string accessor
+    (``non_null``: the value is known present, so no coalesce)."""
+    s = fv.str_value if non_null else f"coalesce({fv.str_value}, '')"
+    return f"(({fv.typeof} = 'string') AND (trim({s}) = ''))"
+
+
+def _check_type(rule: dict, fv: _View, path: str, optional: bool,
+                no_blank_guard: bool, ids: Iterator[int]) -> _Check:
     expected = rule["type"]
-    if expected == "string":
-        ok = f"({fv.typeof} = 'string')"
-        if no_blank_guard:
-            return ok
-        return f"({ok} AND (NOT {_trimmed_empty(fv, True)}))"
-    if expected == "array":
-        is_array = f"({fv.actual} = 'array')"
+    if expected == "string":  # js:10-31 — actual is PLAIN typeof here (js:18)
+        wrong = _mismatch(fv.typeof, "'string'",
+                          one(path, "type", lit("string"), fv.typeof))
+        if optional:
+            # js:14 — optional + null → no row even from the type check
+            return _Check(_gate(f"(NOT {fv.is_null})", wrong.rows), wrong.ok)
+        empty = _gate(_trimmed_empty(fv),
+                      one(path, "type", lit("non-empty string"),
+                          lit("empty string")))
+        ok = wrong.ok if no_blank_guard else \
+            f"({wrong.ok} AND (NOT {_trimmed_empty(fv, True)}))"
+        return _Check(concat([wrong.rows, empty]), ok)
+
+    if expected == "array":  # js:33-51
+        not_array = one(path, "type", lit("array"), fv.actual)
+        wrong = _mismatch(fv.actual, "'array'", not_array)
         nested = rule.get("nestedSchema")
         elems = fv.elements() if nested else None
         if elems is None:
-            return is_array
-        return f"({is_array} AND {_truthy(_all_elements_ok(elems, nested, ids))})"
-    if expected == "object":
-        is_object = f"({fv.actual} = 'object')"
+            return wrong
+        # one element scope, one lambda variable, both forms
+        arr, scope_of = elems
+        n = next(ids)
+        e, i = f"_el{n}", f"_ix{n}"
+        ipath = f"concat({path}, '[', CAST({i} AS STRING), ']')"
+        sub = _compile_scope(nested, scope_of(e), ipath, ids)
+        rows = f"flatten(transform({arr}, ({e}, {i}) -> {sub.rows}))"
+        all_ok = _truthy(f"forall({arr}, {e} -> {sub.ok})")
+        if fv.typed:
+            # clean-element gate (round 6): on the TYPED path most elements
+            # are clean, the per-element ok folds to a handful of cheap
+            # comparisons (typeof/actual are literals), and the violation-row
+            # machinery (struct + array + concat per check) dominated the
+            # scan (measured 5.0 s → 0.7 s at 31.5M spans). `forall(ok)`
+            # short-circuits it for all-clean arrays; a dirty element falls
+            # through to the full build (pinned against the oracle by
+            # tests/test_validation.py::test_element_ok_gate_matches_oracle)
+            rows = f"CASE WHEN {all_ok} THEN {EMPTY} ELSE {rows} END"
+        return _Check(f"CASE WHEN ({fv.actual} != 'array') "
+                      f"THEN {not_array} ELSE coalesce({rows}, {EMPTY}) END",
+                      f"({wrong.ok} AND {all_ok})")
+
+    if expected == "object":  # js:53-67
+        bad = _fail(f"({fv.is_null} OR ({fv.actual} != 'object'))",
+                    one(path, "type", lit("object"), fv.actual))
         nested = rule.get("nestedSchema")
         if not nested:
-            return is_object
-        return f"({is_object} AND {_elements_ok(nested, fv.fields(), ids)})"
-    return f"({fv.actual} = {lit(py_js_to_string(expected))})"
+            return bad
+        sub = _compile_scope(nested, fv.fields(), path, ids)
+        is_object = (f"({fv.present} AND (NOT {fv.is_null}) "
+                     f"AND ({fv.actual} = 'object'))")
+        return _Check(f"CASE WHEN {is_object} THEN {sub.rows} "
+                      f"ELSE {bad.rows} END", f"({bad.ok} AND {sub.ok})")
+
+    # generic (number / boolean / anything): array-aware actual (js:69-73)
+    exp_s = py_js_to_string(expected)
+    return _mismatch(fv.actual, lit(exp_s),
+                     one(path, "type", lit(exp_s), fv.actual))
+
+
+def _check_value(rule: dict, fv: _View, path: str) -> _Check:
+    expected = rule["value"]
+    expected_s = py_js_to_string(expected)  # driver-side toString
+    row = one(path, "value", lit(expected_s), fv.as_string)
+    if expected_s is None:
+        # undefined !== undefined
+        return _fail(f"({fv.as_string} IS NOT NULL)", row)
+    neq = (f"(({fv.as_string} IS NULL) OR "
+           f"({fv.as_string} != {lit(expected_s)}))")
+    if (isinstance(expected, (int, float)) and not isinstance(expected, bool)
+            and abs(expected) < 1.8e308):  # finite; huge ints: string path
+        # numeric literal fast path: String(x) is injective on doubles, so
+        # for a NUMBER actual, toString equality ⇔ numeric equality — the
+        # (expensive) exact formatter then only evaluates on FAILING rows
+        # (the violation's actual string) and on non-number actuals
+        neq = (f"CASE WHEN ({fv.typeof} = 'number') "
+               f"THEN ({fv.num_value} != CAST('{float(expected)!r}' AS DOUBLE)) "
+               f"ELSE {neq} END")
+    return _fail(neq, row)
+
+
+def _check_length(rule: dict, fv: _View, path: str) -> _Check:
+    expected = int(rule["length"])  # parseInt (js:77)
+    # (v || []).length (js:78): EVERY falsy value coerces to [] — null, false,
+    # 0, NaN all report length 0 ('' is falsy too but its own length is 0);
+    # non-string/array truthy values have undefined length
+    actual = (f"CASE WHEN ({fv.is_null} OR {fv.is_falsy}) THEN 0 "
+              f"ELSE {fv.js_length} END")
+    return _fail(f"(({actual} IS NULL) OR ({actual} != {expected}))",
+                 one(path, "length", lit(str(expected)), actual))
+
+
+def _check_enum(rule: dict, fv: _View, path: str, implied: bool) -> _Check:
+    """Membership by JS toString equality, consistent with the reference's
+    value check."""
+    allowed = [py_js_to_string(e) for e in rule["enum"]]
+    non_null = [a for a in allowed if a is not None]
+    member = (f"({fv.as_string} IN ({', '.join(lit(a) for a in non_null)}))"
+              if non_null else "false")
+    if len(non_null) < len(allowed):
+        member = f"({member} OR ({fv.as_string} IS NULL))"
+    expected = ",".join("" if a is None else a for a in allowed)
+    return _Check(_gate(f"(NOT {_truthy(member)})",
+                        one(path, "enum", lit(expected), fv.as_string)),
+                  _truthy(member) if implied else member)      # R3 / R1
+
+
+def _check_regex(rule: dict, fv: _View, path: str,
+                 no_blank_guard: bool) -> _Check:
+    """``fv.as_string`` is a plain reference here: :func:`_per_key` let-binds
+    a computed toString before any check reads it."""
+    pattern = rule["regex"]
+    java_pat = js_regex_to_java(pattern)
+    # fail at COMPILE time (driver), not per-row at runtime: one JS-legal but
+    # Java-illegal pattern in a rule spec must not kill a 10^12-row job mid-scan
+    err = validate_java_regex(java_pat)
+    if err is not None:
+        raise ValueError(
+            f"rule regex {pattern!r} does not compile as a Java regex "
+            f"({err}); rewrite it in the common JS/Java subset "
+            "(see functions/js_compat.js_regex_to_java)")
+    s = fv.as_string
+    fail = _gate(f"(NOT (coalesce({s}, 'undefined') RLIKE {lit(java_pat)}))",
+                 one(path, "regex", lit(pattern), s))
+    match = f"({s} RLIKE {lit(java_pat)})"
+    return _Check(f"CASE WHEN ({_trimmed_empty(fv)} OR {fv.is_null}) "
+                  f"THEN {one(path, 'regex', lit(pattern), lit('empty_value'))} "
+                  f"ELSE {fail} END",
+                  match if no_blank_guard
+                  else f"((NOT {_trimmed_empty(fv, True)}) AND {match})")
 
 
 # ---------------------------------------------------------------------------
 # Per-key memo
 # ---------------------------------------------------------------------------
 
-# (gate flag, field binding, key, rule spec) → check text. Text, not a
-# Column: it holds no JVM object, so it is valid in any session, and F.expr
-# parses lazily on every plan build anyway (a cached Column would not skip
-# the parse). A hit skips the text generation and the regex compile checks
-# on the JVM. Bounded so unbounded rule-set churn cannot leak.
+# (field binding, key, rule spec) → check text. Text, not a Column: it holds
+# no JVM object, so it is valid in any session, and F.expr parses lazily on
+# every plan build anyway (a cached Column would not skip the parse). A hit
+# skips the text generation and the regex compile checks on the JVM. Bounded
+# so unbounded rule-set churn cannot leak.
 _MEMO: dict = {}
 _MEMO_MAX = 8192
 
@@ -656,10 +600,10 @@ def spec_json(rule: dict) -> str:
 
 def key_check(key: str, rule: dict, fv: _View) -> str:
     """One top-level key's full violations expression, memoized."""
-    mk = (_ELEM_OK_GATE, fv.binding, key, spec_json(rule))
+    mk = (fv.binding, key, spec_json(rule))
     sql = _MEMO.get(mk)
     if sql is None:
-        sql = _per_key(fv, rule, lit(key), itertools.count())
+        sql = _per_key(fv, rule, lit(key), itertools.count()).rows
         if len(_MEMO) >= _MEMO_MAX:
             _MEMO.clear()
         _MEMO[mk] = sql

@@ -16,12 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from events_validator_spark.operators.validation import validate_typed
 
 
-def validate_stream(stream_df: DataFrame, rules: dict) -> DataFrame:
-    """Attach the compiled violations column to a streaming DataFrame —
-    stateless, so it composes with any downstream sink/mode."""
-    return validate_typed(stream_df, rules)
-
-
 def streaming_verdict_counts(validated: DataFrame, ts_col: str = "ts",
                              window: str = "1 minute",
                              watermark: str = "5 minutes") -> DataFrame:
@@ -83,7 +77,7 @@ def run_stream_to_memory(spark: SparkSession, source_dir: str, schema,
     sink and run it to completion (sandbox harness; a real deployment points
     readStream at Kafka/Iceberg and writeStream at the violations table)."""
     src = spark.readStream.schema(schema).parquet(source_dir)
-    validated = validate_stream(src, rules)
+    validated = validate_typed(src, rules)
     out = validated.select(
         "*", (F.size("violations") == 0).alias("passed"))
     q = (out.writeStream.format("memory").queryName(query_name)
@@ -128,7 +122,7 @@ def run_stream_pipeline(spark: SparkSession, source_dir: str, schema,
     from events_validator_spark.sources.catalog import Lakehouse
     lakehouse = Lakehouse(spark, out_dir)
     src = spark.readStream.schema(schema).parquet(source_dir)
-    validated = validate_stream(src, rules)
+    validated = validate_typed(src, rules)
     source_columns = [f.name for f in schema.fields]
     seen = {"n": 0}
 

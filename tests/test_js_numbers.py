@@ -114,3 +114,33 @@ def test_sql_text_variant_tostring_matches_python_oracle(spark):
            for r in df.select("i", F.expr(txt).alias("u")).collect()}
     for i, s in enumerate(payloads):
         assert got[i] == py_js_to_string(json.loads(s)), s
+
+
+def test_typed_tostring_recurses_to_any_array_depth(spark):
+    """The typed toString (js_compat.js_to_string_sql) recurses on the Spark
+    type, so nested arrays print as JS prints them at every depth: elements
+    joined by ',' at each level, null and empty elements as ''."""
+    from events_validator_spark.functions.js_compat import js_to_string_sql
+    cases = [
+        ("array(array(array(1)))", [[[1]]]),
+        ("array(array(array(1, 2), array(3)), array(array(CAST(NULL AS INT))))",
+         [[[1, 2], [3]], [[None]]]),
+        ("array(array(array(array(1))), array(array(array(2, NULL))))",
+         [[[[1]]], [[[2, None]]]]),
+        ("array(array(array(1.5D, 0.1D)), array(array(1e21D, NULL)))",
+         [[[1.5, 0.1]], [[1e21, None]]]),
+        ("array(array(array(array(2.5e22D, -0.0D), array(1e-7D))))",
+         [[[[2.5e22, -0.0], [1e-7]]]]),
+        ("array(array(array(NULL)))", [[[None]]]),
+        ("array(array(array(array(NULL, NULL)), CAST(NULL AS "
+         "array<array<void>>)))", [[[[None, None]], None]]),
+        ("array(array(), array(1))", [[], [1]]),
+        ("CAST(NULL AS array<array<array<int>>>)", None),
+    ]
+    df = spark.range(1).select(
+        *[F.expr(sql).alias(f"c{i}") for i, (sql, _) in enumerate(cases)])
+    row = df.select(*[F.expr(js_to_string_sql(f"c{i}", df.schema[f"c{i}"]
+                                              .dataType)).alias(f"c{i}")
+                      for i in range(len(cases))]).first()
+    for i, (sql, value) in enumerate(cases):
+        assert row[f"c{i}"] == py_js_to_string(value), sql

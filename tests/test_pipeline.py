@@ -308,9 +308,8 @@ def test_streaming_stateful_dedup(spark, tmp_path):
 
 def test_streaming_windowed_verdicts_with_watermark(spark, tmp_path):
     from datetime import datetime
-    from events_validator_spark.streaming.stream import (
-        streaming_verdict_counts, validate_stream,
-    )
+    from events_validator_spark.operators.validation import validate_typed
+    from events_validator_spark.streaming.stream import streaming_verdict_counts
     rules = {"kind": {"type": "string"}}
     rows = [(datetime(2024, 1, 1, 0, 0, 30), "text"),
             (datetime(2024, 1, 1, 0, 0, 40), None),      # fails (missing)
@@ -320,7 +319,7 @@ def test_streaming_windowed_verdicts_with_watermark(spark, tmp_path):
     src = str(tmp_path / "wsrc")
     df.write.parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
-    agg = streaming_verdict_counts(validate_stream(stream, rules),
+    agg = streaming_verdict_counts(validate_typed(stream, rules),
                                    ts_col="ts", window="1 minute",
                                    watermark="5 minutes")
     q = (agg.writeStream.format("memory").queryName("t_windows")

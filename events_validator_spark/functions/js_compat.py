@@ -212,6 +212,31 @@ def py_js_to_string(v: object) -> str | None:
 
 
 # ---------------------------------------------------------------------------
+# Whitespace
+# ---------------------------------------------------------------------------
+
+# what JS String.prototype.trim strips: ECMA-262 WhiteSpace (TAB, VT, FF,
+# ZWNBSP U+FEFF and every Unicode "Zs" space) and LineTerminator (LF, CR,
+# LS, PS). Python's str.strip() differs both ways: it strips U+001C-U+001F
+# and U+0085, and keeps U+FEFF.
+JS_WHITESPACE = ("\t\n\v\f\r \xa0\u1680"
+                 + "".join(map(chr, range(0x2000, 0x200B)))
+                 + "\u2028\u2029\u202f\u205f\u3000\ufeff")
+
+
+def js_trim(s: str) -> str:
+    """JS ``s.trim()``."""
+    return s.strip(JS_WHITESPACE)
+
+
+def js_trim_sql(s: str) -> str:
+    """JS ``s.trim()`` of the SQL string ``s`` (the set as ``\\uXXXX``
+    escapes, so the text stays ASCII)."""
+    chars = "".join(f"\\u{ord(c):04x}" for c in JS_WHITESPACE)
+    return f"trim(BOTH '{chars}' FROM {s})"
+
+
+# ---------------------------------------------------------------------------
 # Regex dialect
 # ---------------------------------------------------------------------------
 

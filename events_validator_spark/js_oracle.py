@@ -11,7 +11,8 @@ Pinned quirks (see SURVEY.md §2.2 and FIXTURES.md §3):
   * open world: event keys absent from the schema are ignored (js:133)
   * the reserved key ``version`` is never validated (js:134)
   * ``optional: true`` OR ``required: false`` both mean optional (js:12,140)
-  * optional + (missing | null | ''-after-trim) → no rows (js:148-153)
+  * optional + (missing | null | ''-after-trim) → no rows (js:148-153); trim is
+    JS ``String.prototype.trim`` (``js_compat.js_trim``), not ``str.strip()``
   * missing required key → ('missing', 'field present', 'field missing') (js:142-145)
   * required string '' / '  ' → ('type', 'non-empty string', 'empty string') (js:21-26)
   * JS ``typeof null === 'object'`` → null for number/boolean yields actual 'object'
@@ -33,6 +34,8 @@ from __future__ import annotations
 
 import re
 from typing import Any
+
+from events_validator_spark.functions.js_compat import js_trim
 
 # A violation row is (field_path, error_type, expected, actual) — all str-or-None,
 # matching logError's ``expected?.toString() / actual?.toString()``.
@@ -100,7 +103,7 @@ def check_with_schema(schema: dict, data: Any, parent_path: str = "") -> list[Vi
                 out.append((path, "missing", "field present", "field missing"))
             continue
         val = data[key]
-        if optional and (val is None or (isinstance(val, str) and val.strip() == "")):
+        if optional and (val is None or (isinstance(val, str) and js_trim(val) == "")):
             continue  # js:148-153
         if "value" in rule:
             out.extend(_check_value(rule, val, path))
@@ -131,7 +134,7 @@ def _check_type(rule: dict, val: Any, path: str) -> list[Violation]:
             return []
         if not isinstance(val, str):
             return [(path, "type", "string", js_typeof(val))]  # plain typeof, js:18
-        if val.strip() == "":
+        if js_trim(val) == "":
             if _is_optional(rule):
                 return []
             return [(path, "type", "non-empty string", "empty string")]
@@ -187,7 +190,7 @@ def _check_length(rule: dict, val: Any, path: str) -> list[Violation]:
 
 def _check_regex(rule: dict, val: Any, path: str) -> list[Violation]:
     pattern = rule["regex"]  # js:113-127
-    if (isinstance(val, str) and val.strip() == "") or val is None:
+    if (isinstance(val, str) and js_trim(val) == "") or val is None:
         return [(path, "regex", pattern, "empty_value")]
     # String(actual) coercion (js:124): only a true undefined becomes
     # 'undefined' — an empty toString (e.g. String([]) === '') stays ''

@@ -1,64 +1,39 @@
-"""Uniqueness constraint: duplicate-key detection with explicit skew defusal.
+"""Uniqueness constraint: duplicate-key detection, skew-safe by construction.
 
-The north rule mandates salted two-phase aggregation: a hot ``doc_id`` (the
-synthetic table puts ~5% of all rows on one key) would otherwise hash every
-duplicate into a single reducer. Phase 1 aggregates on (key, salt) — the hot
-key's rows spread over ``n_salts`` reducers — phase 2 merges the per-salt
-partial counts. For plain counts Spark's map-side partial aggregation already
-helps; the explicit salt also covers aggregates that are NOT algebraic
-(collect of examples, first-seen payloads) and makes the shuffle key
-cardinality explicit and tunable. AQE skew-join handling stays on as backstop
+A hot ``doc_id`` (the synthetic table puts ~5% of all rows on one key) must
+not hash every duplicate row into a single reducer. For the duplicate COUNT
+the explicit skew handling is Spark's map-side partial aggregation: a count
+is algebraic, so each map task combines its rows per key before the shuffle,
+and a reducer receives at most one row per (key, map task) however hot the
+key. A partitioning step is added only where it measurably helps ("To
+Partition, or Not to Partition", SIGMOD 2021); a salted second phase would
+add a second shuffle for the same counts.
+Aggregates that are NOT algebraic (collect of examples, first-seen payloads)
+have no map-side combine and keep an explicit content salt
+(:func:`salted_collect`). AQE skew-join handling stays on as backstop
 (session.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-
-def _task_salt(n_salts: int) -> Column:
-    """Deterministic task-local salt in [0, n_salts).
-
-    ``spark_partition_id()`` is a pure function of the task's partition
-    index: a map task recomputed after a fetch failure gets the SAME index,
-    so rows route to the same phase-1 reducers — unlike
-    ``monotonically_increasing_id``/``rand``, whose values depend on
-    within-partition row order (nondeterministic after an upstream shuffle)
-    and can duplicate or drop rows on a stage retry (SPARK-23207 class;
-    ADVICE r4). The projection references NO payload columns — column
-    pruning reaches the scan.
-
-    CAVEAT: on input CLUSTERED by the key (e.g. parquet sorted by it), a
-    hot key occupies few partitions and gets few distinct salts. That is
-    fine for algebraic aggregates (count/sum partially aggregate map-side,
-    so a reducer receives at most one row per (key, map-task) regardless of
-    the salt), but NOT for :func:`salted_collect` — which therefore salts
-    on row CONTENT instead (see its docstring).
-    """
-    return F.pmod(F.spark_partition_id(), F.lit(n_salts)).alias("__salt")
+from pyspark.sql import DataFrame, functions as F
 
 
 def duplicate_keys(df: DataFrame, keys: list[str],
                    n_salts: int = 32) -> DataFrame:
     """Keys appearing more than once → (keys..., dup_count).
 
-    Two-phase salted aggregation with a deterministic task-local salt
-    (:func:`_task_salt`). The salt only routes rows between phase-1
-    reducers; the phase-2 SUM makes the output identical for ANY salt
-    assignment, so results stay deterministic across reruns, resume, and
-    parallelism (pinned by the determinism audit).
+    One aggregate: map-side partial counts, one shuffle on the keys, then
+    the merge of the partial counts (see the module docstring for why no
+    salt). ``n_salts`` is unused; it is accepted for callers written
+    against the earlier salted form.
     """
-    salt = _task_salt(n_salts)
-    phase1 = (df.select(*keys, salt)
-              .groupBy(*keys, "__salt")
-              .agg(F.count(F.lit(1)).alias("__partial")))
-    return (phase1.groupBy(*keys)
-            .agg(F.sum("__partial").alias("dup_count"))
+    return (df.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("dup_count"))
             .where(F.col("dup_count") > 1))
 
 
-def duplicate_rows(df: DataFrame, keys: list[str],
-                   n_salts: int = 32) -> DataFrame:
+def duplicate_rows(df: DataFrame, keys: list[str]) -> DataFrame:
     """All rows whose key is duplicated, annotated with dup_count.
 
     No hard broadcast hint (VERDICT r3 #3): the dup-key set is usually tiny,
@@ -66,7 +41,7 @@ def duplicate_rows(df: DataFrame, keys: list[str],
     when it fits (session.py's 64 MB threshold) and otherwise shuffles on the
     key columns — never a fact-table self-join either way.
     """
-    dups = duplicate_keys(df, keys, n_salts)
+    dups = duplicate_keys(df, keys)
     return df.join(dups, on=keys, how="inner")
 
 
@@ -118,10 +93,9 @@ def naive_collect(df: DataFrame, keys: list[str],
             .agg(F.collect_list(payload_col).alias(f"{payload_col}s")))
 
 
-def uniqueness_violations(df: DataFrame, keys: list[str],
-                          n_salts: int = 32) -> DataFrame:
+def uniqueness_violations(df: DataFrame, keys: list[str]) -> DataFrame:
     """Duplicate keys in the engine's violation-row shape (error_type='unique')."""
-    dups = duplicate_keys(df, keys, n_salts)
+    dups = duplicate_keys(df, keys)
     key_str = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
     return dups.select(
         key_str.alias("field"),

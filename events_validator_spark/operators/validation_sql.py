@@ -52,6 +52,8 @@ from events_validator_spark.functions.js_compat import (
     js_number_to_string_sql,
     js_regex_to_java,
     js_to_string_sql,
+    js_trim,
+    js_trim_sql,
     py_js_to_string,
     static_js_actual,
     static_js_typeof,
@@ -243,24 +245,74 @@ def _variant_typeof(v: str, sv: str, array_aware: bool) -> str:
             f"ELSE 'object' END")
 
 
-def variant_to_string_sql(v: str, depth: int = 3) -> str:
-    """JS ``v?.toString()`` over a VARIANT value."""
-    sv = f"schema_of_variant({v})"
-    num_s = js_number_to_string_sql(f"try_variant_get({v}, '$', 'double')")
-    if depth <= 0:
-        arr_s = "''"
+# the deepest array nesting the VARIANT toString prints (see
+# variant_to_string_sql); each level adds about 450 characters of text, and
+# at 16 levels the analyzer stops at its 100-iteration limit
+D = 8
+
+
+def _element_pairs(x: str) -> str:
+    """The elements of the array variant ``x``, each paired with its
+    ``schema_of_variant`` (computed once per element, read by every later
+    test)."""
+    return (f"transform(try_variant_get({x}, '$', 'array<variant>'), _vte -> "
+            f"named_struct('v', _vte, 's', schema_of_variant(_vte)))")
+
+
+def _leaves(y: str, level: int) -> str:
+    """The leaves of ``y``, an array of (variant, schema) pairs that sit at
+    array nesting ``level``.
+
+    While a pair is still an array, one level replaces every array by its
+    elements (an empty array by one NULL leaf) and recurses on the result,
+    let-bound so the text stays linear; the first level that finds no array
+    returns its input, so deeper levels cost nothing on shallower values.
+    Arrays still nested at level D make the whole result NULL."""
+    z, x, a = f"_vtl{level}", "_vtx", "_vta"
+    more = f"exists({z}, {x} -> startswith({x}.s, 'ARRAY'))"
+    if level >= D:
+        body = f"CASE WHEN {more} THEN NULL ELSE {z} END"
     else:
-        var = f"_vts{depth}"
-        arr_s = (f"array_join(transform("
-                 f"try_variant_get({v}, '$', 'array<variant>'), "
-                 f"{var} -> coalesce({variant_to_string_sql(var, depth - 1)},"
-                 f" '')), ',')")
+        step = (f"flatten(transform({z}, {x} -> "
+                f"CASE WHEN startswith({x}.s, 'ARRAY') "
+                f"THEN transform(array({_element_pairs(x + '.v')}), {a} -> "
+                f"CASE WHEN (size({a}) = 0) THEN array(named_struct("
+                f"'v', NULL, 's', NULL)) ELSE {a} END)[0] "
+                f"ELSE array({x}) END))")
+        body = f"CASE WHEN {more} THEN {_leaves(step, level + 1)} ELSE {z} END"
+    return f"transform(array({y}), {z} -> {body})[0]"
+
+
+def variant_to_string_sql(v: str) -> str:
+    """JS ``v?.toString()`` over a VARIANT value (NULL for null/undefined).
+
+    For an array JS prints the comma-join of a depth-first walk over its
+    leaves: a scalar prints itself, null '' and an object
+    '[object Object]'; an empty array prints like one null leaf, so
+    ``[[],1]`` prints ``',1'``. The text builds that walk in two stages:
+    first the leaves, flattened level by level (:func:`_leaves`; a number
+    or an object is the one-leaf array of itself), then one ``transform``
+    formats each leaf, so the JS number formatter appears once whatever the
+    depth. A string or boolean value is read directly, with no lambda.
+    Arrays nest up to ``D`` levels; a deeper array anywhere in the value
+    makes the toString NULL, which every check reads as JS undefined: a
+    ``value`` or ``enum`` check then fails the field, never passing it on a
+    wrong string."""
+    sv, l = f"schema_of_variant({v})", "_vtf"
+    leaves = (f"CASE WHEN startswith({sv}, 'ARRAY') "
+              f"THEN {_leaves(_element_pairs(v), 1)} "
+              f"ELSE array(named_struct('v', {v}, 's', {sv})) END")
+    lv, s = f"{l}.v", f"{l}.s"
+    num_s = js_number_to_string_sql(f"try_variant_get({lv}, '$', 'double')")
+    fmt = (f"CASE WHEN ({s} = 'STRING') OR ({s} = 'BOOLEAN') "
+           f"THEN try_variant_get({lv}, '$', 'string') "
+           f"WHEN ({s} RLIKE '{_NUM_RE}') THEN {num_s} "
+           f"WHEN (({s} IS NULL) OR ({s} = 'VOID')) THEN '' "
+           f"ELSE '[object Object]' END")
     return (f"CASE WHEN (({v} IS NULL) OR ({sv} = 'VOID')) THEN {_NULL_S} "
-            f"WHEN ({sv} = 'STRING') THEN try_variant_get({v}, '$', 'string') "
-            f"WHEN ({sv} = 'BOOLEAN') THEN try_variant_get({v}, '$', 'string') "
-            f"WHEN ({sv} RLIKE '{_NUM_RE}') THEN {num_s} "
-            f"WHEN startswith({sv}, 'ARRAY') THEN {arr_s} "
-            f"ELSE '[object Object]' END")
+            f"WHEN ({sv} = 'STRING') OR ({sv} = 'BOOLEAN') "
+            f"THEN try_variant_get({v}, '$', 'string') "
+            f"ELSE array_join(transform({leaves}, {l} -> {fmt}), ',') END")
 
 
 class _VariantView(_View):
@@ -386,11 +438,11 @@ def _compile_scope(rules: dict, scope: Scope, parent: str,
 
 
 def _enum_implies_present(rule: dict, fv: _View) -> bool:
-    """R3: the enum check alone fails an absent or blank typed string.
-    Python's strip() empties every string Spark's trim() empties."""
+    """R3: the enum check alone fails an absent or blank typed string
+    (blank as JS trims it, the same set as :func:`_trimmed_empty`)."""
     return ("enum" in rule and isinstance(fv, _TypedView)
             and isinstance(fv.dtype, T.StringType)
-            and all(a is not None and a.strip()
+            and all(a is not None and js_trim(a)
                     for a in map(py_js_to_string, rule["enum"])))
 
 
@@ -438,10 +490,10 @@ def _per_key(fv: _View, rule: dict, path: str, ids: Iterator[int]) -> _Check:
 
 
 def _trimmed_empty(fv: _View, non_null: bool = False) -> str:
-    """value is a string AND trims to '' — via the cheap raw-string accessor
-    (``non_null``: the value is known present, so no coalesce)."""
+    """value is a string AND JS-trims to '' — via the cheap raw-string
+    accessor (``non_null``: the value is known present, so no coalesce)."""
     s = fv.str_value if non_null else f"coalesce({fv.str_value}, '')"
-    return f"(({fv.typeof} = 'string') AND (trim({s}) = ''))"
+    return f"(({fv.typeof} = 'string') AND ({js_trim_sql(s)} = ''))"
 
 
 def _check_type(rule: dict, fv: _View, path: str, optional: bool,

@@ -93,27 +93,44 @@ def test_sql_text_formatter_matches_python_mirror_on_bit_patterns(spark):
         assert got[i] == want, repr(v)
 
 
+def _nest(s: str, d: int) -> str:
+    return "[" * d + s + "]" * d
+
+
 def test_sql_text_variant_tostring_matches_python_oracle(spark):
     """The VARIANT toString (validation_sql.variant_to_string_sql) must equal
     the oracle's JS toString of the parsed payload across every variant
-    shape, including nested arrays at the depth limit."""
+    shape, including arrays nested to the depth bound D, and holds one copy
+    of the number formatter. An array nested deeper than D prints NULL (JS
+    undefined), never a wrong string."""
     import json
     from events_validator_spark.operators.validation_sql import (
-        variant_to_string_sql,
+        D, variant_to_string_sql,
     )
+    chain = "[1,[],null]"
+    for _ in range(5):
+        chain = f"[1,[],null,{chain}]"
     payloads = ['1.5', '"s"', '[1,2.25,"a",[3,[4,5],"x"],true]', 'null',
                 'true', 'false', '{"a":1}', '1e300', '0.1', '[[[1]]]', '[]',
                 '-2.5e-8', '""', '[null,1]', '9007199254740993', '1e22',
-                '[1e21,{"b":[]},null]']
+                '[1e21,{"b":[]},null]', '[1,[2,[3,[4,[5]]]]]', '[[],1]',
+                '[[[]]]', '[null,[null]]', '[[],[]]', chain,
+                _nest('[2.5,"a"],[]', D - 1), _nest('null,{"a":[1]}', D)]
+    payloads += [_nest("7", d) for d in range(4, D + 1)]
+    beyond = [_nest("7", D + 1), f"[1,{_nest('2', D)}]"]
     df = spark.createDataFrame(
-        [(i, '{"k":' + s + '}') for i, s in enumerate(payloads)],
+        [(i, '{"k":' + s + '}') for i, s in enumerate(payloads + beyond)],
         "i int, props string")
     txt = variant_to_string_sql(
         "try_variant_get(try_parse_json(`props`), '$[\"k\"]', 'variant')")
+    assert txt.count("format_string") == \
+        js_number_to_string_sql("x").count("format_string")
     got = {r["i"]: r["u"]
            for r in df.select("i", F.expr(txt).alias("u")).collect()}
     for i, s in enumerate(payloads):
         assert got[i] == py_js_to_string(json.loads(s)), s
+    for i, s in enumerate(beyond, len(payloads)):
+        assert got[i] is None, s
 
 
 def test_typed_tostring_recurses_to_any_array_depth(spark):

@@ -32,7 +32,7 @@ def test_duplicate_keys_salted(spark):
     got = {(r["k"], r["dup_count"])
            for r in uniqueness.duplicate_keys(df, ["k"], n_salts=4).collect()}
     assert got == {("a", 3), ("c", 2)}
-    rows = uniqueness.duplicate_rows(df, ["k"], n_salts=4).collect()
+    rows = uniqueness.duplicate_rows(df, ["k"]).collect()
     assert len(rows) == 5
 
 

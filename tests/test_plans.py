@@ -19,7 +19,8 @@ properties that make the engine survive a 100 TB input:
 * ``lsh_topk`` deduplicates bare id pairs, with no vector or norm in the
   dedup aggregate's input;
 * the referential span scan reads only ``spans.media_ref``, and the typed
-  clean-element gate is no larger than its minimal form.
+  clean-element gate is no larger than its minimal form;
+* ``duplicate_keys`` shuffles once (one aggregate, no salted phase).
 """
 
 import os
@@ -365,8 +366,10 @@ def test_typed_gate_is_minimal(spark, tmp_path):
     no plain column in a ``transform(array(…))`` let, and its clean-element
     gate is no larger than the hand-written minimal predicate: the enum
     alone for ``kind``, an unguarded regex for the optional ``media_ref``
-    and presence for ``offset``."""
+    and presence for ``offset``. Blank is the JS trim's blank
+    (``js_trim_sql``)."""
     import re
+    from events_validator_spark.functions.js_compat import js_trim_sql
     from events_validator_spark.operators.validation import validate_typed
     from events_validator_spark.sources.synthetic import (
         DOC_RULES, interleaved_docs,
@@ -382,7 +385,8 @@ def test_typed_gate_is_minimal(spark, tmp_path):
     [minimal] = _forall_bodies(docs.select(F.expr(
         "forall(spans, s -> coalesce(s.kind IN ('text', 'media'), false) "
         f"AND (s.media_ref IS NULL OR s.media_ref RLIKE '{pattern}' "
-        "OR trim(s.media_ref) = '') AND s.offset IS NOT NULL)")))
+        f"OR {js_trim_sql('s.media_ref')} = '') "
+        "AND s.offset IS NOT NULL)")))
     assert _node_count(gate) <= _node_count(minimal), gate.sql()
 
 
@@ -416,3 +420,14 @@ def test_lsh_topk_dedups_bare_id_pairs(spark):
     vectors = {"__qvec", "__cvec", "__qn", "__cn"}
     assert all(not vectors & set(names) for names in inputs), inputs
     assert 0 < len(out.collect()) <= 12
+
+
+def test_duplicate_keys_is_one_aggregate(spark):
+    """``duplicate_keys`` counts in one aggregate: map-side partial counts,
+    then a single shuffle Exchange on the key, whatever ``n_salts`` says
+    (no salted second phase)."""
+    from events_validator_spark.operators import uniqueness
+    df = spark.range(1000).select((F.col("id") % 7).alias("k"))
+    plan = uniqueness.duplicate_keys(df, ["k"], n_salts=64) \
+        ._jdf.queryExecution().executedPlan().treeString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan

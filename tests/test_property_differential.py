@@ -23,7 +23,9 @@ scalars = st.one_of(
     st.booleans(),
     st.integers(min_value=-(2**53), max_value=2**53),
     st.floats(allow_nan=False, allow_infinity=False),
-    st.text(alphabet="ab c_1.ü", max_size=8),
+    # with JS whitespace (tab, newline, no-break space, U+3000, U+FEFF) and
+    # U+0085, which JS does not trim
+    st.text(alphabet="ab c_1.ü\t\n\xa0\u3000\ufeff\x85", max_size=8),
 )
 
 values = st.recursive(

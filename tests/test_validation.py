@@ -58,8 +58,8 @@ QUIRK_EVENTS = [
 
 def _rand_value(rng, depth=0):
     choices = ["str", "int", "float", "bool", "null", "empty", "ws"]
-    if depth < 2:
-        choices += ["arr", "obj"]
+    if depth < 5:    # arrays nest to depth 5, objects to depth 2
+        choices += ["arr", "obj"] if depth < 2 else ["arr"]
     c = rng.choice(choices)
     if c == "str":
         return rng.choice(["trk_000000", "abc", "purchase", "1", "a,b"])
@@ -73,8 +73,9 @@ def _rand_value(rng, depth=0):
         return None
     if c == "empty":
         return ""
-    if c == "ws":
-        return "  "
+    if c == "ws":    # JS whitespace, and two characters JS does not trim
+        return rng.choice(["  ", "\t", " \n ", "\xa0", "\u3000", "\ufeff",
+                           "\x1c", "\x85"])
     if c == "arr":
         return [_rand_value(rng, depth + 1) for _ in range(rng.randint(0, 4))]
     return {k: _rand_value(rng, depth + 1)
@@ -141,6 +142,90 @@ def test_typed_deep_array_value_matches_oracle(spark):
         event.pop("violations", None)
         assert [tuple(x) for x in r["violations"]] == \
             check_with_schema(rules, event), event
+
+
+def test_variant_deep_array_value_matches_oracle(spark):
+    """A value check reads the JS toString of a JSON array of any depth up
+    to the bound: ``[1,[2,[3,[4,[5]]]]]`` prints '1,2,3,4,5'."""
+    rules = {"k": {"type": "array", "value": "1,2,3,4,5"},
+             "e": {"type": "array", "enum": ["1", ","], "optional": True}}
+    events = [{"k": [1, [2, [3, [4, [5]]]]], "e": [[[[[1]]]]]},
+              {"k": [[[[[1, 2]]]], 3, [[[4]]], 5], "e": [[[[[]]]], []]},
+              {"k": [[[[[1]]]], [], 2], "e": [[[[[None]]]], [[None]]]},
+              {"k": [1, 2, 3, 4, [[[[5, []]]]]], "e": [[[[["1"]]]]]}]
+    got = _spark_violations(spark, events, rules)
+    for i, ev in enumerate(events):
+        assert got[i] == check_with_schema(rules, ev), ev
+    assert got[0] == [] and got[1] == []
+
+
+def test_variant_array_beyond_depth_bound_fails_closed(spark):
+    """An array nested deeper than validation_sql.D prints as JS undefined:
+    the value check fails it with actual NULL, never on a wrong string
+    (JS itself prints '7'; a documented bound)."""
+    from events_validator_spark.operators.validation_sql import D
+    deep = 7
+    for _ in range(D + 1):
+        deep = [deep]
+    rules = {"k": {"type": "array", "value": "7"}}
+    assert _spark_violations(spark, [{"k": deep}], rules)[0] == \
+        [("k", "value", "7", None)]
+
+
+@pytest.mark.parametrize("path", ["json", "typed"])
+def test_blank_is_js_whitespace(spark, path):
+    """Blank means empty after JS ``String.prototype.trim``: ECMA-262
+    whitespace and line terminators (tab, newline, no-break space, U+3000,
+    U+FEFF, ...), but not U+001C or U+0085. A required string, an optional
+    key's skip, a regex's ``empty_value`` and a typed element's clean gate
+    (R3, the enum holds a blank member) all read the same set; the oracle
+    agrees."""
+    rules = {"k": {"type": "string"}, "o": {"type": "number", "optional": True},
+             "r": {"regex": "^x"},
+             "a": {"type": "array", "nestedSchema": {
+                 "m": {"type": "string", "enum": ["\ufeff", "\x85", "b"]}}}}
+    blank = ["\t", "\n", " \t ", "\r\n", "\xa0", "\u3000", "\ufeff",
+             "\u2028", "\v\f"]
+    not_blank = ["\x1c", "\x85", "\u200b"]
+    events = [{"k": s, "o": s, "r": s, "a": [{"m": s}]}
+              for s in blank + not_blank]
+    if path == "json":
+        got = _spark_violations(spark, events, rules)
+    else:
+        df = spark.createDataFrame(
+            [(i, e["k"], e["o"], e["r"], [(e["a"][0]["m"],)])
+             for i, e in enumerate(events)],
+            "i int, k string, o string, r string, a array<struct<m:string>>")
+        got = {r["i"]: [tuple(x) for x in r["violations"]]
+               for r in validate_typed(df, rules).collect()}
+    for i, ev in enumerate(events):
+        s = ev["k"]
+        if s in blank:
+            want = [("k", "type", "non-empty string", "empty string"),
+                    ("r", "regex", "^x", "empty_value"),
+                    ("a[0].m", "type", "non-empty string", "empty string")]
+            if s != "\ufeff":
+                want.append(("a[0].m", "enum", "\ufeff,\x85,b", s))
+        else:
+            want = [("o", "type", "number", "string"), ("r", "regex", "^x", s)]
+            if s != "\x85":
+                want.append(("a[0].m", "enum", "\ufeff,\x85,b", s))
+        assert check_with_schema(rules, ev) == want, repr(s)
+        assert got[i] == want, repr(s)
+
+
+def test_json_nesting_bound(spark):
+    """The JSON parser accepts 1,000 nesting levels: 999 arrays under a key
+    (1,000 with the enclosing object) parse, 1,000 are malformed JSON
+    (``invalid_request`` at ``$``), where JS parses both."""
+    rules = {"k": {"type": "array"}}
+    df = spark.createDataFrame(
+        [(d, '{"k": ' + "[" * d + "]" * d + "}") for d in (999, 1000)],
+        "i int, props string")
+    got = {r["i"]: [tuple(x) for x in r["violations"]]
+           for r in validate_json(df, rules, "props").collect()}
+    assert got == {999: [], 1000: [("$", "invalid_request",
+                                    "well-formed JSON", "malformed JSON")]}
 
 
 def test_malformed_json_does_not_abort(spark):

@@ -449,7 +449,9 @@ def q_ann4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's own nearest cell, which IVF probes FIRST at any n_probe >= 1, so
     planted recall is provably 1.0 regardless of codebook quality; their
     cosine (exactly 1.0) is the per-query maximum, so exact top-5 = the 5
-    planted ids in id order — brute-force DuckDB-comparable. The honest
+    planted ids in id order — brute-force DuckDB-comparable. ``ivf_topk``
+    resolves probe cells with broadcast-centroid array math (no driver
+    collect), so the query side could itself be a large table. The honest
     recall-at-n_probe story on the unaugmented corpus stays pinned by
     tests/test_operators.py::test_ivf_topk_recall_vs_exact_sf001."""
     emb = _t(spark, sf_dir, "embeddings").select(
@@ -468,27 +470,10 @@ def q_ann4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann5_ivf_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same planted-duplicate construction as ann4, answered by the
-    fully-JVM-side large-query-table twin (`ivf_topk_distributed`): probe
-    cells come from broadcast-centroid array math instead of a driver-side
-    collect, so the query side could itself be a billion-row table. The
-    planted-recall argument is unchanged (same codebook, same probe-first
-    cell), so the same brute-force oracle applies; operator equivalence to
-    ivf_topk is additionally pinned by tests/test_operators.py."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    queries = (emb.where(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    planted = (emb.where(F.col("vec_id") < 5)
-               .select(F.explode(F.sequence(F.lit(0), F.lit(4))).alias("j"),
-                       "vec_id", "embedding")
-               .select((F.lit(2_000_000) + F.col("vec_id") * 10
-                        + F.col("j")).cast("long").alias("vec_id"),
-                       "embedding"))
-    aug = emb.unionByName(planted)
-    out = similarity.ivf_topk_distributed(aug, queries, k=5, n_cells=8,
-                                          n_probe=5)
-    return out.select("query_id", "neighbor_id", "rank")
+    """The same query as ann4, which it delegates to: ``ivf_topk`` has one
+    form, so the two are one computation. The name and its oracle stay in
+    the 46-query contract."""
+    return q_ann4_ivf_topk(spark, sf_dir)
 
 
 def q_m1_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -680,7 +665,9 @@ def q_drift3_tdigest_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest-derived twin of each number lies within its documented error
     band. A digest-math regression flips a boolean → value-hash mismatch →
     the driver catches it; benign merge-order wobble (≈0.5% rank error at
-    delta=200, vs the 3%-of-spread / 0.05-KS bands) never does."""
+    delta=200, vs the 3%-of-spread / 0.05-KS bands) never does. The digest
+    KS comes from ``ks_from_digests``' one base|cur pair (its broadcast
+    self-join on grp_a < grp_b)."""
     # measured r6: _par LOSES here (A/B min-of-8: 1.40s plain vs 4.33s par
     # at sf1.0) — the high-cardinality exact-KS tie pre-aggregation doesn't
     # compress and every consumer pays the extra round-robin exchange

@@ -12,8 +12,8 @@ schema drift to DATA drift per the north rule:
   collects the per-bucket rows into one array and sums over it as SQL text
   (:func:`_psi`, 3 Spark jobs with known bounds); categories, whose count
   has no bound, keep a distributed sum (:func:`_psi_distributed`); KS
-  statistic on CDFs as a distributed prefix sum, or in one
-  ``applyInPandas`` for the per-column sketch-compare path.
+  statistic on CDFs as a distributed prefix sum, or between every pair of
+  per-group t-digests as a broadcast self-join scored by an Arrow UDF.
 
 Thresholded results are emitted in the engine's violation-row format
 (error_type='drift') so they land in the same violations table.
@@ -232,8 +232,8 @@ def _psi_sum_sql(arr: str, ct: str, bt: str, eps: float) -> str:
 
 
 # ---------------------------------------------------------------------------
-# KS — exact two-sample statistic as window algebra (small/medium path),
-#      and sketch-based compare via applyInPandas (scale path)
+# KS — exact two-sample statistic over a distributed prefix sum, and the
+#      pairwise sketch compare over per-group t-digests
 # ---------------------------------------------------------------------------
 
 def ks_two_sample(df: DataFrame, column: str, cohort: F.Column,
@@ -261,23 +261,19 @@ def ks_two_sample(df: DataFrame, column: str, cohort: F.Column,
 
 def ks_from_digests(df: DataFrame, column: str, group_col: str,
                     n_points: int = 200, delta: int = 200,
-                    max_groups: int = 256,
                     digests: DataFrame | None = None) -> DataFrame:
-    """Approximate pairwise KS between all groups from t-digest profiles.
+    """Approximate pairwise KS between all groups from t-digest profiles:
+    (grp_a, grp_b, ks), one row per pair with ``grp_a < grp_b``.
 
     One scan builds a digest per group (two-level salted aggregation,
-    :func:`grouped_digests` — bounded executor memory); the tiny digest table
-    is then compared in a single ``applyInPandas`` — CDFs are evaluated on a
-    shared grid and the max gap taken. Output: (grp_a, grp_b, ks).
-
-    SCALE NOTE (round-3 verdict item 8): the compare is a SINGLE-TASK O(G²)
-    loop over G digest rows. That is the right shape while G is small (the
-    input is one ~kB digest per group, typical drift jobs compare a handful
-    of cohorts); for thousands of groups use
-    :func:`ks_from_digests_distributed` — identical results, pair space
-    spread across the cluster. The guard fails fast with a clear message
-    (naming the distributed twin) instead of letting one task grind through
-    millions of pairs.
+    :func:`grouped_digests` — bounded executor memory); a pandas UDF
+    evaluates each group's inverse-CDF grid ONCE (G rows, not G²
+    evaluations); the G×G/2 pair space is a broadcast self-join on
+    ``grp_a < grp_b``, so pairs spread across the cluster; a scalar
+    Arrow-batched pandas UDF takes each pair's sup |F_a − F_b| on the union
+    of both grids. No task holds more than its share of pairs. The
+    broadcast side is G·n_points doubles (~16 MB at G=10k) — beyond that,
+    add a blocking key to the self-join before broadcasting.
 
     ``digests``: reuse an already-built (grp, digest) table — see
     :func:`quantile_profile` for why explicit sharing is required."""
@@ -285,54 +281,6 @@ def ks_from_digests(df: DataFrame, column: str, group_col: str,
         digests = grouped_digests(
             df.withColumn("__grp", F.col(group_col).cast("string")),
             column, "__grp", delta=delta)
-
-    def compare(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_groups:
-            raise ValueError(
-                f"ks_from_digests: {len(pdf)} groups exceed max_groups="
-                f"{max_groups}; the all-pairs compare is a single-task O(G^2)"
-                " loop — use ks_from_digests_distributed for large G, or"
-                " raise max_groups explicitly if you accept the cost")
-        items = [(r.grp, TDigest.deserialize(r.digest))
-                 for r in pdf.itertuples()]
-        rows = []
-        qs = np.linspace(0.005, 0.995, n_points)
-        inv = {g: np.array(d.quantiles(qs)) for g, d in items}
-        for i, (ga, _) in enumerate(items):
-            for gb, _ in items[i + 1:]:
-                # KS via inverse-CDF gap: sup |F_a(x) - F_b(x)| evaluated on
-                # the union of both quantile grids
-                grid = np.union1d(inv[ga], inv[gb])
-                fa = np.searchsorted(inv[ga], grid, side="right") / n_points
-                fb = np.searchsorted(inv[gb], grid, side="right") / n_points
-                rows.append((ga, gb, float(np.abs(fa - fb).max())))
-        return pd.DataFrame(rows, columns=["grp_a", "grp_b", "ks"])
-
-    return (digests.withColumn("__one", F.lit(1))
-            .groupBy("__one")
-            .applyInPandas(compare, "grp_a string, grp_b string, ks double")
-            .drop("__one"))
-
-
-def ks_from_digests_distributed(df: DataFrame, column: str, group_col: str,
-                                n_points: int = 200,
-                                delta: int = 200) -> DataFrame:
-    """Pairwise KS between all groups, DISTRIBUTED — the large-G twin of
-    :func:`ks_from_digests` (same math, identical results — pinned by
-    tests/test_drift.py).
-
-    Shape: one scan builds the per-group digests (two-level salted
-    aggregation); a pandas UDF materializes each group's inverse-CDF grid
-    ONCE (G rows, not G² evaluations); the G×G/2 pair space is generated by
-    a broadcast range self-join (``grp_a < grp_b``) so pairs spread across
-    the cluster; a scalar Arrow-batched pandas UDF computes the union-grid
-    sup-gap per pair. No single task ever holds more than its share of
-    pairs. The broadcast side is G·n_points doubles (~16 MB at G=10k) —
-    beyond that, add a blocking key to the self-join before broadcasting.
-    """
-    digests = grouped_digests(
-        df.withColumn("__grp", F.col(group_col).cast("string")),
-        column, "__grp", delta=delta)
 
     @pandas_udf("array<double>")
     def inv_cdf(blobs: pd.Series) -> pd.Series:

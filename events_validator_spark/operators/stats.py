@@ -187,13 +187,6 @@ def histogram(df: DataFrame, column: str, nbins: int = 20,
     return _bucket_counts(df, column, nbins, lo, hi)
 
 
-def group_histogram(df: DataFrame, column: str, group_col: str,
-                    nbins: int, lo: float, hi: float) -> DataFrame:
-    """(grp, bucket, cnt) — the building block for PSI across cohorts."""
-    return _bucket_counts(df, column, nbins, lo, hi,
-                          F.col(group_col).alias("grp"))
-
-
 def _bucket_counts(df: DataFrame, column: str, nbins: int,
                    lo: float | None, hi: float | None,
                    *keys: Column, aggs: tuple[Column, ...] = ()) -> DataFrame:

@@ -91,15 +91,3 @@ def naive_collect(df: DataFrame, keys: list[str],
     """The skew-prone baseline (for the skew benchmark — do not use at scale)."""
     return (df.groupBy(*keys)
             .agg(F.collect_list(payload_col).alias(f"{payload_col}s")))
-
-
-def uniqueness_violations(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Duplicate keys in the engine's violation-row shape (error_type='unique')."""
-    dups = duplicate_keys(df, keys)
-    key_str = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
-    return dups.select(
-        key_str.alias("field"),
-        F.lit("unique").alias("error_type"),
-        F.lit("1").alias("expected"),
-        F.col("dup_count").cast("string").alias("actual"),
-    )

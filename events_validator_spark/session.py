@@ -12,10 +12,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable SQL confs the engine recommends for ANY session running it
-# (rationale inline below at the builder). Applied automatically by
-# :func:`get_spark`; external sessions (e.g. a harness-owned one) can opt in
+# Runtime-settable SQL confs the engine recommends for ANY session running it.
+# Applied by :func:`get_spark` after the session exists, so they merge with a
+# caller's ``extra_conf``; external sessions (e.g. a harness-owned one) opt in
 # via :func:`apply_recommended_conf`.
+#
+# InferFiltersFromGenerate turns explode(<computed array>) into a pushed-down
+# Filter(size(<computed array>) > 0) BELOW the producing projection —
+# PushDownPredicates re-inlines the whole producer tree into the filter, so
+# every computed-array explode (violation rows, shingles, LSH bands)
+# evaluates its array expression TWICE per row with zero subexpression
+# sharing. Measured 6x wall on the flagship validate_events explode
+# (tests/test_plans.py pins the plan shape). explode() already skips
+# empty/null arrays, so excluding the rule never changes results; it only
+# loses early row pruning when the array is a cheap stored column —
+# negligible next to the 2x re-evaluation it inflicts on computed arrays.
 _INFER_FILTERS_RULE = ("org.apache.spark.sql.catalyst.optimizer."
                        "InferFiltersFromGenerate")
 
@@ -72,24 +83,11 @@ def get_spark(app_name: str = "events-validator-spark",
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        # InferFiltersFromGenerate turns explode(<computed array>) into a
-        # pushed-down Filter(size(<computed array>) > 0) BELOW the producing
-        # projection — PushDownPredicates re-inlines the whole producer tree
-        # into the filter, so every computed-array explode (violation rows,
-        # shingles, LSH bands) evaluates its array expression TWICE per row
-        # with zero subexpression sharing. Measured 6x wall on the flagship
-        # validate_events explode (tests/test_plans.py pins the plan shape).
-        # explode() already skips empty/null arrays, so excluding the rule
-        # never changes results; it only loses early row pruning when the
-        # array is a cheap stored column — negligible next to the 2x
-        # re-evaluation it inflicts on computed arrays.
-        .config("spark.sql.optimizer.excludedRules", _INFER_FILTERS_RULE)
-        # generated SQL text assumes default backslash escaping (ADVICE r4)
-        .config("spark.sql.parser.escapedStringLiterals", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    apply_recommended_conf(spark)
     _warm_engine(spark)
     return spark
 

@@ -70,23 +70,6 @@ def run_dedup_stream_to_memory(spark: SparkSession, source_dir: str, schema,
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def run_stream_to_memory(spark: SparkSession, source_dir: str, schema,
-                         rules: dict, query_name: str = "verdicts_stream",
-                         ts_col: str | None = None) -> DataFrame:
-    """Drive a parquet-directory stream through validation into an in-memory
-    sink and run it to completion (sandbox harness; a real deployment points
-    readStream at Kafka/Iceberg and writeStream at the violations table)."""
-    src = spark.readStream.schema(schema).parquet(source_dir)
-    validated = validate_typed(src, rules)
-    out = validated.select(
-        "*", (F.size("violations") == 0).alias("passed"))
-    q = (out.writeStream.format("memory").queryName(query_name)
-         .outputMode("append").start())
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def run_stream_pipeline(spark: SparkSession, source_dir: str, schema,
                         rules: dict, out_dir: str,
                         event_name: str = "interleaved_doc",

@@ -577,38 +577,6 @@ def test_dedup_text_col_nested_and_unusual_names(spark):
     assert run(odd, "my text!") == want
 
 
-def test_ivf_topk_distributed_matches_driver_side(spark):
-    """The JVM-side large-query twin returns EXACTLY the driver-side
-    operator's output (same codebook seed, same probe rule, same re-rank) —
-    the contract that lets a caller switch paths purely on query-set size."""
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    queries = (emb.where(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    a = similarity.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=3)
-    b = similarity.ivf_topk_distributed(emb, queries, k=5, n_cells=8,
-                                        n_probe=3)
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
-
-
-def test_ivf_topk_query_guard(spark, monkeypatch):
-    """ivf_topk enforces its tiny-query-set contract (VERDICT r4): an
-    oversized query table fails fast naming the JVM-side alternative —
-    before the KMeans codebook is trained, so a refused call runs no
-    training job."""
-    from pyspark.ml.clustering import KMeans
-
-    def no_fit(self, *args, **kwargs):
-        raise AssertionError("KMeans.fit ran before the max_queries guard")
-
-    monkeypatch.setattr(KMeans, "fit", no_fit)
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-    with pytest.raises(ValueError, match="max_queries"):
-        similarity.ivf_topk(emb, queries, k=3, n_cells=4, max_queries=10)
-
-
 def test_minhash_dedup_incremental(spark):
     """Incremental dedup finds new-vs-corpus and new-vs-new pairs, never
     re-reports corpus-internal pairs, and returns the batch's band rows for

@@ -10,7 +10,6 @@ from events_validator_spark.operators import multimodal
 from events_validator_spark.plans import pipeline
 from events_validator_spark.sources.catalog import Lakehouse
 from events_validator_spark.sources.synthetic import DOC_RULES, interleaved_docs
-from events_validator_spark.streaming.stream import run_stream_to_memory
 
 
 def _outputs(spark, out):
@@ -332,21 +331,6 @@ def test_streaming_windowed_verdicts_with_watermark(spark, tmp_path):
     assert out == {0: (2, 1), 1: (1, 0)}
 
 
-def test_streaming_validation(spark, tmp_path):
-    src = str(tmp_path / "stream_src")
-    docs = interleaved_docs(spark, 300)
-    docs.write.parquet(src)
-    out = run_stream_to_memory(spark, src, docs.schema, DOC_RULES,
-                               query_name="t_stream")
-    assert out.count() == 300
-    batch = (interleaved_docs(spark, 300)
-             .withColumn("passed_b", F.lit(None)))  # schema aside, compare counts
-    from events_validator_spark.operators.validation import validate_typed
-    expected_failed = (validate_typed(interleaved_docs(spark, 300), DOC_RULES)
-                       .where(F.size("violations") > 0).count())
-    assert out.where(~F.col("passed")).count() == expected_failed
-
-
 def test_run_validation_partition_pruned_resume(spark, tmp_path,
                                                 monkeypatch):
     """bucket_col resume unit: each bucket's scan must partition-prune
@@ -411,9 +395,11 @@ def test_streaming_foreachbatch_pipeline(spark, tmp_path):
     viol, verd = _outputs(spark, out)
     assert verd.count() == 500
     from events_validator_spark.operators.validation import validate_typed
-    expected = (validate_typed(interleaved_docs(spark, 500), DOC_RULES)
-                .select(F.explode("violations")).count())
+    batch = validate_typed(interleaved_docs(spark, 500), DOC_RULES)
+    expected = batch.select(F.explode("violations")).count()
     assert viol.count() == expected
+    assert (verd.where(~F.col("passed")).count()
+            == batch.where(F.size("violations") > 0).count())
 
 
 @pytest.mark.parametrize("crash", ["after_verdicts", "before_verdicts"])

@@ -123,6 +123,27 @@ def test_apply_recommended_conf_merges_not_clobbers(spark):
             spark.conf.set(key, before)
 
 
+def test_get_spark_keeps_engine_rule_beside_caller_rules(spark):
+    """A caller's excludedRules in ``extra_conf`` is merged with the
+    engine's InferFiltersFromGenerate exclusion, not written over it."""
+    from events_validator_spark.session import _INFER_FILTERS_RULE, get_spark
+    key = "spark.sql.optimizer.excludedRules"
+    before = spark.conf.get(key, None)
+    other = "org.apache.spark.sql.catalyst.optimizer.ConstantFolding"
+    try:
+        # the same arguments as the suite's session, so getOrCreate hands
+        # back that session and re-applies only the caller's rule
+        s = get_spark(app_name="evspark-tests", cores=4, shuffle_partitions=4,
+                      extra_conf={"spark.driver.memory": "4g", key: other})
+        got = s.conf.get(key).split(",")
+        assert other in got and _INFER_FILTERS_RULE in got, got
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
 def _simhash_candidates(spark):
     import random
 

@@ -331,6 +331,24 @@ def test_streaming_windowed_verdicts_with_watermark(spark, tmp_path):
     assert out == {0: (2, 1), 1: (1, 0)}
 
 
+def test_streaming_validation(spark, tmp_path):
+    """``validate_typed`` over a parquet-directory stream, written to an
+    append-mode memory sink, flags the same docs as the batch pass."""
+    from events_validator_spark.operators.validation import validate_typed
+    src = str(tmp_path / "stream_src")
+    docs = interleaved_docs(spark, 300)
+    docs.write.parquet(src)
+    stream = spark.readStream.schema(docs.schema).parquet(src)
+    q = (validate_typed(stream, DOC_RULES).writeStream.format("memory")
+         .queryName("t_stream").outputMode("append").start())
+    q.processAllAvailable(); q.stop()
+    out = spark.sql("SELECT * FROM t_stream")
+    assert out.count() == 300
+    expected_failed = (validate_typed(interleaved_docs(spark, 300), DOC_RULES)
+                       .where(F.size("violations") > 0).count())
+    assert out.where(F.size("violations") > 0).count() == expected_failed > 0
+
+
 def test_run_validation_partition_pruned_resume(spark, tmp_path,
                                                 monkeypatch):
     """bucket_col resume unit: each bucket's scan must partition-prune

@@ -275,6 +275,10 @@ def ks_from_digests(df: DataFrame, column: str, group_col: str,
     broadcast side is G·n_points doubles (~16 MB at G=10k) — beyond that,
     add a blocking key to the self-join before broadcasting.
 
+    A group with no non-NULL value has an empty digest and no distribution:
+    its pairs carry a NULL ``ks``, as :func:`psi_two_cohorts` does for an
+    all-NULL column.
+
     ``digests``: reuse an already-built (grp, digest) table — see
     :func:`quantile_profile` for why explicit sharing is required."""
     if digests is None:
@@ -285,9 +289,9 @@ def ks_from_digests(df: DataFrame, column: str, group_col: str,
     @pandas_udf("array<double>")
     def inv_cdf(blobs: pd.Series) -> pd.Series:
         qs = np.linspace(0.005, 0.995, n_points)
-        return pd.Series(
-            [[float(x) for x in TDigest.deserialize(bytes(b)).quantiles(qs)]
-             for b in blobs])
+        digs = [TDigest.deserialize(bytes(b)) for b in blobs]
+        return pd.Series([[float(x) for x in d.quantiles(qs)]
+                          if d.means.size else None for d in digs])
 
     g = digests.select("grp", inv_cdf("digest").alias("inv"))
     a = g.select(F.col("grp").alias("grp_a"), F.col("inv").alias("inv_a"))
@@ -298,12 +302,15 @@ def ks_from_digests(df: DataFrame, column: str, group_col: str,
     def ks_pair(inv_a: pd.Series, inv_b: pd.Series) -> pd.Series:
         out = []
         for va, vb in zip(inv_a, inv_b):
+            if va is None or vb is None:
+                out.append(None)
+                continue
             va, vb = np.asarray(va), np.asarray(vb)
             grid = np.union1d(va, vb)
             fa = np.searchsorted(va, grid, side="right") / n_points
             fb = np.searchsorted(vb, grid, side="right") / n_points
             out.append(float(np.abs(fa - fb).max()))
-        return pd.Series(out)
+        return pd.Series(out, dtype="float64")
 
     return pairs.select("grp_a", "grp_b",
                         ks_pair("inv_a", "inv_b").alias("ks"))

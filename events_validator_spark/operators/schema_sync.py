@@ -1,8 +1,9 @@
 """Schema ↔ parameter-repository synchronisation (SURVEY.md §3.3).
 
 Driver-side pure functions: rule specs and the parameter repository are tiny
-JSON documents, so none of this touches the cluster; the Spark-side relational
-view of the same comparison lives in :mod:`operators.rules_meta`.
+JSON documents (tens of schemas against one repo.json), so none of this
+touches the cluster — a Spark job would cost more to plan than the dicts take
+to compare.
 
 Reference semantics:
   * definition construction — /root/reference/streamlit_ev/app/helpers/
@@ -35,6 +36,15 @@ RESERVED_KEYS = ("event_name", "version")
 _SENTINELS = ("Any", "")
 
 
+def _parse_number(s: str) -> Any:
+    """Numeric string → int/float; a non-number string comes back unchanged
+    (the reference's except-pass)."""
+    try:
+        return float(s) if "." in s else int(s)
+    except ValueError:
+        return s
+
+
 def coerce_value(raw: Any, typ: str) -> Any:
     """'Any'/blank string sentinels → None; strings cast to the declared type
     (updater.py:19-43). Non-strings pass through unchanged."""
@@ -45,10 +55,7 @@ def coerce_value(raw: Any, typ: str) -> Any:
     if raw.strip() == "" or raw == "Any":
         return None
     if typ == "number":
-        try:
-            return float(raw) if "." in raw else int(raw)
-        except ValueError:
-            return raw
+        return _parse_number(raw)
     if typ == "boolean":
         low = raw.lower()
         if low == "true":
@@ -85,7 +92,9 @@ def construct_schema_definition(param: dict) -> dict:
 
 
 def find_impacted_schemas(param_name: str, repo: dict) -> list[str]:
-    """Reverse index lookup (updater.py:85-93): schemas using a param."""
+    """Reverse index lookup (updater.py:85-93): schemas using a param, as
+    cached in the repo's ``usedInSchemas`` (kept true on save by
+    :func:`update_repo_with_schema_usage` and :func:`sync_repo_usage`)."""
     return list(repo.get(param_name, {}).get("usedInSchemas", []))
 
 
@@ -122,8 +131,8 @@ def update_repo_with_schema_usage(repo: dict, schema_name: str,
 def sync_repo_usage(repo: dict, rules_by_name: dict[str, dict]) -> bool:
     """Refresh the reverse index against a whole schema corpus — the bulk
     twin of :func:`update_repo_with_schema_usage`, run after loads/saves so
-    the cached ``usedInSchemas`` index and the ground-truth join
-    (rules_meta.impacted_schemas_full) cannot diverge."""
+    the cached ``usedInSchemas`` index cannot diverge from the ground truth
+    (the repo-known params each schema declares)."""
     updated = False
     for name, schema in rules_by_name.items():
         if update_repo_with_schema_usage(repo, name, schema):
@@ -177,6 +186,11 @@ def check_schema_health(schema: dict, repo: dict) -> dict:
       * description drift, value drift (with 'Any'/''/None normalised to
         None and numbers compared as floats), or array nestedSchema drift
         (key count, key set, per-key type/description) → minor.
+
+    This dict is the reference's own intermediate representation. A
+    corpus-wide report is the same call per schema, as the reference
+    explorer makes it (explorer.py:51-53):
+    ``{name: check_schema_health(s, repo) for name, s in schemas.items()}``.
     """
     health: dict = {"critical": [], "minor": []}
     for name, schema_param in schema.items():
@@ -258,13 +272,10 @@ def save_schema(schema: dict, dir_path: str, event_name: str,
     reference does on every schema save (helpers.py:374-397): each repo-known
     param gains this schema in ``usedInSchemas`` and the repo is re-persisted
     alongside — without this, a few saves make the cached index diverge from
-    the ground-truth join (the staleness updater.py:85-93 guards against)."""
-    os.makedirs(dir_path, exist_ok=True)
-    path = os.path.join(dir_path, f"{event_name}.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(schema, f, indent=2, sort_keys=True)
-    os.replace(tmp, path)
+    the schemas' declared params (the staleness updater.py:85-93 guards
+    against)."""
+    path = _write_atomic(dir_path, f"{event_name}.json",
+                         json.dumps(schema, indent=2, sort_keys=True))
     if repo is not None and update_repo_with_schema_usage(
             repo, event_name, schema):
         save_repo(repo, dir_path)
@@ -272,8 +283,21 @@ def save_schema(schema: dict, dir_path: str, event_name: str,
 
 
 def save_repo(repo: dict, dir_path: str) -> str:
-    """Write the parameter repository (repo.json), atomically."""
+    """Write the parameter repository (repo.json), atomically. Pairs with
+    rules_loader.load_repo for the full round trip."""
     return save_schema(repo, dir_path, "repo")
+
+
+def _write_atomic(dir_path: str, file_name: str, text: str) -> str:
+    """Write ``text`` to ``dir_path/file_name`` through a tmp file and a
+    rename, so a reader never sees a half-written file; returns the path."""
+    os.makedirs(dir_path, exist_ok=True)
+    path = os.path.join(dir_path, file_name)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+    return path
 
 
 # ---------------------------------------------------------------------------
@@ -325,28 +349,21 @@ def export_schema_report(schema: dict) -> str:
 
 def save_schema_report(schema: dict, dir_path: str, event_name: str) -> str:
     """Write the markdown report next to the schema JSON (atomic)."""
-    os.makedirs(dir_path, exist_ok=True)
-    path = os.path.join(dir_path, f"{event_name}.md")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(export_schema_report(schema))
-    os.replace(tmp, path)
-    return path
+    return _write_atomic(dir_path, f"{event_name}.md",
+                         export_schema_report(schema))
 
 
 def clean_repo_types(repo: dict) -> dict:
     """Load-time repo normalization (repo.py:24-42 ``clean_repo_types``):
     numeric values stored as strings coerce to int/float — top-level AND
     inside array nestedSchema entries; blank and non-castable strings pass
-    through untouched (the reference's except-pass). Mutates and returns."""
+    through untouched (the reference's except-pass). Mutates and returns;
+    rules_loader.load_repo applies it on every load."""
     def fix(p: dict) -> None:
         if p.get("type") == "number" and "value" in p:
             val = p["value"]
             if isinstance(val, str) and val.strip() != "":
-                try:
-                    p["value"] = float(val) if "." in val else int(val)
-                except ValueError:
-                    pass
+                p["value"] = _parse_number(val)
     for param in repo.values():
         if not isinstance(param, dict):
             continue
@@ -357,14 +374,6 @@ def clean_repo_types(repo: dict) -> dict:
                 if isinstance(n_param, dict):
                     fix(n_param)
     return repo
-
-
-def load_repo(dir_path: str) -> dict:
-    """Read ``repo.json`` and apply the reference's load-time type
-    normalization (``ensure_repo_loaded``, repo.py:44-48). Pairs with
-    :func:`save_repo` for the full round trip."""
-    with open(os.path.join(dir_path, "repo.json")) as f:
-        return clean_repo_types(json.load(f))
 
 
 def available_categories(repo: dict) -> list[str]:
@@ -419,12 +428,8 @@ def export_internal_schema(internal: dict) -> dict:
     NO value/regex (only type/description/nestedSchema), nested entries keep
     regex only when truthy."""
     def coerce_num(typ, val):
-        if typ == "number" and isinstance(val, str):
-            try:
-                return float(val) if "." in val else int(val)
-            except ValueError:
-                return val
-        return val
+        return (_parse_number(val) if typ == "number" and isinstance(val, str)
+                else val)
 
     export: dict = {}
     ev = internal.get(0, {})

@@ -6,7 +6,8 @@ per request with 404→None (validator_src/helpers/cloudHelpers.js:12-23);
 (streamlit_ev/app/helpers/gcp.py:92-101). Here the whole rule corpus loads
 once on the driver (it is tiny — rule specs, not data) and rides into compiled
 Column expressions; Spark broadcasts the closures to executors for free. The
-parameter repository (repo.json) loads the same way.
+parameter repository (repo.json) loads the same way, with the reference's
+load-time type normalization.
 """
 
 from __future__ import annotations
@@ -14,6 +15,10 @@ from __future__ import annotations
 import glob
 import json
 import os
+
+from events_validator_spark.operators.schema_sync import (
+    clean_repo_types, coerce_value,
+)
 
 
 def normalize_rule_spec(rules: dict) -> dict:
@@ -24,7 +29,6 @@ def normalize_rule_spec(rules: dict) -> dict:
     pin); typed strings are coerced so the value check compares like the
     reference. Recurses into nestedSchema.
     """
-    from events_validator_spark.operators.schema_sync import coerce_value
     out: dict = {}
     for key, rule in rules.items():
         if not isinstance(rule, dict):
@@ -67,5 +71,8 @@ def load_rules_dir(dir_path: str, normalize: bool = False) -> dict[str, dict]:
 
 
 def load_repo(dir_path: str) -> dict | None:
-    """The parameter repository (repo.json) if present."""
-    return load_rules(os.path.join(dir_path, "repo.json"))
+    """The parameter repository (repo.json) with numeric strings coerced as
+    the reference's ``ensure_repo_loaded`` does (repo.py:44-48,
+    schema_sync.clean_repo_types); missing file → None (404 → null)."""
+    repo = load_rules(os.path.join(dir_path, "repo.json"))
+    return None if repo is None else clean_repo_types(repo)

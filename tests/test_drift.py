@@ -147,6 +147,17 @@ def test_ks_from_digests_pairwise_matches_numpy(spark):
     assert got[("g0", "g7")] > got[("g0", "g1")]
 
 
+def test_ks_from_digests_all_null_group_is_null(spark):
+    """A group whose values are all NULL has no distribution: its pairs
+    carry a NULL ks (like psi_two_cohorts on an all-NULL column), not the
+    maximal 1.0; the pair of populated groups is unaffected."""
+    df = spark.createDataFrame(
+        [("a", 1.0), ("a", 2.0), ("b", None), ("c", 5.0)], "g string, x double")
+    got = {(r["grp_a"], r["grp_b"]): r["ks"]
+           for r in drift.ks_from_digests(df, "x", "g").collect()}
+    assert got == {("a", "b"): None, ("a", "c"): 1.0, ("b", "c"): None}
+
+
 def test_categorical_psi_matches_numpy(spark):
     """Categorical PSI equals the hand-computed statistic, detects a mix
     shift, and is ~0 for identical mixes."""

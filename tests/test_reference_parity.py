@@ -1,4 +1,4 @@
-"""Reference-parity operators: multi-schema dispatch (J1), repo joins (J2/J3),
+"""Reference-parity operators: multi-schema dispatch (J1), repo lookups (J2/J3),
 request gating (V13), payload/valid-field flags (V15), rules loading (S3/S4),
 and — when the reference seed corpus is present — the 36 GA4 schemas as
 realistic rule specs driven through the Spark↔oracle differential."""
@@ -10,7 +10,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from events_validator_spark.js_oracle import check_with_schema
-from events_validator_spark.operators import rules_meta
+from events_validator_spark.operators.schema_sync import (
+    check_schema_health, find_impacted_schemas,
+)
 from events_validator_spark.operators.validation import (
     request_gate, validate_multi,
 )
@@ -116,7 +118,7 @@ def test_request_gate(spark):
                    4: "invalid_request"}
 
 
-def test_rules_meta_joins(spark):
+def test_rules_meta_joins():
     repo = {
         "currency": {"type": "string", "description": "ISO code",
                      "usedInSchemas": ["purchase", "refund"]},
@@ -130,21 +132,17 @@ def test_rules_meta_joins(spark):
         "refund": {"currency": {"type": "string",
                                 "description": "3-letter code"}},  # desc drift
     }
-    p = rules_meta.params_table(spark, repo)
-    s = rules_meta.schemas_table(spark, schemas)
-    imp = [r["event_name"]
-           for r in rules_meta.impacted_schemas(p, "currency").collect()]
-    assert imp == ["purchase", "refund"]
-    health = {(r["event_name"], r["param"]): r["severity"]
-              for r in rules_meta.schema_health(s, p).collect()}
-    assert health[("purchase", "currency")] == "ok"
-    assert health[("purchase", "value")] == "critical"
-    # reference parity (updater.py:164-165): unknown params are SKIPPED
-    assert ("purchase", "rogue") not in health
-    assert health[("refund", "currency")] == "minor"
+    assert find_impacted_schemas("currency", repo) == ["purchase", "refund"]
+    # a corpus-wide report is one check per schema (explorer.py:51-53);
+    # purchase.currency is in sync, so it is in neither list, and
+    # (updater.py:164-165) the unknown purchase.rogue is SKIPPED
+    health = {name: check_schema_health(s, repo)
+              for name, s in schemas.items()}
+    assert health["purchase"] == {"critical": ["value"], "minor": []}
+    assert health["refund"] == {"critical": [], "minor": ["currency"]}
 
 
-def test_schema_health_reference_parity(spark):
+def test_schema_health_reference_parity():
     """Pin the updater.py:151-217 parity points: sentinel/'Any'
     normalisation, float-tolerant numeric compare, nestedSchema drift."""
     repo = {
@@ -166,14 +164,9 @@ def test_schema_health_reference_parity(spark):
             "id": {"type": "string", "description": "x"},
             "extra": {"type": "string", "description": ""}}},  # nested keyset
     }}
-    p = rules_meta.params_table(spark, repo)
-    s = rules_meta.schemas_table(spark, schemas)
-    health = {r["param"]: (r["severity"], r["detail"])
-              for r in rules_meta.schema_health(s, p).collect()}
-    assert health["price"] == ("ok", "in sync")
-    assert health["note"] == ("ok", "in sync")
-    assert health["items"] == ("minor", "nestedSchema drift")
-    assert health["tags"] == ("minor", "nestedSchema drift")
+    # price and note are in sync (in neither list); items and tags drift
+    assert check_schema_health(schemas["ev"], repo) == {
+        "critical": [], "minor": ["items", "tags"]}
 
 
 def test_pipeline_flags(spark, tmp_path):

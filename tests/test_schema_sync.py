@@ -9,7 +9,7 @@ import pytest
 
 from events_validator_spark.operators import schema_sync as ss
 from events_validator_spark.sources.rules_loader import (
-    load_rules, load_rules_dir, normalize_rule_spec,
+    load_repo, load_rules, load_rules_dir, normalize_rule_spec,
 )
 
 
@@ -83,6 +83,8 @@ def test_check_schema_health_mirrors_reference():
         "minor_desc": {"type": "string", "description": "new"},
         "minor_val": {"type": "number", "description": "d", "value": "2"},
         "tol_val": {"type": "number", "description": "d", "value": "0.0"},
+        "str_5": {"type": "string", "description": "d", "value": 5},
+        "arr_empty": {"type": "array", "description": "d", "nestedSchema": {}},
     }
     schema = {
         "event_name": {"value": "e"}, "version": {"value": 1},
@@ -92,10 +94,14 @@ def test_check_schema_health_mirrors_reference():
         "minor_val": {"type": "number", "description": "d", "value": 3},
         "tol_val": {"type": "number", "description": "d", "value": 0},
         "unknown_p": {"type": "string"},        # not in repo -> skipped
+        "str_5": {"type": "string", "description": "d", "value": "5"},
+        "arr_empty": {"type": "array", "description": "d"},
     }
     h = ss.check_schema_health(schema, repo)
     assert h["critical"] == ["crit_p"]
-    assert sorted(h["minor"]) == ["minor_desc", "minor_val"]
+    # a string param compares values as stored (5 != "5"); an empty repo
+    # nestedSchema matches a schema with none (no keys on either side)
+    assert sorted(h["minor"]) == ["minor_desc", "minor_val", "str_5"]
 
 
 def test_check_schema_health_nested_drift():
@@ -237,11 +243,10 @@ def test_used_in_schemas_maintenance(tmp_path):
     assert ss.find_impacted_schemas("price", repo) == ["purchase"]
 
 
-def test_sync_repo_usage_index_matches_ground_truth(spark):
-    """After sync_repo_usage, the cached reverse index (impacted_schemas)
-    agrees with the ground-truth join (impacted_schemas_full) for every
-    repo param."""
-    from events_validator_spark.operators import rules_meta as rm
+def test_sync_repo_usage_index_matches_ground_truth():
+    """After sync_repo_usage, the cached reverse index
+    (find_impacted_schemas) agrees with the ground truth (the repo params
+    each schema declares) for every repo param."""
     repo = {"price": {"type": "number"}, "color": {"type": "string"},
             "unused": {"type": "string", "usedInSchemas": []}}
     rules_by_name = {
@@ -249,23 +254,18 @@ def test_sync_repo_usage_index_matches_ground_truth(spark):
         "view_item": {"color": {"type": "string"}, "version": {"value": 1}},
     }
     assert ss.sync_repo_usage(repo, rules_by_name) is True
-    params = rm.params_table(spark, repo)
-    schemas = rm.schemas_table(spark, rules_by_name)
-    truth = {(r["param"], r["event_name"])
-             for r in rm.impacted_schemas_full(params, schemas).collect()}
-    cached = set()
-    for p in repo:
-        for r in rm.impacted_schemas(params, p).collect():
-            cached.add((p, r["event_name"]))
+    truth = {(p, name) for name, s in rules_by_name.items() for p in s
+             if p in repo}
+    cached = {(p, name) for p in repo
+              for name in ss.find_impacted_schemas(p, repo)}
     assert cached == truth
     assert not ss.sync_repo_usage(repo, rules_by_name)  # converged
 
 
-def test_schema_health_raw_fallback_for_noncastable_numbers(spark):
+def test_schema_health_raw_fallback_for_noncastable_numbers():
     """ADVICE r2: two DIFFERENT non-castable strings on a number param must
     flag drift (the reference's except-fallback compares raw); identical
     junk strings stay 'ok'."""
-    from events_validator_spark.operators import rules_meta as rm
     repo = {"a": {"type": "number", "value": "abc"},
             "b": {"type": "number", "value": "junk"},
             "c": {"type": "number", "value": "2.0"}}
@@ -274,11 +274,7 @@ def test_schema_health_raw_fallback_for_noncastable_numbers(spark):
         "b": {"type": "number", "value": "junk"},   # junk vs junk, identical
         "c": {"type": "number", "value": "2"},      # numeric-tolerant equal
     }}
-    got = {r["param"]: r["severity"]
-           for r in rm.schema_health(rm.schemas_table(spark, rules_by_name),
-                                     rm.params_table(spark, repo)).collect()}
-    assert got == {"a": "minor", "b": "ok", "c": "ok"}
-    # python twin agrees (single except-fallback like updater.py:186-192)
+    # single except-fallback like updater.py:186-192: only "a" drifts
     h = ss.check_schema_health(rules_by_name["e"], repo)
     assert h == {"critical": [], "minor": ["a"]}
 
@@ -297,13 +293,14 @@ def test_clean_repo_types_load_time_normalization(tmp_path):
         }},
     }
     ss.save_repo(repo, str(tmp_path))
-    loaded = ss.load_repo(str(tmp_path))
+    loaded = load_repo(str(tmp_path))
     assert loaded["price"]["value"] == 3.5
     assert loaded["count"]["value"] == 7
     assert loaded["junk"]["value"] == "abc"
     assert loaded["blank"]["value"] == "  "
     assert loaded["items"]["nestedSchema"]["qty"]["value"] == 2
     assert loaded["items"]["nestedSchema"]["name"]["value"] == "5"
+    assert load_repo(str(tmp_path / "empty")) is None  # 404 -> null
     assert ss.available_categories(
         {"a": {"category": "ecom"}, "b": {"category": "core"},
          "c": {}, "d": {"category": ""}}) == ["core", "ecom"]

@@ -656,35 +656,27 @@ def q_v2_validate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_drift3_tdigest_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-digest sketch path with a tolerance-banded oracle (VERDICT r4 #2).
+    """Quantile-sketch path with a tolerance-banded oracle (VERDICT r4 #2).
 
     The sketch's raw numbers can't be hash-compared cross-engine, but its
     contract can: the output carries EXACT per-cohort quantiles and the
     exact two-sample KS (both bit-reproducible in DuckDB — same conventions
     the s2/s4/drift2 oracles pin) plus ``digest_ok`` booleans asserting the
-    digest-derived twin of each number lies within its documented error
-    band. A digest-math regression flips a boolean → value-hash mismatch →
-    the driver catches it; benign merge-order wobble (≈0.5% rank error at
-    delta=200, vs the 3%-of-spread / 0.05-KS bands) never does. The digest
-    KS comes from ``ks_from_digests``' one base|cur pair (its broadcast
-    self-join on grp_a < grp_b)."""
+    sketch-derived twin of each number lies within its documented error
+    band. A sketch regression flips a boolean → value-hash mismatch →
+    the driver catches it; the sketch's partitioning-dependent wobble
+    (≈1e-4 of the spread at ``percentile_approx``'s default accuracy, vs
+    the 3%-of-spread / 0.05-KS bands) never does. The sketch KS comes from
+    ``ks_from_digests``' one base|cur pair (its broadcast self-join on
+    grp_a < grp_b)."""
     # measured r6: _par LOSES here (A/B min-of-8: 1.40s plain vs 4.33s par
     # at sf1.0) — the high-cardinality exact-KS tie pre-aggregation doesn't
     # compress and every consumer pays the extra round-robin exchange
     ev = _t(spark, sf_dir, "events")
     grouped = ev.withColumn(
         "half", F.when(F.dayofmonth("ts") >= 16, "cur").otherwise("base"))
-    # build the per-cohort digest table ONCE and hand it to both consumers:
-    # each tdigest UDAF call is a distinct Python UDF object, so two
-    # structurally-identical builds would not collapse via exchange reuse —
-    # the lazy localCheckpoint materializes the tiny (grp, digest) table a
-    # single time for the whole query
-    digests = drift.grouped_digests(
-        grouped.withColumn("__grp", F.col("half").cast("string")),
-        "value", "__grp", delta=200).localCheckpoint(eager=False)
-    qaudit = drift.tdigest_exactness_audit(grouped, "value", "half",
-                                           digests=digests)
-    dks = drift.ks_from_digests(grouped, "value", "half", digests=digests) \
+    qaudit = drift.tdigest_exactness_audit(grouped, "value", "half")
+    dks = drift.ks_from_digests(grouped, "value", "half") \
         .select(F.col("ks").alias("dks"))
     eks = drift.ks_two_sample(ev, "value", F.dayofmonth("ts") >= 16) \
         .select(F.col("ks").alias("eks"))
@@ -1106,10 +1098,10 @@ def oracle_sql() -> dict[str, str]:
                                  - cb / GREATEST(nb, 1))), 8) AS ks
             FROM cum, tot
         """,
-        # tolerance-banded oracle for the t-digest sketch: the exact halves
+        # tolerance-banded oracle for the quantile sketch: the exact halves
         # (quantile_cont per cohort + exact two-sample KS) are hash-compared;
         # digest_ok is the in-Spark tolerance assertion, TRUE here by the
-        # sketch's error-bound contract — a digest regression flips it and
+        # sketch's error-bound contract — a sketch regression flips it and
         # breaks the hash
         "drift3_tdigest_ks": r"""
             WITH ev AS (

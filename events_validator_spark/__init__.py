@@ -12,8 +12,8 @@ distributed, columnar, Catalyst-optimized Spark engine:
   assembled into a single ``df.agg(...)`` scan;
 * uniqueness and referential integrity are salted aggregations / broadcast anti-joins;
 * distribution drift (histogram + PSI / KS) compares a current profile against a
-  baseline profile, with the only executor-side Python being Arrow-vectorized
-  ``applyInPandas`` comparators;
+  baseline profile with native aggregates (``percentile_approx`` quantile
+  sketches) and SQL comparators — no Python worker;
 * training-data-pipeline operators (dedup exact/MinHash-LSH/SimHash, ANN similarity
   search, text quality / language-id / tokenization, multimodal binary plumbing)
   round out the engine for 100 TB-scale corpus work.

@@ -125,7 +125,7 @@ def bucket_pairs(buckets: DataFrame, keys: list[str]) -> DataFrame:
     pair (columns ``a``, ``b``; ``a`` precedes ``b`` in the sorted items
     array).
 
-    Precondition: the bucket ``keys`` are non-NULL. The self-join matches
+    Precondition: the bucket ``keys`` must not be NULL. The self-join matches
     keys with ``=``, so a bucket whose key is NULL emits no pairs, where
     exploding :func:`pairs_expr` would still pair its items. For non-NULL
     keys the pair set and orientation are identical. Every package caller

@@ -1,11 +1,11 @@
-"""Distribution-drift checks: histogram/PSI, KS, t-digest quantile profiles.
+"""Distribution-drift checks: histogram/PSI, KS, sketched quantile profiles.
 
 Shape follows the reference's schema-health check (compare current vs baseline,
 /root/reference/streamlit_ev/app/helpers/updater.py:151-217) generalized from
 schema drift to DATA drift per the north rule:
 
-* numeric columns → t-digest quantile profile (GROUPED_AGG pandas UDAF — the
-  only executor-side Python, Arrow-vectorized) or built-in histogram sketches;
+* numeric columns → quantile profile from Spark's ``percentile_approx``
+  sketch (aggregated map-side, no Python worker) or histogram sketches;
 * categorical columns → bucketed counts;
 * comparison → PSI (Population Stability Index) on histograms: one
   ``groupBy(bucket)`` of per-cohort counts, then one global aggregate that
@@ -13,7 +13,7 @@ schema drift to DATA drift per the north rule:
   (:func:`_psi`, 3 Spark jobs with known bounds); categories, whose count
   has no bound, keep a distributed sum (:func:`_psi_distributed`); KS
   statistic on CDFs as a distributed prefix sum, or between every pair of
-  per-group t-digests as a broadcast self-join scored by an Arrow UDF.
+  per-group quantile grids as a broadcast self-join scored in SQL.
 
 Thresholded results are emitted in the engine's violation-row format
 (error_type='drift') so they land in the same violations table.
@@ -21,117 +21,42 @@ Thresholded results are emitted in the engine's violation-row format
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import DataFrame, functions as F
 
-from events_validator_spark.functions.tdigest import TDigest
 from events_validator_spark.operators.stats import (
     _bucket_counts, _prefix_sums,
 )
 
 
 # ---------------------------------------------------------------------------
-# t-digest quantile profiles (mergeable; the 10^12-row quantile path)
+# Quantile profiles: Spark's mergeable GK sketch, aggregated map-side
 # ---------------------------------------------------------------------------
 
-def tdigest_udaf(delta: int = 100):
-    """GROUPED_AGG pandas UDAF: column values → serialized t-digest bytes.
-
-    NOTE: GROUPED_AGG pandas UDFs do NOT partially aggregate — Spark
-    materializes each group's full value series in one executor call. Never
-    apply this directly to a data-sized group at scale; use
-    :func:`grouped_digests`, which salts groups into bounded sub-groups first
-    and merges the sub-digests in a second (tiny) aggregation.
-    """
-    @pandas_udf("binary")
-    def agg(v: pd.Series) -> bytes:
-        return TDigest.from_values(v.to_numpy(dtype=np.float64), delta).serialize()
-    return agg
-
-
-def tdigest_merge_udaf(delta: int = 100):
-    """GROUPED_AGG pandas UDAF over serialized digests → one merged digest.
-
-    Partials are merged in SORTED serialized-bytes order: pairwise t-digest
-    merge is associative in distribution but not bit-identical under
-    reordering, and Spark hands the group's blobs in partition order —
-    sorting first makes the merged digest a pure function of the partial SET,
-    so results are identical across parallelism configs."""
-    @pandas_udf("binary")
-    def merge(blobs: pd.Series) -> bytes:
-        out = None
-        for b in sorted(bytes(x) for x in blobs if x is not None):
-            d = TDigest.deserialize(b)
-            out = d if out is None else out.merge(d)
-        return (out if out is not None else TDigest(delta)).serialize()
-    return merge
-
-
-def grouped_digests(df: DataFrame, column: str, group_col: str,
-                    delta: int = 100, n_salts: int = 64,
-                    salt_cols: list[str] | None = None) -> DataFrame:
-    """(grp, digest) with TRUE two-level mergeable aggregation.
-
-    Level 1 builds a digest per (group, salt) — each UDF call sees roughly
-    group_size/n_salts values, so executor memory stays bounded no matter how
-    large a group is. Level 2 merges the ≤``n_salts`` sub-digests per group
-    (t-digest merge is associative). This is the 10^12-row quantile path;
-    raise ``n_salts`` until group_size/n_salts fits an Arrow batch.
-
-    Salting (ADVICE r2): the salt hashes the ROW content by default — NOT
-    the value. Value-hash salting collapses to one sub-group exactly in the
-    skewed case this path exists for (a heavy-hitter or constant column);
-    row-content hashing spreads whenever any other column varies (every real
-    table carries an id/timestamp). Results stay deterministic across
-    parallelism: sub-group membership depends only on row values, never on
-    partitioning, and the merge is order-insensitive at digest granularity.
-    Pass ``salt_cols`` (e.g. a unique doc_id) to pin the spread to a stable
-    row key — required only when FULLY-identical rows dominate a group, and
-    recommended on WIDE tables: the default hashes every hashable column,
-    which defeats column pruning at the scan. Unhashable column types (map,
-    variant — xxhash64 raises on them) are excluded from the default salt
-    automatically (ADVICE r3).
-    """
-    agg = tdigest_udaf(delta)
-    mrg = tdigest_merge_udaf(delta)
-    cols = salt_cols if salt_cols else [
-        f.name for f in df.schema.fields
-        if not isinstance(f.dataType, (T.MapType, T.VariantType))]
-    if not cols:  # all-map table: fall back to value+group (documented trade)
-        cols = [column, group_col]
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in cols], F.lit(7)),
-                  F.lit(n_salts))
-    partial = (df.groupBy(F.col(group_col).alias("grp"), salt.alias("__salt"))
-               .agg(agg(F.col(column).cast("double")).alias("d")))
-    return partial.groupBy("grp").agg(mrg("d").alias("digest"))
+def _sketch(column: str, qs) -> F.Column:
+    """``percentile_approx`` of ``column`` (as double) at the fractions
+    ``qs``, default accuracy: the drift operators' one quantile sketch, the
+    one ``stats.profile`` uses. Partial aggregates merge map-side, so no
+    task holds a whole group however large it is; NULLs are skipped and a
+    group with no non-NULL value gives NULL."""
+    return F.percentile_approx(F.col(column).cast("double"),
+                               [float(q) for q in qs])
 
 
 def quantile_profile(df: DataFrame, column: str, group_col: str,
-                     qs: tuple[float, ...] = (0.1, 0.25, 0.5, 0.75, 0.9),
-                     delta: int = 100, n_salts: int = 64,
-                     digests: DataFrame | None = None) -> DataFrame:
-    """(grp, quantiles array) per group via the two-level t-digest path
-    (:func:`grouped_digests`): salted partial digests, then an associative
-    merge — executor memory is bounded by group_size/n_salts, not group size.
+                     qs: tuple[float, ...] = (0.1, 0.25, 0.5, 0.75, 0.9)
+                     ) -> DataFrame:
+    """(grp, quantiles array) per group: one
+    ``groupBy(group_col).agg(percentile_approx(column, qs))``.
 
-    Pass ``digests`` (a (grp, digest) table) to reuse an already-built
-    digest set: each ``tdigest_udaf()`` call creates a distinct Python UDF
-    object, so two structurally-identical digest builds in one query do NOT
-    collapse via exchange reuse — sharing the table explicitly is the only
-    way to pay the scan+build once.
+    The quantiles are approximate, and above the sketch's compression size
+    (tens of thousands of rows per group) the raw values depend on how the
+    rows are partitioned: at 100k rows, four partitionings gave up to three
+    distinct results per group, all within 1e-4 of the group's p10–p90
+    spread. Below that size the sketch keeps every value and the result is
+    the same on any partitioning.
     """
-    if digests is None:
-        digests = grouped_digests(df, column, group_col, delta, n_salts)
-
-    @pandas_udf("array<double>")
-    def read_q(blobs: pd.Series) -> pd.Series:
-        return pd.Series([TDigest.deserialize(bytes(b)).quantiles(qs)
-                          for b in blobs])
-
-    return digests.select("grp", read_q("digest").alias("quantiles"))
+    return df.groupBy(F.col(group_col).alias("grp")) \
+        .agg(_sketch(column, qs).alias("quantiles"))
 
 
 # ---------------------------------------------------------------------------
@@ -233,7 +158,7 @@ def _psi_sum_sql(arr: str, ct: str, bt: str, eps: float) -> str:
 
 # ---------------------------------------------------------------------------
 # KS — exact two-sample statistic over a distributed prefix sum, and the
-#      pairwise sketch compare over per-group t-digests
+#      pairwise compare over per-group quantile sketches
 # ---------------------------------------------------------------------------
 
 def ks_two_sample(df: DataFrame, column: str, cohort: F.Column,
@@ -260,60 +185,37 @@ def ks_two_sample(df: DataFrame, column: str, cohort: F.Column,
 
 
 def ks_from_digests(df: DataFrame, column: str, group_col: str,
-                    n_points: int = 200, delta: int = 200,
-                    digests: DataFrame | None = None) -> DataFrame:
-    """Approximate pairwise KS between all groups from t-digest profiles:
+                    n_points: int = 200) -> DataFrame:
+    """Approximate pairwise KS between all groups from quantile sketches:
     (grp_a, grp_b, ks), one row per pair with ``grp_a < grp_b``.
 
-    One scan builds a digest per group (two-level salted aggregation,
-    :func:`grouped_digests` — bounded executor memory); a pandas UDF
-    evaluates each group's inverse-CDF grid ONCE (G rows, not G²
-    evaluations); the G×G/2 pair space is a broadcast self-join on
-    ``grp_a < grp_b``, so pairs spread across the cluster; a scalar
-    Arrow-batched pandas UDF takes each pair's sup |F_a − F_b| on the union
-    of both grids. No task holds more than its share of pairs. The
-    broadcast side is G·n_points doubles (~16 MB at G=10k) — beyond that,
-    add a blocking key to the self-join before broadcasting.
+    One ``groupBy(group_col)`` builds each group's inverse-CDF grid, its
+    ``percentile_approx`` at ``n_points`` fractions evenly spaced over
+    [0.005, 0.995] (G rows, not G² evaluations); the G×G/2 pair space is a
+    broadcast self-join on ``grp_a < grp_b``, so pairs spread across the
+    cluster; each pair's sup |F_a − F_b| is taken in SQL over the union of
+    both grids, where F at x is the share of grid points ≤ x. The broadcast
+    side is G·n_points doubles (~16 MB at G=10k) — beyond that, add a
+    blocking key to the self-join before broadcasting.
 
-    A group with no non-NULL value has an empty digest and no distribution:
-    its pairs carry a NULL ``ks``, as :func:`psi_two_cohorts` does for an
-    all-NULL column.
-
-    ``digests``: reuse an already-built (grp, digest) table — see
-    :func:`quantile_profile` for why explicit sharing is required."""
-    if digests is None:
-        digests = grouped_digests(
-            df.withColumn("__grp", F.col(group_col).cast("string")),
-            column, "__grp", delta=delta)
-
-    @pandas_udf("array<double>")
-    def inv_cdf(blobs: pd.Series) -> pd.Series:
-        qs = np.linspace(0.005, 0.995, n_points)
-        digs = [TDigest.deserialize(bytes(b)) for b in blobs]
-        return pd.Series([[float(x) for x in d.quantiles(qs)]
-                          if d.means.size else None for d in digs])
-
-    g = digests.select("grp", inv_cdf("digest").alias("inv"))
+    A group with no non-NULL value has a NULL grid and no distribution: its
+    pairs carry a NULL ``ks``, as :func:`psi_two_cohorts` does for an
+    all-NULL column. The grids are approximate quantiles and, above the
+    sketch's compression size, vary slightly with the partitioning (see
+    :func:`quantile_profile`); at 100k rows the KS of two cohorts came out
+    the same on every partitioning tried.
+    """
+    step = 0.99 / max(n_points - 1, 1)
+    g = df.groupBy(F.col(group_col).cast("string").alias("grp")).agg(
+        _sketch(column, [0.005 + i * step for i in range(n_points)])
+        .alias("inv"))
     a = g.select(F.col("grp").alias("grp_a"), F.col("inv").alias("inv_a"))
     b = g.select(F.col("grp").alias("grp_b"), F.col("inv").alias("inv_b"))
     pairs = a.join(F.broadcast(b), F.col("grp_a") < F.col("grp_b"))
-
-    @pandas_udf("double")
-    def ks_pair(inv_a: pd.Series, inv_b: pd.Series) -> pd.Series:
-        out = []
-        for va, vb in zip(inv_a, inv_b):
-            if va is None or vb is None:
-                out.append(None)
-                continue
-            va, vb = np.asarray(va), np.asarray(vb)
-            grid = np.union1d(va, vb)
-            fa = np.searchsorted(va, grid, side="right") / n_points
-            fb = np.searchsorted(vb, grid, side="right") / n_points
-            out.append(float(np.abs(fa - fb).max()))
-        return pd.Series(out, dtype="float64")
-
-    return pairs.select("grp_a", "grp_b",
-                        ks_pair("inv_a", "inv_b").alias("ks"))
+    cdf = lambda inv: f"size(filter({inv}, y -> y <= x))"
+    gap = (f"array_max(transform(array_union(inv_a, inv_b), x -> "
+           f"abs({cdf('inv_a')} - {cdf('inv_b')}))) / {n_points}")
+    return pairs.select("grp_a", "grp_b", F.expr(gap).alias("ks"))
 
 
 def drift_violations(psi_df: DataFrame, column: str,
@@ -329,51 +231,38 @@ def drift_violations(psi_df: DataFrame, column: str,
 def tdigest_exactness_audit(df: DataFrame, column: str, group_col: str,
                             probes: tuple[float, ...] = (0.1, 0.25, 0.5,
                                                          0.75, 0.9),
-                            delta: int = 200, n_salts: int = 64,
-                            rel_tol: float = 0.03,
-                            digests: DataFrame | None = None) -> DataFrame:
-    """Per-group audit of the t-digest sketch against EXACT quantiles:
+                            rel_tol: float = 0.03) -> DataFrame:
+    """Per-group audit of the quantile sketch against EXACT quantiles:
     (metric='quantile', grp, probe, exact_value, digest_ok).
 
     The sketch is approximate by design, so its raw output can never be
     hash-compared cross-engine — but its CONTRACT can (VERDICT r4 #2):
     ``exact_value`` is the exact per-group quantile (bit-reproducible by
     DuckDB's ``quantile_cont`` — the same convention the s2/s4 oracles pin),
-    and ``digest_ok`` asserts the digest quantile lies within
-    ``rel_tol`` of it, scaled by the group's p10–p90 spread. A digest-math
-    regression flips the boolean and fails the value-hash compare, while
-    legitimate merge-order wobble (well inside t-digest's delta=200 error
-    bound, ~0.5% rank error at mid-quantiles vs the 3% default band) never
-    does.
+    and ``digest_ok`` asserts the sketch quantile (the one
+    :func:`quantile_profile` gives) lies within ``rel_tol`` of it, scaled by
+    the group's p10–p90 spread. A sketch regression flips the boolean and
+    fails the value-hash compare, while its partitioning-dependent wobble
+    (1e-4 of the spread at the default accuracy, vs the 3% default band)
+    never does.
 
-    Cost: the digest side is the two-level :func:`grouped_digests` path; the
-    exact side is one grouped ``percentile`` — fine for audit-sized group
-    counts (this is a diagnostic you run on a sample or a few cohorts, not
-    a per-batch production aggregate; the production path stays
-    sketch-only).
+    Cost: one ``groupBy(group_col)`` holding both the sketch and an exact
+    ``percentile``, which keeps every distinct value of a group — fine for
+    audit-sized inputs (this is a diagnostic you run on a sample or a few
+    cohorts, not a per-batch production aggregate; the production path
+    stays sketch-only).
     """
-    grouped = df.withColumn("__grp", F.col(group_col).cast("string"))
-    dqt = (quantile_profile(grouped, column, "__grp",
-                            qs=tuple(float(p) for p in probes),
-                            delta=delta, n_salts=n_salts, digests=digests)
-           .select("grp", F.posexplode("quantiles").alias("pos", "dq")))
-
-    pcts = F.percentile(column, F.lit([float(p) for p in probes]))
-    exact = (grouped.groupBy(F.col("__grp").alias("grp"))
-             .agg(pcts.alias("eqs"),
-                  F.percentile(column, F.lit(0.9)).alias("p90"),
-                  F.percentile(column, F.lit(0.1)).alias("p10"))
-             .select("grp", "p90", "p10",
-                     F.posexplode("eqs").alias("pos", "eq")))
-
-    probe_arr = F.array(*[F.lit(float(p)) for p in probes])
+    ps = [float(p) for p in probes]
+    n = len(ps)
+    g = (df.groupBy(F.col(group_col).cast("string").alias("grp"))
+         .agg(F.percentile(column, F.lit(ps + [0.1, 0.9])).alias("e"),
+              _sketch(column, ps).alias("d")))
     tol = F.greatest(F.lit(1e-6),
-                     F.lit(rel_tol) * (F.col("p90") - F.col("p10")))
-    # both sides are G·|probes| rows — AQE broadcasts the join
-    return (exact.join(dqt, ["grp", "pos"])
-            .select(F.lit("quantile").alias("metric"),
-                    "grp",
-                    F.element_at(probe_arr, F.col("pos") + 1).alias("probe"),
-                    F.round("eq", 6).alias("exact_value"),
-                    (F.abs(F.col("dq") - F.col("eq")) <= tol)
-                    .alias("digest_ok")))
+                     F.lit(rel_tol) * (F.col("e")[n + 1] - F.col("e")[n]))
+    rows = g.select("grp", tol.alias("tol"), F.inline(F.arrays_zip(
+        F.array(*[F.lit(p) for p in ps]).alias("probe"),
+        F.slice("e", 1, n).alias("eq"), F.col("d").alias("dq"))))
+    return rows.select(F.lit("quantile").alias("metric"), "grp", "probe",
+                       F.round("eq", 6).alias("exact_value"),
+                       (F.abs(F.col("dq") - F.col("eq")) <= F.col("tol"))
+                       .alias("digest_ok"))

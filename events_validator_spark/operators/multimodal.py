@@ -1,9 +1,11 @@
 """Multimodal (image/audio/video) column plumbing.
 
-Media payloads are opaque ``binary`` columns with typed metadata structs; all
-heavy per-item work (decode, resize, frame-sample, feature-extract) runs in
-Arrow-batched ``mapInPandas`` so bytes move executor-side in columnar batches,
-never through the driver.
+Media payloads are opaque ``binary`` columns with typed metadata structs.
+Sizes and checksums are native Spark functions (``length``, ``crc32``,
+``sha2``), so metadata extraction starts no Python worker; the per-item
+decode work (decode, resize, frame-sample, feature-extract) runs in
+Arrow-batched ``mapInPandas``, so bytes move executor-side in columnar
+batches, never through the driver.
 
 The actual codecs (PIL/librosa/ffmpeg) are NOT in this container, so the decode
 step is STUBBED: ``decode_stub=True`` (default) produces deterministic fake
@@ -45,26 +47,18 @@ def attach_fake_media(df: DataFrame, ref_col: str = "media_ref",
 def extract_media_metadata(df: DataFrame, ref_col: str = "media_ref",
                            payload_col: str = "payload",
                            mime_col: str | None = None) -> DataFrame:
-    """Checksums + sizes per media item via mapInPandas (Arrow batches)."""
-    mime_idx = df.columns.index(mime_col) if mime_col else None
-    ref_idx = df.columns.index(ref_col)
-    pay_idx = df.columns.index(payload_col)
-
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs = pdf.iloc[:, ref_idx]
-            pays = pdf.iloc[:, pay_idx]
-            mimes = (pdf.iloc[:, mime_idx] if mime_idx is not None
-                     else pd.Series(["application/octet-stream"] * len(pdf)))
-            yield pd.DataFrame({
-                "media_ref": refs.values,
-                "mime": mimes.values,
-                "n_bytes": [len(b) for b in pays],
-                "crc32": [zlib.crc32(bytes(b)) for b in pays],
-                "sha256": [hashlib.sha256(bytes(b)).hexdigest() for b in pays],
-            })
-
-    return df.mapInPandas(meta, MEDIA_META_DDL)
+    """Size and checksums per media item (``MEDIA_META_DDL``), as native
+    functions: ``n_bytes`` is the payload's byte length, ``crc32`` and
+    ``sha256`` are those of ``zlib.crc32`` and ``hashlib.sha256`` (hex).
+    Without ``mime_col`` every item is ``application/octet-stream``. A NULL
+    payload gives NULL ``n_bytes``, ``crc32`` and ``sha256``."""
+    pay = F.col(payload_col)
+    mime = F.col(mime_col) if mime_col else F.lit("application/octet-stream")
+    return df.select(F.col(ref_col).cast("string").alias("media_ref"),
+                     mime.cast("string").alias("mime"),
+                     F.length(pay).cast("bigint").alias("n_bytes"),
+                     F.crc32(pay).alias("crc32"),
+                     F.sha2(pay, 256).alias("sha256"))
 
 
 def decode_and_featurize(df: DataFrame, ref_col: str = "media_ref",

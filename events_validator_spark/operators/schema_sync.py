@@ -36,6 +36,13 @@ RESERVED_KEYS = ("event_name", "version")
 _SENTINELS = ("Any", "")
 
 
+def _props(param: Any) -> dict:
+    """A schema param's attributes. A param that is not a dict has none,
+    so it has no type: the health check calls it critical and a full update
+    replaces it with the repo's definition."""
+    return param if isinstance(param, dict) else {}
+
+
 def _parse_number(s: str) -> Any:
     """Numeric string → int/float; a non-number string comes back unchanged
     (the reference's except-pass)."""
@@ -143,14 +150,15 @@ def sync_repo_usage(repo: dict, rules_by_name: dict[str, dict]) -> bool:
 def _preserve_values(new_props: dict, old_props: dict) -> dict:
     """Smart update (updater.py:239-249): keep the schema's pinned value when
     the type is unchanged, top-level and per nested key."""
+    old_props = _props(old_props)
     if old_props.get("type") == new_props.get("type"):
         if "value" in old_props:
             new_props["value"] = old_props["value"]
         if new_props.get("type") == "array" and "nestedSchema" in new_props:
-            old_nested = old_props.get("nestedSchema", {})
+            old_nested = _props(old_props.get("nestedSchema"))
             for nk, nv in new_props["nestedSchema"].items():
-                old_nv = old_nested.get(nk)
-                if (old_nv and old_nv.get("type") == nv.get("type")
+                old_nv = _props(old_nested.get(nk))
+                if (old_nv.get("type") == nv.get("type")
                         and "value" in old_nv):
                     nv["value"] = old_nv["value"]
     return new_props
@@ -182,7 +190,8 @@ def check_schema_health(schema: dict, repo: dict) -> dict:
 
     Mirrors updater.py:151-217 exactly:
       * reserved keys and params NOT in the repo are skipped;
-      * type mismatch → critical (stop there);
+      * type mismatch → critical (stop there); a param that is not a dict
+        has no type, so it is critical;
       * description drift, value drift (with 'Any'/''/None normalised to
         None and numbers compared as floats), or array nestedSchema drift
         (key count, key set, per-key type/description) → minor.
@@ -196,6 +205,7 @@ def check_schema_health(schema: dict, repo: dict) -> dict:
     for name, schema_param in schema.items():
         if name in RESERVED_KEYS or name not in repo:
             continue
+        schema_param = _props(schema_param)
         expected = construct_schema_definition(repo[name])
         if schema_param.get("type") != expected.get("type"):
             health["critical"].append(name)
@@ -220,14 +230,14 @@ def check_schema_health(schema: dict, repo: dict) -> dict:
             mismatch = True
 
         if expected.get("type") == "array" and "nestedSchema" in expected:
-            cur_n = schema_param.get("nestedSchema", {})
+            cur_n = _props(schema_param.get("nestedSchema"))
             exp_n = expected["nestedSchema"]
             if len(cur_n) != len(exp_n):
                 mismatch = True
             else:
                 for nk, ev in exp_n.items():
-                    cv = cur_n.get(nk)
-                    if (cv is None or cv.get("type") != ev.get("type")
+                    cv = _props(cur_n.get(nk))
+                    if (cv.get("type") != ev.get("type")
                             or cv.get("description", "")
                             != ev.get("description", "")):
                         mismatch = True
@@ -273,7 +283,14 @@ def save_schema(schema: dict, dir_path: str, event_name: str,
     param gains this schema in ``usedInSchemas`` and the repo is re-persisted
     alongside — without this, a few saves make the cached index diverge from
     the schemas' declared params (the staleness updater.py:85-93 guards
-    against)."""
+    against).
+
+    The event name ``repo`` is refused with ValueError before anything is
+    written: ``repo.json`` is the repository's file, and the loaders skip
+    it as a schema."""
+    if event_name == "repo":
+        raise ValueError("'repo' is the parameter repository's name "
+                         "(repo.json), not an event schema's")
     path = _write_atomic(dir_path, f"{event_name}.json",
                          json.dumps(schema, indent=2, sort_keys=True))
     if repo is not None and update_repo_with_schema_usage(
@@ -285,7 +302,8 @@ def save_schema(schema: dict, dir_path: str, event_name: str,
 def save_repo(repo: dict, dir_path: str) -> str:
     """Write the parameter repository (repo.json), atomically. Pairs with
     rules_loader.load_repo for the full round trip."""
-    return save_schema(repo, dir_path, "repo")
+    return _write_atomic(dir_path, "repo.json",
+                         json.dumps(repo, indent=2, sort_keys=True))
 
 
 def _write_atomic(dir_path: str, file_name: str, text: str) -> str:

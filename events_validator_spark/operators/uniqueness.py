@@ -59,9 +59,8 @@ def salted_collect(df: DataFrame, keys: list[str], payload_col: str,
     collected, so it is read either way): deterministic under stage retry
     AND independent of physical layout, so a hot key still spreads over
     ``n_salts`` reducers even on input parquet CLUSTERED by the key, where
-    a partition-id salt would collapse to one value (the grouped_digests
-    pattern; only fully-identical duplicate rows share a salt, the same
-    documented trade).
+    a partition-id salt would collapse to one value (only fully-identical
+    duplicate rows share a salt).
     """
     from pyspark.sql import types as T
     ptype = df.schema[payload_col].dataType

@@ -6,7 +6,8 @@ comparison (and any resume) is a coin flip. Catches tie-breaking bugs in
 top-k, truncation-order bugs in capped LSH buckets, and float reduction-order
 drift.
 
-Usage: python scripts/check_determinism.py [sf_dir]
+Usage: python scripts/check_determinism.py [sf_dir] [query ...]
+(no query names: every queries() entry)
 """
 
 from __future__ import annotations
@@ -32,8 +33,11 @@ def canon(v):
 
 spark = get_spark(cores={cores}, shuffle_partitions={parts})
 spark.sparkContext.setLogLevel("ERROR")
+only = set({only!r})
 out = {{}}
 for name, fn in em.queries().items():
+    if only and name not in only:
+        continue
     df = fn(spark, "{sf_dir}")
     cols = sorted(df.columns)
     rows = sorted(tuple(canon(r[c]) for c in cols) for r in df.collect())
@@ -45,8 +49,9 @@ spark.stop()
 '''
 
 
-def run(cores: int, parts: int, sf_dir: str) -> dict:
-    code = _RUN.format(repo=REPO, cores=cores, parts=parts, sf_dir=sf_dir)
+def run(cores: int, parts: int, sf_dir: str, only: list[str]) -> dict:
+    code = _RUN.format(repo=REPO, cores=cores, parts=parts, sf_dir=sf_dir,
+                       only=only)
     p = subprocess.run([sys.executable, "-c", code],
                        capture_output=True, text=True, check=True)
     line = [l for l in p.stdout.splitlines() if l.startswith("RESULT ")][-1]
@@ -55,8 +60,9 @@ def run(cores: int, parts: int, sf_dir: str) -> dict:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    a = run(4, 16, sf_dir)
-    b = run(13, 7, sf_dir)   # deliberately odd parallelism
+    only = sys.argv[2:]
+    a = run(4, 16, sf_dir, only)
+    b = run(13, 7, sf_dir, only)   # deliberately odd parallelism
     bad = {k: (a[k], b[k]) for k in a if a[k] != b.get(k)}
     for k in sorted(a):
         mark = "DIFF" if k in bad else "ok"

@@ -1,30 +1,44 @@
-"""Drift operators: t-digest quantiles, PSI, KS — against numpy ground truth."""
+"""Drift operators: sketched quantiles, PSI, KS — against numpy ground truth."""
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from events_validator_spark.functions.tdigest import TDigest
 from events_validator_spark.operators import drift, stats
 
 
-def test_tdigest_quantiles_accurate():
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_tdigest_quantiles_accurate(spark):
     rng = np.random.default_rng(0)
     x = rng.standard_normal(50_000)
-    d = TDigest.from_values(x, delta=100)
-    for q in (0.01, 0.25, 0.5, 0.75, 0.99):
-        assert d.quantile(q) == pytest.approx(np.quantile(x, q), abs=0.02)
+    df = spark.createDataFrame([("g", float(v)) for v in x], ["g", "x"])
+    qs = (0.01, 0.25, 0.5, 0.75, 0.99)
+    got = drift.quantile_profile(df, "x", "g", qs).collect()[0]["quantiles"]
+    for q, v in zip(qs, got):
+        assert v == pytest.approx(np.quantile(x, q), abs=0.02)
 
 
-def test_tdigest_merge_matches_whole():
+def test_tdigest_merge_matches_whole(spark):
+    """Sketches built on separate partitions merge to the quantiles of the
+    whole: ``a`` and ``b`` sit in two input partitions of one group, and
+    the plan aggregates each partition partially before the merge."""
     rng = np.random.default_rng(1)
     a, b = rng.standard_normal(20_000), 2 + rng.standard_normal(20_000)
-    merged = TDigest.from_values(a).merge(TDigest.from_values(b))
+    sc = spark.sparkContext
+    part = lambda src, v: sc.parallelize([(src, "g", float(x)) for x in v], 1)
+    df = spark.createDataFrame(sc.union([part("a", a), part("b", b)]),
+                               "src string, g string, x double")
+    layout = df.select(F.spark_partition_id(), "src").distinct().collect()
+    assert sorted(tuple(r) for r in layout) == [(0, "a"), (1, "b")]
+    prof = drift.quantile_profile(df, "x", "g", (0.1, 0.5, 0.9))
+    got = prof.collect()[0]["quantiles"]
     whole = np.concatenate([a, b])
-    for q in (0.1, 0.5, 0.9):
-        assert merged.quantile(q) == pytest.approx(np.quantile(whole, q), abs=0.05)
-    rt = TDigest.deserialize(merged.serialize())
-    assert rt.quantile(0.5) == merged.quantile(0.5)
+    for q, v in zip((0.1, 0.5, 0.9), got):
+        assert v == pytest.approx(np.quantile(whole, q), abs=0.05)
+    assert "partial_percentile_approx" in _executed_plan(prof)
 
 
 def test_quantile_profile_udaf(spark):
@@ -88,33 +102,29 @@ def test_ks_exact_and_digest(spark):
 
 
 def test_grouped_digests_skewed_constant_column_spreads(spark):
-    """ADVICE r2 (medium): a constant/heavy-hitter column must still spread
-    across salts — the salt hashes row content, not the value. With a
-    constant value and unique ids, level-1 must produce many sub-digests
-    (value-hash salting produced exactly 1 per group)."""
+    """A constant/heavy-hitter column must not land in one task: each input
+    partition builds a partial sketch (``partial_percentile_approx``) and
+    only the small sketches are shuffled and merged, whatever the values.
+    The merged quantiles are still exact for the constant."""
     n = 10_000
     df = spark.range(n).select(
         F.col("id"),
         F.lit(3.14).alias("x"),
         (F.col("id") % 2 == 0).cast("string").alias("g"))
-    # observe the level-1 spread directly: partial rows per group
-    agg = drift.tdigest_udaf(100)
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns], F.lit(7)),
-                  F.lit(64))
-    partial = (df.groupBy(F.col("g").alias("grp"), salt.alias("__salt"))
-               .agg(agg(F.col("x").cast("double")).alias("d")))
-    per_group = {r["grp"]: r["n"] for r in
-                 partial.groupBy("grp").agg(F.count("*").alias("n")).collect()}
-    assert all(v > 32 for v in per_group.values()), per_group
-    # and the merged quantiles are still exact for the constant
-    prof = drift.quantile_profile(df, "x", "g").collect()
-    for r in prof:
+    prof = drift.quantile_profile(df, "x", "g")
+    rows = prof.collect()
+    assert "partial_percentile_approx" in _executed_plan(prof)
+    assert len(rows) == 2
+    for r in rows:
         assert all(abs(q - 3.14) < 1e-9 for q in r["quantiles"])
 
 
 def test_grouped_digests_deterministic_across_parallelism(spark):
-    """Sorted-merge hardening: the merged digest is a pure function of the
-    partial set, so quantiles are identical across input partitionings."""
+    """Two contracts, by input size. Below the sketch's compression size
+    (5k rows) it keeps every value, so the quantiles are bit-identical
+    across input partitionings. Above it (200k rows) the merged sketch
+    depends on the partitioning, and the quantiles agree within 1e-3 of
+    the p10–p90 spread."""
     import random
     rng = random.Random(7)
     rows = [(i, rng.gauss(0, 1), "g") for i in range(5000)]
@@ -122,6 +132,17 @@ def test_grouped_digests_deterministic_across_parallelism(spark):
     a = drift.quantile_profile(df.repartition(2), "x", "g").collect()
     b = drift.quantile_profile(df.repartition(13), "x", "g").collect()
     assert a[0]["quantiles"] == b[0]["quantiles"]
+
+    u = F.pmod(F.xxhash64("id"), F.lit(1_000_003)) / 1_000_003
+    big = spark.range(200_000).select(
+        (u * u * 100).alias("x"), F.lit("g").alias("g"))
+    a = drift.quantile_profile(big.repartition(2), "x", "g") \
+        .collect()[0]["quantiles"]
+    b = drift.quantile_profile(big.repartition(13), "x", "g") \
+        .collect()[0]["quantiles"]
+    spread = a[-1] - a[0]
+    assert spread > 50
+    assert all(abs(x - y) <= 1e-3 * spread for x, y in zip(a, b)), (a, b)
 
 
 def test_ks_from_digests_pairwise_matches_numpy(spark):
@@ -186,8 +207,9 @@ def test_categorical_psi_matches_numpy(spark):
 
 def test_tdigest_exactness_audit(spark):
     """The audit's exact column matches a direct percentile computation, all
-    digest_ok booleans hold at delta=200, and an absurdly tight band flips
-    them — the mechanism the drift3 driver oracle relies on."""
+    digest_ok booleans hold at the sketch's default accuracy, and an
+    absurdly tight band flips them — the mechanism the drift3 driver oracle
+    relies on."""
     import pyspark.sql.functions as F
     from events_validator_spark.operators.drift import tdigest_exactness_audit
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -201,6 +223,6 @@ def test_tdigest_exactness_audit(spark):
         .agg(F.round(F.percentile("value", F.lit(0.5)), 6).alias("m")) \
         .collect()[0]["m"]
     assert med["exact_value"] == want
-    # a zero-width band must flip booleans (the digest is approximate)
+    # a zero-width band must flip booleans (the sketch is approximate)
     tight = tdigest_exactness_audit(g, "value", "half", rel_tol=1e-12).collect()
     assert any(not r["digest_ok"] for r in tight)

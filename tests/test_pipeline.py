@@ -279,6 +279,30 @@ def test_multimodal_plumbing(spark):
         {f["media_ref"]: list(f["feature"]) for f in again}
 
 
+def test_media_metadata_matches_python(spark):
+    """The native size and checksums equal Python's ``len``,
+    ``zlib.crc32`` and ``hashlib.sha256`` on every byte value and on an
+    empty payload; without a mime column the mime is the octet-stream
+    default; a NULL payload gives NULL size and checksums."""
+    import hashlib
+    import zlib
+    pays = {"all": bytes(range(256)), "empty": b"", "null": None}
+    df = spark.createDataFrame(list(pays.items()),
+                               "media_ref string, payload binary")
+    got = {r["media_ref"]: r for r in
+           multimodal.extract_media_metadata(df).collect()}
+    assert set(got) == set(pays)
+    for ref, raw in pays.items():
+        r = got[ref]
+        assert r["mime"] == "application/octet-stream"
+        if raw is None:
+            assert (r["n_bytes"], r["crc32"], r["sha256"]) == (None,) * 3
+        else:
+            assert r["n_bytes"] == len(raw)
+            assert r["crc32"] == zlib.crc32(raw)
+            assert r["sha256"] == hashlib.sha256(raw).hexdigest()
+
+
 def test_salted_collect_matches_naive(spark):
     from events_validator_spark.operators.uniqueness import (
         naive_collect, salted_collect,

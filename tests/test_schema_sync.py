@@ -85,6 +85,7 @@ def test_check_schema_health_mirrors_reference():
         "tol_val": {"type": "number", "description": "d", "value": "0.0"},
         "str_5": {"type": "string", "description": "d", "value": 5},
         "arr_empty": {"type": "array", "description": "d", "nestedSchema": {}},
+        "not_dict": {"type": "string", "description": "d"},
     }
     schema = {
         "event_name": {"value": "e"}, "version": {"value": 1},
@@ -96,9 +97,10 @@ def test_check_schema_health_mirrors_reference():
         "unknown_p": {"type": "string"},        # not in repo -> skipped
         "str_5": {"type": "string", "description": "d", "value": "5"},
         "arr_empty": {"type": "array", "description": "d"},
+        "not_dict": "oops",                     # no type -> critical
     }
     h = ss.check_schema_health(schema, repo)
-    assert h["critical"] == ["crit_p"]
+    assert h["critical"] == ["crit_p", "not_dict"]
     # a string param compares values as stored (5 != "5"); an empty repo
     # nestedSchema matches a schema with none (no keys on either side)
     assert sorted(h["minor"]) == ["minor_desc", "minor_val", "str_5"]
@@ -141,7 +143,9 @@ def test_update_schema_full_smart_preservation():
         "arr": {"type": "array", "description": "old", "nestedSchema": {
             "q": {"type": "number", "description": "x", "value": 99}}},
         "unknown": {"type": "string", "value": "untouched"},
+        "not_dict": "oops",
     }
+    repo["not_dict"] = {"type": "string", "description": "nd", "value": "r"}
     new, updated = ss.update_schema_full(schema, repo)
     assert updated
     assert new["version"] == {"value": 3}                 # reserved untouched
@@ -152,6 +156,9 @@ def test_update_schema_full_smart_preservation():
     assert new["retyped"]["value"] == 7                   # repo wins on retype
     assert new["arr"]["nestedSchema"]["q"]["value"] == 99  # nested keep
     assert new["arr"]["nestedSchema"]["q"]["description"] == "nd"
+    # a non-dict param has no type: the repo's definition replaces it
+    assert new["not_dict"] == {"type": "string", "description": "nd",
+                               "value": "r"}
 
     assert ss.update_schema_full(None, repo) == ({}, False)
     assert ss.update_schema_full({"version": {"value": 1}}, repo)[1] is False
@@ -241,6 +248,21 @@ def test_used_in_schemas_maintenance(tmp_path):
     # idempotent: a second save changes nothing
     ss.save_schema(schema, str(tmp_path), "purchase", repo=repo)
     assert ss.find_impacted_schemas("price", repo) == ["purchase"]
+
+
+def test_save_schema_refuses_the_repo_name(tmp_path):
+    """``repo`` names the parameter repository (repo.json), which the
+    loaders skip as a schema: saving an event schema under it raises and
+    leaves the directory as it was."""
+    from events_validator_spark.sources.rules_loader import load_rules_dir
+    repo = {"p": {"type": "string", "description": "d"}}
+    ss.save_schema({"p": {"type": "string"}}, str(tmp_path), "ev", repo=repo)
+    before = {f.name: f.read_bytes() for f in tmp_path.iterdir()}
+    with pytest.raises(ValueError):
+        ss.save_schema({"p": {"type": "string"}}, str(tmp_path), "repo",
+                       repo=repo)
+    assert {f.name: f.read_bytes() for f in tmp_path.iterdir()} == before
+    assert list(load_rules_dir(str(tmp_path))) == ["ev"]
 
 
 def test_sync_repo_usage_index_matches_ground_truth():

@@ -70,7 +70,9 @@ def decode_and_featurize(df: DataFrame, ref_col: str = "media_ref",
 
     With ``decode_stub`` the decode is a deterministic fake (hash-seeded
     pseudo-features + plausible dimensions); without it this raises where a
-    real PIL/ffmpeg decoder would be called.
+    real PIL/ffmpeg decoder would be called. A NULL payload gives NULL
+    size, checksums, dimensions and feature, as in
+    :func:`extract_media_metadata`.
     """
     ref_idx = df.columns.index(ref_col)
     pay_idx = df.columns.index(payload_col)
@@ -82,20 +84,24 @@ def decode_and_featurize(df: DataFrame, ref_col: str = "media_ref",
                                    "sha256", "width", "height", "n_frames",
                                    "feature")}
             for i in range(len(pdf)):
-                ref = pdf.iloc[i, ref_idx]
-                raw = bytes(pdf.iloc[i, pay_idx])
+                raw = pdf.iloc[i, pay_idx]
                 mime = (pdf.iloc[i, mime_idx] if mime_idx is not None
                         else "application/octet-stream")
                 if not decode_stub:
                     raise NotImplementedError(
                         "real media decode requires PIL/ffmpeg — not present "
                         "in this container; plug the decoder in here")
+                out["media_ref"].append(pdf.iloc[i, ref_idx])
+                out["mime"].append(mime)
+                if raw is None:   # NULL payload: NULL metadata and feature
+                    for k in list(out)[2:]:
+                        out[k].append(None)
+                    continue
+                raw = bytes(raw)
                 # deterministic fake decode: dims + features from the digest
                 digest = hashlib.sha256(raw).digest()
                 rng = np.random.default_rng(
                     int.from_bytes(digest[:8], "little"))
-                out["media_ref"].append(ref)
-                out["mime"].append(mime)
                 out["n_bytes"].append(len(raw))
                 out["crc32"].append(zlib.crc32(raw))
                 out["sha256"].append(digest.hex())

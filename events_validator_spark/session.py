@@ -1,9 +1,13 @@
 """SparkSession factory tuned for the validation engine.
 
-Defaults are sized for the sandbox (single JVM, local[N]) but every setting is the
-one you'd ship to a 1000-executor cluster: AQE on (runtime re-plan + skew-join
-defusal), Arrow on (vectorized pandas UDF transfer), UTC session timezone (oracle
-comparability), shuffle partitions ≈ cores locally / 2-3× total cores on a cluster.
+Defaults are sized for the host the driver runs on (single JVM, local[N] over
+the CPUs this process may use, a heap of half its memory limit) but every
+setting is the one you'd ship to a 1000-executor cluster: AQE on (runtime
+re-plan + skew-join defusal), Arrow on (vectorized pandas UDF transfer), UTC
+session timezone (oracle comparability), shuffle partitions ≈ cores locally /
+2-3× total cores on a cluster. Building a session runs no Spark job: a
+one-time parse, analyzer or codegen cost is paid by the first query that
+needs it.
 """
 
 from __future__ import annotations
@@ -57,73 +61,96 @@ def apply_recommended_conf(spark: SparkSession) -> None:
         pass
 
 
+# cgroup v2, then v1: the memory limit of the container the driver runs in
+_CGROUP_MEMORY_LIMITS = ("/sys/fs/cgroup/memory.max",
+                         "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+_MEMINFO = "/proc/meminfo"
+# cgroup v1 reports "no limit" as LONG_MAX rounded down to a page
+# (9223372036854771712 with 4 KiB pages); anything this large is no limit
+_V1_NO_LIMIT = (1 << 63) - (1 << 16)
+
+
+def _memory_limit_bytes() -> int | None:
+    """The memory this process may use: the cgroup limit when one is set,
+    else the host's ``MemTotal``; None when neither can be read."""
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw != "max" and int(raw) < _V1_NO_LIMIT:
+            return int(raw)
+    try:
+        with open(_MEMINFO) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def _session_conf(cores: int | None = None,
+                  shuffle_partitions: int | None = None,
+                  extra_conf: dict | None = None) -> dict:
+    """The conf :func:`get_spark` builds its session from.
+
+    Cores: the ``cores`` argument, else ``SPARK_GRAFT_CPUS``, else the CPUs
+    this process may run on. Heap: ``SPARK_DRIVER_MEM``, else half of the
+    memory limit (:func:`_memory_limit_bytes`), leaving the other half to
+    Python workers and the JVM's off-heap memory. ``extra_conf`` wins over
+    every default."""
+    if cores is None:
+        env = os.environ.get("SPARK_GRAFT_CPUS")
+        cores = int(env) if env else len(os.sched_getaffinity(0))
+    if shuffle_partitions is None:
+        shuffle_partitions = max(cores, 8)
+    heap = os.environ.get("SPARK_DRIVER_MEM")
+    if not heap:
+        limit = _memory_limit_bytes()
+        heap = f"{limit >> 21}m" if limit else None   # half, in MiB
+    conf = {
+        "spark.master": f"local[{cores}]",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        # throughput GC: the validation expressions are allocation-heavy
+        # (violation structs/arrays per row); ParallelGC beats G1 here and
+        # local-mode puts all executor threads in the one driver JVM
+        "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
+        "spark.ui.enabled": "false",
+        "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
+    }
+    if heap:
+        conf["spark.driver.memory"] = heap
+    conf.update(extra_conf or {})
+    return conf
+
+
 def get_spark(app_name: str = "events-validator-spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 8)
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
-        # throughput GC: the validation expressions are allocation-heavy
-        # (violation structs/arrays per row); ParallelGC beats G1 here and
-        # local-mode puts all executor threads in the one driver JVM
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-    )
-    for k, v in (extra_conf or {}).items():
+    """Build (or return the live) session from :func:`_session_conf` and
+    apply :func:`apply_recommended_conf` to it.
+
+    Runs no Spark job: the first query in a new JVM pays the one-time
+    parse, analyzer JIT and codegen its plan needs. For the JSON path that
+    is still cheaper than warming it up here. On a 4-core host
+    (``scripts/cold_start.py``, 3 fresh processes per side), ``get_spark``
+    plus the first ``validate_json`` of a 3-key rule over 100 rows took
+    10.2–12.9 s, against 12.3–13.9 s when ``get_spark`` ran a one-row
+    ``validate_json`` job as a warm-up; the second such call took 1.0–1.3 s
+    without the warm-up and 0.7–0.8 s with it."""
+    b = SparkSession.builder.appName(app_name)
+    for k, v in _session_conf(cores, shuffle_partitions, extra_conf).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     apply_recommended_conf(spark)
-    _warm_engine(spark)
     return spark
-
-
-_WARMED = False
-
-
-def _warm_engine(spark: SparkSession) -> None:
-    """Preheat the driver's plan pipeline and the interpreted eval paths.
-
-    The first big rule-compiler plan in a JVM pays ANTLR parse + analyzer
-    JIT (measured ~3.5 s), and the first VARIANT evaluation pays interpreter
-    JIT (~1.5 s) — one-time costs that otherwise land inside the first real
-    validation query's wall. A long-lived driver pays them once; session
-    build is where one-time costs belong. Cost: ~1 s, one single-row task.
-    validate_events fresh wall at sf0.1: 3.9 s → 2.0 s.
-
-    Warms the session it is HANDED (ADVICE r4: getActiveSession() can be
-    None in a non-main thread, silently no-opping or warming a different
-    session) and runs at most once per driver process — getOrCreate()
-    returning an already-warmed session must not pay the ~1 s again."""
-    global _WARMED
-    if _WARMED:
-        return
-    try:
-        from events_validator_spark.operators.validation import validate_json
-        dummy = spark.createDataFrame([('{"k": 1}',)], "props string")
-        # one-row end-to-end: parse + ANALYSIS of a representative staged
-        # validation plan, plus a single-task job that JITs the interpreted
-        # VARIANT evaluation paths (variant_get / schema_of_variant / the
-        # exact formatter) — ~0.5 s once per driver, instead of landing in
-        # the first real query's wall
-        validate_json(dummy, {"k": {"type": "number", "regex": "^[0-9]$",
-                                    "enum": [1, 2]},
-                              "u": {"type": "string", "optional": True}},
-                      "props").collect()
-        _WARMED = True
-    except Exception:   # pragma: no cover - warmup must never block startup
-        pass

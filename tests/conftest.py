@@ -6,8 +6,8 @@ from events_validator_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # a fixed heap cap: get_spark's default (48g) exceeds small hosts, where
-    # the suite's JVM otherwise grows to the host's memory and is OOM-killed
+    # a fixed heap cap: get_spark's default (half the host's memory limit)
+    # would let the suite's JVM take memory the host shares with others
     s = get_spark(app_name="evspark-tests", cores=4, shuffle_partitions=4,
                   extra_conf={"spark.driver.memory": "4g"})
     yield s

@@ -279,6 +279,22 @@ def test_multimodal_plumbing(spark):
         {f["media_ref"]: list(f["feature"]) for f in again}
 
 
+def test_decode_null_payload_gives_nulls(spark):
+    """A NULL payload decodes to NULL size, checksums, dimensions and
+    feature, as extract_media_metadata gives, instead of failing the job;
+    the other rows decode as usual."""
+    df = spark.createDataFrame([("a", b"x"), ("n", None)],
+                               "media_ref string, payload binary")
+    got = {r["media_ref"]: r for r in
+           multimodal.decode_and_featurize(df, feature_dim=4).collect()}
+    assert set(got) == {"a", "n"}
+    n = got["n"]
+    assert n["mime"] == "application/octet-stream"
+    assert [n[k] for k in ("n_bytes", "crc32", "sha256", "width", "height",
+                           "n_frames", "feature")] == [None] * 7
+    assert got["a"]["n_bytes"] == 1 and len(got["a"]["feature"]) == 4
+
+
 def test_media_metadata_matches_python(spark):
     """The native size and checksums equal Python's ``len``,
     ``zlib.crc32`` and ``hashlib.sha256`` on every byte value and on an

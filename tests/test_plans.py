@@ -144,6 +144,28 @@ def test_get_spark_keeps_engine_rule_beside_caller_rules(spark):
             spark.conf.set(key, before)
 
 
+def test_get_spark_runs_no_job(spark, monkeypatch):
+    """Building a session starts no Spark job: a one-time parse or codegen
+    cost is paid by the first query that needs it. The engine's excluded
+    rule is still applied."""
+    from events_validator_spark import session
+    # a module that warms once per process must warm again here
+    monkeypatch.setattr(session, "_WARMED", False, raising=False)
+    sc = spark.sparkContext
+    group = f"get-spark-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "get_spark")
+    try:
+        s = session.get_spark(app_name="evspark-tests", cores=4,
+                              shuffle_partitions=4,
+                              extra_conf={"spark.driver.memory": "4g"})
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        rules = s.conf.get("spark.sql.optimizer.excludedRules").split(",")
+        assert session._INFER_FILTERS_RULE in rules, rules
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def _simhash_candidates(spark):
     import random
 

@@ -11,10 +11,11 @@ rebuilt from the DataFrame API each time:
 - json: ``validate_json`` of a 3-key rule (a regex, an enum, a nested array)
   over 100 JSON rows, collected
 
-The walls are information for sizing, not a benchmark: one process varies
-from the next, so compare several runs per side.
+Each process runs on 4 cores with a 3 GB heap, perfbench's heap. The walls
+are information for sizing, not a benchmark: one process varies from the
+next, so compare several runs per side.
 
-Usage: python scripts/cold_start.py [CHECKOUT] [--cores N] [--heap SIZE]
+Usage: python scripts/cold_start.py [CHECKOUT]
 (CHECKOUT defaults to this repository; run it against a second checkout to
 compare two versions of the engine.)
 """
@@ -34,8 +35,8 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 t = time.perf_counter()
 from events_validator_spark.session import get_spark
-spark = get_spark(cores={cores}, shuffle_partitions={cores},
-                  extra_conf={{"spark.driver.memory": {heap!r}}})
+spark = get_spark(cores=4, shuffle_partitions=4,
+                  extra_conf={{"spark.driver.memory": "3g"}})
 walls = [time.perf_counter() - t]
 spark.sparkContext.setLogLevel("ERROR")
 from events_validator_spark.operators.validation import (
@@ -74,8 +75,8 @@ spark.stop()
 '''
 
 
-def run(repo: str, path: str, cores: int, heap: str) -> list[float]:
-    code = _RUN.format(repo=repo, path=path, cores=cores, heap=heap)
+def run(repo: str, path: str) -> list[float]:
+    code = _RUN.format(repo=repo, path=path)
     p = subprocess.run([sys.executable, "-c", code], cwd=repo,
                        capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("RESULT ")]
@@ -87,12 +88,9 @@ def run(repo: str, path: str, cores: int, heap: str) -> list[float]:
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("checkout", nargs="?", default=REPO)
-    ap.add_argument("--cores", type=int, default=4)
-    ap.add_argument("--heap", default="3g")
-    args = ap.parse_args()
-    repo = os.path.abspath(args.checkout)
+    repo = os.path.abspath(ap.parse_args().checkout)
     for path in ("typed", "json"):
-        setup, first, second = run(repo, path, args.cores, args.heap)
+        setup, first, second = run(repo, path)
         print(f"{path:5} get_spark={setup:.2f}s first={first:.2f}s "
               f"second={second:.2f}s")
 

@@ -2,53 +2,21 @@
 
 Media payloads are opaque ``binary`` columns with typed metadata structs.
 Sizes and checksums are native Spark functions (``length``, ``crc32``,
-``sha2``), so metadata extraction starts no Python worker; the per-item
-decode work (decode, resize, frame-sample, feature-extract) runs in
-Arrow-batched ``mapInPandas``, so bytes move executor-side in columnar
-batches, never through the driver.
-
-The actual codecs (PIL/librosa/ffmpeg) are NOT in this container, so the decode
-step is STUBBED: ``decode_stub=True`` (default) produces deterministic fake
-features from the bytes; ``decode_stub=False`` raises NotImplementedError at
-the exact point a real decoder plugs in. The Spark-side plumbing — schema,
-batching, partitioning, UDF signatures — is real and tested.
+``sha2``), so metadata extraction starts no Python worker. Decoding media
+(codecs such as PIL or ffmpeg) is not part of the package.
 """
 
 from __future__ import annotations
 
-import hashlib
-import zlib
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-
-MEDIA_META_DDL = ("media_ref string, mime string, n_bytes bigint, "
-                  "crc32 bigint, sha256 string")
-MEDIA_FEATURES_DDL = (MEDIA_META_DDL +
-                      ", width int, height int, n_frames int, "
-                      "feature array<float>")
-
-
-def attach_fake_media(df: DataFrame, ref_col: str = "media_ref",
-                      payload_col: str = "payload") -> DataFrame:
-    """Deterministic fake binary payloads derived from the ref string —
-    stand-in for reading object storage; keeps tests hermetic."""
-    seed = F.xxhash64(F.col(ref_col))
-    blob = F.encode(
-        F.concat(F.col(ref_col), F.lit(":"),
-                 F.sha2(seed.cast("string"), 256),
-                 F.repeat(F.lit("x"), F.pmod(seed, F.lit(4096)).cast("int"))),
-        "utf-8")
-    return df.withColumn(payload_col, blob)
 
 
 def extract_media_metadata(df: DataFrame, ref_col: str = "media_ref",
                            payload_col: str = "payload",
                            mime_col: str | None = None) -> DataFrame:
-    """Size and checksums per media item (``MEDIA_META_DDL``), as native
-    functions: ``n_bytes`` is the payload's byte length, ``crc32`` and
+    """Size and checksums per media item, as native functions →
+    (media_ref string, mime string, n_bytes bigint, crc32 bigint,
+    sha256 string): ``n_bytes`` is the payload's byte length, ``crc32`` and
     ``sha256`` are those of ``zlib.crc32`` and ``hashlib.sha256`` (hex).
     Without ``mime_col`` every item is ``application/octet-stream``. A NULL
     payload gives NULL ``n_bytes``, ``crc32`` and ``sha256``."""
@@ -59,61 +27,6 @@ def extract_media_metadata(df: DataFrame, ref_col: str = "media_ref",
                      F.length(pay).cast("bigint").alias("n_bytes"),
                      F.crc32(pay).alias("crc32"),
                      F.sha2(pay, 256).alias("sha256"))
-
-
-def decode_and_featurize(df: DataFrame, ref_col: str = "media_ref",
-                         payload_col: str = "payload",
-                         mime_col: str | None = None,
-                         feature_dim: int = 16,
-                         decode_stub: bool = True) -> DataFrame:
-    """Decode → (resize / frame-sample) → feature vector, per media item.
-
-    With ``decode_stub`` the decode is a deterministic fake (hash-seeded
-    pseudo-features + plausible dimensions); without it this raises where a
-    real PIL/ffmpeg decoder would be called. A NULL payload gives NULL
-    size, checksums, dimensions and feature, as in
-    :func:`extract_media_metadata`.
-    """
-    ref_idx = df.columns.index(ref_col)
-    pay_idx = df.columns.index(payload_col)
-    mime_idx = df.columns.index(mime_col) if mime_col else None
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "mime", "n_bytes", "crc32",
-                                   "sha256", "width", "height", "n_frames",
-                                   "feature")}
-            for i in range(len(pdf)):
-                raw = pdf.iloc[i, pay_idx]
-                mime = (pdf.iloc[i, mime_idx] if mime_idx is not None
-                        else "application/octet-stream")
-                if not decode_stub:
-                    raise NotImplementedError(
-                        "real media decode requires PIL/ffmpeg — not present "
-                        "in this container; plug the decoder in here")
-                out["media_ref"].append(pdf.iloc[i, ref_idx])
-                out["mime"].append(mime)
-                if raw is None:   # NULL payload: NULL metadata and feature
-                    for k in list(out)[2:]:
-                        out[k].append(None)
-                    continue
-                raw = bytes(raw)
-                # deterministic fake decode: dims + features from the digest
-                digest = hashlib.sha256(raw).digest()
-                rng = np.random.default_rng(
-                    int.from_bytes(digest[:8], "little"))
-                out["n_bytes"].append(len(raw))
-                out["crc32"].append(zlib.crc32(raw))
-                out["sha256"].append(digest.hex())
-                out["width"].append(16 * (1 + digest[8] % 64))
-                out["height"].append(16 * (1 + digest[9] % 64))
-                out["n_frames"].append(
-                    1 if str(mime).startswith("image") else 1 + digest[10] % 300)
-                out["feature"].append(
-                    rng.standard_normal(feature_dim).astype(np.float32))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, MEDIA_FEATURES_DDL)
 
 
 # ---------------------------------------------------------------------------

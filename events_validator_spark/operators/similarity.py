@@ -5,8 +5,15 @@
   (JVM-side) → a cross join that never shuffles the corpus.
 * LSH (random hyperplanes) scale path: signatures via ONE vectorized pandas UDF
   (Arrow batch → numpy matmul), bucketed candidates, exact re-rank only within
-  buckets. The UDF is the sanctioned kind of executor Python: vectorized,
-  no per-row interpretation.
+  buckets. The UDF is the package's only executor-Python site, and it stays
+  because the native forms are slower or do not compile. Over 20k cached
+  64-dim vectors with 8 tables × 8 planes (4 cores, 3 GB heap), a SQL
+  higher-order-function form (``transform``/``aggregate``/``zip_with`` over a
+  literal plane array) gave the same signatures on 2,000 of 2,000 rows but
+  took 1.1–2.6 s per warm pass against 0.20–0.47 s for the UDF (two runs of
+  8 passes each). An unrolled SQL-text form (122 KB) did not finish one pass
+  in 11 minutes, its driver missing heartbeats for minutes, and an earlier
+  run of it failed in Janino compile with ``GC overhead limit exceeded``.
 * IVF: an MLlib KMeans codebook; each query's probe cells come from
   broadcast-centroid array math, then an equi-join on the cell id.
 """
@@ -89,6 +96,9 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     the corpus shuffles once on a small key instead of being scanned per
     query batch. Candidates hit in several tables are deduplicated before
     the exact re-rank.
+
+    A vector that is NULL or not of length ``dim`` has no signature: it is
+    never a candidate, and as a query it has no neighbours.
     """
     sig = hyperplane_signatures_udf(dim, n_planes, n_tables, seed)
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
@@ -204,17 +214,25 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 def hyperplane_signatures_udf(dim: int, n_planes: int, n_tables: int,
                               seed: int = 42):
     """Vectorized multi-table signatures: one Arrow-batched matmul produces
-    ``n_tables`` packed sign-bit signatures per vector (array<long>)."""
+    ``n_tables`` packed sign-bit signatures per vector (array<long>).
+
+    A vector that is NULL or whose length is not ``dim`` gets a NULL
+    signature array; the matmul runs on the valid rows only."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((dim, n_tables * n_planes))
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @pandas_udf("array<long>")
     def sigs(v: pd.Series) -> pd.Series:
-        mat = np.vstack(v.to_numpy())                       # (batch, dim)
-        bits = (mat @ planes) > 0                           # (batch, T*P)
-        packed = bits.reshape(len(mat), n_tables, n_planes) @ weights
-        return pd.Series(list(packed.astype(np.int64)))
+        ok = v.map(lambda x: x is not None and len(x) == dim).astype(bool)
+        out = pd.Series([None] * len(v), index=v.index, dtype=object)
+        if ok.any():
+            mat = np.vstack(v[ok].to_numpy())               # (valid, dim)
+            bits = (mat @ planes) > 0                       # (valid, T*P)
+            packed = bits.reshape(len(mat), n_tables, n_planes) @ weights
+            out[ok] = pd.Series(list(packed.astype(np.int64)),
+                                index=v.index[ok])
+        return out
     return sigs
 
 
@@ -234,6 +252,9 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.9,
     self-join. No hard broadcast hint on the pair set (VERDICT r3 #3): it is
     O(near-dup fraction × corpus); AQE broadcasts it when it fits under
     session.py's 64 MB threshold, otherwise shuffles on the id keys.
+
+    A vector that is NULL or not of length ``dim`` has no signature, so it is
+    in no pair.
     """
     from events_validator_spark.operators.dedup import bucket_pairs, capped_buckets
     sig = hyperplane_signatures_udf(dim, n_planes, n_tables, seed)

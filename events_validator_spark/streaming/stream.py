@@ -7,6 +7,12 @@ schema like every batch call) runs inside a streaming query — either as a dire
 transformation (stateless, append-mode) or via ``foreachBatch`` when the sink
 needs batch-style writes (stamped lakehouse commits, merge semantics).
 Watermarked windowed verdict aggregation covers late events.
+
+Exact per-key streaming dedup needs no wrapper: Spark's native
+``stream_df.dropDuplicates([key])`` keeps each key in its state store,
+emits one row for a key in the first micro-batch that holds it and drops
+the key's rows in every later batch, with no Python worker.
+Near-duplicate dedup across batches is :func:`run_stream_dedup`.
 """
 
 from __future__ import annotations
@@ -25,49 +31,6 @@ def streaming_verdict_counts(validated: DataFrame, ts_col: str = "ts",
             .groupBy(F.window(F.col(ts_col), window).alias("win"))
             .agg(F.count(F.lit(1)).alias("docs"),
                  F.sum((F.size("violations") > 0).cast("long")).alias("failed")))
-
-
-def streaming_dedup(stream_df: DataFrame, key_col: str,
-                    out_schema: str) -> DataFrame:
-    """Stateful exactly-first streaming dedup via ``applyInPandasWithState``.
-
-    Keeps one boolean per key in the state store; only a key's first-ever row
-    is emitted. This is the custom-stateful-operator pattern
-    (SURVEY.md §2.7): the same engine that validates batches can deduplicate
-    an unbounded stream with bounded per-key state.
-    """
-    import pandas as pd  # noqa: F401 (executor-side)
-
-    def dedup_fn(key, pdf_iter, state):
-        if state.exists:
-            return
-        first = None
-        for pdf in pdf_iter:
-            if len(pdf) and first is None:
-                first = pdf.iloc[[0]]
-        state.update((True,))
-        if first is not None:
-            yield first
-
-    return (stream_df.groupBy(key_col)
-            .applyInPandasWithState(
-                dedup_fn, out_schema, "seen boolean",
-                "append", "NoTimeout"))
-
-
-def run_dedup_stream_to_memory(spark: SparkSession, source_dir: str, schema,
-                               key_col: str,
-                               query_name: str = "dedup_stream") -> DataFrame:
-    """Drive the stateful dedup over a parquet-dir stream to completion."""
-    src = spark.readStream.schema(schema).parquet(source_dir)
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in schema.fields)
-    deduped = streaming_dedup(src, key_col, out_schema)
-    q = (deduped.writeStream.format("memory").queryName(query_name)
-         .outputMode("append").start())
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_stream_pipeline(spark: SparkSession, source_dir: str, schema,

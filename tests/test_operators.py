@@ -160,10 +160,9 @@ def test_lsh_topk_runs_and_is_subset_quality(spark):
     assert got and got[0]["neighbor_id"] == 10
 
 
-def test_cosine_neardup_recall_on_planted_pairs(spark):
-    # planted near-duplicates (small rotation, cos > 0.97) must ALL be found
-    # by the multi-table LSH and verified by exact cosine; random pairs must
-    # not appear at threshold 0.9
+def _planted_vectors():
+    """40 random 16-dim vectors (ids 0..39) and a near-duplicate of each of
+    ids 0..9 (ids 1000..1009, small rotation, cos > 0.97)."""
     import numpy as np
     rng = np.random.default_rng(11)
     base = rng.standard_normal((40, 16)).astype(np.float64)
@@ -174,7 +173,15 @@ def test_cosine_neardup_recall_on_planted_pairs(spark):
         noise = rng.standard_normal(16) * 0.05
         w = base[i] + noise
         rows.append((1000 + i, [float(x) for x in w]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return rows
+
+
+def test_cosine_neardup_recall_on_planted_pairs(spark):
+    # planted near-duplicates (small rotation, cos > 0.97) must ALL be found
+    # by the multi-table LSH and verified by exact cosine; random pairs must
+    # not appear at threshold 0.9
+    df = spark.createDataFrame(_planted_vectors(),
+                               "vec_id long, embedding array<double>")
     got = similarity.cosine_neardup_pairs(
         df, threshold=0.9, dim=16, n_planes=6, n_tables=12).collect()
     found = {(r["id_a"], r["id_b"]) for r in got}
@@ -182,6 +189,32 @@ def test_cosine_neardup_recall_on_planted_pairs(spark):
     assert expected <= found
     # exact-verification guarantees no false positives below threshold
     assert all(r["cos"] >= 0.9 for r in got)
+
+
+def test_lsh_skips_null_and_wrong_length_vectors(spark):
+    """A NULL or wrong-length embedding gets no LSH signature instead of
+    failing the job: it is never a candidate, and as a query it has no
+    neighbours, so both LSH operators return the same rows as without it."""
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(_planted_vectors(), schema)
+    dirty = spark.createDataFrame(
+        _planted_vectors() + [(2000, None), (2001, [1.0, 2.0])], schema)
+    kw = dict(dim=16, n_planes=6, n_tables=12)
+
+    def pairs(df):
+        return sorted(tuple(r) for r in similarity.cosine_neardup_pairs(
+            df, threshold=0.9, **kw).collect())
+
+    def topk(df):
+        queries = (df.where((F.col("vec_id") < 5) | (F.col("vec_id") >= 2000))
+                   .select(F.col("vec_id").alias("query_id"), "embedding"))
+        return sorted(tuple(r) for r in similarity.lsh_topk(
+            df, queries, k=3, **kw).collect())
+
+    want = pairs(clean)
+    assert want and pairs(dirty) == want
+    want = topk(clean)
+    assert want and topk(dirty) == want
 
 
 def test_cosine_neardup_degenerate_corpus_bounded(spark):

@@ -20,10 +20,13 @@ properties that make the engine survive a 100 TB input:
   dedup aggregate's input;
 * the referential span scan reads only ``spans.media_ref``, and the typed
   clean-element gate is no larger than its minimal form;
-* ``duplicate_keys`` shuffles once (one aggregate, no salted phase).
+* ``duplicate_keys`` shuffles once (one aggregate, no salted phase);
+* the LSH signature UDF is the package's one executor-Python site.
 """
 
 import os
+import pathlib
+import re
 import uuid
 
 import pyspark.sql.functions as F
@@ -474,3 +477,15 @@ def test_duplicate_keys_is_one_aggregate(spark):
     plan = uniqueness.duplicate_keys(df, ["k"], n_salts=64) \
         ._jdf.queryExecution().executedPlan().treeString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_one_executor_python_site():
+    """Only ``operators/similarity.py`` starts a Python worker (a pandas or
+    Arrow UDF, or a Python map/apply over groups) or imports numpy or
+    pandas; every other operator is native Spark."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "events_validator_spark"
+    site = re.compile(r"pandas_udf|mapInPandas|mapInArrow|applyInPandas"
+                      r"|udf\(|^\s*(import|from) (numpy|pandas)\b", re.M)
+    hits = sorted(str(f.relative_to(pkg)) for f in pkg.rglob("*.py")
+                  if site.search(f.read_text()))
+    assert hits == ["operators/similarity.py"], hits
